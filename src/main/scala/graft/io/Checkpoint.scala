@@ -4,33 +4,25 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Per-partition checkpoint/lineage — the engine twin of the
-  * reference's marker-file choreography (`ocr_pipeline_open` →
-  * `busy` → `done`/`fail`, ocr_pipeline.py:160-199, :338-365).
+/** Adapter for the pre-manifest output layout — the marker-only
+  * release's twin of the reference's marker-file choreography
+  * (`ocr_pipeline_open` → `busy` → `done`/`fail`,
+  * ocr_pipeline.py:160-199, :338-365).
   *
-  * Layout: `<root>/state/p_<p>/` holds one tiny parquet commit per
-  * processed partition with lineage metrics. A partition's commit is
-  * written atomically by Spark's output committer (temp + rename), so
-  * a killed run leaves either a complete commit or none — resume is
-  * idempotent. Output data for partition `p` lives under
-  * `<root>/data/p_<p>/a_<attempt>/`.
+  * Legacy layout: `<root>/state/p_<p>/` holds one tiny parquet marker
+  * per committed partition with its lineage metrics, written
+  * atomically by Spark's output committer (temp + rename, `_SUCCESS`
+  * last). No current job writes markers: the snapshot manifest
+  * ([[SnapshotStore]]) is the only commit and lineage record.
+  * `ExtractMain.backfillLegacy` reads markers through [[lineage]] to
+  * adopt a legacy root's data into the manifest; [[commit]] writes
+  * that layout, for building legacy roots and for probing its cost.
   *
-  * The MERGE-style commit source of truth is the snapshot-manifest
-  * layer ([[SnapshotStore]]): immutable versioned manifests + fresh
-  * attempt dirs give overwrite-partition semantics and snapshot
-  * isolation; these per-partition markers remain as the backup
-  * pre-image location and a lineage mirror.
-  *
-  * Scale note: the checkpoint table is O(#partitions), never O(#docs);
-  * pruning is an in-driver set difference at planning time (the
-  * equivalent of the J1 anti-join, done on partition metadata rather
-  * than rows — at 10^12 docs the per-doc anti-join would be the
-  * bottleneck, the per-partition one is free).
+  * [[backupPath]] names the S7 pre-image location, which is not part
+  * of the legacy layout and is still written.
   */
 final class Checkpoint(spark: SparkSession, root: String) {
 
-  // data locations are allocated per-attempt by SnapshotStore
-  // (newDataPath) — this class owns only state markers + backups
   private val statePath = s"$root/state"
 
   /** S7 — pre-image audit location for partition `p`: the input
@@ -42,29 +34,8 @@ final class Checkpoint(spark: SparkSession, root: String) {
   private def fs: FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Partitions already committed (resume = skip these). */
-  def done(): Set[Int] = {
-    val p = new Path(statePath)
-    if (!fs.exists(p)) Set.empty
-    else
-      fs.listStatus(p).toSeq
-        // only dirs with a completed committer run count as committed —
-        // a kill mid-write leaves the dir without _SUCCESS
-        .filter(st => fs.exists(new Path(st.getPath, "_SUCCESS")))
-        .map(_.getPath.getName)
-        .filter(_.startsWith("p_"))
-        .map(_.stripPrefix("p_").toInt)
-        .toSet
-  }
-
-  /** Pending partitions out of `all`. */
-  def pending(all: Seq[Int]): Seq[Int] = {
-    val d = done()
-    all.filterNot(d.contains)
-  }
-
-  /** Atomically commit partition `p` with its lineage metrics
-    * (docs parsed, spans emitted, parse failures — north_rule). */
+  /** Atomically write the legacy marker for partition `p` with its
+    * lineage metrics (docs parsed, spans emitted, parse failures). */
   def commit(p: Int, docs: Long, spans: Long, failures: Long): Unit = {
     import spark.implicits._
     Seq((p, docs, spans, failures, java.time.Instant.now.toString))
@@ -74,10 +45,10 @@ final class Checkpoint(spark: SparkSession, root: String) {
       .parquet(s"$statePath/p_$p")
   }
 
-  /** Full lineage table (for inspection/metrics) — COMMITTED markers
-    * only, the same _SUCCESS gate as [[done]] (a crash can leave a
+  /** Lineage table of the COMMITTED markers only: a dir counts when
+    * its committer run completed (`_SUCCESS`). A crash can leave a
     * file-less p_N dir; the bare glob would either surface that
-    * half-commit or fail schema inference when it is the only dir). */
+    * half-commit or fail schema inference when it is the only dir. */
   def lineage(): DataFrame = {
     val p = new Path(statePath)
     val committed =

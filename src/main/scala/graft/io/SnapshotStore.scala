@@ -30,11 +30,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 final class SnapshotStore(spark: SparkSession, root: String) {
 
-  /** One manifest line: a partition's committed state. `schemaHash`
-    * fingerprints the data files' Spark schema (md5 of schema JSON) so
-    * reads can decide cheaply whether a cross-partition schema merge
-    * is needed; empty for pre-fingerprint manifests (conservatively
-    * treated as "might diverge"). */
+  /** One manifest line: a partition's committed state. `nFailures`
+    * (manifest key `n_failures`) is the writer's failure count;
+    * `ExtractMain` stores its unestimated-doc count there
+    * (`docs_unestimated`) and labels it `unestimated` in its lineage
+    * print. `schemaHash` fingerprints the data files' Spark schema
+    * (md5 of schema JSON) so reads can decide cheaply whether a
+    * cross-partition schema merge is needed; empty for
+    * pre-fingerprint manifests (conservatively treated as "might
+    * diverge"). */
   final case class Entry(part: Int, path: String, nDocs: Long,
       nSpans: Long, nFailures: Long, committedAt: String,
       schemaHash: String = "")

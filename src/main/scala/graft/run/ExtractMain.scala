@@ -13,9 +13,10 @@ import graft.stages.{ExtractConfig, Extraction}
   *
   * The corpus is bucketed into `nParts` logical partitions by doc_id
   * hash (the analog of the reference's directory partitions). Each
-  * partition is processed and committed independently with lineage
-  * metrics; a killed run resumes from the last committed partition
-  * (Checkpoint). Within a partition the plan is fully narrow — scan →
+  * partition is processed and committed once, as one snapshot-manifest
+  * entry carrying its lineage metrics; a killed run resumes with the
+  * partitions the current manifest does not list (SnapshotStore).
+  * Within a partition the plan is fully narrow — scan →
   * codegen'd span stages → typed estimate map → write — with one tiny
   * aggregate at the end for the corpus report (S11).
   */
@@ -92,15 +93,17 @@ object ExtractMain {
       backup: Boolean = false, cfg: ExtractConfig = ExtractConfig()): Unit = {
     import spark.implicits._
     val ckpt = new Checkpoint(spark, outRoot)
-    // snapshot manifests are the commit source of truth (MERGE-style
-    // overwrite-partition + snapshot isolation; see SnapshotStore);
-    // the per-partition state markers remain as the backup/pre-image
-    // location and a best-effort mirror for Checkpoint API users
+    // the snapshot manifest is the only commit and lineage record
+    // (MERGE-style overwrite-partition + snapshot isolation; see
+    // SnapshotStore); Checkpoint is read only to migrate legacy roots
+    // and names the S7 backup location
     val snap = new graft.io.SnapshotStore(spark, outRoot)
     val docs = spark.read.parquet(inPath)
       .withColumn("part", pmod(xxhash64(col("doc_id")), lit(nParts)).cast("int"))
 
     backfillLegacy(spark, outRoot, ckpt, snap)
+    // J1: resume is an in-driver set difference over partition
+    // metadata, O(#partitions) — never a per-doc anti-join
     val done = snap.done()
     val todo = (0 until nParts).filterNot(done.contains)
     println(s"[extract] partitions total=$nParts pending=${todo.size}")
@@ -122,7 +125,6 @@ object ExtractMain {
       val m = obs.get
       val (nDocs, nSpans, nUnest) = (m("docs_parsed").asInstanceOf[Long],
         m("spans_emitted").asInstanceOf[Long], m("docs_unestimated").asInstanceOf[Long])
-      ckpt.commit(p, nDocs, nSpans, nUnest)
       val v = snap.commit(p, attempt, nDocs, nSpans, nUnest)
       println(s"[extract] committed part=$p snapshot=v$v docs=$nDocs " +
         s"spans=$nSpans unestimated=$nUnest")
@@ -166,6 +168,11 @@ object ExtractMain {
     val stats = Extraction.corpusReplStats(all).collect()
       .map(r => s"${r.getString(0)}:${r.getLong(1)}")
     println(s"[extract] replacement stats: ${stats.mkString(", ")}")
-    ckpt.lineage().show(truncate = false)
+    // lineage from the manifest, driver-side (the n_failures field
+    // holds the unestimated-doc count; see SnapshotStore.Entry)
+    snap.entries().values.toSeq.sortBy(_.part).foreach { e =>
+      println(s"[extract] lineage part=${e.part} docs=${e.nDocs} " +
+        s"spans=${e.nSpans} unestimated=${e.nFailures} committed_at=${e.committedAt}")
+    }
   }
 }

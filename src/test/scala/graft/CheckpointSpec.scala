@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.functions.{size, sum}
 
 import graft.io.{Checkpoint, SnapshotStore}
 import graft.run.ExtractMain
@@ -59,11 +60,13 @@ class CheckpointSpec extends SparkSpecBase {
     val after = snap.entries()
     survivors.foreach { p => assert(before(p).path == after(p).path) }
 
-    // legacy per-partition markers still carry lineage metrics
-    val ckpt = new Checkpoint(spark, outRoot)
-    val lin = ckpt.lineage().collect()
-    assert(lin.length == 4)
-    assert(lin.map(_.getAs[Long]("n_docs")).sum == 200)
+    // the manifest is the only lineage record: its metrics match the
+    // committed data, and no legacy marker dir is written
+    val es = snap.entries().values
+    assert(es.map(_.nDocs).sum == 200)
+    val spanTotal = snap.read().select(sum(size($"spans"))).as[Long].head()
+    assert(es.map(_.nSpans).sum == spanTotal)
+    assert(!new java.io.File(s"$outRoot/state").exists())
   }
 
   test("expire keeps the current view, GCs unreferenced attempt dirs") {
@@ -180,13 +183,18 @@ class CheckpointSpec extends SparkSpecBase {
     graft.gen.CorpusGen.docs(spark, 60, "interleaved")
       .write.mode(SaveMode.Overwrite).parquet(spansPath)
 
-    // simulate the pre-manifest release: run normally, then strip the
+    // simulate the pre-manifest release: run normally, write each
+    // partition's marker from its manifest entry, then strip the
     // manifests and flatten each attempt dir up into data/p_N (the
     // legacy layout: parquet files directly under the partition dir)
     ExtractMain.run(spark, spansPath, outRoot, nParts = 2)
     val snap = new SnapshotStore(spark, outRoot)
     val full = snap.read().select($"doc_id", $"n_words").as[(String, Int)]
       .collect().sortBy(_._1).toSeq
+    val ckpt = new Checkpoint(spark, outRoot)
+    snap.entries().values.foreach { e =>
+      ckpt.commit(e.part, e.nDocs, e.nSpans, e.nFailures)
+    }
     new java.io.File(s"$outRoot/snapshots").listFiles().foreach(_.delete())
     (0 until 2).foreach { p =>
       val pDir = new java.io.File(s"$outRoot/data/p_$p")
@@ -207,6 +215,7 @@ class CheckpointSpec extends SparkSpecBase {
     assert(snap.done() == Set(0, 1))
     assert(snap.entries().values.forall(_.path.endsWith("a_legacy")),
       s"reprocessed instead of adopting: ${snap.entries()}")
+    assert(snap.entries().values.map(_.nDocs).sum == 60) // marker lineage carried
     val resumed = snap.read().select($"doc_id", $"n_words").as[(String, Int)]
       .collect().sortBy(_._1).toSeq
     assert(resumed == full)
