@@ -1,6 +1,7 @@
 package graft.run
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Checkpoint
@@ -12,13 +13,23 @@ import graft.stages.{ExtractConfig, Extraction}
   * Usage: ExtractMain <spansParquet> <outRoot> [nParts]
   *
   * The corpus is bucketed into `nParts` logical partitions by doc_id
-  * hash (the analog of the reference's directory partitions). Each
-  * partition is processed and committed once, as one snapshot-manifest
-  * entry carrying its lineage metrics; a killed run resumes with the
-  * partitions the current manifest does not list (SnapshotStore).
-  * Within a partition the plan is fully narrow — scan →
-  * codegen'd span stages → typed estimate map → write — with one tiny
-  * aggregate at the end for the corpus report (S11).
+  * hash (the analog of the reference's directory partitions), and the
+  * partition stays the unit of commit and resume: each one is committed
+  * once, as one snapshot-manifest entry carrying its lineage metrics,
+  * and a rerun processes only the partitions the current manifest does
+  * not list (SnapshotStore).
+  *
+  * All pending partitions go through ONE Spark job: one scan of the
+  * input, one pass of the codegen'd span stages, one write partitioned
+  * by `part` into a staging dir, with the per-partition lineage
+  * observed in the same pass. The driver then moves each partition's
+  * output into a fresh attempt dir and commits it, in partition order.
+  * The trade: a run killed during that write commits nothing, where a
+  * per-partition job would have kept the partitions finished before the
+  * kill. A killed run's staging dir is an unreferenced data dir, which
+  * [[graft.io.SnapshotStore.expire]] collects like any orphan attempt.
+  * After the commits come the corpus report (S11), the `.wtr` file and
+  * the replacement statistics over the current snapshot.
   */
 object ExtractMain {
 
@@ -89,6 +100,11 @@ object ExtractMain {
     }
   }
 
+  /** Logical partition of a row, from its doc_id: the input bucketing
+    * and the output's staging subdirs must agree on it. */
+  private def partOf(nParts: Int): Column =
+    pmod(xxhash64(col("doc_id")), lit(nParts)).cast("int")
+
   def run(spark: SparkSession, inPath: String, outRoot: String, nParts: Int,
       backup: Boolean = false, cfg: ExtractConfig = ExtractConfig()): Unit = {
     import spark.implicits._
@@ -98,8 +114,7 @@ object ExtractMain {
     // SnapshotStore); Checkpoint is read only to migrate legacy roots
     // and names the S7 backup location
     val snap = new graft.io.SnapshotStore(spark, outRoot)
-    val docs = spark.read.parquet(inPath)
-      .withColumn("part", pmod(xxhash64(col("doc_id")), lit(nParts)).cast("int"))
+    val docs = spark.read.parquet(inPath).withColumn("part", partOf(nParts))
 
     backfillLegacy(spark, outRoot, ckpt, snap)
     // J1: resume is an in-driver set difference over partition
@@ -111,23 +126,44 @@ object ExtractMain {
     // S7: backup only when the config can actually modify content —
     // the reference's `if self._replacements and self.must_backup()`
     // gate (lib/ocr_step.py:230-232)
-    val doBackup = backup && (cfg.replaceDict.nonEmpty || cfg.regexRule.nonEmpty)
+    if (backup && (cfg.replaceDict.nonEmpty || cfg.regexRule.nonEmpty))
+      todo.foreach { p =>
+        docs.filter($"part" === p).drop("part")
+          .write.mode(SaveMode.Overwrite).parquet(ckpt.backupPath(p))
+      }
 
-    todo.foreach { p =>
-      val slice = docs.filter($"part" === p).drop("part")
-      if (doBackup)
-        slice.write.mode(SaveMode.Overwrite).parquet(ckpt.backupPath(p))
-      // single pass: observe() collects lineage metrics during the write;
-      // every attempt writes a FRESH dir — commits replace metadata, not files
-      val attempt = snap.newDataPath(p)
-      val (out, obs) = Extraction.observed(Extraction.pipeline(slice, cfg))
-      out.write.mode(SaveMode.Overwrite).parquet(attempt)
-      val m = obs.get
-      val (nDocs, nSpans, nUnest) = (m("docs_parsed").asInstanceOf[Long],
-        m("spans_emitted").asInstanceOf[Long], m("docs_unestimated").asInstanceOf[Long])
-      val v = snap.commit(p, attempt, nDocs, nSpans, nUnest)
-      println(s"[extract] committed part=$p snapshot=v$v docs=$nDocs " +
-        s"spans=$nSpans unestimated=$nUnest")
+    if (todo.nonEmpty) {
+      // the pipeline keeps only its own columns: `part` is re-derived
+      // from doc_id and names each row's staging subdir
+      val rows = Extraction.pipeline(docs.filter($"part".isin(todo: _*)), cfg)
+        .toDF().withColumn("part", partOf(nParts))
+      val (observed, lineage) = Extraction.withLineage(rows, nParts)
+      val staging = new Path(s"$outRoot/data/_staging/a_${System.nanoTime()}")
+      observed.write.partitionBy("part").parquet(staging.toString)
+      val counts = lineage()
+      val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      todo.foreach { p =>
+        // every attempt is a FRESH dir of parquet files plus `_SUCCESS`
+        // (backfillLegacy recognises completed data by that marker);
+        // commits replace metadata, never files
+        val attempt = new Path(snap.newDataPath(p))
+        val written = new Path(staging, s"part=$p")
+        if (fs.exists(written)) {
+          fs.mkdirs(attempt.getParent)
+          if (!fs.rename(written, attempt))
+            throw new java.io.IOException(s"cannot move $written to $attempt")
+          fs.create(new Path(attempt, "_SUCCESS")).close()
+        } else {
+          // no rows hashed here: a schema-only file, no scan
+          rows.drop("part").limit(0).write.parquet(attempt.toString)
+        }
+        val (nDocs, nSpans, nUnest) = counts(p)
+        val v = snap.commit(p, attempt.toString, nDocs, nSpans, nUnest)
+        println(s"[extract] committed part=$p snapshot=v$v docs=$nDocs " +
+          s"spans=$nSpans unestimated=$nUnest")
+      }
+      fs.delete(staging, true)
+      if (fs.listStatus(staging.getParent).isEmpty) fs.delete(staging.getParent, false)
     }
 
     // corpus report over the CURRENT SNAPSHOT (consistent view;

@@ -3,7 +3,9 @@ package graft.stages
 import java.util.regex.Pattern
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 import graft.model.{Doc, Estimation, EstimationReport, Line, Span}
@@ -59,10 +61,13 @@ private[stages] final case class CleanedWithRaw(
   * there is NO shuffle anywhere in the chain; Catalyst fuses the
   * column stages into one whole-stage-codegen pass and the estimate
   * stage is a single narrow typed `mapPartitions`. The only shuffle in
-  * the whole job is the final tiny corpus aggregate. Mega-doc skew is
-  * handled by spreading docs uniformly (repartition on doc_id hash)
-  * before the chain plus AQE; a 10^5-span doc is one task among many,
-  * never a hot partition.
+  * the whole job is the final tiny corpus aggregate. Nothing
+  * repartitions before the chain: the tasks are the input's scan
+  * splits, so a 10^5-span mega-doc is one row of whichever split reads
+  * it and its cost lands on that one task. A task therefore holds at
+  * most one split's rows, never a hot key's worth; the resulting task
+  * imbalance is what perfbench's `sql.ProcessSpans.max_over_median_task`
+  * measures.
   */
 object Extraction {
 
@@ -230,18 +235,44 @@ object Extraction {
       .agg(sum(col("hits")).as("n"))
       .orderBy(desc("n"), col("key"))
 
-  /** Attach observability metrics (E4 / north_rule "accumulator
-    * metrics": docs parsed, spans emitted, parse failures) to a
-    * processed stream without a second pass — read them from the
-    * returned Observation after the action. */
-  def observed(processed: Dataset[ProcessedDoc], name: String = "graft_metrics")
-      : (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation(name)
-    val df = processed.toDF().observe(obs,
-      count(lit(1)).as("docs_parsed"),
-      coalesce(sum(size(col("spans"))), lit(0L)).as("spans_emitted"),
-      count(when(col("hit_ratio") === Estimation.MissingRatio, 1)).as("docs_unestimated"))
-    (df, obs)
+  /** E4 lineage of a processed stream, collected during its one action:
+    * per logical partition (`rows` carries an int `part` in
+    * [0, nParts)) the docs, spans emitted (`coalesce(size(spans), 0)`)
+    * and unestimated docs. One [[Observation]] with a single typed
+    * aggregate over a buffer of 3·nParts longs, so the per-row cost does
+    * not grow with the partition count. The returned function blocks
+    * until the action has run and yields the counts indexed by part. */
+  def withLineage(rows: DataFrame, nParts: Int)
+      : (DataFrame, () => IndexedSeq[(Long, Long, Long)]) = {
+    val obs = Observation("graft_lineage")
+    val perPart = udaf(new PartLineage(nParts),
+      Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt, Encoders.scalaBoolean))
+    val df = rows.observe(obs, perPart(col("part"), coalesce(size(col("spans")), lit(0)),
+      col("hit_ratio") === Estimation.MissingRatio).as("lineage"))
+    (df, () => obs.get("lineage").asInstanceOf[scala.collection.Seq[Long]]
+      .grouped(3).map(c => (c(0), c(1), c(2))).toIndexedSeq)
+  }
+
+  /** [[withLineage]]'s aggregate: input (part, spans, unestimated),
+    * buffer `[docs, spans, unestimated]` per part, flattened. */
+  private final class PartLineage(nParts: Int)
+      extends Aggregator[(Int, Int, Boolean), Array[Long], Array[Long]] {
+    def zero: Array[Long] = new Array[Long](3 * nParts)
+    def reduce(b: Array[Long], in: (Int, Int, Boolean)): Array[Long] = {
+      val o = 3 * in._1
+      b(o) += 1
+      b(o + 1) += in._2
+      if (in._3) b(o + 2) += 1
+      b
+    }
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+      var i = 0
+      while (i < a.length) { a(i) += b(i); i += 1 }
+      a
+    }
+    def finish(b: Array[Long]): Array[Long] = b
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
   }
 
   /** S11 — estimation report sink, the `.wtr` analog

@@ -3,10 +3,12 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.SaveMode
-import org.apache.spark.sql.functions.{size, sum}
+import org.apache.spark.sql.functions.{coalesce, count, lit, pmod, size, sum, when, xxhash64}
 
 import graft.io.{Checkpoint, SnapshotStore}
+import graft.model.{Doc, Span}
 import graft.run.ExtractMain
+import graft.stages.ProcessedDoc
 
 /** Checkpoint/resume protocol (T1/J1): kill-resume idempotence — a
   * re-run after losing commits reprocesses exactly the uncommitted
@@ -240,5 +242,72 @@ class CheckpointSpec extends SparkSpecBase {
     assert(!new java.io.File(s"$outRoot/data/p_0/a_legacy").exists())
     assert(new java.io.File(s"$outRoot/data/p_9").listFiles().forall(_.isDirectory))
     assert(snap.read().count() == 60)
+  }
+
+  test("one write job commits every pending partition, empty ones included") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-sparse").toString
+    Seq("a", "b", "c").map(id => Doc(id, Seq(Span(Span.KindText, s"wort $id", "line://b/l0", 0))))
+      .toDF().write.parquet(s"$tmp/in")
+    ExtractMain.run(spark, s"$tmp/in", s"$tmp/out", nParts = 16)
+    val snap = new SnapshotStore(spark, s"$tmp/out")
+    assert(snap.done() == (0 until 16).toSet)
+    assert(snap.read().count() == 3)
+    val es = snap.entries().values
+    assert(es.map(_.nDocs).sum == 3)
+    assert(es.map(_.schemaHash).toSet.size == 1 && es.head.schemaHash.nonEmpty)
+    // each attempt dir holds parquet files plus _SUCCESS, like any
+    // committed attempt; nothing of the staging write is left behind
+    assert(es.forall(e => new java.io.File(e.path, "_SUCCESS").exists()))
+    val data = new java.io.File(s"$tmp/out/data")
+    assert(data.list().toSet == (0 until 16).map(p => s"p_$p").toSet)
+    val leftovers = data.listFiles().flatMap(_.listFiles()).flatMap(_.list())
+      .filter(n => n.startsWith("part=") || n.startsWith("_staging"))
+    assert(leftovers.isEmpty, leftovers.mkString(", "))
+  }
+
+  test("a killed write's staging leftovers change nothing; expire collects them") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-staging").toString
+    val spansPath = s"$tmp/spans"
+    graft.gen.CorpusGen.docs(spark, 40, "interleaved").write.parquet(spansPath)
+    def rows(root: String) = new SnapshotStore(spark, root).read()
+      .as[ProcessedDoc].collect().sortBy(_.doc_id).toSeq
+    ExtractMain.run(spark, spansPath, s"$tmp/clean", nParts = 4)
+
+    // what a run killed during its write leaves: an unreferenced
+    // staging attempt with partition subdirs
+    val stale = new java.io.File(s"$tmp/out/data/_staging/a_1")
+    new java.io.File(stale, "part=0").mkdirs()
+    Files.writeString(new java.io.File(stale, "part=0/x.parquet").toPath, "x")
+    ExtractMain.run(spark, spansPath, s"$tmp/out", nParts = 4)
+    val snap = new SnapshotStore(spark, s"$tmp/out")
+    assert(snap.done() == Set(0, 1, 2, 3))
+    val out = rows(s"$tmp/out")
+    assert(out.size == 40 && out == rows(s"$tmp/clean"))
+
+    val (_, removed) = snap.expire(1)
+    assert(removed == 1 && !stale.exists())
+    assert(rows(s"$tmp/out") == out)
+  }
+
+  test("each manifest entry's lineage counts exactly its own partition") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-lineage").toString
+    val spansPath = s"$tmp/spans"
+    // the edge profile has empty docs, so some docs stay unestimated
+    graft.gen.CorpusGen.docs(spark, 200, "edge").write.parquet(spansPath)
+    ExtractMain.run(spark, spansPath, s"$tmp/out", nParts = 4)
+    val snap = new SnapshotStore(spark, s"$tmp/out")
+    val want = snap.read()
+      .groupBy(pmod(xxhash64($"doc_id"), lit(4)).cast("int"))
+      .agg(count(lit(1)), coalesce(sum(size($"spans")), lit(0L)),
+        count(when($"hit_ratio" === -1.0, 1)))
+      .as[(Int, Long, Long, Long)].collect()
+      .map { case (p, d, s, u) => p -> ((d, s, u)) }.toMap
+    val got = snap.entries().map { case (p, e) => p -> ((e.nDocs, e.nSpans, e.nFailures)) }
+    assert(got == want)
+    assert(got.values.map(_._3).sum > 0, "corpus has no unestimated doc")
+    snap.entries().values.foreach(e => assert(spark.read.parquet(e.path).count() == e.nDocs))
   }
 }

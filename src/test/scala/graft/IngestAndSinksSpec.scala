@@ -91,6 +91,27 @@ class IngestAndSinksSpec extends SparkSpecBase {
     assert(out.repl_stats.keySet == Set("ic)", "s<"))
   }
 
+  test("E1: an inline ini config drives ExtractMain like Extraction.pipeline") {
+    import spark.implicits._
+    import graft.run.PipelineConfig
+    import graft.stages.{Extraction, ProcessedDoc}
+    val cfg = PipelineConfig.toExtractConfig(PipelineConfig.steps(
+      PipelineConfig.parseIni(PipelineConfigSpec.OrderedStepsIni)))
+    assert(cfg.regexRule.nonEmpty && cfg.pagePrefix == "")
+    val tmp = Files.createTempDirectory("graft-ini-inline").toString
+    graft.gen.CorpusGen.docs(spark, 40, "interleaved").write.parquet(s"$tmp/in")
+    ExtractMain.run(spark, s"$tmp/in", s"$tmp/out", nParts = 2, cfg = cfg)
+    val got = new graft.io.SnapshotStore(spark, s"$tmp/out").read()
+      .as[ProcessedDoc].collect().sortBy(_.doc_id).toSeq
+    val want = Extraction.pipeline(spark.read.parquet(s"$tmp/in"), cfg)
+      .collect().sortBy(_.doc_id).toSeq
+    assert(got.size == 40)
+    assert(got == want)
+    // the ini's regex step fired (its stats keys are `match=>replacement`)
+    val keys = got.flatMap(_.repl_stats.keys).toSet
+    assert(keys.exists(_.contains("=>")), keys)
+  }
+
   test("S7: backup sink preserves the pre-image of each partition") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft-backup").toString

@@ -85,24 +85,7 @@ class PipelineConfigSpec extends AnyFunSuite {
 
   // ocr_pipeline.py:101-118 — ordered step construction from ini
   test("ini steps are ordered by numeric suffix and fold into config") {
-    val ini = PipelineConfig.parseIni(
-      """|[pipeline]
-         |executors = 8
-         |[step_02]
-         |type = StepPostprocessALTO
-         |page_prefix =
-         |[step_1]
-         |type = StepPostReplaceChars
-         |dict_chars = {'ic)': 'ich', 's<': 'sc', '<': 'c'}
-         |[step_10]
-         |type = StepEstimateOCR
-         |language = de-DE
-         |[step_03]
-         |type = StepPostReplaceCharsRegex
-         |pattern = r'([aeioubcglnt]3[:-]*")'
-         |old = '3'
-         |new = 's'
-         |""".stripMargin)
+    val ini = PipelineConfig.parseIni(PipelineConfigSpec.OrderedStepsIni)
     val steps = PipelineConfig.steps(ini)
     assert(steps.map(_.section) == Seq("step_1", "step_02", "step_03", "step_10"))
     val cfg = PipelineConfig.toExtractConfig(steps)
@@ -118,4 +101,26 @@ class PipelineConfigSpec extends AnyFunSuite {
       PipelineConfig.toExtractConfig(PipelineConfig.steps(ini))
     }
   }
+}
+
+object PipelineConfigSpec {
+  /** Out-of-order `step_NN` sections with a dict step and a regex step. */
+  val OrderedStepsIni: String =
+    """|[pipeline]
+       |executors = 8
+       |[step_02]
+       |type = StepPostprocessALTO
+       |page_prefix =
+       |[step_1]
+       |type = StepPostReplaceChars
+       |dict_chars = {'ic)': 'ich', 's<': 'sc', '<': 'c'}
+       |[step_10]
+       |type = StepEstimateOCR
+       |language = de-DE
+       |[step_03]
+       |type = StepPostReplaceCharsRegex
+       |pattern = r'([aeioubcglnt]3[:-]*")'
+       |old = '3'
+       |new = 's'
+       |""".stripMargin
 }
