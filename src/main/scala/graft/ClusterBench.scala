@@ -1,175 +1,68 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions._
+
+import graft.model.Doc
+import graft.queries.Queries
+import graft.run.IngestAny
 
 /** Multi-executor benchmark entry point, launched via spark-submit
   * (north_rule: "run via spark-submit on a multi-executor cluster at
   * two cluster sizes"). The master (e.g. `local-cluster[1,4,8192]` vs
   * `local-cluster[4,4,8192]` — real executor JVMs) comes from
-  * spark-submit; this main just reads the pre-generated span corpus,
-  * runs the selected job (warmup + best-of-4), and prints one JSON
-  * line.
+  * spark-submit; this main just reads the pre-generated corpus, runs
+  * the selected job (warmup + best-of-4), and prints one JSON line.
   *
-  * Jobs: `extract` (default — the zero-shuffle per-doc pipeline) and
-  * `dedup` (xxhash minhash + LSH band pairs over the docs' joined
-  * text — the SHUFFLE-bearing dedup shape, so its scaling efficiency
-  * is measured separately from the narrow path).
+  * Jobs ([[jobs]] plus `skewjoin`), each running the shipped entry
+  * point so a scaling number measures the code that ships:
+  *  - `extract` (default): `Extraction.pipeline`, the zero-shuffle
+  *    per-doc path, over the span table;
+  *  - `parse`: `IngestAny.parseDocs` over `GenCorpus`'s xml table;
+  *  - `pdf`: `PdfExtract.extractDocs` over `GenCorpus`'s pdf table;
+  *  - `dedup`, `cluster`, `curate`, `exactsubstr`: the contract
+  *    queries q43, q62, q64 and q65 over the span table's
+  *    `(doc_id, text)` projection (shuffle-bearing, iterative and
+  *    per-token-intermediate shapes, measured apart from the narrow
+  *    path);
+  *  - `skewjoin`: plain vs salted join under a 50%-hot key.
   *
   * Usage: spark-submit --master local-cluster[E,C,M] \
-  *          --class graft.ClusterBench <jar> <spansParquet> <label> [job]
+  *          --class graft.ClusterBench <jar> <corpusParquet> <label> [job]
   */
 object ClusterBench {
 
-  private def dedupJob(docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val text = concat_ws(" ", transform(col("spans"), s => s.getField("text")))
-    graft.dedup.MinHashLsh.bandPairs(
-      graft.dedup.MinHashLsh.xxhashSignature(
-        docs.select(col("doc_id"), text.as("text")), "doc_id", "text", 8),
-      8, 2, (a, b) => xxhash64(a, b))
-  }
+  /** The span table as the contract queries' `(doc_id, text)` input. */
+  private def docText(spans: DataFrame): DataFrame =
+    spans.select(col("doc_id"), concat_ws(" ", col("spans.text")).as("text"))
 
-  /** Cluster job: the full dedup DECISION pipeline — LSH banding to
-    * connectivity-preserving STAR edges (O(bucket) rows per bucket;
-    * all-pairs expansion explodes quadratically on the massive
-    * duplicate families a skewed corpus contains) plus connected
-    * components, every doc labeled with its cluster's canonical
-    * survivor. Iterative (label propagation with per-round
-    * localCheckpoint), so its scaling behavior is measured separately
-    * from the single-pass pair generation. */
-  /** Chase depth for the iterative components stage; env override is
-    * the measurement knob for the depth-vs-stage-count tradeoff. */
-  private def ccJump: Int =
-    sys.env.get("SPARK_GRAFT_CC_JUMP")
-      .flatMap(_.toIntOption).filter(_ >= 0).getOrElse(1)
-
-  /** Contraction passes before the loop (alternating shuffle + local
-    * union-find); measurement knob for passes-vs-rounds tradeoff. */
-  private def ccPasses: Int =
-    sys.env.get("SPARK_GRAFT_CC_PASSES")
-      .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(2)
-
-  /** Fixpoint-probe cadence (rounds per driver-synchronized job).
-    * Default 1: the lazy checkpoint already folds the probe into the
-    * round's one job, so batching only saves per-job scheduling while
-    * risking a full overshoot round — measured NET-NEGATIVE at 8M
-    * (cluster 4×4: 112.9 s at probe=2 vs 101.6 s at probe=1; the
-    * convergence check lands up to k−1 rounds late and one wasted
-    * round of join work outweighs the ~1 s/job sync it saves). Kept
-    * as a knob because the tradeoff flips if per-job sync cost rises
-    * (e.g. a remote cluster scheduler). */
-  private def ccProbe: Int =
-    sys.env.get("SPARK_GRAFT_CC_PROBE")
-      .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(1)
-
-  /** Driver-solve ceiling for the quotient graph (edges); 0 = always
-    * run the distributed loop (the measurement baseline). */
-  private def ccLocalMax: Long =
-    sys.env.get("SPARK_GRAFT_CC_LOCALMAX")
-      .flatMap(_.toLongOption).filter(_ >= 0L).getOrElse(8000000L)
-
-  private def clusterJob(docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val text = concat_ws(" ", transform(col("spans"), s => s.getField("text")))
-    val edges = graft.dedup.MinHashLsh.bandStarEdges(
-      graft.dedup.MinHashLsh.xxhashSignature(
-        docs.select(col("doc_id"), text.as("text")), "doc_id", "text", 8),
-      8, 2, (a, b) => xxhash64(a, b))
-    graft.ops.ConnectedComponents.run(
-      docs.select(col("doc_id")), "doc_id", edges, "d1", "d2",
-      jumpDepth = ccJump, contractPasses = ccPasses, probeEvery = ccProbe,
-      localSolveMax = ccLocalMax)
-  }
-
-  /** Curation job: the q64 shape at bench scale — quality gate →
-    * LSH star edges over the survivors → converged components →
-    * canonical survivor → corpus stats (docs kept, tokens kept; ONE
-    * output row). The quality projection is recomputed per consumer
-    * instead of cached: it is a narrow parquet scan + concat, cheaper
-    * than pinning 2M documents' text in executor storage, and the
-    * job's cost is dominated by the banding/components shuffles. */
-  private def curateJob(docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val text = concat_ws(" ", transform(col("spans"), s => s.getField("text")))
-    val quality = docs
-      .select(col("doc_id"), text.as("text"))
-      .withColumn("n_tokens", size(split(trim(col("text")), "\\s+")))
-      .filter(col("n_tokens") >= 20) // Gopher-style short-doc gate
-    val edges = graft.dedup.MinHashLsh.bandStarEdges(
-      graft.dedup.MinHashLsh.xxhashSignature(
-        quality.select(col("doc_id"), col("text")), "doc_id", "text", 8),
-      8, 2, (a, b) => xxhash64(a, b))
-    val cc = graft.ops.ConnectedComponents.run(
-      quality.select(col("doc_id")), "doc_id", edges, "d1", "d2",
-      jumpDepth = ccJump, contractPasses = ccPasses, probeEvery = ccProbe,
-      localSolveMax = ccLocalMax)
-    cc.filter(col("node") === col("lbl")) // canonical survivors
-      .join(quality.select(col("doc_id").as("node"), col("n_tokens")), Seq("node"))
-      .agg(count(lit(1)).as("docs_kept"),
-        sum(col("n_tokens")).as("tokens_kept"))
-  }
-
-  /** ExactSubstr repeated-span dedup at bench scale (q65's shape, Lee
-    * et al. 2107.06499 §4 with the paper's W=50): every W-token window
-    * is hashed IN the Generate — only (doc_id, offset, hash64) rows
-    * ever shuffle, never the gram string — duplicated hashes are found
-    * by a map-side-combined count, and per-doc duplicated-token
-    * coverage comes from a gaps-and-islands window over the hit
-    * offsets. Per-token intermediate (the heaviest per-byte family in
-    * the bench: ~n_tokens rows per doc), so its N→4N behavior measures
-    * the wide-shuffle path the way `cluster` measures the iterative
-    * path. */
-  private def exactSubstrJob(docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
-    val W = 50
-    val base = docs.select(col("doc_id"),
-        split(trim(concat_ws(" ",
-          transform(col("spans"), s => s.getField("text")))), "\\s+").as("tk"))
-      .withColumn("n_tokens", size(col("tk")))
-    val grams = base.filter(col("n_tokens") >= W)
-      .select(col("doc_id"), posexplode(transform(
-        sequence(lit(0), col("n_tokens") - W),
-        i => xxhash64(concat_ws(" ", slice(col("tk"), i + lit(1), lit(W))))))
-        .as(Seq("s", "h")))
-    val dupHashes = grams.groupBy(col("h"))
-      .agg(count(lit(1)).as("c")).filter(col("c") > 1).select(col("h"))
-    val win = Window.partitionBy(col("doc_id")).orderBy(col("s"))
-    val covered = grams.join(dupHashes, "h")
-      .select(col("doc_id"), col("s"))
-      .withColumn("brk",
-        when(col("s") - lag(col("s"), 1).over(win) >= W, 1).otherwise(0))
-      .withColumn("isl", sum(col("brk")).over(win))
-      .groupBy(col("doc_id"), col("isl"))
-      .agg((max(col("s")) - min(col("s")) + lit(W)).as("cov"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("cov")).cast("long").as("dup_tokens"))
-    base.select(col("doc_id"), col("n_tokens"))
-      .join(covered, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_tokens"),
-        coalesce(col("dup_tokens"), lit(0L)).as("dup_tokens"))
-  }
-
-  /** Parse job: (doc_id, xml) rows → pooled-StAX parse → span docs
-    * (the north_star front end: no per-row parser instantiation). */
-  private def parseJob(spark: SparkSession, xmlPath: String)
-      : org.apache.spark.sql.DataFrame = {
+  private def bytes(spark: SparkSession, in: DataFrame): Dataset[(String, Array[Byte])] = {
     import spark.implicits._
-    graft.run.IngestXml.parseDocs(
-      spark.read.parquet(xmlPath).as[(String, String)]).toDF()
+    in.as[(String, Array[Byte])]
   }
 
-  /** PDF job: (doc_id, pdf binary) rows → from-scratch PDF text-layer
-    * parse (inflate + content-stream interpret + layout sort). */
-  private def pdfJob(spark: SparkSession, pdfPath: String)
-      : org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    graft.parse.PdfExtract.extractDocs(
-      spark.read.parquet(pdfPath).as[(String, Array[Byte])]).toDF()
+  /** Every timed data job: name → (session, corpus table) → result. */
+  val jobs: Map[String, (SparkSession, DataFrame) => DataFrame] = Map(
+    "extract" -> ((_, in) => graft.stages.Extraction.pipeline(in).toDF()),
+    "parse" -> ((s, in) => IngestAny.parseDocs(bytes(s, in)).toDF()),
+    "pdf" -> ((s, in) => graft.parse.PdfExtract.extractDocs(bytes(s, in)).toDF()),
+    "dedup" -> ((_, in) => Queries.minhashXxhashPairs(docText(in))),
+    "cluster" -> ((_, in) => Queries.neardupClusters(docText(in))),
+    "curate" -> ((_, in) => Queries.curationPipeline(docText(in))),
+    "exactsubstr" -> ((_, in) => Queries.exactSubstrDedup(docText(in))))
+
+  /** One run of `job` on `input` through the noop sink, then the one
+    * cleanup every job gets: iterative jobs (cluster, curate) leave
+    * localCheckpoint blocks clearCache() cannot see, and the LSH jobs
+    * persist their signatures; freeing both keeps best-of-N runs from
+    * accumulating blocks or cross-subsidizing a later run. */
+  def forceJob(spark: SparkSession, job: String, input: DataFrame): Unit = {
+    val out = jobs(job)(spark, input)
+    try Bench.force(out)
+    finally {
+      org.apache.spark.sql.graftbridge.Bridge.freeLocalCheckpoint(out)
+      spark.catalog.clearCache()
+    }
   }
 
   /** Skew-join measurement: a fact table where ONE key owns ~50% of
@@ -178,20 +71,18 @@ object ClusterBench {
     * prints both so the skew-mitigation claim is measured, not just
     * unit-tested. Broadcast is disabled for the comparison — salting
     * targets exactly the broadcast-ineligible case. */
-  private def skewJoinJob(spark: SparkSession, docs: org.apache.spark.sql.DataFrame)
-      : (Double, Double) = {
-    import org.apache.spark.sql.functions._
+  private def skewJoinJob(spark: SparkSession, docs: DataFrame): (Double, Double) = {
     // fact: doc rows keyed so key 0 is scorching hot (~50% of rows),
     // each carrying its document text — the shuffle then moves real
     // payload weight and the hot key's bytes land on ONE task unless
     // salted (the mega-document scenario of the north_rule)
-    val fact = docs.select(
+    val fact = docText(docs).select(
       when(pmod(xxhash64(col("doc_id")), lit(2)) === 0, lit(0L))
         .otherwise(pmod(xxhash64(col("doc_id")), lit(1000))).as("k"),
-      concat_ws(" ", transform(col("spans"), s => s.getField("text"))).as("payload"))
+      col("text").as("payload"))
     val dim = spark.range(1000).select(col("id").as("k"),
       (col("id") * 7).as("dv"))
-    def agg(joined: org.apache.spark.sql.DataFrame) =
+    def agg(joined: DataFrame) =
       joined.groupBy().agg(sum(length(col("payload")) + col("dv"))).collect()
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     // AQE's own skew handling off for the baseline so the comparison
@@ -214,7 +105,7 @@ object ClusterBench {
 
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT) // JSON f"%.3f"
-    val spansPath = args(0)
+    val corpusDir = args(0)
     val label = if (args.length > 1) args(1) else "run"
     val job = if (args.length > 2) args(2) else "extract"
     val spark = SparkSession.builder()
@@ -235,7 +126,7 @@ object ClusterBench {
     // resolve the filesystem FROM the path (a qualified s3a://or hdfs://
     // corpus must not fall through to the default FS) and walk it
     // recursively (partitioned layouts nest their files)
-    val corpusPath = new org.apache.hadoop.fs.Path(spansPath)
+    val corpusPath = new org.apache.hadoop.fs.Path(corpusDir)
     val fs = corpusPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     var maxFileBytes = 0L
     var totalFileBytes = 0L
@@ -251,13 +142,13 @@ object ClusterBench {
     spark.conf.set("spark.sql.files.maxPartitionBytes", splitBytes.toString)
     spark.conf.set("spark.sql.files.openCostInBytes", splitBytes.toString)
 
-    val docs = spark.read.parquet(spansPath)
-    val n = docs.count()
+    val input = spark.read.parquet(corpusDir)
+    val n = input.count()
 
     if (job == "skewjoin") {
       // warmup then best-of-3 of each variant
-      skewJoinJob(spark, docs)
-      val runs = (1 to 3).map(_ => skewJoinJob(spark, docs))
+      skewJoinJob(spark, input)
+      val runs = (1 to 3).map(_ => skewJoinJob(spark, input))
       val plain = runs.map(_._1).min
       val salted = runs.map(_._2).min
       val cores = spark.sparkContext.defaultParallelism
@@ -265,29 +156,7 @@ object ClusterBench {
       spark.stop()
       return
     }
-    def runJob(): Unit = {
-      job match {
-        case "extract" => Bench.force(graft.stages.Extraction.pipeline(docs).toDF())
-        case "dedup"   => Bench.force(dedupJob(docs)); spark.catalog.clearCache()
-        case "cluster" =>
-          val labels = clusterJob(docs)
-          Bench.force(labels)
-          // the final round's localCheckpoint backs the labels; free it
-          // between timed runs or best-of-N accumulates one
-          // MEMORY_AND_DISK block per run until the ContextCleaner wins
-          org.apache.spark.sql.graftbridge.Bridge.freeLocalCheckpoint(labels)
-          spark.catalog.clearCache()
-        case "curate" =>
-          val stats = curateJob(docs)
-          Bench.force(stats)
-          org.apache.spark.sql.graftbridge.Bridge.freeLocalCheckpoint(stats)
-          spark.catalog.clearCache()
-        case "exactsubstr" => Bench.force(exactSubstrJob(docs))
-        case "parse"   => Bench.force(parseJob(spark, spansPath))
-        case "pdf"     => Bench.force(pdfJob(spark, spansPath))
-        case other     => throw new IllegalArgumentException(s"unknown job '$other'")
-      }
-    }
+    require(jobs.contains(job), s"unknown job '$job'")
     // shuffle partitioning must be in place BEFORE the warmup so the
     // warmup exercises the exact plans the timed runs use (the CC loop
     // runs AQE-off, so nothing coalesces a wrong default at runtime).
@@ -297,13 +166,6 @@ object ClusterBench {
       .findFirstMatchIn(spark.sparkContext.master)
       .map(m => m.group(1).toInt * m.group(2).toInt)
       .getOrElse(spark.sparkContext.defaultParallelism)
-    // partitions-per-core multiplier: 1 = one wave per shuffle (least
-    // dispatch overhead); >1 oversplits so a skewed hot partition no
-    // longer gates the whole wave — the other cores drain small tasks
-    // while it runs. Knob for measuring that tradeoff on the skewed
-    // corpus families.
-    val shufMult = sys.env.get("SPARK_GRAFT_SHUFFLE_MULT")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(1)
     // shuffle partitioning tracks the DATA, floored by the cluster: a
     // cores-only count puts a 16M-doc corpus into 16 shuffle tasks of
     // ~350 MB decoded rows each — every one spills, and the spill
@@ -319,11 +181,11 @@ object ClusterBench {
     // on 16 cores is 1.5 waves — the second wave runs half-idle in
     // EVERY shuffle stage (measured ~5% on the 8M cluster job)
     val dataParts = (totalFileBytes / (64L * 1024 * 1024)).toInt + 1
-    val floor = math.max(totalCores * shufMult, 2)
+    val floor = math.max(totalCores, 2)
     val waves = (math.max(dataParts, floor) + totalCores - 1) / totalCores
     spark.conf.set("spark.sql.shuffle.partitions",
       (waves * totalCores).toString)
-    runJob() // warmup
+    forceJob(spark, job, input) // warmup
     // executors are registered by now (post-warmup)
     val execs = spark.sparkContext.getExecutorMemoryStatus.size - 1
     val cores = spark.sparkContext.defaultParallelism
@@ -333,20 +195,40 @@ object ClusterBench {
     // AFTER the expensive warmup already ran
     val nRuns = sys.env.get("SPARK_GRAFT_BENCH_RUNS")
       .flatMap(_.toIntOption).filter(_ > 0).getOrElse(4)
-    val sec = (1 to nRuns).map(_ => Bench.time(runJob())).min
+    val sec = (1 to nRuns).map(_ => Bench.time(forceJob(spark, job, input))).min
     println(f"""{"metric":"cluster-bench","label":"$label","job":"$job","executors":$execs,"cores":$cores,"n_docs":$n,"sec":$sec%.3f,"docs_per_sec":${n / sec}%.1f}""")
     spark.stop()
   }
 }
 
-/** Deterministic span-corpus generator main (inputs for the cluster
-  * bench; seed fixed, no external data). `format=xml` renders each doc
-  * to canonical ALTO (AltoWriter) and stores (doc_id, xml) rows — the
-  * input shape of the `parse` cluster-bench job (XML-in-parquet keeps
-  * the bench off the small-file path; wholetext dir scans are covered
-  * by IngestXml itself).
+/** Deterministic corpus generator main (inputs for the cluster bench;
+  * seed fixed, no external data). `format=xml` renders each doc to
+  * canonical ALTO (AltoWriter) and stores its bytes as (doc_id, xml)
+  * rows, `format=pdf` stores a rendered PDF as (doc_id, pdf) rows —
+  * the inputs of the `parse` and `pdf` cluster-bench jobs, kept in
+  * parquet so the bench stays off the small-file path (IngestAny's
+  * directory scan is measured by perfbench's `ingest-mixed`).
   * Usage: GenCorpus <out> <nDocs> [profile] [files] [format] */
 object GenCorpus {
+
+  /** `docs` as the table `format` names: `spans`, `xml` or `pdf`. */
+  def table(docs: Dataset[Doc], format: String): DataFrame = {
+    import docs.sparkSession.implicits._
+    format match {
+      case "spans" => docs.toDF()
+      case "xml" => docs.map(d => (d.doc_id, graft.parse.AltoWriter.render(d)))
+        .toDF("doc_id", "xml")
+      case "pdf" => docs.map { d =>
+          val tk = d.spans.filter(_.kind == graft.model.Span.KindText).map(_.text)
+          val hasMedia = d.spans.exists(_.kind == graft.model.Span.KindMedia)
+          (d.doc_id, graft.parse.PdfWriter.render(
+            Seq(graft.parse.PdfWriter.layoutTokens(tk)),
+            flate = true, withImage = hasMedia))
+        }.toDF("doc_id", "pdf")
+      case other => throw new IllegalArgumentException(s"unknown format '$other'")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val out = args(0)
     val nDocs = args(1).toLong
@@ -359,24 +241,8 @@ object GenCorpus {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
-    val docs = graft.gen.CorpusGen.docs(spark, nDocs, profile, 42L, 50000)
-    val table = format match {
-      case "spans" => docs.toDF()
-      case "xml" => docs.map(d => (d.doc_id, new String(
-          graft.parse.AltoWriter.render(d),
-          java.nio.charset.StandardCharsets.UTF_8)))
-        .toDF("doc_id", "xml")
-      case "pdf" => docs.map { d =>
-          val tk = d.spans.filter(_.kind == graft.model.Span.KindText).map(_.text)
-          val hasMedia = d.spans.exists(_.kind == graft.model.Span.KindMedia)
-          (d.doc_id, graft.parse.PdfWriter.render(
-            Seq(graft.parse.PdfWriter.layoutTokens(tk)),
-            flate = true, withImage = hasMedia))
-        }.toDF("doc_id", "pdf")
-      case other => throw new IllegalArgumentException(s"unknown format '$other'")
-    }
-    table.repartition(files).write.mode("overwrite").parquet(out)
+    table(graft.gen.CorpusGen.docs(spark, nDocs, profile, 42L, 50000), format)
+      .repartition(files).write.mode("overwrite").parquet(out)
     println(s"""{"metric":"gen","out":"$out","n_docs":$nDocs,"files":$files,"format":"$format"}""")
     spark.stop()
   }

@@ -1192,11 +1192,15 @@ object Queries {
   // this replaced measured 4.4 s at sf0.1). Engine-defined hash →
   // rows-only; correctness of the banding shape is carried by the
   // oracled md5 twin (q24).
+  /** q43's rows over `(doc_id, text)` docs: candidate pairs
+    * `(d1, d2, n_bands)`. ClusterBench's `dedup` job runs this too. */
+  def minhashXxhashPairs(docs: DataFrame): DataFrame =
+    graft.dedup.MinHashLsh.bandPairs(
+      graft.dedup.MinHashLsh.xxhashSignature(docs, "doc_id", "text", MinhashK),
+      MinhashK, 2, (a, b) => xxhash64(a, b))
+
   private val q43 = QueryDef("q43_minhash_xxhash_pairs",
-    (s, d) => graft.dedup.MinHashLsh.bandPairs(
-      graft.dedup.MinHashLsh.xxhashSignature(
-        t(s, d, "documents"), "doc_id", "text", MinhashK),
-      MinhashK, 2, (a, b) => xxhash64(a, b)),
+    (s, d) => minhashXxhashPairs(t(s, d, "documents")),
     // the PRODUCTION hash path is oracled too: DuckDB recomputes the
     // full XXH64 (stripes/merges/tails/avalanche) in HUGEINT mod-2^64
     // arithmetic — see [[XxHashOracleSql]] — so the engine-defined
@@ -1993,23 +1997,27 @@ object Queries {
   // the canonical survivor flagged. Oracled end-to-end: DuckDB
   // computes the SAME clusters via a recursive reachability CTE over
   // the same md5-minhash edges.
+  /** q62's rows over `(doc_id, text)` docs, before its ORDER BY:
+    * `(doc_id, cluster_id, cluster_size, is_canonical)`. ClusterBench's
+    * `cluster` job runs this too. */
+  def neardupClusters(docs: DataFrame): DataFrame = {
+    // star edges, not all-pairs: connectivity-identical per bucket
+    // (OpsJoinSpec proves equal component maps) at O(|bucket|) rows —
+    // the form that survives massive duplicate families
+    val edges = graft.dedup.MinHashLsh.bandStarEdges(
+      graft.dedup.MinHashLsh.md5Signature(docs, "doc_id", "text", MinhashK),
+      MinhashK, 2, (a, b) => md5(concat_ws("_", a, b)))
+    val cc = graft.ops.ConnectedComponents
+      .run(docs.select(col("doc_id")), "doc_id", edges, "d1", "d2")
+    val sizes = cc.groupBy(col("lbl")).agg(count(lit(1)).as("cluster_size"))
+    cc.join(sizes, "lbl")
+      .select(col("node").as("doc_id"), col("lbl").as("cluster_id"),
+        col("cluster_size"),
+        (col("node") === col("lbl")).as("is_canonical"))
+  }
+
   private val q62 = QueryDef("q62_neardup_clusters",
-    (s, d) => {
-      // star edges, not all-pairs: connectivity-identical per bucket
-      // (OpsJoinSpec proves equal component maps) at O(|bucket|) rows —
-      // the form that survives massive duplicate families
-      val edges = graft.dedup.MinHashLsh.bandStarEdges(signatureDF(s, d), MinhashK, 2,
-        (a, b) => md5(concat_ws("_", a, b)))
-      val vertices = t(s, d, "documents").select(col("doc_id"))
-      val cc = graft.ops.ConnectedComponents
-        .run(vertices, "doc_id", edges, "d1", "d2")
-      val sizes = cc.groupBy(col("lbl")).agg(count(lit(1)).as("cluster_size"))
-      cc.join(sizes, "lbl")
-        .select(col("node").as("doc_id"), col("lbl").as("cluster_id"),
-          col("cluster_size"),
-          (col("node") === col("lbl")).as("is_canonical"))
-        .orderBy(col("doc_id"))
-    },
+    (s, d) => neardupClusters(t(s, d, "documents")).orderBy(col("doc_id")),
     Some(s"""WITH RECURSIVE tt AS (
                SELECT doc_id, string_split_regex(trim(text), '\\s+') AS tk
                FROM documents),
@@ -2082,40 +2090,43 @@ object Queries {
   // operator COMPOSITION the per-query contract never does; every
   // stage is replayed by the DuckDB oracle (q45's signal SQL + q62's
   // recursive-reachability clustering over the filtered subset).
+  /** q64's per-doc decision rows over `(doc_id, text)` docs, before
+    * its ORDER BY: `(doc_id, q_pass, cluster_id, cluster_size, kept,
+    * kept_tokens)`. ClusterBench's `curate` job runs this too. */
+  def curationPipeline(docs: DataFrame): DataFrame = {
+    val tk = toks(col("text"))
+    val swLit = lit(QualityStopwords.toArray)
+    val quality = docs.select(col("doc_id"), col("text"),
+        size(tk).as("n_tokens"),
+        size(filter(tk, x => array_contains(swLit, x))).as("n_sw"))
+      .withColumn("q_pass",
+        col("n_tokens").between(25, 80) && col("n_sw") >= 1)
+    val passed = quality.filter(col("q_pass"))
+      .select(col("doc_id"), col("text"))
+    val sig = graft.dedup.MinHashLsh.md5Signature(
+      passed, "doc_id", "text", MinhashK)
+    val edges = graft.dedup.MinHashLsh.bandStarEdges(sig, MinhashK, 2,
+      (a, b) => md5(concat_ws("_", a, b)))
+    val cc = graft.ops.ConnectedComponents.run(
+      passed.select(col("doc_id")), "doc_id", edges, "d1", "d2")
+    val sizes = cc.groupBy(col("lbl")).agg(count(lit(1)).as("cluster_size"))
+    val clustered = cc.join(sizes, "lbl")
+      .select(col("node").as("doc_id"), col("lbl").as("cluster_id"),
+        col("cluster_size"))
+    quality
+      .select(col("doc_id"), col("n_tokens"),
+        col("q_pass").cast("int").as("q_pass"))
+      .join(clustered, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("q_pass"), col("cluster_id"),
+        col("cluster_size"),
+        coalesce((col("doc_id") === col("cluster_id")).cast("int"),
+          lit(0)).as("kept"),
+        when(col("doc_id") === col("cluster_id"), col("n_tokens"))
+          .otherwise(lit(0)).as("kept_tokens"))
+  }
+
   private val q64 = QueryDef("q64_curation_pipeline",
-    (s, d) => {
-      val docs = t(s, d, "documents")
-      val tk = toks(col("text"))
-      val swLit = lit(QualityStopwords.toArray)
-      val quality = docs.select(col("doc_id"), col("text"),
-          size(tk).as("n_tokens"),
-          size(filter(tk, x => array_contains(swLit, x))).as("n_sw"))
-        .withColumn("q_pass",
-          col("n_tokens").between(25, 80) && col("n_sw") >= 1)
-      val passed = quality.filter(col("q_pass"))
-        .select(col("doc_id"), col("text"))
-      val sig = graft.dedup.MinHashLsh.md5Signature(
-        passed, "doc_id", "text", MinhashK)
-      val edges = graft.dedup.MinHashLsh.bandStarEdges(sig, MinhashK, 2,
-        (a, b) => md5(concat_ws("_", a, b)))
-      val cc = graft.ops.ConnectedComponents.run(
-        passed.select(col("doc_id")), "doc_id", edges, "d1", "d2")
-      val sizes = cc.groupBy(col("lbl")).agg(count(lit(1)).as("cluster_size"))
-      val clustered = cc.join(sizes, "lbl")
-        .select(col("node").as("doc_id"), col("lbl").as("cluster_id"),
-          col("cluster_size"))
-      quality
-        .select(col("doc_id"), col("n_tokens"),
-          col("q_pass").cast("int").as("q_pass"))
-        .join(clustered, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("q_pass"), col("cluster_id"),
-          col("cluster_size"),
-          coalesce((col("doc_id") === col("cluster_id")).cast("int"),
-            lit(0)).as("kept"),
-          when(col("doc_id") === col("cluster_id"), col("n_tokens"))
-            .otherwise(lit(0)).as("kept_tokens"))
-        .orderBy(col("doc_id"))
-    },
+    (s, d) => curationPipeline(t(s, d, "documents")).orderBy(col("doc_id")),
     Some(s"""WITH RECURSIVE qual AS (
                SELECT doc_id, text,
                  CAST(len(string_split_regex(trim(text), '\\s+')) AS INT)
@@ -2183,49 +2194,54 @@ object Queries {
   // 64-bit gram hashes and gram strings diverge only on collision
   // (deterministic corpus: observed parity, P~1e-7 at sf0.1).
   private val ExactSubstrW = 8
+
+  /** q65's rows over `(doc_id, text)` docs, before its ORDER BY:
+    * `(doc_id, n_tokens, dup_tokens, dup_ratio, kept)`. ClusterBench's
+    * `exactsubstr` job runs this too. */
+  def exactSubstrDedup(docs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val W = ExactSubstrW
+    val base = docs
+      .select(col("doc_id"),
+        when(length(trim(col("text"))) === 0,
+          array().cast("array<string>"))
+          .otherwise(toks(col("text"))).as("tk"))
+      .withColumn("n_tokens", size(col("tk")))
+    val grams = base.filter(col("n_tokens") >= W)
+      .select(col("doc_id"), posexplode(transform(
+        sequence(lit(0), col("n_tokens") - W),
+        i => xxhash64(concat_ws(" ", slice(col("tk"), i + lit(1), lit(W))))))
+        .as(Seq("s", "h")))
+    // duplicated-window detection as ONE exchange: a count window
+    // over h keeps exactly the rows whose hash occurs more than once
+    // — identical row set to the former groupBy(h)>1 + hash-join
+    // back, but the gram Generate runs ONCE and the grams table
+    // crosses the wire once (both sides of the old join re-derived
+    // it). Same 100-TB shape: only 8-byte hashes shuffle.
+    val win = Window.partitionBy(col("doc_id")).orderBy(col("s"))
+    val wH = Window.partitionBy(col("h"))
+    val covered = grams
+      .withColumn("c", count(lit(1)).over(wH))
+      .filter(col("c") > 1)
+      .select(col("doc_id"), col("s"))
+      .withColumn("brk",
+        when(col("s") - lag(col("s"), 1).over(win) >= W, 1).otherwise(0))
+      .withColumn("isl", sum(col("brk")).over(win))
+      .groupBy(col("doc_id"), col("isl"))
+      .agg((max(col("s")) - min(col("s")) + lit(W)).as("cov"))
+      .groupBy(col("doc_id"))
+      .agg(sum(col("cov")).cast("long").as("dup_tokens"))
+    base.select(col("doc_id"), col("n_tokens"))
+      .join(covered, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("n_tokens"),
+        coalesce(col("dup_tokens"), lit(0L)).as("dup_tokens"))
+      .withColumn("dup_ratio", when(col("n_tokens") === 0, lit(0.0))
+        .otherwise(round(col("dup_tokens") / col("n_tokens"), 4)))
+      .withColumn("kept", (col("dup_ratio") < 0.5).cast("int"))
+  }
+
   private val q65 = QueryDef("q65_exact_substr_dedup",
-    (s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val W = ExactSubstrW
-      val base = t(s, d, "documents")
-        .select(col("doc_id"),
-          when(length(trim(col("text"))) === 0,
-            array().cast("array<string>"))
-            .otherwise(toks(col("text"))).as("tk"))
-        .withColumn("n_tokens", size(col("tk")))
-      val grams = base.filter(col("n_tokens") >= W)
-        .select(col("doc_id"), posexplode(transform(
-          sequence(lit(0), col("n_tokens") - W),
-          i => xxhash64(concat_ws(" ", slice(col("tk"), i + lit(1), lit(W))))))
-          .as(Seq("s", "h")))
-      // duplicated-window detection as ONE exchange: a count window
-      // over h keeps exactly the rows whose hash occurs more than once
-      // — identical row set to the former groupBy(h)>1 + hash-join
-      // back, but the gram Generate runs ONCE and the grams table
-      // crosses the wire once (both sides of the old join re-derived
-      // it). Same 100-TB shape: only 8-byte hashes shuffle.
-      val win = Window.partitionBy(col("doc_id")).orderBy(col("s"))
-      val wH = Window.partitionBy(col("h"))
-      val covered = grams
-        .withColumn("c", count(lit(1)).over(wH))
-        .filter(col("c") > 1)
-        .select(col("doc_id"), col("s"))
-        .withColumn("brk",
-          when(col("s") - lag(col("s"), 1).over(win) >= W, 1).otherwise(0))
-        .withColumn("isl", sum(col("brk")).over(win))
-        .groupBy(col("doc_id"), col("isl"))
-        .agg((max(col("s")) - min(col("s")) + lit(W)).as("cov"))
-        .groupBy(col("doc_id"))
-        .agg(sum(col("cov")).cast("long").as("dup_tokens"))
-      base.select(col("doc_id"), col("n_tokens"))
-        .join(covered, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_tokens"),
-          coalesce(col("dup_tokens"), lit(0L)).as("dup_tokens"))
-        .withColumn("dup_ratio", when(col("n_tokens") === 0, lit(0.0))
-          .otherwise(round(col("dup_tokens") / col("n_tokens"), 4)))
-        .withColumn("kept", (col("dup_ratio") < 0.5).cast("int"))
-        .orderBy(col("doc_id"))
-    },
+    (s, d) => exactSubstrDedup(t(s, d, "documents")).orderBy(col("doc_id")),
     Some(s"""WITH base AS (
                SELECT doc_id,
                  CASE WHEN length(trim(text)) = 0

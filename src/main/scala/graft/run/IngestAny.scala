@@ -14,9 +14,13 @@ import graft.parse.{HtmlExtract, OcrXmlParser, ParserPool, PdfExtract}
   * with the `binaryFile` source (one row per file, content as bytes —
   * works for text and binary payloads alike); parse failures become
   * `kind='error'` rows and tick the failure accumulator, never
-  * aborting the job.
+  * aborting the job. This is the engine's analog of the reference's
+  * scan + parse front end (ocr_pipeline.py:271-336 +
+  * lib/ocr_step.py:365): parsers are pooled per task, never built per
+  * row.
   *
-  * Usage: IngestAny <dir[,dir…]> <outParquet>
+  * Usage: IngestAny <dir[,dir…]> <outParquet> [shapesOut]
+  * (`shapesOut` also writes the C9 line-geometry side table).
   */
 object IngestAny {
 
@@ -52,9 +56,21 @@ object IngestAny {
     else FmtUnknown
   }
 
-  /** Distributed dispatch-parse of (doc_id, content) rows. `vertical`
-    * = y-center word ordering for vertical-text PAGE documents
-    * (see [[graft.run.IngestXml.parseDocs]]). */
+  /** The payload as UTF-8 text, decoded from AFTER the BOM like the
+    * sniff reads it (a kept U+FEFF is a StAX prolog error / a glued
+    * first HTML word). */
+  private def text(bytes: Array[Byte]): String = {
+    val off = bomOffset(bytes)
+    new String(bytes, off, bytes.length - off, java.nio.charset.StandardCharsets.UTF_8)
+  }
+
+  /** Distributed dispatch-parse of (doc_id, content) rows. Row-level
+    * failures become failure rows and tick the accumulators (docs
+    * parsed, spans emitted, parse failures). `vertical` selects
+    * y-center word ordering for vertical-text PAGE corpora
+    * (lib/ocr_model.py:190-200; the reference plumbs but never enables
+    * it — here it is a per-job flag, `SPARK_GRAFT_VERTICAL=1` on the
+    * CLI mains). */
   def parseDocs(raw: Dataset[(String, Array[Byte])],
       vertical: Boolean = false): Dataset[Doc] = {
     val sc = raw.sparkSession.sparkContext
@@ -66,16 +82,11 @@ object IngestAny {
       val xmlParser = ParserPool.get() // pooled per task, never per row
       it.map { case (docId, bytes) =>
         try {
-          // decode from AFTER the BOM, like the sniff does (a kept
-          // U+FEFF is a StAX prolog error / a glued first HTML word)
-          val off = bomOffset(bytes)
-          def text = new String(bytes, off, bytes.length - off,
-            java.nio.charset.StandardCharsets.UTF_8)
           val spans = sniff(bytes) match {
             case FmtPdf => PdfExtract.extract(bytes, docId)
-            case FmtHtml => HtmlExtract.extract(text, docId).spans
+            case FmtHtml => HtmlExtract.extract(text(bytes), docId).spans
             case FmtXml =>
-              OcrXmlParser.toSpans(docId, xmlParser.parse(text), vertical)
+              OcrXmlParser.toSpans(docId, xmlParser.parse(text(bytes)), vertical)
             case FmtUnknown =>
               throw new IllegalArgumentException("unrecognized format")
           }
@@ -88,6 +99,31 @@ object IngestAny {
             Doc(docId, Vector(Span(IngestXml.KindError,
               Option(e.getMessage).getOrElse(""), "", 0)))
         }
+      }
+    }
+  }
+
+  /** Distributed parse of (doc_id, content) rows into the C9 geometry
+    * side table: one row per line with a shape, joinable to the span
+    * table on (doc_id, line_ref). Only rows that sniff as XML are
+    * parsed; parse failures contribute no rows here — they already
+    * surface as failure rows in [[parseDocs]].
+    *
+    * Scale note: the shapes output is OPT-IN and runs as a second scan
+    * over the raw input (two independent sinks need two actions
+    * without a cache); a corpus-scale run that wants both should
+    * persist the raw rows or derive geometry in the same job via its
+    * own pipeline. */
+  def parseShapes(raw: Dataset[(String, Array[Byte])])
+      : Dataset[(String, String, Seq[(Int, Int)])] = {
+    import raw.sparkSession.implicits._
+    raw.mapPartitions { it =>
+      val parser = ParserPool.get()
+      it.flatMap { case (docId, bytes) =>
+        if (sniff(bytes) != FmtXml) Nil
+        else try OcrXmlParser.lineShapes(parser.parse(text(bytes)))
+          .map { case (ref, corners) => (docId, ref, corners) }
+        catch { case _: Exception => Nil }
       }
     }
   }
@@ -121,6 +157,7 @@ object IngestAny {
 
   def main(args: Array[String]): Unit = {
     val Array(inDirs, outPath) = args.take(2)
+    val shapesPath = args.lift(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -137,6 +174,10 @@ object IngestAny {
     val docs = parseDocs(raw,
       vertical = sys.env.get("SPARK_GRAFT_VERTICAL").contains("1"))
     docs.write.mode("overwrite").parquet(outPath)
+    shapesPath.foreach { sp =>
+      parseShapes(raw).toDF("doc_id", "line_ref", "corners")
+        .write.mode("overwrite").parquet(sp)
+    }
 
     // summary from the WRITTEN parquet — a second pass over the raw
     // corpus would re-run the whole parse (and double-count the

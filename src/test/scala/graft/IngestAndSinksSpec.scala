@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.model.{Doc, Span}
 import graft.parse.OcrXmlParser
-import graft.run.{ExtractMain, IngestXml}
+import graft.run.{ExtractMain, IngestAny}
 
 /** S3 multi-directory scan, C9 geometry carry-through, and the S7
   * pre-image backup sink. */
@@ -32,9 +32,9 @@ class IngestAndSinksSpec extends SparkSpecBase {
     Files.writeString(d1.resolve("doc_one.xml"), altoXml("p1", "Eins"))
     Files.writeString(d2.resolve("doc_two.xml"), altoXml("p2", "Zwei"))
     Files.writeString(d2.resolve("ignored.txt"), "not xml")
-    val raw = IngestXml.readRaw(spark,
-      Seq(base.resolve("a").toString, base.resolve("b").toString))
-    val docs = IngestXml.parseDocs(raw).collect().sortBy(_.doc_id)
+    val raw = IngestAny.readFiles(spark,
+      Seq(base.resolve("a").toString, base.resolve("b").toString), "*.xml")
+    val docs = IngestAny.parseDocs(raw).collect().sortBy(_.doc_id)
     assert(docs.map(_.doc_id).toSeq == Seq("doc_one", "doc_two"))
     assert(docs.forall(_.spans.length == 2))
     assert(docs.head.spans.map(_.text) == Seq("Eins", "Welt"))
@@ -64,10 +64,14 @@ class IngestAndSinksSpec extends SparkSpecBase {
 
   test("C9: parseShapes emits the distributed geometry side table") {
     import spark.implicits._
-    val raw = Seq(("d1", altoXml("p1", "Hallo"))).toDS()
-    val rows = IngestXml.parseShapes(raw).collect()
-    assert(rows.toSeq == Seq(("d1", "line://b1/l1",
-      Seq((10, 20), (110, 20), (110, 50), (10, 50)))))
+    val xml = altoXml("p1", "Hallo").getBytes("UTF-8")
+    val bom = Array(0xEF, 0xBB, 0xBF).map(_.toByte)
+    val raw = Seq(("d1", xml), ("d2", bom ++ xml)).toDS()
+    val rows = IngestAny.parseShapes(raw).collect().sortBy(_._1)
+    // the BOM-prefixed copy yields the same shapes
+    val corners = Seq((10, 20), (110, 20), (110, 50), (10, 50))
+    assert(rows.toSeq == Seq(("d1", "line://b1/l1", corners),
+      ("d2", "line://b1/l1", corners)))
   }
 
   test("E1: the reference's own ini config drives ExtractMain end-to-end") {

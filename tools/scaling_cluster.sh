@@ -47,9 +47,11 @@ gen /tmp/graft_bench/spans2m spans
 run extract /tmp/graft_bench/spans2m extract
 
 if [ "$MODE" = "all" ]; then
-  gen /tmp/graft_bench/xml2m xml
+  # xmlbin*: the xml table holds binary ALTO bytes; an older xml2m dir
+  # holds strings, which the parse job cannot read (gen skips it)
+  gen /tmp/graft_bench/xmlbin2m xml
   gen /tmp/graft_bench/pdf2m pdf
-  run parse /tmp/graft_bench/xml2m   parse "$PGC"
+  run parse /tmp/graft_bench/xmlbin2m parse "$PGC"
   run dedup /tmp/graft_bench/spans2m dedup "$PGC"
   run pdf   /tmp/graft_bench/pdf2m   pdf   "$PGC"
   # composite pipeline (LSH star edges + iterative components): long

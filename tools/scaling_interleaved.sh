@@ -73,8 +73,10 @@ if [ "$FAMILY" = "all" ] || [ "$FAMILY" = "extract" ]; then
   family extract "/tmp/graft_bench/spans$SFX" extract "" 4
 fi
 if [ "$FAMILY" = "all" ] || [ "$FAMILY" = "parse" ]; then
-  gen "/tmp/graft_bench/xml$SFX" xml
-  family parse "/tmp/graft_bench/xml$SFX" parse "$PGC" 4
+  # xmlbin*: the xml table holds binary ALTO bytes; an older xml$SFX
+  # dir holds strings, which the parse job cannot read (gen skips it)
+  gen "/tmp/graft_bench/xmlbin$SFX" xml
+  family parse "/tmp/graft_bench/xmlbin$SFX" parse "$PGC" 4
 fi
 if [ "$FAMILY" = "all" ] || [ "$FAMILY" = "dedup" ]; then
   family dedup "/tmp/graft_bench/spans$SFX" dedup "$PGC" 4
