@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.queries.Queries
+import graft.queries.{Queries, QueryDef}
 
 /** Per-round benchmark: runs every driver-contract query against
   * SPARK_GRAFT_SF_DIR plus the extraction pipeline throughput, prints
@@ -21,75 +21,73 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** The one timed-job runner: builds `job`'s DataFrame, forces it
+    * through the noop sink and returns the seconds of both. Building
+    * stays INSIDE the timed section: iterative queries (q62/q64
+    * connected components, q63's BPE learn) do their dominant work
+    * eagerly while the plan is built. Then, in the finally (so a job
+    * that THREW after checkpointing rounds cannot leak into the rest
+    * of the session), it frees the localCheckpoint blocks
+    * clearCache() cannot see and drops every persisted block
+    * (minhash/simhash barriers), so repeated runs neither accumulate
+    * blocks nor cross-subsidize a later job's timing. */
+  def run(spark: SparkSession)(job: => DataFrame): Double = {
+    var df: DataFrame = null
+    try time { df = job; force(df) }
+    finally {
+      if (df != null)
+        try org.apache.spark.sql.graftbridge.Bridge.freeLocalCheckpoint(df)
+        catch { case _: Throwable => }
+      spark.catalog.clearCache()
+    }
+  }
+
+  /** [[run]] for a named job whose failure must not end the session:
+    * prints `<name>: <exception>` to stderr and returns -1.0. */
+  def runOrReport(spark: SparkSession, name: String)(job: => DataFrame): Double =
+    try run(spark)(job)
+    catch { case e: Throwable => System.err.println(s"$name: $e"); -1.0 }
+
+  /** The queries whose names start with one of the comma-separated
+    * prefixes in `only`; all of them when `only` is None. */
+  def selected(only: Option[String]): Seq[QueryDef] = only match {
+    case Some(list) =>
+      val prefixes = list.split(",").map(_.trim).filter(_.nonEmpty)
+      Queries.all.filter(q => prefixes.exists(q.name.startsWith))
+    case None => Queries.all
+  }
+
   def main(args: Array[String]): Unit = {
     // the JSON line is locale-sensitive through f"%.3f" — pin ROOT so
     // a comma-decimal default locale can't break the driver's parse
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session("graft-bench")
 
     // JVM/codegen warmup on a cheap query
-    try force(Queries.all.head.fn(spark, sfDir)) catch { case _: Throwable => }
+    runOrReport(spark, "warmup")(Queries.all.head.fn(spark, sfDir))
 
     // iteration aid: SPARK_GRAFT_BENCH_ONLY=q60,q61 times a subset
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => Queries.all.filter(q => names.exists(q.name.startsWith))
-      case None        => Queries.all
-    }
+    val queries = selected(only)
 
     // q57 bench honesty: production PDFs ARRIVE, they aren't
     // synthesized — pay the render once up front (reported separately
     // as pdf_synth_sec) and time only the parse stage in the query loop
     val pdfTmp = s"/tmp/graft_bench_pdf_${System.nanoTime()}"
     val pdfSynthSec =
-      if (!selected.exists(_.name == "q57_pdf_extract")) -1.0
+      if (!queries.exists(_.name == "q57_pdf_extract")) -1.0
       else try {
         time(Queries.pdfRender(spark, sfDir)
           .write.mode("overwrite").parquet(pdfTmp))
       } catch { case _: Throwable => -1.0 }
 
-    val results = selected.map { q =>
-      // construction stays INSIDE the timed section: iterative queries
-      // (q62/q64 connected components, q63's BPE learn) do their
-      // dominant work eagerly while the plan is built — timing only
-      // the final force would exclude nearly all of their real cost
-      var df: DataFrame = null
-      val sec = try {
-        time {
-          df =
-            if (q.name == "q57_pdf_extract" && pdfSynthSec >= 0)
-              Queries.pdfParse(spark, spark.read.parquet(pdfTmp))
-            else q.fn(spark, sfDir)
-          force(df)
-        }
-      } catch { case _: Throwable => -1.0 }
-      finally {
-        // iterative queries (q62 components) leave localCheckpoint
-        // blocks that clearCache() cannot see — free them explicitly
-        // so repeated runs don't accumulate MEMORY_AND_DISK blocks.
-        // In the finally (tolerating a partially-built df): a query
-        // that THREW after checkpointing rounds must not leak its
-        // final block into the rest of the bench session.
-        if (df != null)
-          try org.apache.spark.sql.graftbridge.Bridge.freeLocalCheckpoint(df)
-          catch { case _: Throwable => }
+    val results = queries.map { q =>
+      q.name -> runOrReport(spark, q.name) {
+        if (q.name == "q57_pdf_extract" && pdfSynthSec >= 0)
+          Queries.pdfParse(spark, spark.read.parquet(pdfTmp))
+        else q.fn(spark, sfDir)
       }
-      // drop any blocks a query persisted (minhash/simhash barriers) so
-      // cached signatures neither leak executor memory across the run
-      // nor cross-subsidize a later query's timing
-      spark.catalog.clearCache()
-      q.name -> sec
     }
 
     // extraction pipeline throughput (docs/sec) on a generated

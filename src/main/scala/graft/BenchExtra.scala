@@ -1,12 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.queries.Queries
 
 /** Optimization-round measurement harness (guide §1.4) — NOT part of
   * the frozen driver contract ([[Bench]] is). Runs each selected query
-  * `reps` times through the noop sink and prints per-rep seconds, so
+  * `reps` times through [[Bench.run]] and prints per-rep seconds, so
   * plan-compile/JIT warmup separates from steady-state compute.
   *
   * Usage: runMain graft.BenchExtra [reps] [q01,q41,...]
@@ -16,43 +14,13 @@ object BenchExtra {
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val reps = args.headOption.map(_.toInt).getOrElse(3)
-    val only = args.drop(1).headOption
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-extra")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session("graft-bench-extra")
 
-    def force(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-
-    try force(Queries.all.head.fn(spark, sfDir)) catch { case _: Throwable => }
-    val selected = only match {
-      case Some(names) => Queries.all.filter(q => names.exists(q.name.startsWith))
-      case None        => Queries.all
-    }
-    selected.foreach { q =>
+    Bench.runOrReport(spark, "warmup")(Queries.all.head.fn(spark, sfDir))
+    Bench.selected(args.lift(1)).foreach { q =>
       spark.sparkContext.setJobDescription(q.name)
-      val secs = (1 to reps).map { _ =>
-        var df: DataFrame = null
-        val s = try time { df = q.fn(spark, sfDir); force(df) }
-        catch { case e: Throwable => System.err.println(s"${q.name}: $e"); -1.0 }
-        finally if (df != null)
-          try org.apache.spark.sql.graftbridge.Bridge.freeLocalCheckpoint(df)
-          catch { case _: Throwable => }
-        spark.catalog.clearCache()
-        s
-      }
+      val secs = (1 to reps).map(_ => Bench.runOrReport(spark, q.name)(q.fn(spark, sfDir)))
       println(s"""{"q":"${q.name}","secs":[${secs.map(s => f"$s%.3f").mkString(",")}]}""")
     }
     spark.stop()

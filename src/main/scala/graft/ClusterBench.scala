@@ -51,19 +51,11 @@ object ClusterBench {
     "curate" -> ((_, in) => Queries.curationPipeline(docText(in))),
     "exactsubstr" -> ((_, in) => Queries.exactSubstrDedup(docText(in))))
 
-  /** One run of `job` on `input` through the noop sink, then the one
-    * cleanup every job gets: iterative jobs (cluster, curate) leave
-    * localCheckpoint blocks clearCache() cannot see, and the LSH jobs
-    * persist their signatures; freeing both keeps best-of-N runs from
-    * accumulating blocks or cross-subsidizing a later run. */
-  def forceJob(spark: SparkSession, job: String, input: DataFrame): Unit = {
-    val out = jobs(job)(spark, input)
-    try Bench.force(out)
-    finally {
-      org.apache.spark.sql.graftbridge.Bridge.freeLocalCheckpoint(out)
-      spark.catalog.clearCache()
-    }
-  }
+  /** One [[Bench.run]] of `job` on `input`: its seconds through the
+    * noop sink, then the cleanup every timed job gets (iterative jobs
+    * leave localCheckpoint blocks, the LSH jobs persist signatures). */
+  def forceJob(spark: SparkSession, job: String, input: DataFrame): Double =
+    Bench.run(spark)(jobs(job)(spark, input))
 
   /** Skew-join measurement: a fact table where ONE key owns ~50% of
     * all rows, joined to a non-broadcastable dimension, salted vs
@@ -108,12 +100,7 @@ object ClusterBench {
     val corpusDir = args(0)
     val label = if (args.length > 1) args(1) else "run"
     val job = if (args.length > 2) args(2) else "extract"
-    val spark = SparkSession.builder()
-      .appName(s"graft-cluster-bench-$label")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session(s"graft-cluster-bench-$label")
 
     // one scan task per generated file: the corpora are written as
     // single-row-group files, so byte-range splits below the file size
@@ -195,7 +182,7 @@ object ClusterBench {
     // AFTER the expensive warmup already ran
     val nRuns = sys.env.get("SPARK_GRAFT_BENCH_RUNS")
       .flatMap(_.toIntOption).filter(_ > 0).getOrElse(4)
-    val sec = (1 to nRuns).map(_ => Bench.time(forceJob(spark, job, input))).min
+    val sec = (1 to nRuns).map(_ => forceJob(spark, job, input)).min
     println(f"""{"metric":"cluster-bench","label":"$label","job":"$job","executors":$execs,"cores":$cores,"n_docs":$n,"sec":$sec%.3f,"docs_per_sec":${n / sec}%.1f}""")
     spark.stop()
   }
@@ -235,12 +222,7 @@ object GenCorpus {
     val profile = if (args.length > 2) args(2) else "skewed"
     val files = if (args.length > 3) args(3).toInt else 128
     val format = if (args.length > 4) args(4) else "spans"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-gen")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session("graft-gen")
     table(graft.gen.CorpusGen.docs(spark, nDocs, profile, 42L, 50000), format)
       .repartition(files).write.mode("overwrite").parquet(out)
     println(s"""{"metric":"gen","out":"$out","n_docs":$nDocs,"files":$files,"format":"$format"}""")

@@ -2,10 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
-import graft.queries.Queries
-
 /** Optimization-round helper: writes `.explain("formatted")` for each
   * (or a selected subset of) declared query to <outDir>/<name>.txt —
   * the plan evidence the round notes cite. Not part of the frozen
@@ -16,24 +12,10 @@ import graft.queries.Queries
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("plans/tmp")
-    val only = args.drop(1).headOption
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session("graft-plandump")
     Files.createDirectories(Paths.get(outDir))
-    val selected = only match {
-      case Some(names) => Queries.all.filter(q => names.exists(q.name.startsWith))
-      case None        => Queries.all
-    }
-    selected.foreach { q =>
+    Bench.selected(args.lift(1)).foreach { q =>
       val plan =
         try {
           val df = q.fn(spark, sfDir)

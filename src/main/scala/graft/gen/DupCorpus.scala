@@ -1,6 +1,5 @@
 package graft.gen
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measurement tool for the r7 scaling evidence (VERDICT r6 #1):
@@ -25,14 +24,7 @@ object DupCorpus {
     // each task 8x the rows and blow the executor heap
     val files = if (args.length > 3) args(3).toInt else 128
     require(dupPct >= 0 && dupPct <= 99, "dupPct in [0,99]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-dup-corpus")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session("graft-dup-corpus")
     val src = spark.read.parquet(in)
     val n = substring(col("doc_id"), 5, 12).cast("long")
     val withNum = src.withColumn("_n", n)

@@ -45,16 +45,7 @@ object ExtractMain {
         PipelineConfig.parseIni(java.nio.file.Files.readString(
           java.nio.file.Paths.get(p)))))
     }.getOrElse(ExtractConfig())
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-extract")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-extract")
     run(spark, inPath, outRoot, nParts, backup, cfg)
     spark.stop()
   }

@@ -158,16 +158,8 @@ object IngestAny {
   def main(args: Array[String]): Unit = {
     val Array(inDirs, outPath) = args.take(2)
     val shapesPath = args.lift(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ingest-any")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session("graft-ingest-any")
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
 
     val raw = readFiles(spark,
       inDirs.split(",").toIndexedSeq.map(_.trim).filter(_.nonEmpty))

@@ -1,7 +1,5 @@
 package graft.run
 
-import org.apache.spark.sql.SparkSession
-
 /** Incremental extraction pass as a CLI surface (T2): one
   * `Trigger.AvailableNow` tick over whatever span files currently sit
   * under the input path, exactly-once via the streaming checkpoint —
@@ -18,15 +16,7 @@ object StreamMain {
   def main(args: Array[String]): Unit = {
     val Array(inDir, outDir, ckptDir) = args.take(3)
     val mode = if (args.length > 3) args(3) else "extract"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-extract")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-stream-extract")
     val q = mode match {
       case "extract" =>
         graft.streaming.StreamExtract.availableNow(spark, inDir, outDir, ckptDir)

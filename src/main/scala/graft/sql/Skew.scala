@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   * handled with salted repartitioning and AQE skew-join hints").
   *
   * Two layers:
-  *  1. AQE (`spark.sql.adaptive.skewJoin.enabled`) — set in every
-  *     session builder of this engine — splits skewed shuffle
+  *  1. AQE (`spark.sql.adaptive.skewJoin.enabled`, on by Spark's
+  *     default, which `SessionSpec` pins) splits skewed shuffle
   *     partitions at runtime.
   *  2. Explicit salting below, for the cases AQE cannot fix:
   *     a broadcast-ineligible join against a dimension where a few

@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -59,13 +59,4 @@ object Bridge {
         org.apache.spark.sql.classic.Dataset.ofRows(session, clean)
       case _ => df
     }
-
-  /** A sibling SparkSession on the same SparkContext with the given
-    * extensions applied — Spark only applies extensions at session
-    * construction, and `getOrCreate` returns the existing session, so
-    * tests (and embedders that join a live context) need this hook. */
-  def sessionWithExtensions(
-      sc: org.apache.spark.SparkContext,
-      configure: org.apache.spark.sql.SparkSessionExtensions => Unit): SparkSession =
-    org.apache.spark.sql.classic.GraftSessionShim.withExtensions(sc, configure)
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.classic.GraftSessionShim
 
 import graft.sql.GraftExtensions
 
@@ -9,7 +9,7 @@ import graft.sql.GraftExtensions
 class ExtensionsSpec extends SparkSpecBase {
 
   private lazy val s2 =
-    Bridge.sessionWithExtensions(spark.sparkContext, new GraftExtensions)
+    GraftSessionShim.withExtensions(spark.sparkContext, new GraftExtensions)
 
   test("graft_simhash / graft_minhash / graft_md5_minhash from plain SQL") {
     val r = s2.sql(

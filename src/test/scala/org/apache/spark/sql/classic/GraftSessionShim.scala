@@ -3,10 +3,12 @@ package org.apache.spark.sql.classic
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSessionExtensions
 
-/** In-package shim: the extensions-bearing SparkSession constructor is
-  * package-private to `classic`; this exposes "new session on a live
-  * SparkContext with custom extensions" to the library (see
-  * graftbridge.Bridge.sessionWithExtensions). */
+/** In-package test shim: a sibling SparkSession on the live
+  * SparkContext with the given extensions applied. Spark applies
+  * extensions only at session construction and `getOrCreate` returns
+  * the existing session, so a spec that shares the suite's context
+  * needs this; the extensions-bearing constructor is package-private
+  * to `classic`. */
 object GraftSessionShim {
   def withExtensions(sc: SparkContext,
       configure: SparkSessionExtensions => Unit): SparkSession = {
