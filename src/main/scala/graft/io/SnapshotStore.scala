@@ -36,9 +36,9 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     * (`docs_unestimated`) and labels it `unestimated` in its lineage
     * print. `schemaHash` fingerprints the data files' Spark schema
     * (md5 of schema JSON) so reads can decide cheaply whether a
-    * cross-partition schema merge is needed; empty for
-    * pre-fingerprint manifests (conservatively treated as "might
-    * diverge"). */
+    * cross-partition schema merge is needed; empty only in manifests
+    * written before fingerprints existed (conservatively treated as
+    * "might diverge"). */
   final case class Entry(part: Int, path: String, nDocs: Long,
       nSpans: Long, nFailures: Long, committedAt: String,
       schemaHash: String = "")
@@ -75,16 +75,19 @@ final class SnapshotStore(spark: SparkSession, root: String) {
 
   /** Commit partition `part` at `dataPath` into a new snapshot:
     * carries every other partition's entry forward, replaces this
-    * partition's (MERGE/overwrite-partition). Returns the version. */
+    * partition's (MERGE/overwrite-partition). Returns the version.
+    * A `dataPath` that does not exist, or whose schema cannot be
+    * read, throws before anything is written: a manifest never names
+    * data no reader could open. */
   def commit(part: Int, dataPath: String, nDocs: Long, nSpans: Long,
       nFailures: Long): Long = {
+    if (!fs.exists(new Path(dataPath)))
+      throw new java.io.IOException(s"cannot commit part=$part: $dataPath does not exist")
     // one footer read per COMMIT buys every future read() the right
     // to skip Spark's all-files schema-merge pass (see read())
-    val schemaHash = try {
-      val json = spark.read.parquet(dataPath).schema.json
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(json.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    } catch { case _: Exception => "" }
+    val schemaHash = java.security.MessageDigest.getInstance("MD5")
+      .digest(spark.read.parquet(dataPath).schema.json.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
     val cur = currentVersion()
     val next = cur.getOrElse(0L) + 1
     val merged = entries(cur) + (part -> Entry(part, dataPath, nDocs,

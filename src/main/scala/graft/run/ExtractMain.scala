@@ -17,7 +17,11 @@ import graft.stages.{ExtractConfig, Extraction}
   * partition stays the unit of commit and resume: each one is committed
   * once, as one snapshot-manifest entry carrying its lineage metrics,
   * and a rerun processes only the partitions the current manifest does
-  * not list (SnapshotStore).
+  * not list (SnapshotStore). This is the engine's only incremental
+  * path. Its limit: rows appended to the input after every partition
+  * has committed are never extracted (their partitions are done); a
+  * rerun that finds nothing pending but an input count unlike the
+  * manifest's prints a WARNING line with both numbers.
   *
   * All pending partitions go through ONE Spark job: one scan of the
   * input, one pass of the codegen'd span stages, one write partitioned
@@ -110,9 +114,20 @@ object ExtractMain {
     backfillLegacy(spark, outRoot, ckpt, snap)
     // J1: resume is an in-driver set difference over partition
     // metadata, O(#partitions) — never a per-doc anti-join
-    val done = snap.done()
-    val todo = (0 until nParts).filterNot(done.contains)
+    val committed = snap.entries()
+    val todo = (0 until nParts).filterNot(committed.contains)
     println(s"[extract] partitions total=$nParts pending=${todo.size}")
+    // the resume unit is the partition, so rows appended to the input
+    // after every partition committed are never extracted: say so
+    // instead of finishing silently (one count, only when idle)
+    if (todo.isEmpty) {
+      val nIn = docs.count()
+      val nCommitted = committed.values.map(_.nDocs).sum
+      if (nIn != nCommitted)
+        println(s"[extract] WARNING: input holds $nIn docs, the committed " +
+          s"snapshot $nCommitted; every partition is done, so rows added " +
+          "since are not extracted (a new out root extracts them)")
+    }
 
     // S7: backup only when the config can actually modify content —
     // the reference's `if self._replacements and self.must_backup()`
@@ -164,25 +179,20 @@ object ExtractMain {
     val rep = Extraction.writeReport(all, s"$outRoot/report")
     println(s"[extract] report: mean=${rep.mean} bins=[${rep.b1},${rep.b2},${rep.b3},${rep.b4},${rep.b5}] " +
       s"total=${rep.n_total} invalid=${rep.n_invalid}")
-    // exact-layout `.wtr` compatibility file for downstream parsers
-    // (single file; SPARK_GRAFT_WTR=0 opts out for huge corpora where
-    // only the distributed report makes sense)
-    if (!sys.env.get("SPARK_GRAFT_WTR").contains("0")) {
-      // over the driver-streamed cap the run must NOT die at its last
-      // step: skip the compat file (the distributed report above is
-      // the corpus-scale surface) and keep going with maintenance
-      if (rep.n_total > Extraction.WtrMaxRows)
-        println(s"[extract] wtr skipped: ${rep.n_total} rows exceed the " +
-          s"driver-streamed cap ${Extraction.WtrMaxRows}; use the " +
-          "distributed report (SPARK_GRAFT_WTR=0 silences this)")
-      else {
-        val stamp = java.time.format.DateTimeFormatter
-          .ofPattern("yyyy-MM-dd_HH-mm").withZone(java.time.ZoneOffset.UTC)
-          .format(java.time.Instant.now())
-        val wtrPath = s"$outRoot/report/corpus_$stamp.wtr"
-        Extraction.writeWtr(all, wtrPath, precomputed = Some(rep))
-        println(s"[extract] wtr: $wtrPath")
-      }
+    // exact-layout `.wtr` compatibility file for downstream parsers.
+    // Over the driver-streamed cap the run must NOT die at its last
+    // step: skip the compat file (the distributed report above is the
+    // corpus-scale surface) and keep going with maintenance
+    if (rep.n_total > Extraction.WtrMaxRows)
+      println(s"[extract] wtr skipped: ${rep.n_total} rows exceed the " +
+        s"driver-streamed cap ${Extraction.WtrMaxRows}; use the distributed report")
+    else {
+      val stamp = java.time.format.DateTimeFormatter
+        .ofPattern("yyyy-MM-dd_HH-mm").withZone(java.time.ZoneOffset.UTC)
+        .format(java.time.Instant.now())
+      val wtrPath = s"$outRoot/report/corpus_$stamp.wtr"
+      Extraction.writeWtr(all, wtrPath, precomputed = Some(rep))
+      println(s"[extract] wtr: $wtrPath")
     }
     // optional snapshot maintenance: SPARK_GRAFT_EXPIRE=<keepLast>
     // drops manifest history and GCs orphaned attempt dirs

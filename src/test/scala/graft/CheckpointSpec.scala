@@ -135,10 +135,62 @@ class CheckpointSpec extends SparkSpecBase {
       java.nio.file.Paths.get(s"$tmp/snapshots/_tmp.v1.123"), "{half")
     assert(snap.currentVersion().isEmpty)
     // a real commit then publishes v1 with the entry
+    spark.range(1).write.parquet(s"$tmp/data/p_7/a_1")
     val v = snap.commit(7, s"$tmp/data/p_7/a_1", 10, 20, 0)
     assert(v == 1L)
     assert(snap.done() == Set(7))
     assert(snap.entries()(7).nSpans == 20)
+  }
+
+  test("commit refuses a data path it cannot read, before writing anything") {
+    val tmp = Files.createTempDirectory("graft-missing").toString
+    val snap = new SnapshotStore(spark, tmp)
+    val ok = snap.newDataPath(0)
+    spark.range(3).write.parquet(ok)
+    snap.commit(0, ok, 3, 3, 0)
+    def tmpFiles = new java.io.File(s"$tmp/snapshots").list().count(_.startsWith("_tmp."))
+    val tmpBefore = tmpFiles
+
+    val missing = s"$tmp/data/p_1/a_never_written"
+    val e = intercept[java.io.IOException](snap.commit(1, missing, 5, 5, 0))
+    assert(e.getMessage.contains(missing))
+    // an existing dir with no parquet in it: the footer read fails
+    val empty = new java.io.File(snap.newDataPath(2)); empty.mkdirs()
+    intercept[Exception](snap.commit(2, empty.toString, 1, 1, 0))
+
+    assert(snap.currentVersion().contains(1L))
+    assert(snap.done() == Set(0))
+    assert(tmpFiles == tmpBefore)
+  }
+
+  test("a rerun over a grown input warns with both counts and commits nothing") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-grown").toString
+    val spansPath = s"$tmp/spans"
+    val outRoot = s"$tmp/out"
+    graft.gen.CorpusGen.docs(spark, 40, "interleaved").write.parquet(spansPath)
+    ExtractMain.run(spark, spansPath, outRoot, nParts = 4)
+    val snap = new SnapshotStore(spark, outRoot)
+    val v = snap.currentVersion()
+    def ids = snap.read().select($"doc_id").as[String].collect().sorted.toSeq
+    val before = ids
+    assert(before.size == 40)
+    def rerun(): String = {
+      val buf = new java.io.ByteArrayOutputStream()
+      Console.withOut(buf)(ExtractMain.run(spark, spansPath, outRoot, nParts = 4))
+      buf.toString("UTF-8")
+    }
+    // unchanged input: nothing pending, nothing to warn about
+    assert(!rerun().contains("WARNING"))
+
+    graft.gen.CorpusGen.docs(spark, 50, "interleaved")
+      .filter($"doc_id" >= "doc_000000000040")
+      .write.mode(SaveMode.Append).parquet(spansPath)
+    val warnings = rerun().linesIterator.filter(_.startsWith("[extract] WARNING")).toSeq
+    assert(warnings.size == 1, warnings)
+    assert(warnings.head.contains("50") && warnings.head.contains("40"), warnings.head)
+    assert(snap.currentVersion() == v)
+    assert(ids == before)
   }
 
   test("schema evolution: later snapshots add a column; time travel keeps the old schema") {

@@ -1,14 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.SaveMode
-import org.apache.spark.sql.functions._
-
 import graft.multimodal.Media
-import graft.streaming.StreamExtract
 
-/** Multimodal plumbing + structured-streaming incrementality. */
+/** Multimodal plumbing: pooled media decode and header parsing. */
 class MediaStreamingSpec extends SparkSpecBase {
 
   test("media decode: pooled stub decoder, deterministic metadata") {
@@ -104,37 +98,5 @@ class MediaStreamingSpec extends SparkSpecBase {
       assert((mm.mime, mm.width, mm.height) ==
         ((expect.mime, expect.width, expect.height)), mm.media_ref)
     }
-  }
-
-  test("streaming AvailableNow pass == batch pipeline result, incremental pickup") {
-    import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-stream").toString
-    val in = s"$tmp/in"; val out = s"$tmp/out"; val ck = s"$tmp/ck"
-
-    val batch1 = graft.gen.CorpusGen.docs(spark, 50, "interleaved").toDF()
-    batch1.write.mode(SaveMode.Overwrite).parquet(in)
-
-    StreamExtract.availableNow(spark, in, out, ck).awaitTermination()
-    val n1 = spark.read.parquet(out).count()
-    assert(n1 == 50)
-
-    // new files arrive → only the delta is processed on the next tick
-    graft.gen.CorpusGen.docs(spark, 80, "interleaved").toDF()
-      .filter(col("doc_id") >= "doc_000000000050")
-      .write.mode(SaveMode.Append).parquet(in)
-    StreamExtract.availableNow(spark, in, out, ck).awaitTermination()
-    val res = spark.read.parquet(out)
-    assert(res.count() == 80)
-    assert(res.select("doc_id").distinct().count() == 80)
-
-    // streaming output matches the batch pipeline on the same input
-    val batchOut = graft.stages.Extraction
-      .pipeline(spark.read.parquet(in))
-      .select($"doc_id", $"hit_ratio", $"n_words", size($"spans").as("ns"))
-      .as[(String, Double, Int, Int)].collect().sortBy(_._1).toSeq
-    val streamOut = res
-      .select($"doc_id", $"hit_ratio", $"n_words", size($"spans").as("ns"))
-      .as[(String, Double, Int, Int)].collect().sortBy(_._1).toSeq
-    assert(streamOut == batchOut)
   }
 }
