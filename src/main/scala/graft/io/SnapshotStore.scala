@@ -2,6 +2,8 @@ package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.StructType
 
 /** Snapshot-manifest table layout — the MERGE-style commit semantics
   * of an Iceberg table (overwrite-partition + snapshot isolation),
@@ -38,10 +40,14 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     * (md5 of schema JSON) so reads can decide cheaply whether a
     * cross-partition schema merge is needed; empty only in manifests
     * written before fingerprints existed (conservatively treated as
-    * "might diverge"). */
+    * "might diverge"). `summary` (manifest key `summary`, optional) is
+    * an opaque string the writer stores with the entry: the store
+    * carries it forward without reading it (`ExtractMain` keeps the
+    * partition's report statistics there; see
+    * [[graft.stages.ReportParts]]); empty when the writer stored none. */
   final case class Entry(part: Int, path: String, nDocs: Long,
       nSpans: Long, nFailures: Long, committedAt: String,
-      schemaHash: String = "")
+      schemaHash: String = "", summary: String = "")
 
   private val snapDir = s"$root/snapshots"
   private def fs: FileSystem =
@@ -80,18 +86,42 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     * read, throws before anything is written: a manifest never names
     * data no reader could open. */
   def commit(part: Int, dataPath: String, nDocs: Long, nSpans: Long,
-      nFailures: Long): Long = {
-    if (!fs.exists(new Path(dataPath)))
-      throw new java.io.IOException(s"cannot commit part=$part: $dataPath does not exist")
+      nFailures: Long, summary: String = ""): Long = {
+    requireExists(Seq(dataPath))
     // one footer read per COMMIT buys every future read() the right
     // to skip Spark's all-files schema-merge pass (see read())
-    val schemaHash = java.security.MessageDigest.getInstance("MD5")
-      .digest(spark.read.parquet(dataPath).schema.json.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
+    val hash = SnapshotStore.schemaHash(spark.read.parquet(dataPath).schema)
+    publish(Seq(Entry(part, dataPath, nDocs, nSpans, nFailures, "", hash, summary)))
+  }
+
+  /** Commit several partitions into ONE new snapshot: every given
+    * entry replaces its partition's, every other partition's entry is
+    * carried forward, and all of them become visible with one atomic
+    * rename. `committedAt` is stamped here, one instant for the whole
+    * commit; `schemaHash` is the caller's (see
+    * [[SnapshotStore.schemaHash]]), so no footer is read. Every path
+    * is checked to exist before anything is written. Returns the
+    * version. */
+  def commitAll(entries: Seq[Entry]): Long = {
+    require(entries.nonEmpty, "nothing to commit")
+    require(entries.map(_.part).distinct.size == entries.size,
+      s"one entry per partition: ${entries.map(_.part).mkString(",")}")
+    requireExists(entries.map(_.path))
+    publish(entries)
+  }
+
+  private def requireExists(paths: Seq[String]): Unit =
+    paths.find(p => !fs.exists(new Path(p))).foreach { p =>
+      throw new java.io.IOException(s"cannot commit: $p does not exist")
+    }
+
+  /** Writes the next manifest: the current entries with `changed`
+    * replacing theirs, all stamped with one commit time. */
+  private def publish(changed: Seq[Entry]): Long = {
     val cur = currentVersion()
     val next = cur.getOrElse(0L) + 1
-    val merged = entries(cur) + (part -> Entry(part, dataPath, nDocs,
-      nSpans, nFailures, java.time.Instant.now.toString, schemaHash))
+    val now = java.time.Instant.now.toString
+    val merged = entries(cur) ++ changed.map(e => e.part -> e.copy(committedAt = now))
     val tmp = new Path(snapDir, s"_tmp.v$next.${System.nanoTime()}")
     fs.mkdirs(new Path(snapDir))
     val out = fs.create(tmp, true)
@@ -101,7 +131,9 @@ final class SnapshotStore(spark: SparkSession, root: String) {
         w.write(s"""{"part":${e.part},"path":${json(e.path)},"n_docs":${e.nDocs},""" +
           s""""n_spans":${e.nSpans},"n_failures":${e.nFailures},""" +
           s""""committed_at":${json(e.committedAt)},""" +
-          s""""schema":${json(e.schemaHash)}}""" + "\n")
+          s""""schema":${json(e.schemaHash)}""" +
+          (if (e.summary.isEmpty) "" else s""","summary":${json(e.summary)}""") +
+          "}\n")
       }
       w.flush()
     } finally out.close()
@@ -142,16 +174,17 @@ final class SnapshotStore(spark: SparkSession, root: String) {
   /** Compact a partition's data files (the `rewrite_data_files`
     * maintenance op — incremental ticks accumulate small files):
     * rewrite the current attempt dir into `targetFiles` files at a
-    * FRESH attempt path and commit the swap. Content-identical,
-    * metadata-only replacement — readers pinned to older versions keep
-    * the old files until [[expire]] garbage-collects them. */
+    * FRESH attempt path and commit the swap, the entry's lineage and
+    * summary carried over. Content-identical, metadata-only
+    * replacement — readers pinned to older versions keep the old files
+    * until [[expire]] garbage-collects them. */
   def compact(part: Int, targetFiles: Int = 1): Long = {
     val e = entries().getOrElse(part,
       throw new NoSuchElementException(s"partition $part not committed"))
     val dest = newDataPath(part)
     spark.read.parquet(e.path).coalesce(targetFiles)
       .write.parquet(dest)
-    commit(part, dest, e.nDocs, e.nSpans, e.nFailures)
+    commit(part, dest, e.nDocs, e.nSpans, e.nFailures, e.summary)
   }
 
   /** Expire history (the `expire_snapshots` maintenance op): keep the
@@ -225,10 +258,37 @@ final class SnapshotStore(spark: SparkSession, root: String) {
         require(!required, s"bad manifest line: $line")
         return "" // pre-fingerprint manifest: field absent
       }
-      m.group(1).replace("\\\"", "\"").replace("\\\\", "\\")
+      unjson(m.group(1))
     }
     Entry(grabNum("part").toInt, grabStr("path"), grabNum("n_docs"),
       grabNum("n_spans"), grabNum("n_failures"), grabStr("committed_at"),
-      grabStr("schema", required = false))
+      grabStr("schema", required = false), grabStr("summary", required = false))
   }
+
+  /** Inverse of [[json]] on a string body: quote, backslash and the
+    * four-hex-digit escapes of control characters. */
+  private def unjson(s: String): String = {
+    val b = new StringBuilder
+    var i = 0
+    while (i < s.length) {
+      if (s(i) == '\\' && i + 1 < s.length) {
+        if (s(i + 1) == 'u') {
+          b += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar; i += 6
+        } else { b += s(i + 1); i += 2 }
+      } else { b += s(i); i += 1 }
+    }
+    b.toString
+  }
+}
+
+object SnapshotStore {
+
+  /** Fingerprint of a data dir's Spark schema (md5 of its JSON), as the
+    * parquet reader reports it: every field nullable. A writer hashes
+    * the schema of the DataFrame it wrote and gets the hash a footer
+    * read of the written files would give. */
+  def schemaHash(schema: StructType): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(Bridge.asNullable(schema).json.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
 }

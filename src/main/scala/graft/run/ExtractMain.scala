@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Checkpoint
-import graft.stages.{ExtractConfig, Extraction}
+import graft.stages.{ExtractConfig, Extraction, ReportParts}
 
 /** Checkpointed extraction job over a span table — the engine twin of
   * `python ocr_pipeline.py <data_path>` (ocr_pipeline.py:445-538).
@@ -25,15 +25,21 @@ import graft.stages.{ExtractConfig, Extraction}
   *
   * All pending partitions go through ONE Spark job: one scan of the
   * input, one pass of the codegen'd span stages, one write partitioned
-  * by `part` into a staging dir, with the per-partition lineage
-  * observed in the same pass. The driver then moves each partition's
-  * output into a fresh attempt dir and commits it, in partition order.
-  * The trade: a run killed during that write commits nothing, where a
-  * per-partition job would have kept the partitions finished before the
-  * kill. A killed run's staging dir is an unreferenced data dir, which
+  * by `part` into a staging dir, with the per-partition lineage and
+  * report statistics observed in the same pass. The driver then moves
+  * each partition's output into a fresh attempt dir and commits them
+  * all as ONE manifest version per run (`SnapshotStore.commitAll`; the
+  * schema fingerprint comes from the written DataFrame, no footer is
+  * read). The trade: a run killed during that write or before the
+  * commit commits nothing from that run, where a per-partition job
+  * would have kept the partitions finished before the kill. A killed
+  * run's staging dir is an unreferenced data dir, which
   * [[graft.io.SnapshotStore.expire]] collects like any orphan attempt.
-  * After the commits come the corpus report (S11), the `.wtr` file and
-  * the replacement statistics over the current snapshot.
+  * After the commit come the corpus report (S11), the `.wtr` file and
+  * the replacement statistics of the current snapshot. The report and
+  * the statistics are merged on the driver from the manifest entries'
+  * summaries when every entry has one, else computed by a scan; the
+  * detail CSV and the `.wtr` share one sort of the snapshot's rows.
   */
 object ExtractMain {
 
@@ -148,7 +154,8 @@ object ExtractMain {
       observed.write.partitionBy("part").parquet(staging.toString)
       val counts = lineage()
       val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      todo.foreach { p =>
+      val schemaHash = graft.io.SnapshotStore.schemaHash(rows.drop("part").schema)
+      val entries = todo.map { p =>
         // every attempt is a FRESH dir of parquet files plus `_SUCCESS`
         // (backfillLegacy recognises completed data by that marker);
         // commits replace metadata, never files
@@ -163,10 +170,13 @@ object ExtractMain {
           // no rows hashed here: a schema-only file, no scan
           rows.drop("part").limit(0).write.parquet(attempt.toString)
         }
-        val (nDocs, nSpans, nUnest) = counts(p)
-        val v = snap.commit(p, attempt.toString, nDocs, nSpans, nUnest)
-        println(s"[extract] committed part=$p snapshot=v$v docs=$nDocs " +
-          s"spans=$nSpans unestimated=$nUnest")
+        val (nDocs, nSpans, nUnest, parts) = counts(p)
+        snap.Entry(p, attempt.toString, nDocs, nSpans, nUnest, "", schemaHash, parts.encode)
+      }
+      val v = snap.commitAll(entries)
+      entries.foreach { e =>
+        println(s"[extract] committed part=${e.part} snapshot=v$v docs=${e.nDocs} " +
+          s"spans=${e.nSpans} unestimated=${e.nFailures}")
       }
       fs.delete(staging, true)
       if (fs.listStatus(staging.getParent).isEmpty) fs.delete(staging.getParent, false)
@@ -174,25 +184,32 @@ object ExtractMain {
 
     // corpus report over the CURRENT SNAPSHOT (consistent view;
     // ocr_pipeline.py:233-269): summary (mean + bins + totals) and
-    // ratio-sorted detail (S11 .wtr)
+    // ratio-sorted detail (S11 .wtr). The summary and the replacement
+    // statistics merge the entries' summaries, O(#partitions) on the
+    // driver; an entry without one (legacy backfill, bare commit,
+    // older manifest) makes both scan the snapshot instead
+    val committedNow = snap.entries()
+    val merged = ReportParts.merge(committedNow.values.map(_.summary))
     val all = snap.read().as[graft.stages.ProcessedDoc]
-    val rep = Extraction.writeReport(all, s"$outRoot/report")
-    println(s"[extract] report: mean=${rep.mean} bins=[${rep.b1},${rep.b2},${rep.b3},${rep.b4},${rep.b5}] " +
-      s"total=${rep.n_total} invalid=${rep.n_invalid}")
-    // exact-layout `.wtr` compatibility file for downstream parsers.
-    // Over the driver-streamed cap the run must NOT die at its last
-    // step: skip the compat file (the distributed report above is the
-    // corpus-scale surface) and keep going with maintenance
-    if (rep.n_total > Extraction.WtrMaxRows)
-      println(s"[extract] wtr skipped: ${rep.n_total} rows exceed the " +
-        s"driver-streamed cap ${Extraction.WtrMaxRows}; use the distributed report")
-    else {
+    val rep = merged.map(_.toReport).getOrElse(Extraction.report(all))
+    // exact-layout `.wtr` compatibility file for downstream parsers,
+    // written from the detail's sorted rows. Over the driver-streamed
+    // cap the run must NOT die at its last step: skip the compat file
+    // (the distributed report is the corpus-scale surface) and keep
+    // going with maintenance
+    val wtrPath = if (rep.n_total > Extraction.WtrMaxRows) None else {
       val stamp = java.time.format.DateTimeFormatter
         .ofPattern("yyyy-MM-dd_HH-mm").withZone(java.time.ZoneOffset.UTC)
         .format(java.time.Instant.now())
-      val wtrPath = s"$outRoot/report/corpus_$stamp.wtr"
-      Extraction.writeWtr(all, wtrPath, precomputed = Some(rep))
-      println(s"[extract] wtr: $wtrPath")
+      Some(s"$outRoot/report/corpus_$stamp.wtr")
+    }
+    Extraction.writeReport(all, s"$outRoot/report", Some(rep), wtrPath)
+    println(s"[extract] report: mean=${rep.mean} bins=[${rep.b1},${rep.b2},${rep.b3},${rep.b4},${rep.b5}] " +
+      s"total=${rep.n_total} invalid=${rep.n_invalid}")
+    wtrPath match {
+      case Some(p) => println(s"[extract] wtr: $p")
+      case None => println(s"[extract] wtr skipped: ${rep.n_total} rows exceed the " +
+        s"driver-streamed cap ${Extraction.WtrMaxRows}; use the distributed report")
     }
     // optional snapshot maintenance: SPARK_GRAFT_EXPIRE=<keepLast>
     // drops manifest history and GCs orphaned attempt dirs
@@ -202,12 +219,12 @@ object ExtractMain {
     }
     // A1/A2 corpus replacement statistics, reference `ſ:392` format
     // (ocr_pipeline.py:402-411) — O(#distinct keys) driver-side
-    val stats = Extraction.corpusReplStats(all).collect()
-      .map(r => s"${r.getString(0)}:${r.getLong(1)}")
-    println(s"[extract] replacement stats: ${stats.mkString(", ")}")
+    val stats = merged.map(_.replStatsSorted).getOrElse(
+      Extraction.corpusReplStats(all).collect().map(r => (r.getString(0), r.getLong(1))).toSeq)
+    println(s"[extract] replacement stats: ${stats.map { case (k, n) => s"$k:$n" }.mkString(", ")}")
     // lineage from the manifest, driver-side (the n_failures field
     // holds the unestimated-doc count; see SnapshotStore.Entry)
-    snap.entries().values.toSeq.sortBy(_.part).foreach { e =>
+    committedNow.values.toSeq.sortBy(_.part).foreach { e =>
       println(s"[extract] lineage part=${e.part} docs=${e.nDocs} " +
         s"spans=${e.nSpans} unestimated=${e.nFailures} committed_at=${e.committedAt}")
     }

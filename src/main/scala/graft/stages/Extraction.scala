@@ -3,10 +3,11 @@ package graft.stages
 import java.util.regex.Pattern
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.{Doc, Estimation, EstimationReport, Line, Span}
 import graft.sql.SpanOps
@@ -53,6 +54,88 @@ final case class ProcessedDoc(
 private[stages] final case class CleanedWithRaw(
     doc_id: String, spans: Seq[Span], raw_spans: Seq[Span])
 
+/** The merge-exact parts of [[Extraction.report]] over a set of rows,
+  * plus their summed replacement statistics: counts, the exact decimal
+  * sum of the valid ratios and the five bins all add up across
+  * partitions, so the report of a snapshot is the sum of its
+  * partitions' parts, with no scan. [[toReport]] is the one finish step
+  * (the Python rounding of the mean) for both ways of getting here.
+  * [[encode]] is the form `ExtractMain` stores in each manifest entry's
+  * `summary`. */
+final case class ReportParts(nTotal: Long, nInvalid: Long, nValid: Long,
+    ratioSum: java.math.BigDecimal, bins: Seq[Long], replStats: Map[String, Long]) {
+
+  def +(o: ReportParts): ReportParts = ReportParts(
+    nTotal + o.nTotal, nInvalid + o.nInvalid, nValid + o.nValid,
+    ratioSum.add(o.ratioSum), bins.zip(o.bins).map { case (a, b) => a + b },
+    ReportParts.addStats(replStats, o.replStats))
+
+  /** Mean of the valid ratios (Python-rounded to 3 places), bins and
+    * totals. */
+  def toReport: EstimationReport = {
+    val mean =
+      if (nValid == 0) 0.0
+      else TextRules.pyRound(ratioSum.doubleValue() / nValid, 3)
+    EstimationReport(mean, bins(0), bins(1), bins(2), bins(3), bins(4), nTotal, nInvalid)
+  }
+
+  /** The replacement statistics in [[Extraction.corpusReplStats]]'
+    * order: hits descending, then key in Spark's (UTF-8 byte) order. */
+  def replStatsSorted: Seq[(String, Long)] =
+    replStats.toSeq.sortWith { case ((ka, na), (kb, nb)) =>
+      na > nb || (na == nb && UTF8String.fromString(ka).binaryCompare(UTF8String.fromString(kb)) < 0)
+    }
+
+  /** `t=<n>;i=<invalid>;v=<valid>;s=<sum>;b=<b1>,…,<b5>;r=<key>:<hits>,…`
+    * with every key URL-encoded (UTF-8), so no key can break the
+    * separators or the manifest's JSON. */
+  def encode: String = {
+    def enc(k: String) = java.net.URLEncoder.encode(k, "UTF-8")
+    s"t=$nTotal;i=$nInvalid;v=$nValid;s=${ratioSum.toPlainString};b=${bins.mkString(",")};" +
+      "r=" + replStats.toSeq.sortBy(_._1).map { case (k, n) => s"${enc(k)}:$n" }.mkString(",")
+  }
+}
+
+object ReportParts {
+
+  val Empty: ReportParts =
+    ReportParts(0, 0, 0, java.math.BigDecimal.ZERO, Seq.fill(5)(0L), Map.empty)
+
+  /** `m` with every key's hits in `more` added. */
+  def addStats(m: Map[String, Long], more: IterableOnce[(String, Long)]): Map[String, Long] =
+    more.iterator.foldLeft(m) { case (acc, (k, n)) => acc.updated(k, acc.getOrElse(k, 0L) + n) }
+
+  /** Inverse of [[ReportParts.encode]]; None for anything else,
+    * including the empty summary of an entry that has none. */
+  def decode(s: String): Option[ReportParts] = scala.util.Try {
+    val f = s.split(";", -1).map { kv =>
+      val eq = kv.indexOf('='); kv.substring(0, eq) -> kv.substring(eq + 1)
+    }.toMap
+    def list(k: String) = if (f(k).isEmpty) Seq.empty[String] else f(k).split(",", -1).toSeq
+    val bins = list("b").map(_.toLong)
+    require(bins.size == 5)
+    ReportParts(f("t").toLong, f("i").toLong, f("v").toLong,
+      new java.math.BigDecimal(f("s")), bins,
+      list("r").map { e =>
+        val c = e.lastIndexOf(':')
+        java.net.URLDecoder.decode(e.substring(0, c), "UTF-8") -> e.substring(c + 1).toLong
+      }.toMap)
+  }.toOption
+
+  /** The sum of every summary's parts, or None when one of them has
+    * none (a backfilled legacy entry, a bare commit, an older
+    * manifest): the caller then scans. */
+  def merge(summaries: Iterable[String]): Option[ReportParts] =
+    summaries.foldLeft(Option(Empty)) { (acc, s) => acc.flatMap(a => decode(s).map(a + _)) }
+}
+
+/** [[Extraction.withLineage]]'s buffer: per logical partition
+  * `[docs, spans, unestimated, valid, b1..b5]` (flattened, 9 longs
+  * each), the decimal sum of the valid ratios and the summed
+  * replacement statistics. */
+private[stages] final case class LineageBuf(counts: Array[Long],
+    sums: Array[java.math.BigDecimal], stats: Array[Map[String, Long]])
+
 /** The extraction pipeline: the reference's per-document step chain
   * (ocr_pipeline.py:379-441 with conf/ocr_config.ini:15-37) re-expressed
   * as a composition of narrow Spark stages over `Dataset[Doc]`.
@@ -60,8 +143,12 @@ private[stages] final case class CleanedWithRaw(
   * Execution shape (100 TB story): every stage is per-row (per-doc) —
   * there is NO shuffle anywhere in the chain; Catalyst fuses the
   * column stages into one whole-stage-codegen pass and the estimate
-  * stage is a single narrow typed `mapPartitions`. The only shuffle in
-  * the whole job is the final tiny corpus aggregate. Nothing
+  * stage is a single narrow typed `mapPartitions`. After the chain,
+  * the report's detail sort shuffles the valid rows (range-partitioned,
+  * one sort for the detail CSV and the `.wtr`); the corpus report
+  * itself is either one tiny aggregate ([[report]]) or, in
+  * `ExtractMain`, a driver-side merge of the per-partition
+  * [[ReportParts]] observed in the write pass. Nothing
   * repartitions before the chain: the tasks are the input's scan
   * splits, so a 10^5-span mega-doc is one row of whichever split reads
   * it and its cost lands on that one task. A task therefore holds at
@@ -238,61 +325,112 @@ object Extraction {
   /** E4 lineage of a processed stream, collected during its one action:
     * per logical partition (`rows` carries an int `part` in
     * [0, nParts)) the docs, spans emitted (`coalesce(size(spans), 0)`)
-    * and unestimated docs. One [[Observation]] with a single typed
-    * aggregate over a buffer of 3·nParts longs, so the per-row cost does
-    * not grow with the partition count. The returned function blocks
-    * until the action has run and yields the counts indexed by part. */
+    * and unestimated docs, plus the partition's [[ReportParts]]. One
+    * [[Observation]] with a single typed aggregate over a fixed-size
+    * buffer per partition, so the per-row cost does not grow with the
+    * partition count. The ratio enters the sum through the same
+    * `cast("decimal(28,10)")` as in [[report]], so the per-row rounding
+    * is Catalyst's in both. The returned function blocks until the
+    * action has run and yields the lineage indexed by part. */
   def withLineage(rows: DataFrame, nParts: Int)
-      : (DataFrame, () => IndexedSeq[(Long, Long, Long)]) = {
+      : (DataFrame, () => IndexedSeq[(Long, Long, Long, ReportParts)]) = {
     val obs = Observation("graft_lineage")
-    val perPart = udaf(new PartLineage(nParts),
-      Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt, Encoders.scalaBoolean))
+    val perPart = udaf(new LineageAgg(nParts),
+      ExpressionEncoder[(Int, Int, Boolean, java.math.BigDecimal, Int, Map[String, Int])]())
+    val valid = col("hit_ratio") =!= Estimation.MissingRatio
     val df = rows.observe(obs, perPart(col("part"), coalesce(size(col("spans")), lit(0)),
-      col("hit_ratio") === Estimation.MissingRatio).as("lineage"))
-    (df, () => obs.get("lineage").asInstanceOf[scala.collection.Seq[Long]]
-      .grouped(3).map(c => (c(0), c(1), c(2))).toIndexedSeq)
+      col("hit_ratio") === Estimation.MissingRatio,
+      when(valid, col("hit_ratio").cast("decimal(28,10)")),
+      coalesce(SpanOps.binId(col("hit_ratio")), lit(-1)), col("repl_stats")).as("lineage"))
+    (df, () => {
+      val b = obs.get("lineage").asInstanceOf[Row]
+      val counts = b.getSeq[Long](0)
+      val sums = b.getSeq[java.math.BigDecimal](1)
+      val stats = b.getSeq[scala.collection.Map[String, Long]](2)
+      (0 until nParts).map { p =>
+        val c = counts.slice(9 * p, 9 * p + 9)
+        (c(0), c(1), c(2),
+          ReportParts(c(0), c(2), c(3), sums(p), c.drop(4), stats(p).toMap))
+      }
+    })
   }
 
-  /** [[withLineage]]'s aggregate: input (part, spans, unestimated),
-    * buffer `[docs, spans, unestimated]` per part, flattened. */
-  private final class PartLineage(nParts: Int)
-      extends Aggregator[(Int, Int, Boolean), Array[Long], Array[Long]] {
-    def zero: Array[Long] = new Array[Long](3 * nParts)
-    def reduce(b: Array[Long], in: (Int, Int, Boolean)): Array[Long] = {
-      val o = 3 * in._1
-      b(o) += 1
-      b(o + 1) += in._2
-      if (in._3) b(o + 2) += 1
+  /** [[withLineage]]'s aggregate: input (part, spans, unestimated,
+    * decimal ratio or null when invalid, bin id, replacement stats). */
+  private final class LineageAgg(nParts: Int) extends Aggregator[
+      (Int, Int, Boolean, java.math.BigDecimal, Int, Map[String, Int]), LineageBuf, LineageBuf] {
+    def zero: LineageBuf = LineageBuf(new Array[Long](9 * nParts),
+      Array.fill(nParts)(java.math.BigDecimal.ZERO), Array.fill(nParts)(Map.empty))
+    def reduce(b: LineageBuf,
+        in: (Int, Int, Boolean, java.math.BigDecimal, Int, Map[String, Int])): LineageBuf = {
+      val (p, spans, unest, ratio, bin, stats) = in
+      val o = 9 * p
+      b.counts(o) += 1
+      b.counts(o + 1) += spans
+      if (unest) b.counts(o + 2) += 1
+      if (ratio != null) {
+        b.counts(o + 3) += 1
+        b.sums(p) = b.sums(p).add(ratio)
+      }
+      // bins as in report(): 0..3 are b1..b4, 4 and above b5
+      if (bin >= 0) b.counts(o + 4 + math.min(bin, 4)) += 1
+      if (stats != null && stats.nonEmpty)
+        b.stats(p) = ReportParts.addStats(b.stats(p), stats.iterator.map { case (k, n) => k -> n.toLong })
       b
     }
-    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+    def merge(a: LineageBuf, b: LineageBuf): LineageBuf = {
       var i = 0
-      while (i < a.length) { a(i) += b(i); i += 1 }
+      while (i < a.counts.length) { a.counts(i) += b.counts(i); i += 1 }
+      (0 until nParts).foreach { p =>
+        a.sums(p) = a.sums(p).add(b.sums(p))
+        a.stats(p) = ReportParts.addStats(a.stats(p), b.stats(p))
+      }
       a
     }
-    def finish(b: Array[Long]): Array[Long] = b
-    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
-    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def finish(b: LineageBuf): LineageBuf = b
+    def bufferEncoder: Encoder[LineageBuf] = ExpressionEncoder[LineageBuf]()
+    def outputEncoder: Encoder[LineageBuf] = ExpressionEncoder[LineageBuf]()
   }
 
   /** S11 — estimation report sink, the `.wtr` analog
     * (ocr_pipeline.py:233-269): one header row (mean + five bins +
-    * totals) plus the per-doc detail sorted ascending by ratio. */
-  def writeReport(processed: Dataset[ProcessedDoc], outDir: String): EstimationReport = {
+    * totals) plus the per-doc detail sorted ascending by ratio. The
+    * detail CSV keeps each `doc_id` exactly (no whitespace trimming),
+    * so read it back with the same two whitespace options.
+    * `precomputed` skips the report aggregate (a caller that merged it
+    * from manifest summaries passes it). `wtrPath` also writes the
+    * `.wtr` file of [[writeWtr]] from the same sorted rows, persisted
+    * between the two writes, so the rows are sorted once. */
+  def writeReport(processed: Dataset[ProcessedDoc], outDir: String,
+      precomputed: Option[EstimationReport] = None,
+      wtrPath: Option[String] = None): EstimationReport = {
     val spark = processed.sparkSession
     import spark.implicits._
-    val rep = report(processed)
+    val rep = precomputed.getOrElse(report(processed))
+    wtrPath.foreach(_ => checkWtrCap(rep, WtrMaxRows))
     Seq(rep).toDS().coalesce(1).write.mode("overwrite").parquet(s"$outDir/summary")
-    processed
-      .filter($"hit_ratio" =!= Estimation.MissingRatio)
-      .select($"doc_id", $"hit_ratio", $"n_words", $"n_errs",
-        $"n_lines_in", $"n_wraps", $"n_shorts", $"n_lines_out")
-      // global sort → range-partitioned ordered files; no coalesce(1):
-      // the detail is O(#docs) and must stay distributed at corpus scale
-      .orderBy($"hit_ratio", $"doc_id")
-      .write.mode("overwrite").option("header", "true").csv(s"$outDir/detail")
+    // global sort → range-partitioned ordered files; no coalesce(1):
+    // the detail is O(#docs) and must stay distributed at corpus scale
+    val sorted = sortedValid(processed)
+    if (wtrPath.nonEmpty) sorted.persist()
+    try {
+      sorted.drop("file_name").write.mode("overwrite").option("header", "true")
+        .option("ignoreLeadingWhiteSpace", "false")
+        .option("ignoreTrailingWhiteSpace", "false")
+        .csv(s"$outDir/detail")
+      wtrPath.foreach(streamWtr(sorted, _, rep))
+    } finally if (wtrPath.nonEmpty) sorted.unpersist()
     rep
   }
+
+  /** The valid rows of the report detail (named by `doc_id`) and the
+    * `.wtr` (named by `file_name`), ascending by (ratio, doc_id). */
+  private def sortedValid(processed: Dataset[ProcessedDoc]): DataFrame =
+    processed
+      .filter(col("hit_ratio") =!= Estimation.MissingRatio)
+      .select(col("doc_id"), col("file_name"), col("hit_ratio"), col("n_words"), col("n_errs"),
+        col("n_lines_in"), col("n_wraps"), col("n_shorts"), col("n_lines_out"))
+      .orderBy(col("hit_ratio"), col("doc_id"))
 
   /** Python `str(float)` for the domain of 3-dp-rounded ratios in
     * [0, 100]: both CPython's repr and `java.lang.Double.toString`
@@ -318,30 +456,35 @@ object Extraction {
     * sink remains [[writeReport]]. Divergence noted: the reference's
     * `sorted()` is stable on arrival order for equal ratios; arrival
     * order is undefined in a distributed engine, so ties break on
-    * file_name. */
+    * doc_id (the pipeline writes it as file_name too). */
   def writeWtr(processed: Dataset[ProcessedDoc], path: String,
       precomputed: Option[EstimationReport] = None,
       maxRows: Long = WtrMaxRows): EstimationReport = {
     // callers that just ran writeReport pass its result — recomputing
     // here would run the corpus-wide aggregate a second time
     val rep = precomputed.getOrElse(report(processed))
-    // this sink streams every row through ONE driver writer — fine for
-    // the per-partition/compat use it exists for, corpus-suicide at
-    // 10^12 docs. Fail fast (before opening the file) instead of
-    // grinding: the distributed report sink is writeReport.
+    checkWtrCap(rep, maxRows)
+    streamWtr(sortedValid(processed), path, rep)
+    rep
+  }
+
+  /** The `.wtr` sink streams every row through ONE driver writer —
+    * fine for the per-partition/compat use it exists for,
+    * corpus-suicide at 10^12 docs. Fail fast (before opening the file)
+    * instead of grinding: the distributed report sink is writeReport. */
+  private def checkWtrCap(rep: EstimationReport, maxRows: Long): Unit =
     if (rep.n_total > maxRows)
       throw new IllegalArgumentException(
         s"writeWtr is a driver-streamed per-partition sink; refusing " +
           s"${rep.n_total} rows (cap $maxRows). Use writeReport for " +
           "corpus-scale output, or raise maxRows explicitly.")
-    val spark = processed.sparkSession
+
+  /** Writes the `.wtr` header from `rep`, then one line per row of
+    * `rows` (as [[sortedValid]] selects them) in order, then the blank
+    * line. */
+  private def streamWtr(rows: DataFrame, path: String, rep: EstimationReport): Unit = {
+    val spark = rows.sparkSession
     import spark.implicits._
-    val rows = processed
-      .filter($"hit_ratio" =!= Estimation.MissingRatio)
-      .select($"file_name", $"hit_ratio", $"n_words", $"n_errs",
-        $"n_lines_in", $"n_wraps", $"n_shorts", $"n_lines_out")
-      .as[(String, Double, Int, Int, Int, Int, Int, Int)]
-      .orderBy($"hit_ratio", $"file_name")
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
@@ -350,19 +493,20 @@ object Extraction {
         new java.io.OutputStreamWriter(out, java.nio.charset.StandardCharsets.UTF_8))
       w.write(s"${pyFloatStr(rep.mean)},${rep.b1},${rep.b2},${rep.b3}," +
         s"${rep.b4},${rep.b5},${rep.n_total},${rep.n_invalid}\n")
-      rows.toLocalIterator().forEachRemaining { r =>
-        w.write(s"${r._1},${py3f(r._2)},${r._3},${r._4},${r._5},${r._6},${r._7},${r._8}\n")
-      }
+      rows.drop("doc_id").as[(String, Double, Int, Int, Int, Int, Int, Int)]
+        .toLocalIterator().forEachRemaining { r =>
+          w.write(s"${r._1},${py3f(r._2)},${r._3},${r._4},${r._5},${r._6},${r._7},${r._8}\n")
+        }
       w.write("\n")
       w.flush()
     } finally out.close()
-    rep
   }
 
   /** Corpus-level estimation report (ocr_pipeline.py:233-269 +
     * StepEstimateOCR.analyze lib/ocr_step.py:426-446): mean of valid
     * hit ratios (Python-rounded), five 15-point bins, valid/invalid
-    * split. One tiny aggregate — the only shuffle of the job. */
+    * split. One tiny aggregate (a one-row shuffle), finished by
+    * [[ReportParts.toReport]] like the merge of manifest summaries. */
   def report(processed: Dataset[ProcessedDoc]): EstimationReport = {
     val spark = processed.sparkSession
     import spark.implicits._
@@ -383,14 +527,8 @@ object Extraction {
         count(when(SpanOps.binId($"hit_ratio") === 3, 1)).as("b4"),
         count(when(SpanOps.binId($"hit_ratio") >= 4, 1)).as("b5"))
       .head()
-    val nv = agg.getAs[Long]("nv")
-    val mean =
-      if (nv == 0) 0.0
-      else TextRules.pyRound(
-        agg.getAs[java.math.BigDecimal]("s").doubleValue() / nv, 3)
-    EstimationReport(mean,
-      agg.getAs[Long]("b1"), agg.getAs[Long]("b2"), agg.getAs[Long]("b3"),
-      agg.getAs[Long]("b4"), agg.getAs[Long]("b5"),
-      agg.getAs[Long]("n"), agg.getAs[Long]("ni"))
+    ReportParts(agg.getAs[Long]("n"), agg.getAs[Long]("ni"), agg.getAs[Long]("nv"),
+      Option(agg.getAs[java.math.BigDecimal]("s")).getOrElse(java.math.BigDecimal.ZERO),
+      Seq("b1", "b2", "b3", "b4", "b5").map(agg.getAs[Long]), Map.empty).toReport
   }
 }

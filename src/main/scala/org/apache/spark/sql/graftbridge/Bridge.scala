@@ -14,6 +14,11 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** The schema with every field nullable, nested ones included — what
+    * a file source reports for the data it reads. */
+  def asNullable(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = s.asNullable
+
   /** Release the storage behind an eagerly `localCheckpoint()`ed
     * Dataset. `Dataset.unpersist()` only talks to the CacheManager,
     * which does not track checkpoint blocks — without this, iterative

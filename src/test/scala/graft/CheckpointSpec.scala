@@ -28,17 +28,23 @@ class CheckpointSpec extends SparkSpecBase {
     ExtractMain.run(spark, spansPath, outRoot, nParts = 4)
     val snap = new SnapshotStore(spark, outRoot)
     assert(snap.done() == Set(0, 1, 2, 3))
-    assert(snap.currentVersion().contains(4L)) // one snapshot per commit
+    assert(snap.currentVersion().contains(1L)) // one snapshot per run
     val full = snap.read()
       .select($"doc_id", $"hit_ratio", $"n_words").as[(String, Double, Int)]
       .collect().sortBy(_._1).toSeq
     assert(full.size == 200)
 
-    // simulate a crash that lost the last TWO commits: drop their
-    // manifests (a killed run can never leave a half-written manifest —
-    // publish is a rename to a fresh name)
-    new java.io.File(s"$outRoot/snapshots/v4.manifest").delete()
-    new java.io.File(s"$outRoot/snapshots/v3.manifest").delete()
+    // rebuild the state a per-partition release killed after two of its
+    // four commits leaves behind: drop the run's manifest, then commit
+    // two of its entries one by one (v1, v2; a killed run can never
+    // leave a half-written manifest — publish is a rename to a fresh
+    // name)
+    val run1 = snap.entries()
+    new java.io.File(s"$outRoot/snapshots/v1.manifest").delete()
+    run1.values.toSeq.sortBy(_.part).take(2).foreach { e =>
+      snap.commit(e.part, e.path, e.nDocs, e.nSpans, e.nFailures)
+    }
+    assert(snap.currentVersion().contains(2L))
     assert(snap.done().size == 2)
     val survivors = snap.done()
 
