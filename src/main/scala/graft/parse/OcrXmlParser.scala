@@ -11,7 +11,7 @@ import graft.text.TextRules
 
 /** Parse failure with reference-compatible message semantics
   * (lib/ocr_model.py:126-129, :242-244). In the engine a parse failure
-  * becomes a failure row + accumulator tick, never a job abort. */
+  * becomes a failure row, never a job abort. */
 final case class ParseError(message: String) extends RuntimeException(message)
 
 object Dialect {

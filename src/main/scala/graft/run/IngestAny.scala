@@ -1,6 +1,8 @@
 package graft.run
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.hadoop.fs.FileStatus
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.model.{Doc, Span}
@@ -13,11 +15,16 @@ import graft.parse.{HtmlExtract, OcrXmlParser, ParserPool, PdfExtract}
   * parser, all emitting the same canonical span table. Files are read
   * with the `binaryFile` source (one row per file, content as bytes —
   * works for text and binary payloads alike); parse failures become
-  * `kind='error'` rows and tick the failure accumulator, never
-  * aborting the job. This is the engine's analog of the reference's
-  * scan + parse front end (ocr_pipeline.py:271-336 +
-  * lib/ocr_step.py:365): parsers are pooled per task, never built per
-  * row.
+  * `kind='error'` rows, never aborting the job. This is the engine's
+  * analog of the reference's scan + parse front end
+  * (ocr_pipeline.py:271-336 + lib/ocr_step.py:365): the tree is listed
+  * and scanned once, in one task per core (more only above 32 MB per
+  * core), and parsers are pooled per task, never built per row.
+  *
+  * File names are decoded with the JVM's `sun.jnu.encoding`, which
+  * follows the locale: without a UTF-8 locale (`LANG=C.UTF-8`) a file
+  * with a non-ASCII name is missing from the listing, and
+  * [[readFiles]] prints a warning.
   *
   * Usage: IngestAny <dir[,dir…]> <outParquet> [shapesOut]
   * (`shapesOut` also writes the C9 line-geometry side table).
@@ -64,19 +71,15 @@ object IngestAny {
     new String(bytes, off, bytes.length - off, java.nio.charset.StandardCharsets.UTF_8)
   }
 
-  /** Distributed dispatch-parse of (doc_id, content) rows. Row-level
-    * failures become failure rows and tick the accumulators (docs
-    * parsed, spans emitted, parse failures). `vertical` selects
+  /** Distributed dispatch-parse of (doc_id, content) rows. A row that
+    * fails to parse becomes one `kind='error'` span carrying the
+    * message, so the error rows are the failure count. `vertical` selects
     * y-center word ordering for vertical-text PAGE corpora
     * (lib/ocr_model.py:190-200; the reference plumbs but never enables
     * it — here it is a per-job flag, `SPARK_GRAFT_VERTICAL=1` on the
     * CLI mains). */
   def parseDocs(raw: Dataset[(String, Array[Byte])],
       vertical: Boolean = false): Dataset[Doc] = {
-    val sc = raw.sparkSession.sparkContext
-    val docsParsed = sc.longAccumulator("graft.docs_parsed")
-    val spansEmitted = sc.longAccumulator("graft.spans_emitted")
-    val parseFailures = sc.longAccumulator("graft.parse_failures")
     import raw.sparkSession.implicits._
     raw.mapPartitions { it =>
       val xmlParser = ParserPool.get() // pooled per task, never per row
@@ -90,12 +93,9 @@ object IngestAny {
             case FmtUnknown =>
               throw new IllegalArgumentException("unrecognized format")
           }
-          docsParsed.add(1)
-          spansEmitted.add(spans.length)
           Doc(docId, spans)
         } catch {
           case e: Exception =>
-            parseFailures.add(1)
             Doc(docId, Vector(Span(IngestXml.KindError,
               Option(e.getMessage).getOrElse(""), "", 0)))
         }
@@ -128,28 +128,68 @@ object IngestAny {
     }
   }
 
-  /** Multi-root recursive binary scan (S1/S2/S3 over mixed formats).
-    * doc_id is the file basename; when several files across the
-    * roots/subtrees share a basename, the colliders get a short path
-    * hash suffix so distinct documents never conflate under one id.
-    * The collision probe is a metadata-only pass (binaryFile prunes
-    * the content column), and the collider set is broadcast. */
+  /** Input bytes per scan task. Spark's own split holds at most
+    * `spark.sql.files.maxPartitionBytes` (128 MB by default) per task, so
+    * one task per 32 MB never coalesces a large input of large files
+    * below Spark's split. Only the one-task-per-core branch
+    * of [[scanTasks]] is measured (`ingest-mixed`, 8.6 MB on 4 cores);
+    * above cores × 32 MB the rule is unmeasured. */
+  private val TaskBytes = 32L << 20
+
+  /** Task count for a scan of `bytes`: one task per `TaskBytes`, and at
+    * least one per core, so a small corpus runs one task per core.
+    * [[readFiles]] coalesces the scan to it, which never raises Spark's
+    * own split count. The core count is read when the plan is built; on
+    * a cluster whose executors have not registered yet it may read low,
+    * which shrinks only the task count of a corpus under cores × 32 MB. */
+  private[graft] def scanTasks(spark: SparkSession, bytes: Long): Int =
+    math.max(spark.sparkContext.defaultParallelism.toLong,
+      (bytes + TaskBytes - 1) / TaskBytes).toInt
+
+  /** doc_id's basename rule, over the `binaryFile` `path` string. */
+  private val BaseName = "([^/]+?)(\\.[A-Za-z0-9]+)?$"
+
+  /** The files the scan reads, from its file index: the glob-filtered
+    * listing without zero-length files and names Spark skips as
+    * metadata (`_metadata.xml`). Their `getPath.toString` is the string
+    * the `path` column holds; `Dataset.inputFiles` is URI-encoded
+    * (`a%20b.xml`) and is not. */
+  private def scannedFiles(scan: DataFrame): Seq[FileStatus] =
+    scan.queryExecution.analyzed.collectFirst { case r: LogicalRelation => r.relation }
+      .collect { case h: HadoopFsRelation =>
+        h.location.listFiles(Nil, Nil).flatMap(_.files.map(_.fileStatus)) }
+      .getOrElse(throw new IllegalStateException("binaryFile scan without a file listing"))
+
+  /** Multi-root recursive binary scan (S1/S2/S3 over mixed formats):
+    * one listing, one scan, one job. doc_id is the file basename; when
+    * several files across the roots/subtrees share a basename, the
+    * colliders get `#` + the first 8 hex chars of `md5(path)` so
+    * distinct documents never conflate under one id. The collider set
+    * comes from the driver's listing of the files the scan reads and
+    * reaches the tasks as a broadcast; the scan is coalesced to
+    * [[scanTasks]] of their bytes. */
   def readFiles(spark: SparkSession, paths: Seq[String],
       glob: String = "*.{xml,html,htm,pdf}"): Dataset[(String, Array[Byte])] = {
     import spark.implicits._
-    def load() = spark.read.format("binaryFile")
+    val enc = System.getProperty("sun.jnu.encoding", "")
+    if (!enc.equalsIgnoreCase("UTF-8"))
+      System.err.println(s"[ingest] WARNING: file names are decoded as $enc, not " +
+        "UTF-8; files with non-ASCII names are missing from the listing (set LANG=C.UTF-8)")
+    val scan = spark.read.format("binaryFile")
       .option("recursiveFileLookup", "true")
       .option("pathGlobFilter", glob)
       .load(paths: _*)
-    val base = regexp_extract(col("path"), "([^/]+?)(\\.[A-Za-z0-9]+)?$", 1)
-    val colliders = load().select(base.as("b"))
-      .groupBy(col("b")).agg(count(lit(1)).as("_n"))
-      .filter(col("_n") > 1).select(col("b"))
-    load()
-      .join(broadcast(colliders), base === col("b"), "left")
+    val files = scannedFiles(scan)
+    val nameRe = BaseName.r
+    val colliders = files
+      .flatMap(f => nameRe.findFirstMatchIn(f.getPath.toString).map(_.group(1)))
+      .groupBy(identity).collect { case (b, bs) if bs.size > 1 => b }.toSet
+    val shared = spark.sparkContext.broadcast(colliders)
+    val collides = udf((b: String) => shared.value.contains(b))
+    val base = regexp_extract(col("path"), BaseName, 1)
+    scan.coalesce(scanTasks(spark, files.map(_.getLen).sum))
       .select(
-        when(col("b").isNotNull,
-          concat(base, lit("#"), substring(md5(col("path")), 1, 8)))
+        when(collides(base), concat(base, lit("#"), substring(md5(col("path")), 1, 8)))
           .otherwise(base).as("doc_id"),
         col("content"))
       .as[(String, Array[Byte])]
@@ -172,8 +212,7 @@ object IngestAny {
     }
 
     // summary from the WRITTEN parquet — a second pass over the raw
-    // corpus would re-run the whole parse (and double-count the
-    // accumulators) just to print counts
+    // corpus would re-run the whole parse just to print counts
     spark.read.parquet(outPath)
       .select(col("doc_id"), size(col("spans")).as("n_spans"),
         size(filter(col("spans"), s => s.getField("kind") === Span.KindText)).as("n_text"),
