@@ -1,8 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
+  ShortType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Distributed connected components over an undirected edge list —
   * the step that turns near-dup candidate PAIRS (minhash-LSH banding,
@@ -10,7 +13,14 @@ import org.apache.spark.sql.graftbridge.Bridge
   * survivor per component, which is what a training-data pipeline
   * actually keeps.
   *
-  * Algorithm: min-label propagation WITH POINTER JUMPING (the
+  * One path: the ids are keyed to longs where that is provably order-
+  * preserving, a partition-local union-find contracts the edges to
+  * stars on local minima, and the hub QUOTIENT of those stars is
+  * solved on the driver when it is small, or by the distributed label
+  * loop when it is not. Labels then expand back to every vertex and
+  * decode to the caller's id type.
+  *
+  * Label loop: min-label propagation WITH POINTER JUMPING (the
   * hash-to-min family — Rastogi et al., "Finding Connected Components
   * in Map-Reduce in Logarithmic Rounds"). Every vertex starts labeled
   * with itself; each round a vertex takes the min over its own label,
@@ -19,18 +29,13 @@ import org.apache.spark.sql.graftbridge.Bridge
   * to the vertex it pointed at last round (the push half — without
   * it, mins cross between pointer-chain basins only via neighbor
   * edges at one hop per round; measured 17 rounds vs 11 at 2M docs).
-  * Per round: two shuffle joins + one map-side-combined aggregate
-  * over two narrow columns; stop at fixpoint.
-  *
-  * The jump is not optional at scale: star-edge candidate graphs
-  * ([[graft.dedup.MinHashLsh.bandStarEdges]]) replace intra-bucket
-  * cliques with hub stars, and overlapping buckets CHAIN those stars —
-  * the 2M-doc bench corpus builds components whose min-vertex
-  * eccentricity exceeds 20, where plain 1-hop propagation (this
-  * operator's first version) blew through its round budget. If the
-  * graph still does not converge within `maxIter`, run() THROWS
-  * rather than silently returning split components (a dedup pipeline
-  * acting on split clusters would keep duplicates).
+  * Star-edge candidate graphs ([[graft.dedup.MinHashLsh.bandStarEdges]])
+  * chain hub stars into components whose min-vertex eccentricity
+  * exceeds 20 at 2M docs, where plain 1-hop propagation blew through
+  * its round budget. A graph that still does not converge within
+  * [[MaxIter]] rounds THROWS rather than silently returning split
+  * components (a dedup pipeline acting on split clusters would keep
+  * duplicates).
   *
   * Storage discipline: every round is truncated with a
   * `localCheckpoint` (persist()-based loops are fragile — downstream
@@ -50,293 +55,188 @@ import org.apache.spark.sql.graftbridge.Bridge
   */
 object ConnectedComponents {
 
+  /** Label-loop round bound; exceeding it throws (see above). */
+  private val MaxIter = 20
+
+  /** Largest quotient (symmetrized, deduped edges) solved on the
+    * driver instead of by the label loop. Packed long quotients
+    * collect at 16 B/edge, so 8M edges is ~128 MB of driver heap;
+    * measured at 8M docs the quotient is 2.9M edges (1.19M hubs) from
+    * 5.1M raw star edges. See [[effectiveSolveCeiling]] for boxed
+    * keys. */
+  private val SolveMax = 8000000L
+
   /** @param vertices one row per vertex (isolated vertices become
     *                 singleton components). Defines the vertex set:
     *                 edges with an endpoint OUTSIDE it are ignored
     *                 (components are computed among `vertices` only),
     *                 at the one-time cost of two endpoint semi-joins.
+    *                 Ids are bigint, int, smallint, tinyint or string.
     * @param vCol     vertex id column in `vertices`
     * @param edges    undirected edge list (any orientation, dups ok)
     * @param srcCol   edge endpoint column
     * @param dstCol   edge endpoint column
-    * @param maxIter  round bound; exceeding it throws (see above)
-    * @param jumpDepth pointer-jump compositions per round (reach
-    *                  l^(jumpDepth+1)). Measured at 2M docs: depth 1
-    *                  (classic pointer doubling) converges in 11
-    *                  rounds vs 10 at depth 2/4, so deeper chases buy
-    *                  at most one round while each extra composition
-    *                  adds a join stage (and its AQE re-plan) to EVERY
-    *                  round — depth 1 was 23% faster end-to-end than
-    *                  depth 4. Depth 0 (no chase) does NOT converge:
-    *                  the chase is what doubles pointers.
-    * @param localContract run a partition-local union-find contraction
-    *                  over the edge list before the iterative loop
-    *                  (one narrow mapPartitions, no shuffle): each
-    *                  partition's edges collapse to stars on the
-    *                  partition-local component minimum. Connectivity
-    *                  is preserved exactly — every original edge is
-    *                  witnessed by the two star edges of its
-    *                  partition — while intra-partition chains (LSH
-    *                  buckets that land together) drop to diameter 2,
-    *                  so the global loop starts from a FAR shallower
-    *                  graph. Rounds are the serial axis of this
-    *                  operator (each costs one driver-synchronized
-    *                  job), and the per-round checkpoint traffic is
-    *                  what saturates shared storage bandwidth at the
-    *                  larger cluster size — the pre-pass attacks both.
-    * @param contractPasses number of contraction passes (requires
-    *                  `localContract`). Passes after the first
-    *                  re-shuffle the star edges BY ENDPOINT
-    *                  (`repartition(src)`) and contract again: stars
-    *                  sharing any member now sit in one partition and
-    *                  merge, so cross-partition chains collapse
-    *                  geometrically — the alternating
-    *                  shuffle-then-local-union scheme of the
-    *                  MapReduce-CC literature (Kiveris et al.,
-    *                  "Connected Components in MapReduce and Beyond":
-    *                  alternating star operations). Each extra pass
-    *                  costs ONE exchange of the (already contracted)
-    *                  edge table + a narrow pass — far cheaper than
-    *                  the label-loop rounds it removes, each of which
-    *                  is a driver-synchronized job of several joins
-    *                  (measured at 8M docs: 2 passes cut the loop from
-    *                  11 rounds to 5 and the 1×4 job by ~25%).
-    * @param probeEvery check the fixpoint (and materialize the pending
-    *                  round checkpoints) every k rounds instead of
-    *                  every round. Rounds between probes stay LAZY —
-    *                  each is a shallow LogicalRDD whose lineage chains
-    *                  in the RDD layer — so k rounds execute as ONE
-    *                  driver-synchronized job. Convergence is detected
-    *                  up to k−1 rounds late (the overshoot rounds are
-    *                  cheap: a converged state joined/aggregated again
-    *                  is work but no change), which trades a bounded
-    *                  slice of parallel work for fewer serial
-    *                  round-trips — the term that caps multi-executor
-    *                  scaling. maxIter still bounds and still throws.
-    * @param localSolveMax when the quotient hub graph has at most this
-    *                  many (symmetrized, deduped) edges, skip the
-    *                  distributed loop entirely: collect it and
-    *                  union-find on the driver — zero rounds, zero
-    *                  per-round driver syncs, and the resulting label
-    *                  table is a LocalRelation the decode join
-    *                  broadcasts. This is how two-phase distributed CC
-    *                  terminates in practice: the quotient shrinks
-    *                  with the square of contraction locality, so even
-    *                  petabyte corpora typically end with a
-    *                  driver-sized residual. Long-keyed quotients are
-    *                  collected PACKED (primitive long pairs — 8M
-    *                  edges ≈ 128 MB, well under any real driver
-    *                  heap); other key types collect as BOXED Rows at
-    *                  ~10× the footprint, so THEIR effective ceiling
-    *                  is localSolveMax/8 (1M edges at the default —
-    *                  string quotients above it take the distributed
-    *                  loop; spec-pinned). 0 disables (always loop). The iterative loop remains the path for
-    *                  genuinely huge quotients; measured at 8M docs
-    *                  the quotient is 2.9M edges (1.19M hubs) from
-    *                  5.1M raw star edges.
-    * @return (node, lbl) — lbl is the component's min vertex id
+    * @return (node, lbl) — lbl is the component's min vertex id, both
+    *         of the vertex column's type
     */
   def run(vertices: DataFrame, vCol: String, edges: DataFrame,
-      srcCol: String, dstCol: String, maxIter: Int = 20,
-      jumpDepth: Int = 1, localContract: Boolean = true,
-      contractPasses: Int = 1, probeEvery: Int = 1,
-      localSolveMax: Long = 8000000L): DataFrame = {
-    require(probeEvery >= 1, "probeEvery must be >= 1")
-    require(contractPasses >= 1, "contractPasses must be >= 1")
-    val vset = vertices.select(col(vCol).as("node"))
-    runInner(vset, vertices, vCol, edges, srcCol, dstCol, maxIter,
-      jumpDepth, localContract, contractPasses, probeEvery, localSolveMax)
-  }
+      srcCol: String, dstCol: String): DataFrame =
+    runWith(vertices, vCol, edges, srcCol, dstCol, MaxIter, SolveMax)
 
-  private def runInner(vset: DataFrame, vertices: DataFrame, vCol: String,
+  /** [[run]] with its round bound and driver-solve ceiling given, so a
+    * spec can force the label loop (`solveMax = 0`) or its
+    * non-convergence throw. */
+  private[graft] def runWith(vertices: DataFrame, vCol: String,
       edges: DataFrame, srcCol: String, dstCol: String, maxIter: Int,
-      jumpDepth: Int, localContract: Boolean,
-      contractPasses: Int, probeEvery: Int, localSolveMax: Long): DataFrame = {
-    // endpoint gating on the ORIENTED edges (half the semi-join input
-    // of gating the symmetrized table); the dst-then-src order leaves
-    // the join output hash-partitioned by src — star hubs co-located —
-    // which is exactly the layout the contraction pass collapses best
-    val oriented = edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .join(vset.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-      .join(vset.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
-      .select(col("src"), col("dst"))
+      solveMax: Long): DataFrame = {
+    val vtype = vertices.schema(vCol).dataType
+    val vset = vertices.select(col(vCol).as("node"))
     // ROW-WIDTH of the iterated state is what the loop pays for 10+
     // rounds of shuffle + checkpoint write + checkpoint re-read — on a
     // string-keyed corpus (16-char doc ids) every state row carries
     // three UTF8 strings where three longs would do, and at the larger
     // cluster size that traffic is exactly what saturates the shared
     // storage/memory bandwidth (BENCH.md round 5: the 2×4→4×4 collapse).
-    // So non-integral vertex ids are remapped ONCE to dense longs whose
-    // ORDER MATCHES the original type's, the loop runs ~3× narrower,
-    // and labels decode at exit. min(id) ↔ min(node), so the min-label
-    // semantics are unchanged. Two remap strategies:
-    //  - numeric-suffix CODEC: when one aggregate over the vertex set
-    //    PROVES every id is <common-prefix><fixed-width-digits> (the
-    //    ubiquitous doc_000001234 shape), encode/decode are narrow
-    //    codegen'd projections (substring-cast / lpad-concat) — no
-    //    sort, no zipWithIndex, no remap joins, no id-map checkpoint,
-    //    no decode joins, and the contraction pre-pass runs on
-    //    primitive longs;
-    //  - otherwise the generic order-preserving distributed ranking
-    //    (sort + zipWithIndex — the GraphX vertex-id design), paying
-    //    two remap joins going in and two decode joins coming out.
-    val vtype = oriented.schema("src").dataType
-    val integral = vtype match {
-      case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType | org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
+    // So ids are keyed ONCE to longs whose ORDER MATCHES the original
+    // type's — integral ids by widening, fixed-shape string ids by the
+    // numeric-suffix codec — and decoded at exit by narrow codegen'd
+    // projections; min(id) ↔ min(key), so the min-label semantics are
+    // unchanged. Only strings the codec cannot prove stay boxed.
     val t0 = System.nanoTime()
-    val codec =
-      if (integral || vtype != org.apache.spark.sql.types.StringType) None
-      else numericSuffixCodec(vset)
-    val tCodec = System.nanoTime()
-    val orientedKeyed = codec match {
-      case Some((enc, _)) =>
-        oriented.select(enc(col("src")).as("src"), enc(col("dst")).as("dst"))
-      case None => oriented
+    val (enc, dec): (Column => Column, Column => Column) = vtype match {
+      case LongType | IntegerType | ShortType | ByteType =>
+        (_.cast(LongType), _.cast(vtype))
+      case StringType =>
+        numericSuffixCodec(vset).getOrElse((_.cast(StringType), c => c))
+      case other => throw new IllegalArgumentException(
+        s"connected components takes bigint, int, smallint, tinyint or " +
+          s"string vertex ids; column '$vCol' is ${other.simpleString}")
     }
-    // ---- graph reduction before the iterative loop ----
-    // Preferred path (QUOTIENT): one narrow partition-local union-find
-    // pass collapses each partition's edges to (member → hub) stars on
-    // the partition-local MIN, and the label loop then runs on the
-    // tiny hub QUOTIENT graph (hubs are connected iff they share a
-    // member) instead of the full edge table. The per-round
-    // full-table join + checkpoint traffic — the term that saturates
-    // shared memory bandwidth at the larger cluster size and caps
-    // N→4N scaling (BENCH.md round 5/6) — disappears: rounds touch
-    // thousands of hub rows, not millions of member rows. Labels
-    // project back through ONE join against the member→min-hub anchor
-    // map (AQE is re-enabled by then and typically broadcasts the hub
-    // labels). Correctness: every edge lives in exactly one partition,
-    // where its endpoints were unioned under one hub (intra-star
-    // connectivity); a vertex seen in k partitions bridges its k hubs
-    // (the quotient edges); and the global component min is ALWAYS a
-    // hub — it is the local min of its own local component in any
-    // partition containing it — so min-label over the quotient equals
-    // min-label over the original graph. Requires an ordering on the
-    // key type (hub = local min); unordered key types and
-    // localContract=false take the direct full-graph loop.
-    val keyedType =
-      if (codec.isDefined) org.apache.spark.sql.types.LongType else vtype
-    val quotient = localContract && orderingFor(keyedType) != null
-    val (anchorOpt, starsOpt, loopOriented) =
-      if (quotient) {
-        // stars: lazy-checkpointed so the scan + LSH + contraction
-        // upstream runs ONCE (materialized inside the loop-init job)
-        // even though both `refs` consumers reference it
-        val stars = Bridge.dropOriginStats(
-          contractLocal(orientedKeyed, emitBoth = false)
-            .localCheckpoint(eager = false))
-        // member rows plus hub self-rows: every endpoint appears with
-        // every hub it touches (a hub is its own hub)
-        val refs = stars.select(col("src").as("v"), col("dst").as("h"))
-          .unionByName(stars.select(col("dst").as("v"), col("dst").as("h")))
-        val anchor = Bridge.dropOriginStats(
-          refs.groupBy(col("v")).agg(min(col("h")).as("mh"))
-            .localCheckpoint(eager = false))
-        val hubEdges = refs.join(anchor, Seq("v"))
-          .select(col("mh").as("src"), col("h").as("dst"))
-          .filter(col("src") =!= col("dst"))
-        (Some(anchor), Some(stars), hubEdges)
-      } else (None, None, orientedKeyed)
-    val symRaw = (if (quotient) {
-      var c = loopOriented.unionByName(
-        loopOriented.select(col("dst").as("src"), col("src").as("dst")))
-      // extra passes operate on the (already tiny) hub graph
-      for (_ <- 2 to contractPasses) c = contractLocal(c.repartition(col("src")))
-      c
-    } else if (localContract) {
-      // non-orderable keys: contraction still helps (arbitrary local
-      // root, both orientations emitted) but the quotient's min-hub
-      // argument does not hold, so the loop runs on the full graph
-      var c = contractLocal(orientedKeyed)
-      for (_ <- 2 to contractPasses) c = contractLocal(c.repartition(col("src")))
-      c
-    } else orientedKeyed.unionByName(
-        orientedKeyed.select(col("dst").as("src"), col("src").as("dst"))))
+    val tCodec = System.nanoTime()
+    // endpoint gating on the ORIENTED edges (half the semi-join input
+    // of gating the symmetrized table); the dst-then-src order leaves
+    // the join output hash-partitioned by src — star hubs co-located —
+    // which is exactly the layout the contraction pass collapses best
+    val keyed = edges
+      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .join(vset.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
+      .join(vset.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
+      .select(enc(col("src")).as("src"), enc(col("dst")).as("dst"))
+    val keyedType = keyed.schema("src").dataType
+    // ---- graph reduction: contraction to the hub QUOTIENT ----
+    // One narrow partition-local union-find pass collapses each
+    // partition's edges to (member → hub) stars on the partition-local
+    // MIN, and the solve then runs on the tiny hub quotient graph (hubs
+    // are connected iff they share a member) instead of the full edge
+    // table: rounds touch thousands of hub rows, not millions of member
+    // rows. Labels project back through ONE join against the
+    // member→min-hub anchor map. Correctness: every edge lives in
+    // exactly one partition, where its endpoints were unioned under one
+    // hub; a vertex seen in k partitions bridges its k hubs (the
+    // quotient edges); and the global component min is ALWAYS a hub —
+    // it is the local min of its own local component in any partition
+    // containing it — so min-label over the quotient equals min-label
+    // over the original graph.
+    // stars: lazy-checkpointed so the scan + LSH + contraction upstream
+    // runs ONCE (materialized by the solve count or the loop-init job)
+    // even though both `refs` consumers reference it
+    val stars = Bridge.dropOriginStats(
+      contractLocal(keyed).localCheckpoint(eager = false))
+    // member rows plus hub self-rows: every endpoint appears with every
+    // hub it touches (a hub is its own hub)
+    val refs = stars.select(col("src").as("v"), col("dst").as("h"))
+      .unionByName(stars.select(col("dst").as("v"), col("dst").as("h")))
+    val anchor = Bridge.dropOriginStats(
+      refs.groupBy(col("v")).agg(min(col("h")).as("mh"))
+        .localCheckpoint(eager = false))
+    val hubEdges = refs.join(anchor, Seq("v"))
+      .select(col("mh").as("src"), col("h").as("dst"))
+      .filter(col("src") =!= col("dst"))
+    val symEdges = hubEdges
+      .unionByName(hubEdges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
 
-    val (symEdges, idMapOpt) =
-      if (integral || codec.isDefined || quotient) (symRaw, None)
-      else {
-        val endpoints = symRaw.select(col("src").as("node")).distinct()
-        val idRdd = endpoints.orderBy("node").rdd.zipWithIndex()
-          .map { case (r, i) => org.apache.spark.sql.Row(r.get(0), i) }
-        // lazily checkpointed: materializes inside the round-1 probe
-        // job (it feeds the cached edge table) and is freed by the
-        // caller's Bridge.freeLocalCheckpoint(result) walk, exactly
-        // like the loop's own round checkpoints
-        val idMap = vertices.sparkSession.createDataFrame(idRdd,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node", vtype, nullable = false),
-            org.apache.spark.sql.types.StructField("id",
-              org.apache.spark.sql.types.LongType, nullable = false))))
-          .localCheckpoint(eager = false)
-        val remapped = symRaw
-          .join(idMap.select(col("node").as("src"), col("id").as("_sid")), Seq("src"))
-          .join(idMap.select(col("node").as("dst"), col("id").as("_did")), Seq("dst"))
-          .select(col("_sid").as("src"), col("_did").as("dst"))
-        (remapped, Some(idMap))
-      }
     // ---- driver-side solve for small quotient graphs ----
-    // type-aware ceiling: the packed primitive-long collect costs
-    // 16 B/edge, but any other key type collects BOXED Rows (strings,
-    // etc.) at ~10× that — an 8M-edge string quotient would be
-    // multiple GB of driver footprint. Non-long keyed quotients get
-    // 1/8 of the configured ceiling (1M edges at the default).
-    val effectiveSolveMax = effectiveSolveCeiling(keyedType, localSolveMax)
-    val localSolved: Option[DataFrame] =
-      if (quotient && effectiveSolveMax > 0) {
-        // full count first: it materializes the stars/anchor lazy
-        // checkpoints COMPLETELY (a limit-collect could stop after a
-        // partial partition and leave their blocks half-stored)
-        val cnt = symEdges.count()
-        if (cnt <= effectiveSolveMax) {
-          val tCnt = System.nanoTime()
-          val pairs = driverSolve(symEdges, orderingFor(keyedType))
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node", keyedType, nullable = false),
-            org.apache.spark.sql.types.StructField("lbl", keyedType, nullable = false)))
-          // hand the label table back as a small RDD, not a
-          // LocalRelation: Row building and InternalRow conversion for
-          // ~10^6 labels is single-threaded driver time (a pure
-          // serial term both cluster sizes pay equally), whereas the
-          // parallelized form builds rows on executors and AQE
-          // broadcast-converts the decode join from the RUNTIME
-          // shuffle size of this small side — no driver-side relation
-          // materialization at all.
-          val sess = vertices.sparkSession
-          val slices = math.max(1, math.min(16, pairs.length / 100000))
-          val rowRdd = sess.sparkContext.parallelize(pairs.toSeq, slices)
-            .map { case (v, m) => org.apache.spark.sql.Row(v, m) }
-          def ms0(a: Long, b: Long): Long = (b - a) / 1000000L
-          System.err.println(s"[graft.cc] localSolve=true quotientEdges=$cnt " +
-            s"labels=${pairs.length} contractPasses=$contractPasses " +
-            s"codecMs=${ms0(t0, tCodec)} setupMs=${ms0(tCodec, tCnt)} " +
-            s"solveMs=${ms0(tCnt, System.nanoTime())}")
-          Some(sess.createDataFrame(rowRdd, schema))
-        } else None
-      } else None
-
-    val labels: DataFrame = if (localSolved.isDefined) localSolved.get else {
-    // the loop re-plans a new QueryExecution per round; AQE turns each
-    // round's 2-3 exchanges into SEQUENTIAL query-stage
-    // materializations with a driver sync between every one — pure
-    // serial overhead when the loop's shuffle partitioning is already
-    // explicitly sized (labels are narrow and uniform; nothing here
-    // benefits from runtime re-planning). Disabled for the LOOP only —
-    // the setup (gating semi-joins, contraction, quotient build,
-    // count) and the decode joins after it are ordinary one-shot
-    // plans that DO benefit from AQE's coalescing and runtime
-    // broadcast decisions (measured ~35% off q62's setup at sf0.1) —
-    // and the caller's setting is restored on every exit path.
+    // zero rounds, zero per-round driver syncs: the quotient shrinks
+    // with the square of contraction locality, so even very large
+    // corpora typically end with a driver-sized residual
+    val ceiling = effectiveSolveCeiling(keyedType, solveMax)
     val sess = vertices.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqePrev = sess.conf.getOption(aqeKey)
-    sess.conf.set(aqeKey, "false")
-    try {
+    // full count first: it materializes the stars/anchor lazy
+    // checkpoints COMPLETELY (a limit-collect could stop after a
+    // partial partition and leave their blocks half-stored)
+    val cnt = if (ceiling > 0) symEdges.count() else Long.MaxValue
+    val labels: DataFrame = if (cnt <= ceiling) {
+      val tCnt = System.nanoTime()
+      val pairs = driverSolve(symEdges)
+      val schema = StructType(Seq(
+        StructField("node", keyedType, nullable = false),
+        StructField("lbl", keyedType, nullable = false)))
+      // hand the label table back as a small RDD, not a LocalRelation:
+      // Row building and InternalRow conversion for ~10^6 labels is
+      // single-threaded driver time (a pure serial term both cluster
+      // sizes pay equally), whereas the parallelized form builds rows
+      // on executors and AQE broadcast-converts the expansion join from
+      // the RUNTIME shuffle size of this small side
+      val slices = math.max(1, math.min(16, pairs.length / 100000))
+      val rowRdd = sess.sparkContext.parallelize(pairs.toSeq, slices)
+        .map { case (v, m) => Row(v, m) }
+      System.err.println(s"[graft.cc] localSolve=true quotientEdges=$cnt " +
+        s"labels=${pairs.length} codecMs=${ms(t0, tCodec)} " +
+        s"setupMs=${ms(tCodec, tCnt)} solveMs=${ms(tCnt, System.nanoTime())}")
+      sess.createDataFrame(rowRdd, schema)
+    } else {
+      // the loop re-plans a new QueryExecution per round; AQE turns each
+      // round's 2-3 exchanges into SEQUENTIAL query-stage
+      // materializations with a driver sync between every one — pure
+      // serial overhead when the loop's shuffle partitioning is already
+      // explicitly sized (labels are narrow and uniform; nothing here
+      // benefits from runtime re-planning). Disabled for the LOOP only —
+      // the setup (gating semi-joins, contraction, quotient build,
+      // count) and the expansion join after it are ordinary one-shot
+      // plans that DO benefit from AQE's coalescing and runtime
+      // broadcast decisions (measured ~35% off q62's setup at sf0.1) —
+      // and the caller's setting is restored on every exit path.
+      val aqeKey = "spark.sql.adaptive.enabled"
+      val aqePrev = sess.conf.getOption(aqeKey)
+      sess.conf.set(aqeKey, "false")
+      try labelLoop(symEdges, maxIter, t0, tCodec)
+      catch { case e: IllegalStateException =>
+        // a failed solve would otherwise leave the anchor and stars
+        // blocks behind (callers that swallow the throw — best-of-N
+        // benches — would leak MEMORY_AND_DISK blocks per attempt)
+        Bridge.freeLocalCheckpoint(anchor)
+        Bridge.freeLocalCheckpoint(stars)
+        throw e
+      } finally aqePrev match {
+        case Some(v) => sess.conf.set(aqeKey, v)
+        case None => sess.conf.unset(aqeKey)
+      }
+    }
+    // the stars checkpoint only feeds the anchor/hub-edge derivation,
+    // both materialized (anchor into its own checkpoint) by the solve
+    // count or the loop-init job — dead weight from here on
+    Bridge.freeLocalCheckpoint(stars)
+    // expand hub labels to every endpoint through the anchor map (one
+    // join; hubs without quotient edges keep their own id via the
+    // coalesce — a single-star hub converges to itself), then decode
+    // the keys back to the caller's vertex values
+    val labelsOut = anchor
+      .join(labels.withColumnRenamed("node", "mh"), Seq("mh"), "left")
+      .select(dec(col("v")).as("node"),
+        dec(coalesce(col("lbl"), col("mh"))).as("lbl"))
+    // vertices outside every edge are their own components
+    val untouched = vset
+      .join(labelsOut.select(col("node")), Seq("node"), "left_anti")
+      .withColumn("lbl", col("node"))
+    labelsOut.unionByName(untouched)
+  }
+
+  /** The distributed label loop over the symmetrized quotient edges;
+    * returns (node, lbl) for every quotient vertex, or frees its last
+    * round and throws when `maxIter` rounds do not reach the fixpoint. */
+  private def labelLoop(symEdges: DataFrame, maxIter: Int, t0: Long,
+      tCodec: Long): DataFrame = {
     val sym = symEdges
       // co-locate the STATIC side of the per-round neighbor join ONCE:
       // distinct() leaves sym hash-partitioned by (src, dst), which the
@@ -347,18 +247,13 @@ object ConnectedComponents {
       .repartition(col("src"))
       .persist() // cache-managed: the final result's lineage is
                  // checkpoint-backed, so this is safe to free below
-    // only vertices that touch an edge can ever change label — iterate
-    // over THAT subgraph and union everyone else back as singletons at
-    // the end. In a near-dup corpus the candidate-pair endpoints are a
-    // tiny fraction of the documents, so the per-round state shrinks
-    // from |V| to |endpoints|.
     // every checkpoint is rebuilt WITHOUT origin statistics
     // (Bridge.dropOriginStats): the round plan self-joins the previous
     // checkpoint several times, and Catalyst's join size estimate
     // multiplies child sizes — with propagated stats the estimate
     // compounds exponentially across rounds until the driver spends
     // minutes in BigInteger math during planning (measured hang at 2M
-    // docs with the l³ jump below)
+    // docs)
     var prevCheckpoint = sym.select(col("src").as("node")).distinct()
       .withColumn("lbl", col("node"))
       .withColumn("prev", col("node"))
@@ -369,44 +264,26 @@ object ConnectedComponents {
     val tInit = System.nanoTime() // init checkpoint materialized setup
     var iter = 0
     var converged = false
-    // rounds whose lazy checkpoints have not been materialized yet
-    // (probeEvery > 1); freed wholesale at the next probe, once the
-    // newest round's blocks are stored and its lineage no longer needs
-    // them
-    var pendingFree: List[DataFrame] = Nil
     while (iter < maxIter && !converged) {
       val viaNeighbors = sym
         .join(labels, sym("src") === labels("node"))
         .select(col("dst").as("node"), col("lbl"), lit(0).as("own"))
-      // pointer jump: my label's label, composed `jumpDepth` times.
-      // Each composition multiplies per-round reach (l², l³, …):
-      // convergence drops from log₂ to ~log_(depth+1) of the
-      // eccentricity. The joins are parallel work over the SMALL label
-      // table; what they buy is FEWER ROUNDS, and each round carries
-      // fixed driver-synchronized cost (job scheduling, checkpoint
-      // materialization, the fixpoint probe) — the serial fraction
-      // that caps multi-executor scaling of the iterative stage.
-      // Label chasing is monotone (a vertex's label never exceeds its
-      // id, so l(l(x)) ≤ l(x)) — only the DEEPEST composition needs to
-      // enter the aggregate; the intermediates are join scaffolding.
-      var deepJump = labels.select(col("node"), col("lbl"))
-      for (d <- 1 to jumpDepth) {
-        val m = labels.select(col("node").as(s"_j$d"), col("lbl").as(s"_l$d"))
-        deepJump = deepJump
-          .join(m, deepJump("lbl") === col(s"_j$d"))
-          .select(deepJump("node"), col(s"_l$d").as("lbl"))
-      }
+      // pointer jump: my label's label (pointer doubling). Label
+      // chasing is monotone (a vertex's label never exceeds its id, so
+      // l(l(x)) ≤ l(x)), so the jump alone can stand in for the label.
+      val viaJump = labels
+        .join(labels.select(col("node").as("_j"), col("lbl").as("_l")),
+          col("lbl") === col("_j"))
+        .select(col("node"), col("_l").as("lbl"), lit(0).as("own"))
       // PUSH (hash-to-min's second half): pulling down the pointer
       // chain alone leaves "local minimum" basins that a component min
-      // can only cross via neighbor edges at ONE hop per round —
-      // measured 17 rounds at 2M docs with pull-only, any jump depth.
-      // Each vertex therefore also SENDS its improved label UP to the
-      // vertex it pointed at last round, and the chase spreads it back
-      // down — the two-way flow that makes hash-to-min logarithmic
-      // (Rastogi et al. §3). The checkpoint already carries last
-      // round's label as `prev`, so the push is a projection of state
-      // the round already has: zero joins, just |V| extra rows riding
-      // the existing aggregate shuffle.
+      // can only cross via neighbor edges at ONE hop per round. Each
+      // vertex therefore also SENDS its improved label UP to the vertex
+      // it pointed at last round, and the jump spreads it back down —
+      // the two-way flow that makes hash-to-min logarithmic (Rastogi et
+      // al. §3). The checkpoint already carries last round's label as
+      // `prev`, so the push is a projection of state the round already
+      // has: zero joins, just |V| extra rows riding the aggregate.
       val viaPush = state
         .select(col("prev").as("node"), col("lbl"), lit(0).as("own"))
       // the vertex's previous label rides along as `own=1`, so the SAME
@@ -414,7 +291,7 @@ object ConnectedComponents {
       // no extra probe join/shuffle per round
       val next = labels.select(col("node"), col("lbl"), lit(1).as("own"))
         .unionByName(viaNeighbors)
-        .unionByName(deepJump.withColumn("own", lit(0)))
+        .unionByName(viaJump)
         .unionByName(viaPush)
         .groupBy(col("node"))
         .agg(min(col("lbl")).as("lbl"),
@@ -427,102 +304,42 @@ object ConnectedComponents {
         .localCheckpoint(eager = false)
       val nextClean = Bridge.dropOriginStats(next)
       iter += 1
-      if (probeEvery <= 1 || iter % probeEvery == 0 || iter == maxIter) {
-        // the probe is the materializing action for EVERY round since
-        // the last probe (their RDD lineages chain; one job computes
-        // and stores them all). Only after it returns are the older
-        // rounds' blocks safe to drop.
-        converged =
-          nextClean.filter(col("lbl") =!= col("prev")).count() == 0L
-        (prevCheckpoint :: pendingFree).foreach(Bridge.freeLocalCheckpoint)
-        pendingFree = Nil
-      } else {
-        pendingFree = prevCheckpoint :: pendingFree
-      }
+      converged = nextClean.filter(col("lbl") =!= col("prev")).count() == 0L
+      // only after the probe stored this round is the previous one
+      // safe to drop
+      Bridge.freeLocalCheckpoint(prevCheckpoint)
       prevCheckpoint = next
       state = nextClean
       labels = nextClean.select(col("node"), col("lbl"))
     }
     sym.unpersist(blocking = false)
-    // rounds are the serial axis of this operator — surface the count
-    // for scaling diagnostics (stderr, not the result)
-    // phase split for scaling diagnostics: codec probe / setup (scan +
-    // LSH + contraction + edge cache + init checkpoint, all inside the
-    // eager init materialization) / the label loop itself
+    // rounds are the serial axis of this operator; phase split for
+    // scaling diagnostics: codec probe / setup (scan + LSH +
+    // contraction + edge cache + init checkpoint) / the loop itself
     val tLoop = System.nanoTime()
-    def ms(a: Long, b: Long): Long = (b - a) / 1000000L
     System.err.println(s"[graft.cc] converged=$converged rounds=$iter " +
-      s"jumpDepth=$jumpDepth contractPasses=$contractPasses probeEvery=$probeEvery " +
       s"codecMs=${ms(t0, tCodec)} setupMs=${ms(tCodec, tInit)} loopMs=${ms(tInit, tLoop)}")
     if (!converged) {
-      // the final round's block (and the id-map checkpoint) would
-      // otherwise outlive the failure (callers that swallow the throw —
-      // best-of-N benches — would leak MEMORY_AND_DISK blocks per
-      // failed attempt). pendingFree is empty here (the loop always
-      // probes on its last round), listed defensively.
-      (prevCheckpoint :: pendingFree).foreach(Bridge.freeLocalCheckpoint)
-      idMapOpt.foreach(Bridge.freeLocalCheckpoint)
-      anchorOpt.foreach(Bridge.freeLocalCheckpoint)
-      // the stars lazy checkpoint too: without this, each failed
-      // attempt in a best-of-N bench leaks its MEMORY_AND_DISK blocks
-      starsOpt.foreach(Bridge.freeLocalCheckpoint)
+      Bridge.freeLocalCheckpoint(prevCheckpoint)
       throw new IllegalStateException(
         s"connected components did not converge within $maxIter rounds — " +
           "the graph has a component whose min-vertex eccentricity exceeds " +
-          "the bound; raise maxIter (silently returning split clusters " +
-          "would make a dedup pipeline keep duplicates)")
+          "the bound (silently returning split clusters would make a " +
+          "dedup pipeline keep duplicates)")
     }
     labels
-    } finally {
-      aqePrev match {
-        case Some(v) => sess.conf.set(aqeKey, v)
-        case None => sess.conf.unset(aqeKey)
-      }
-    }
-    }
-    // the stars checkpoint only feeds the anchor/hub-edge derivation,
-    // both materialized (anchor into its own checkpoint) by the local
-    // branch's count or the loop-init job — dead weight from here on
-    starsOpt.foreach(Bridge.freeLocalCheckpoint)
-    // quotient path: expand hub labels to every endpoint through the
-    // anchor map (one join; hubs without quotient edges keep their own
-    // id via the coalesce — a single-star hub converges to itself)
-    val fullLabels = anchorOpt match {
-      case Some(anchor) =>
-        anchor.join(labels.withColumnRenamed("node", "mh"), Seq("mh"), "left")
-          .select(col("v").as("node"), coalesce(col("lbl"), col("mh")).as("lbl"))
-      case None => labels
-    }
-    // decode the dense long ids back to the caller's vertex values —
-    // a narrow projection on the codec path, two joins over the same
-    // checkpointed id map on the ranking path
-    val labelsOut = (codec, idMapOpt) match {
-      case (Some((_, dec)), _) =>
-        fullLabels.select(dec(col("node")).as("node"), dec(col("lbl")).as("lbl"))
-      case (None, None) => fullLabels
-      case (_, Some(idMap)) =>
-        fullLabels
-          .join(idMap.select(col("id").as("node"), col("node").as("_nv")), Seq("node"))
-          .join(idMap.select(col("id").as("lbl"), col("node").as("_lv")), Seq("lbl"))
-          .select(col("_nv").as("node"), col("_lv").as("lbl"))
-    }
-    // vertices outside every edge are their own components
-    val untouched = vertices.select(col(vCol).as("node"))
-      .join(labelsOut.select(col("node")), Seq("node"), "left_anti")
-      .withColumn("lbl", col("node"))
-    labelsOut.unionByName(untouched)
   }
+
+  private def ms(a: Long, b: Long): Long = (b - a) / 1000000L
 
   /** The driver-solve ceiling actually applied for a keyed type:
     * long-keyed quotients collect PACKED (16 B/edge) and get the full
-    * configured ceiling; every other type collects boxed Rows at ~10×
-    * the footprint and gets 1/8 of it (so sub-8 configured values
-    * disable the solve entirely for boxed keys). */
-  private[graft] def effectiveSolveCeiling(
-      keyedType: org.apache.spark.sql.types.DataType,
-      localSolveMax: Long): Long =
-    if (keyedType == org.apache.spark.sql.types.LongType) localSolveMax
-    else localSolveMax / 8
+    * ceiling; boxed string keys collect as Rows at ~10× the footprint
+    * and get 1/8 of it (so sub-8 values disable the solve entirely for
+    * boxed keys). */
+  private[graft] def effectiveSolveCeiling(keyedType: DataType,
+      solveMax: Long): Long =
+    if (keyedType == LongType) solveMax else solveMax / 8
 
   /** Order-preserving string↔long codec for vertex ids of the shape
     * `<common-prefix><fixed-width-digits>` — proven, not assumed: one
@@ -533,11 +350,9 @@ object ConnectedComponents {
     * (equal-length strings with a common prefix compare by their digit
     * suffix, which compares numerically when widths are equal), and
     * `concat(prefix, lpad(…))` inverts it exactly. Returns None when
-    * any row breaks the shape — callers fall back to the generic
-    * ranking remap. */
+    * any row breaks the shape — the ids then stay boxed strings. */
   private[graft] def numericSuffixCodec(vset: DataFrame)
-      : Option[(org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-                org.apache.spark.sql.Column => org.apache.spark.sql.Column)] = {
+      : Option[(Column => Column, Column => Column)] = {
     val pat = "^(.*?)([0-9]{1,18})$"
     val pfx = regexp_extract(col("node"), pat, 1)
     val row = vset.agg(
@@ -554,22 +369,16 @@ object ConnectedComponents {
     val width = l0 - p0.length
     if (width < 1 || width > 18) return None
     Some((
-      (c: org.apache.spark.sql.Column) =>
-        substring(c, p0.length + 1, width).cast(org.apache.spark.sql.types.LongType),
-      (c: org.apache.spark.sql.Column) =>
-        concat(lit(p0), lpad(c.cast(org.apache.spark.sql.types.StringType),
-          width, "0"))))
+      (c: Column) => substring(c, p0.length + 1, width).cast(LongType),
+      (c: Column) => concat(lit(p0), lpad(c.cast(StringType), width, "0"))))
   }
 
-  /** One driver pass of union-find over a collected edge table
-    * (quotient graphs under `localSolveMax`); returns (vertex,
-    * componentMin) for every NON-ROOT vertex — roots label themselves,
-    * which the decode join's coalesce supplies without a row. `ord`
-    * must be non-null (quotient paths guarantee an ordered key). */
-  private[graft] def driverSolve(e: DataFrame, ord: Ordering[Any])
-      : Array[(Any, Any)] = {
-    val isLong = e.schema.head.dataType == org.apache.spark.sql.types.LongType
-    if (isLong) {
+  /** One driver pass of union-find over a collected quotient edge
+    * table; returns (vertex, componentMin) for every NON-ROOT vertex —
+    * roots label themselves, which the expansion join's coalesce
+    * supplies without a row. */
+  private[graft] def driverSolve(e: DataFrame): Array[(Any, Any)] =
+    if (e.schema.head.dataType == LongType) {
       // packed collect: one primitive long array per partition instead
       // of millions of boxed Rows — the transient driver footprint is
       // 16 bytes/edge, not ~10× that
@@ -588,166 +397,78 @@ object ConnectedComponents {
         while (i < arr.length) { uf.union(arr(i), arr(i + 1)); i += 2 }
       }
       uf.starEdges.map { case (v, m) => (v: Any, m: Any) }.toArray
-    } else {
-      val rows = e.collect()
-      val parent = new java.util.HashMap[Any, Any]()
-      def find(x0: Any): Any = {
-        var x = x0
-        var p = parent.get(x)
-        if (p == null) { parent.put(x, x); return x }
-        while (p != x) {
-          val gp = parent.get(p)
-          parent.put(x, gp)
-          x = gp
-          p = parent.get(x)
-        }
-        x
-      }
-      rows.foreach { r =>
-        if (!r.isNullAt(0) && !r.isNullAt(1)) {
-          val ru = find(r.get(0))
-          val rv = find(r.get(1))
-          if (ru != rv) parent.put(ru, rv)
-        }
-      }
-      import scala.jdk.CollectionConverters._
-      val keys = parent.keySet().asScala.toArray
-      val repr = new java.util.HashMap[Any, Any]()
-      keys.foreach { v =>
-        val root = find(v)
-        val cur = repr.get(root)
-        if (cur == null || ord.lt(v, cur)) repr.put(root, v)
-      }
-      keys.iterator.map(v => (v, repr.get(find(v))))
-        .filter { case (v, m) => v != m }.toArray
-    }
-  }
+    } else stringStarEdges(e.collect().iterator).toArray
 
   /** Partition-local union-find contraction (the "local aggregation"
     * trick of the MapReduce-CC literature): within each partition,
-    * union every edge's endpoints, then emit star edges from every
-    * member to its local component representative — BOTH orientations,
-    * so the caller needs no symmetrizing self-union. Narrow (zero
+    * union every edge's endpoints, then emit one (member → local
+    * component MIN) star edge per non-min member. Narrow (zero
     * shuffle), one pass, memory bounded by the partition's distinct
-    * endpoint count. The representative is the component's MIN member
-    * when the id type is orderable (accelerates the global min-label
-    * loop); for exotic types it falls back to an arbitrary root, which
-    * is still CORRECT — the loop computes the true minimum either way,
-    * the choice only affects convergence speed. Output size is at most
-    * 2·(distinct endpoints per partition), ≤ the symmetrized input and
-    * usually far smaller on bucket-clustered candidate graphs. */
-  /** Ordering for the vertex-id types the min-hub contraction can
-    * serve; null for types where only an arbitrary-root contraction
-    * (both orientations, full loop downstream) is available. */
-  private[graft] def orderingFor(
-      dt: org.apache.spark.sql.types.DataType): Ordering[Any] = dt match {
-    case org.apache.spark.sql.types.StringType =>
-      Ordering.by((a: Any) => a.asInstanceOf[String])
-    case org.apache.spark.sql.types.LongType =>
-      Ordering.by((a: Any) => a.asInstanceOf[Long])
-    case org.apache.spark.sql.types.IntegerType =>
-      Ordering.by((a: Any) => a.asInstanceOf[Int])
-    case org.apache.spark.sql.types.ShortType =>
-      Ordering.by((a: Any) => a.asInstanceOf[Short])
-    case _ => null
+    * endpoint count; output is at most the partition's distinct
+    * endpoints, and far fewer edges than the input on bucket-clustered
+    * candidate graphs. Long endpoints (integral and codec ids) use the
+    * primitive [[LongUnionFind]]; strings the boxed twin. */
+  private[graft] def contractLocal(e: DataFrame): DataFrame = {
+    val packed = e.schema.head.dataType == LongType
+    val rows = e.rdd.mapPartitions { it =>
+      val stars: Iterator[(Any, Any)] = if (packed) {
+        val uf = new LongUnionFind(1 << 12)
+        it.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(1))
+            uf.union(r.getLong(0), r.getLong(1))
+        }
+        uf.starEdges
+      } else stringStarEdges(it)
+      stars.map { case (v, m) => Row(v, m) }
+    }
+    e.sparkSession.createDataFrame(rows, e.schema)
   }
 
-  private[graft] def contractLocal(e: DataFrame,
-      emitBoth: Boolean = true): DataFrame = {
-    if (e.schema.head.dataType == org.apache.spark.sql.types.LongType &&
-        e.schema(1).dataType == org.apache.spark.sql.types.LongType)
-      return contractLocalLong(e, emitBoth)
-    val spark = e.sparkSession
-    val schema = e.schema
-    val ord: Ordering[Any] = orderingFor(e.schema.head.dataType)
-    // single-orientation (member → hub) output is only meaningful when
-    // the hub is the provable local minimum
-    require(emitBoth || ord != null,
-      "oriented star output requires an ordered vertex type")
-    val rows = e.rdd.mapPartitions { it =>
-      val parent = new java.util.HashMap[Any, Any]()
-      // find with path halving; roots map to themselves (every vertex
-      // is inserted on first sight, so lookups of a present key never
-      // return null)
-      def find(x0: Any): Any = {
-        var x = x0
-        var p = parent.get(x)
-        if (p == null) { parent.put(x, x); return x }
-        while (p != x) {
-          val gp = parent.get(p)
-          parent.put(x, gp)
-          x = gp
-          p = parent.get(x)
-        }
-        x
+  /** Boxed union-find over string endpoint rows (the ids the
+    * numeric-suffix codec cannot pack): path-halving find, min-root
+    * union, so every root is its component's MIN member — in Spark's
+    * string order (UTF-8 bytes), which the anchor and the label loop
+    * take their minima in; Java's UTF-16 `compareTo` puts surrogate
+    * pairs below U+E000–U+FFFF and would make the solve disagree with
+    * the loop. Returns (member, componentMin) for every non-root
+    * member. */
+  private def stringStarEdges(rows: Iterator[Row]): Iterator[(Any, Any)] = {
+    val parent = new java.util.HashMap[String, String]()
+    def find(x0: String): String = {
+      var x = x0
+      var p = parent.putIfAbsent(x, x)
+      if (p == null) return x
+      while (p != x) {
+        val gp = parent.get(p)
+        parent.put(x, gp) // path halving
+        x = gp
+        p = parent.get(x)
       }
-      it.foreach { r =>
-        if (!r.isNullAt(0) && !r.isNullAt(1)) {
-          val ru = find(r.get(0))
-          val rv = find(r.get(1))
-          if (ru != rv) parent.put(ru, rv)
-        }
-      }
-      import scala.jdk.CollectionConverters._
-      val keys = parent.keySet().asScala.toArray
-      val repr = new java.util.HashMap[Any, Any]()
-      keys.foreach { v =>
-        val root = find(v)
-        if (ord != null) {
-          val cur = repr.get(root)
-          if (cur == null || ord.lt(v, cur)) repr.put(root, v)
-        } else repr.put(root, root)
-      }
-      keys.iterator.flatMap { v =>
-        val m = repr.get(find(v))
-        if (m == v) Iterator.empty
-        else if (emitBoth) Iterator(org.apache.spark.sql.Row(v, m),
-          org.apache.spark.sql.Row(m, v))
-        else Iterator(org.apache.spark.sql.Row(v, m))
+      x
+    }
+    rows.foreach { r =>
+      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        val ra = find(r.getString(0))
+        val rb = find(r.getString(1))
+        val c = UTF8String.fromString(ra).compareTo(UTF8String.fromString(rb))
+        if (c < 0) parent.put(rb, ra) else if (c > 0) parent.put(ra, rb)
       }
     }
-    spark.createDataFrame(rows, schema)
-  }
-
-  /** [[contractLocal]] specialized to long endpoints (the dense-id /
-    * codec path every large corpus takes): an open-addressing
-    * primitive long→long parent table instead of a boxed
-    * HashMap[Any,Any] — no boxing, no equals/hashCode dispatch, ~3×
-    * less memory churn on the 10^7-edge partitions the 8M-doc bench
-    * feeds it. Same algorithm: union every edge, emit both
-    * orientations of member→local-min star edges. */
-  private[graft] def contractLocalLong(e: DataFrame,
-      emitBoth: Boolean = true): DataFrame = {
-    val spark = e.sparkSession
-    val schema = e.schema
-    val rows = e.rdd.mapPartitions { it =>
-      val uf = new LongUnionFind(1 << 12)
-      it.foreach { r =>
-        if (!r.isNullAt(0) && !r.isNullAt(1))
-          uf.union(r.getLong(0), r.getLong(1))
-      }
-      if (emitBoth)
-        uf.starEdges.flatMap { case (v, m) =>
-          Iterator(org.apache.spark.sql.Row(v, m), org.apache.spark.sql.Row(m, v))
-        }
-      else
-        uf.starEdges.map { case (v, m) => org.apache.spark.sql.Row(v, m) }
-    }
-    spark.createDataFrame(rows, schema)
+    parent.keySet().toArray(new Array[String](0)).iterator
+      .map(v => (v, find(v)))
+      .filter { case (v, m) => v != m }
   }
 
   /** Open-addressing long→long union-find (linear probing, power-of-2
     * capacity, grow at 2/3 load; path-halving find; representative =
     * component MIN member, maintained eagerly on union so no second
-    * pass is needed). Single-threaded, per-partition scratch. */
+    * pass is needed). Every long is a legal id: occupied slots are
+    * marked in `used`, not by a sentinel key. Single-threaded,
+    * per-partition scratch. */
   private[graft] final class LongUnionFind(initialCapacity: Int) {
-    // keys: vertex ids; vals: parent pointers. EMPTY slots hold the
-    // sentinel key Long.MinValue — a legal vertex id would collide,
-    // so union() rejects it (no real corpus keys on Long.MinValue;
-    // the generic boxed path remains for exotica).
-    private final val Empty = Long.MinValue
     private var cap = Integer.highestOneBit(math.max(initialCapacity, 16)) * 2
-    private var keys = Array.fill[Long](cap)(Empty)
+    private var used = new Array[Boolean](cap)
+    private var keys = new Array[Long](cap)
     private var vals = new Array[Long](cap)
     private var size = 0
 
@@ -756,18 +477,21 @@ object ConnectedComponents {
       var h = k * 0x9E3779B97F4A7C15L
       h ^= (h >>> 32)
       var i = (h & (cap - 1)).toInt
-      while (keys(i) != Empty && keys(i) != k) i = (i + 1) & (cap - 1)
+      while (used(i) && keys(i) != k) i = (i + 1) & (cap - 1)
       i
     }
 
     private def grow(): Unit = {
-      val ok = keys; val ov = vals
+      val ou = used; val ok = keys; val ov = vals
       cap <<= 1
-      keys = Array.fill[Long](cap)(Empty)
+      used = new Array[Boolean](cap)
+      keys = new Array[Long](cap)
       vals = new Array[Long](cap)
       var i = 0
       while (i < ok.length) {
-        if (ok(i) != Empty) { val j = slot(ok(i)); keys(j) = ok(i); vals(j) = ov(i) }
+        if (ou(i)) {
+          val j = slot(ok(i)); used(j) = true; keys(j) = ok(i); vals(j) = ov(i)
+        }
         i += 1
       }
     }
@@ -775,9 +499,9 @@ object ConnectedComponents {
     /** parent lookup, inserting x as its own root on first sight */
     private def getOrInsert(x: Long): Long = {
       val i = slot(x)
-      if (keys(i) == Empty) {
+      if (!used(i)) {
         if ((size + 1) * 3 > cap * 2) { grow(); return getOrInsert(x) }
-        keys(i) = x; vals(i) = x; size += 1
+        used(i) = true; keys(i) = x; vals(i) = x; size += 1
         x
       } else vals(i)
     }
@@ -795,10 +519,6 @@ object ConnectedComponents {
     }
 
     def union(a: Long, b: Long): Unit = {
-      require(a != Empty && b != Empty,
-        "Long.MinValue vertex id collides with the open-addressing " +
-          "sentinel — run ConnectedComponents with localContract=false " +
-          "(boxed path) for graphs that can carry this id")
       val ra = find(a)
       val rb = find(b)
       // min-root union: the surviving root IS the component minimum,
@@ -809,9 +529,9 @@ object ConnectedComponents {
 
     /** (member, componentMin) for every non-root member */
     def starEdges: Iterator[(Long, Long)] = {
-      val ks = keys; val capNow = cap
-      (0 until capNow).iterator
-        .filter(i => ks(i) != Empty)
+      val us = used; val ks = keys
+      us.indices.iterator
+        .filter(i => us(i))
         .map(i => (ks(i), find(ks(i))))
         .filter { case (v, m) => v != m }
     }

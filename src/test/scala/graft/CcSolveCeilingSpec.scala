@@ -1,22 +1,20 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, IntegerType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
 import graft.ops.ConnectedComponents
 
-/** Type-aware driver-solve ceiling (VERDICT r6 item 3): long-keyed
-  * quotients collect packed and use the full `localSolveMax`; boxed
-  * key types (strings, ints-as-rows — anything non-long) get 1/8 of
-  * it, so a string-keyed quotient above the boxed ceiling takes the
-  * distributed loop instead of materializing GBs of Rows on the
-  * driver. */
+/** Type-aware driver-solve ceiling: long-keyed quotients (long, int,
+  * short, byte and codec string ids) collect packed and use the full
+  * ceiling; boxed string keys get 1/8 of it, so a string-keyed quotient
+  * above the boxed ceiling takes the distributed loop instead of
+  * materializing GBs of Rows on the driver. */
 class CcSolveCeilingSpec extends SparkSpecBase {
 
   test("effective ceiling: full for long keys, 1/8 boxed, sub-8 disables") {
     assert(ConnectedComponents.effectiveSolveCeiling(LongType, 8000000L) == 8000000L)
     assert(ConnectedComponents.effectiveSolveCeiling(StringType, 8000000L) == 1000000L)
-    assert(ConnectedComponents.effectiveSolveCeiling(IntegerType, 8000000L) == 1000000L)
     assert(ConnectedComponents.effectiveSolveCeiling(StringType, 7L) == 0L)
     assert(ConnectedComponents.effectiveSolveCeiling(LongType, 7L) == 7L)
   }
@@ -29,12 +27,12 @@ class CcSolveCeilingSpec extends SparkSpecBase {
     import spark.implicits._
     val verts = chain.flatMap(e => Seq(e._1, e._2)).distinct.toDF("id")
     val edges = chain.toDF("s", "d")
-    // localSolveMax=7 → boxed ceiling 0 → solve disabled → the loop
+    // solveMax=7 → boxed ceiling 0 → solve disabled → the loop
     // runs; with maxIter=0 the loop cannot converge and must THROW,
     // which proves the path taken (the solve path ignores maxIter)
     intercept[IllegalStateException] {
-      ConnectedComponents.run(verts, "id", edges, "s", "d",
-        maxIter = 0, localSolveMax = 7L)
+      ConnectedComponents.runWith(verts, "id", edges, "s", "d",
+        maxIter = 0, solveMax = 7L)
     }
   }
 
@@ -44,8 +42,8 @@ class CcSolveCeilingSpec extends SparkSpecBase {
     val edges = chain.toDF("s", "d")
     // default-sized ceiling → boxed ceiling 1M → solve path; maxIter=0
     // is irrelevant there, so the run SUCCEEDS with correct min labels
-    val out = ConnectedComponents.run(verts, "id", edges, "s", "d",
-      maxIter = 0, localSolveMax = 8000000L)
+    val out = ConnectedComponents.runWith(verts, "id", edges, "s", "d",
+      maxIter = 0, solveMax = 8000000L)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(out == Map("va" -> "va", "vb" -> "va", "vc" -> "va",
       "vd" -> "va", "vz" -> "vz"))
@@ -53,11 +51,17 @@ class CcSolveCeilingSpec extends SparkSpecBase {
 
   test("long-keyed graph keeps the full ceiling (solves where boxed would loop)") {
     import spark.implicits._
-    val verts = Seq(1L, 2L, 3L, 4L, 9L).toDF("id")
-    val edges = Seq(1L -> 2L, 2L -> 3L, 3L -> 4L).toDF("s", "d")
-    val out = ConnectedComponents.run(verts, "id", edges, "s", "d",
-      maxIter = 0, localSolveMax = 7L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 9L -> 9L))
+    // int ids are widened to long keys on entry, so they collect packed
+    // and solve under the same ceiling of 7 that disables boxed keys
+    for (t <- Seq(LongType, IntegerType)) {
+      val verts = Seq(1L, 2L, 3L, 4L, 9L).toDF("id").select(col("id").cast(t))
+      val edges = Seq(1L -> 2L, 2L -> 3L, 3L -> 4L).toDF("s", "d")
+        .select(col("s").cast(t), col("d").cast(t))
+      val out = ConnectedComponents.runWith(verts, "id", edges, "s", "d",
+        maxIter = 0, solveMax = 7L)
+        .collect().map(r => r.getAs[Number](0).longValue -> r.getAs[Number](1).longValue)
+        .toMap
+      assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 9L -> 9L), t.simpleString)
+    }
   }
 }

@@ -140,25 +140,63 @@ class OpsJoinSpec extends SparkSpecBase {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got2 == got)
 
-    // a component needing more rounds than maxIter THROWS instead of
-    // silently returning split clusters (contraction off: the pre-pass
-    // would legitimately collapse this single-partition-sized chain
-    // below the bound, which is the point of having it)
-    val chain = (1L to 9L).map(i => (i, i + 1)).toDF("a", "b")
+    // a component needing more rounds than the bound THROWS instead of
+    // silently returning split clusters. One chain edge per partition
+    // keeps the contracted quotient a chain (a single partition would
+    // collapse it to one star), and solveMax = 0 forces the label loop.
+    val chain = (1L to 9L).map(i => (i, i + 1)).toDF("a", "b").repartition(9)
     val chainV = (1L to 10L).toDF("v")
     intercept[IllegalStateException] {
-      ConnectedComponents.run(chainV, "v", chain, "a", "b", maxIter = 3,
-        localContract = false).collect()
+      ConnectedComponents.runWith(chainV, "v", chain, "a", "b",
+        maxIter = 3, solveMax = 0L).collect()
     }
-    assert(ConnectedComponents.run(chainV, "v", chain, "a", "b", maxIter = 12)
+    assert(ConnectedComponents.runWith(chainV, "v", chain, "a", "b",
+        maxIter = 12, solveMax = 0L)
       .collect().forall(_.getLong(1) == 1L))
   }
 
-  test("string vertex ids run the long-remap loop and decode exactly") {
+  test("connectedComponents: every long is a legal id (Long.MinValue, Long.MaxValue, 0)") {
+    import spark.implicits._
+    val vertices = Seq(Long.MinValue, 0L, Long.MaxValue, 7L).toDF("v")
+    val edges = Seq((Long.MaxValue, 0L), (0L, Long.MinValue)).toDF("a", "b")
+    for (solveMax <- Seq(8000000L, 0L)) {
+      val got = ConnectedComponents.runWith(vertices, "v", edges, "a", "b",
+          maxIter = 20, solveMax = solveMax)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == Map(Long.MinValue -> Long.MinValue, 0L -> Long.MinValue,
+        Long.MaxValue -> Long.MinValue, 7L -> 7L), s"solveMax=$solveMax")
+    }
+  }
+
+  test("connectedComponents type contract: int/short ids keep their type, a double id fails before any job") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.JobShape
+    import org.apache.spark.sql.types.{DoubleType, IntegerType, ShortType}
+    val edges = Seq((1, 2), (2, 3), (5, 6)).toDF("a", "b")
+    val want = Map(1 -> 1, 2 -> 1, 3 -> 1, 4 -> 4, 5 -> 5, 6 -> 5)
+    for (t <- Seq(IntegerType, ShortType)) {
+      val got = ConnectedComponents.run((1 to 6).toDF("v").select(col("v").cast(t)),
+        "v", edges.select(col("a").cast(t), col("b").cast(t)), "a", "b")
+      assert(got.schema.map(_.dataType) == Seq(t, t))
+      assert(got.collect().map(r => r.getAs[Number](0).intValue ->
+        r.getAs[Number](1).intValue).toMap == want, t.simpleString)
+    }
+    val doubles = (1 to 6).toDF("v").select(col("v").cast(DoubleType))
+    val jobs = JobShape.of(spark.sparkContext) {
+      val e = intercept[IllegalArgumentException] {
+        ConnectedComponents.run(doubles, "v",
+          edges.select(col("a").cast(DoubleType), col("b").cast(DoubleType)), "a", "b")
+      }
+      assert(e.getMessage.contains("bigint, int, smallint, tinyint or string"))
+    }
+    assert(jobs == Seq())
+  }
+
+  test("string vertex ids: codec-keyed or boxed, labels decode exactly") {
     import spark.implicits._
     // same chain + triangle + singleton topology as the long-id test,
-    // but string-keyed — exercises the order-preserving dense-id remap
-    // (sort + zipWithIndex) and the exit decode joins end-to-end
+    // but string-keyed: fixed-width ids are keyed to longs by the
+    // numeric-suffix codec and decoded at exit
     val f = (i: Int) => f"v_$i%03d"
     val vertices = (1 to 10).map(f).toDF("v")
     val edges = Seq((1, 2), (2, 3), (3, 4), (4, 5), (7, 8), (9, 8), (7, 9), (8, 7))
@@ -169,11 +207,10 @@ class OpsJoinSpec extends SparkSpecBase {
       f(1) -> f(1), f(2) -> f(1), f(3) -> f(1), f(4) -> f(1), f(5) -> f(1),
       f(6) -> f(6), f(7) -> f(7), f(8) -> f(7), f(9) -> f(7), f(10) -> f(10)))
 
-    // fixed-width ids take the PROVEN numeric-suffix codec (narrow
-    // substring/lpad remap); variable-width ids must fall back to the
-    // generic ranking remap — the min label is then LEXICOGRAPHIC
-    // ("v_100" < "v_7"), so a wrong codec accept (numeric order)
-    // would flip this component's canonical label and fail here.
+    // variable-width ids must stay boxed strings — the min label is
+    // then LEXICOGRAPHIC ("v_100" < "v_7"), so a wrong codec accept
+    // (numeric order) would flip this component's canonical label and
+    // fail here.
     val g = (i: Int) => s"v_$i"
     val vertices2 = ((1 to 10) :+ 100).map(g).toDF("v")
     val edges2 = (Seq((1, 2), (2, 3), (3, 4), (4, 5), (7, 8), (9, 8), (9, 100))
@@ -184,6 +221,24 @@ class OpsJoinSpec extends SparkSpecBase {
       g(1) -> g(1), g(2) -> g(1), g(3) -> g(1), g(4) -> g(1), g(5) -> g(1),
       g(6) -> g(6), g(7) -> g(100), g(8) -> g(100), g(9) -> g(100),
       g(10) -> g(10), g(100) -> g(100)))
+
+    // boxed ids order as Spark orders strings (UTF-8 bytes): U+E000
+    // sorts below the surrogate pair of U+1F600, where Java's UTF-16
+    // compareTo says the opposite. One edge per partition puts U+FFFF
+    // under two hubs, so the quotient holds the other two; the driver
+    // solve and the label loop must both pick U+E000.
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val (emoji, pua, top) = ("\uD83D\uDE00", "\uE000", "\uFFFF")
+    val edges3 = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(top, emoji), Row(top, pua)), 2),
+      StructType(Seq(StructField("a", StringType), StructField("b", StringType))))
+    for (solveMax <- Seq(8000000L, 0L)) {
+      val got3 = ConnectedComponents.runWith(Seq(emoji, pua, top).toDF("v"), "v",
+          edges3, "a", "b", maxIter = 20, solveMax = solveMax)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(got3 == Map(emoji -> pua, pua -> pua, top -> pua), s"solveMax=$solveMax")
+    }
   }
 
   test("numeric-suffix codec: accepts only provably fixed-shape ids") {
@@ -220,76 +275,61 @@ class OpsJoinSpec extends SparkSpecBase {
 
   test("local contraction preserves components exactly on a random graph") {
     import spark.implicits._
+    import scala.reflect.runtime.universe.TypeTag
     // pseudo-random sparse graph over 400 vertices: rings + random
     // chords + self-loops + duplicate and reversed edges, spread over
     // many partitions so contraction sees fragments of components
     val rnd = new scala.util.Random(1234)
-    val edges = ((0L until 390L).map(i => (i, i + rnd.nextInt(3) + 1)) ++
-      (0 until 150).map(_ => (rnd.nextInt(400).toLong, rnd.nextInt(400).toLong)))
-      .toDF("a", "b").repartition(17)
-    val vertices = (0L until 400L).toDF("v")
-    def labels(contract: Boolean) =
-      ConnectedComponents.run(vertices, "v", edges, "a", "b",
-          localContract = contract)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels(true) == labels(false))
+    val pairs = (0 until 390).map(i => (i, i + rnd.nextInt(3) + 1)) ++
+      (0 until 150).map(_ => (rnd.nextInt(400), rnd.nextInt(400)))
+    // independent reference: a plain union-find over the same edge
+    // list; the smaller root wins, so every root is its component's min
+    def reference[K](keys: Seq[K])(implicit ord: Ordering[K]): Map[K, K] = {
+      val parent = scala.collection.mutable.Map(keys.map(k => k -> k): _*)
+      def find(k: K): K =
+        if (parent(k) == k) k else { val r = find(parent(k)); parent(k) = r; r }
+      pairs.foreach { case (a, b) =>
+        val (ra, rb) = (find(keys(a)), find(keys(b)))
+        parent(ord.max(ra, rb)) = ord.min(ra, rb)
+      }
+      keys.map(k => k -> find(k)).toMap
+    }
+    // the driver solve (run) and the forced label loop must both equal
+    // the reference, whichever way the ids are keyed
+    def agrees[K: TypeTag: Ordering](id: Int => K): Unit = {
+      val keys = (0 until 400).map(id)
+      val vertices = keys.map(Tuple1(_)).toDF("v")
+      val edges = pairs.map { case (a, b) => (keys(a), keys(b)) }
+        .toDF("a", "b").repartition(17)
+      val expected = reference(keys)
+      def labels(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getAs[K](0) -> r.getAs[K](1)).toMap
+      assert(labels(ConnectedComponents.run(vertices, "v", edges, "a", "b"))
+        == expected, s"driver solve, ${keys.head.getClass.getSimpleName} ids")
+      assert(labels(ConnectedComponents.runWith(vertices, "v", edges, "a", "b",
+          maxIter = 20, solveMax = 0L))
+        == expected, s"label loop, ${keys.head.getClass.getSimpleName} ids")
+    }
+    agrees(_.toLong)
+    agrees(identity[Int])
+    agrees(i => f"v_$i%03d") // fixed width: codec-keyed longs
+    agrees(i => s"v_$i")     // variable width: boxed, lexicographic min
 
-    // the contraction emits symmetric star edges toward partition
-    // minima and never self-edges; per partition the output is bounded
-    // by 2× its distinct endpoints (a vertex fragmented across
-    // partitions emits one star edge per fragment, so the GLOBAL count
-    // can exceed the input on adversarially scattered graphs — the
-    // shrinkage claim belongs to co-located layouts, below)
-    val oriented = edges.select(col("a").as("src"), col("b").as("dst"))
+    // the contraction emits (member → partition min) star edges and
+    // never self-edges
+    val oriented = pairs.map { case (a, b) => (a.toLong, b.toLong) }
+      .toDF("src", "dst").repartition(17)
     val contracted = ConnectedComponents.contractLocal(oriented)
     assert(contracted.filter(col("src") === col("dst")).count() == 0)
 
     // on the layout the operator actually feeds it (edges co-located
-    // by hub — LSH buckets land together), whole stars collapse and
-    // the deduped output is strictly smaller than the symmetrized
-    // input: 40 hubs × 50 members in 8 partitions
+    // by hub — LSH buckets land together), the output is no larger
+    // than the input: 40 hubs × 50 members in 8 partitions
     val stars = (0 until 2000).map(i => (s"hub_${i % 40}", s"m_${i % 40}_${i / 40}"))
       .toDF("src", "dst").repartition(8, col("src"))
     val cs = ConnectedComponents.contractLocal(stars).distinct().count()
-    val ss = stars.unionByName(
-      stars.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().count()
-    assert(cs <= ss, s"contracted $cs > symmetrized $ss on hub-clustered input")
-  }
-
-  test("multi-pass contraction and batched probes leave labels identical") {
-    import spark.implicits._
-    // the same adversarial random graph shape as the contraction spec:
-    // rings + chords + dup/reversed edges across many partitions, so
-    // pass 2's endpoint re-shuffle genuinely merges cross-partition
-    // fragments, and deep chains force several label rounds — the
-    // probeEvery overshoot path (convergence detected late) is hit
-    val rnd = new scala.util.Random(4321)
-    val edges = ((0L until 390L).map(i => (i, i + rnd.nextInt(3) + 1)) ++
-      (0 until 150).map(_ => (rnd.nextInt(400).toLong, rnd.nextInt(400).toLong)))
-      .toDF("a", "b").repartition(17)
-    val vertices = (0L until 400L).toDF("v")
-    val base = ConnectedComponents.run(vertices, "v", edges, "a", "b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // localSolveMax = 0 forces the distributed label loop; the default
-    // takes the driver union-find over the same quotient — labels must
-    // agree bit-for-bit across every configuration
-    for ((passes, probe, solve) <- Seq((2, 1, 0L), (3, 1, 0L), (1, 2, 0L),
-        (1, 3, 0L), (2, 2, 0L), (1, 1, 0L), (2, 1, 2000000L))) {
-      val got = ConnectedComponents.run(vertices, "v", edges, "a", "b",
-          contractPasses = passes, probeEvery = probe, localSolveMax = solve)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == base,
-        s"labels diverged at passes=$passes probe=$probe localSolveMax=$solve")
-    }
-    // maxIter still throws when the bound is too small for the graph,
-    // probing batched or not (the last round always probes)
-    val chain = (1L to 9L).map(i => (i, i + 1)).toDF("a", "b")
-    val chainV = (1L to 10L).toDF("v")
-    intercept[IllegalStateException] {
-      ConnectedComponents.run(chainV, "v", chain, "a", "b", maxIter = 3,
-        localContract = false, probeEvery = 2).collect()
-    }
+    val ss = stars.distinct().count()
+    assert(cs <= ss, s"contracted $cs > input $ss on hub-clustered input")
   }
 
   test("LSH star edges span exactly the same components as all-pairs edges") {
