@@ -36,18 +36,17 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     * (manifest key `n_failures`) is the writer's failure count;
     * `ExtractMain` stores its unestimated-doc count there
     * (`docs_unestimated`) and labels it `unestimated` in its lineage
-    * print. `schemaHash` fingerprints the data files' Spark schema
-    * (md5 of schema JSON) so reads can decide cheaply whether a
-    * cross-partition schema merge is needed; empty only in manifests
-    * written before fingerprints existed (conservatively treated as
-    * "might diverge"). `summary` (manifest key `summary`, optional) is
+    * print. `schemaHash` (manifest key `schema`, required) fingerprints
+    * the data files' Spark schema (md5 of schema JSON) so reads can
+    * decide cheaply whether a cross-partition schema merge is needed.
+    * `summary` (manifest key `summary`, optional) is
     * an opaque string the writer stores with the entry: the store
     * carries it forward without reading it (`ExtractMain` keeps the
     * partition's report statistics there; see
     * [[graft.stages.ReportParts]]); empty when the writer stored none. */
   final case class Entry(part: Int, path: String, nDocs: Long,
       nSpans: Long, nFailures: Long, committedAt: String,
-      schemaHash: String = "", summary: String = "")
+      schemaHash: String, summary: String = "")
 
   private val snapDir = s"$root/snapshots"
   private def fs: FileSystem =
@@ -82,12 +81,12 @@ final class SnapshotStore(spark: SparkSession, root: String) {
   /** Commit partition `part` at `dataPath` into a new snapshot:
     * carries every other partition's entry forward, replaces this
     * partition's (MERGE/overwrite-partition). Returns the version.
-    * A `dataPath` that does not exist, or whose schema cannot be
-    * read, throws before anything is written: a manifest never names
-    * data no reader could open. */
+    * A `dataPath` that does not exist or holds no data file, or whose
+    * schema cannot be read, throws before anything is written: a
+    * manifest never names data no reader could open. */
   def commit(part: Int, dataPath: String, nDocs: Long, nSpans: Long,
       nFailures: Long, summary: String = ""): Long = {
-    requireExists(Seq(dataPath))
+    requireData(Seq(dataPath))
     // one footer read per COMMIT buys every future read() the right
     // to skip Spark's all-files schema-merge pass (see read())
     val hash = SnapshotStore.schemaHash(spark.read.parquet(dataPath).schema)
@@ -99,21 +98,31 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     * carried forward, and all of them become visible with one atomic
     * rename. `committedAt` is stamped here, one instant for the whole
     * commit; `schemaHash` is the caller's (see
-    * [[SnapshotStore.schemaHash]]), so no footer is read. Every path
-    * is checked to exist before anything is written. Returns the
-    * version. */
+    * [[SnapshotStore.schemaHash]]) and must be set, so no footer is
+    * read. Every path is checked to hold data before anything is
+    * written. Returns the version. */
   def commitAll(entries: Seq[Entry]): Long = {
     require(entries.nonEmpty, "nothing to commit")
     require(entries.map(_.part).distinct.size == entries.size,
       s"one entry per partition: ${entries.map(_.part).mkString(",")}")
-    requireExists(entries.map(_.path))
+    require(entries.forall(_.schemaHash.nonEmpty),
+      s"no schema hash: part ${entries.filter(_.schemaHash.isEmpty).map(_.part).mkString(",")}")
+    requireData(entries.map(_.path))
     publish(entries)
   }
 
-  private def requireExists(paths: Seq[String]): Unit =
-    paths.find(p => !fs.exists(new Path(p))).foreach { p =>
-      throw new java.io.IOException(s"cannot commit: $p does not exist")
-    }
+  /** Every path exists and, if a dir, holds a data file: one whose
+    * name starts with neither `_` (`_SUCCESS`) nor `.` (checksums). */
+  private def requireData(paths: Seq[String]): Unit = paths.foreach { p =>
+    val path = new Path(p)
+    val problem =
+      if (!fs.exists(path)) Some("does not exist")
+      else if (fs.getFileStatus(path).isDirectory && !fs.listStatus(path)
+          .map(_.getPath.getName).exists(n => !n.startsWith("_") && !n.startsWith(".")))
+        Some("holds no data file")
+      else None
+    problem.foreach(why => throw new java.io.IOException(s"cannot commit: $p $why"))
+  }
 
   /** Writes the next manifest: the current entries with `changed`
     * replacing theirs, all stamped with one commit time. */
@@ -160,13 +169,11 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     * version-pinned read still sees exactly the schema of ITS files
     * (time travel includes the schema). When all fingerprints agree —
     * the overwhelmingly common case — the merge pass (a footer read
-    * of EVERY data file) is skipped; entries from pre-fingerprint
-    * manifests merge conservatively. */
+    * of EVERY data file) is skipped. */
   def read(version: Option[Long] = None): DataFrame = {
     val es = entries(version)
     require(es.nonEmpty, "empty table: no committed snapshot")
-    val hashes = es.values.map(_.schemaHash).toSet
-    val needMerge = hashes.size > 1 || hashes.contains("")
+    val needMerge = es.values.map(_.schemaHash).toSet.size > 1
     spark.read.option("mergeSchema", needMerge.toString)
       .parquet(es.values.toSeq.sortBy(_.part).map(_.path): _*)
   }
@@ -174,8 +181,9 @@ final class SnapshotStore(spark: SparkSession, root: String) {
   /** Compact a partition's data files (the `rewrite_data_files`
     * maintenance op — incremental ticks accumulate small files):
     * rewrite the current attempt dir into `targetFiles` files at a
-    * FRESH attempt path and commit the swap, the entry's lineage and
-    * summary carried over. Content-identical, metadata-only
+    * FRESH attempt path and commit the swap, the whole entry (lineage,
+    * schema hash, summary) carried over, so no footer is read.
+    * Content-identical, metadata-only
     * replacement — readers pinned to older versions keep the old files
     * until [[expire]] garbage-collects them. */
   def compact(part: Int, targetFiles: Int = 1): Long = {
@@ -184,7 +192,7 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     val dest = newDataPath(part)
     spark.read.parquet(e.path).coalesce(targetFiles)
       .write.parquet(dest)
-    commit(part, dest, e.nDocs, e.nSpans, e.nFailures, e.summary)
+    commitAll(Seq(e.copy(path = dest)))
   }
 
   /** Expire history (the `expire_snapshots` maintenance op): keep the
@@ -217,22 +225,12 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     var removed = 0
     if (fs.exists(dataDir)) {
       fs.listStatus(dataDir).filter(_.isDirectory).foreach { pDir =>
-        // a LEGACY partition dir (pre-manifest release) holds parquet
-        // FILES directly under p_N; if the manifest doesn't reference
-        // p_N itself (a backfilled entry would), those files are
-        // orphans too — a dir-only GC would strand them forever
-        val pLive = referenced.contains(fs.makeQualified(pDir.getPath).toString)
-        fs.listStatus(pDir.getPath).foreach { child =>
-          if (child.isDirectory) {
-            if (!referenced.contains(fs.makeQualified(child.getPath).toString)) {
-              fs.delete(child.getPath, true)
-              removed += 1
-            }
-          } else if (!pLive) {
-            fs.delete(child.getPath, false)
+        fs.listStatus(pDir.getPath).filter(_.isDirectory)
+          .filterNot(a => referenced.contains(fs.makeQualified(a.getPath).toString))
+          .foreach { a =>
+            fs.delete(a.getPath, true)
             removed += 1
           }
-        }
       }
     }
     (drop.size, removed)
@@ -255,14 +253,14 @@ final class SnapshotStore(spark: SparkSession, root: String) {
       val m = java.util.regex.Pattern
         .compile("\"" + k + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").matcher(line)
       if (!m.find()) {
-        require(!required, s"bad manifest line: $line")
-        return "" // pre-fingerprint manifest: field absent
+        require(!required, s"bad manifest line (no $k): $line")
+        return "" // an entry stored without a summary
       }
       unjson(m.group(1))
     }
     Entry(grabNum("part").toInt, grabStr("path"), grabNum("n_docs"),
       grabNum("n_spans"), grabNum("n_failures"), grabStr("committed_at"),
-      grabStr("schema", required = false), grabStr("summary", required = false))
+      grabStr("schema"), grabStr("summary", required = false))
   }
 
   /** Inverse of [[json]] on a string body: quote, backslash and the

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.Checkpoint
+import graft.io.SnapshotStore
 import graft.stages.{ExtractConfig, Extraction, ReportParts}
 
 /** Checkpointed extraction job over a span table — the engine twin of
@@ -38,8 +38,13 @@ import graft.stages.{ExtractConfig, Extraction, ReportParts}
   * After the commit come the corpus report (S11), the `.wtr` file and
   * the replacement statistics of the current snapshot. The report and
   * the statistics are merged on the driver from the manifest entries'
-  * summaries when every entry has one, else computed by a scan; the
-  * detail CSV and the `.wtr` share one sort of the snapshot's rows.
+  * summaries, with no scan; the detail CSV and the `.wtr` share one
+  * sort of the snapshot's rows.
+  *
+  * The current manifest is the only output-root layout read: a root in
+  * the pre-manifest marker layout (`state/p_N`, no manifest), or one
+  * whose manifest has an entry without a decodable report summary,
+  * fails before any Spark job and is left as it was.
   */
 object ExtractMain {
 
@@ -60,45 +65,24 @@ object ExtractMain {
     spark.stop()
   }
 
-  /** Legacy-layout migration: an output root written by the
-    * marker-only release has committed `state/p_N` markers and data
-    * parquet directly under `data/p_N` (no attempt dirs, no
-    * manifests). Resume keyed solely on the snapshot store would
-    * silently reprocess everything and strand the old files as
-    * orphans the manifest GC can't see. On startup, if markers exist
-    * but no manifest does, each completed legacy partition's loose
-    * files are MOVED into a synthetic `a_legacy` attempt dir and that
-    * dir is committed (lineage carried from the marker). Referencing
-    * `data/p_N` itself would be wrong: it is the PARENT of all future
-    * attempt dirs, so a later recommit would nest new files inside a
-    * path older manifests still list recursively — double-reads under
-    * time travel. Markers without completed data get an explicit
-    * full-reprocess warning instead of a silent one. */
-  def backfillLegacy(spark: SparkSession, outRoot: String,
-      ckpt: Checkpoint, snap: graft.io.SnapshotStore): Unit = {
-    if (snap.currentVersion().isDefined) return
-    val legacy = ckpt.lineage().collect()
-    if (legacy.isEmpty) return
-    val fs = new org.apache.hadoop.fs.Path(outRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    legacy.foreach { r =>
-      val p = r.getAs[Int]("part")
-      val dataDir = new org.apache.hadoop.fs.Path(s"$outRoot/data/p_$p")
-      if (fs.exists(new org.apache.hadoop.fs.Path(dataDir, "_SUCCESS"))) {
-        val legacyAttempt = new org.apache.hadoop.fs.Path(dataDir, "a_legacy")
-        fs.mkdirs(legacyAttempt)
-        fs.listStatus(dataDir).filter(_.isFile).foreach { f =>
-          fs.rename(f.getPath, new org.apache.hadoop.fs.Path(
-            legacyAttempt, f.getPath.getName))
-        }
-        val v = snap.commit(p, legacyAttempt.toString, r.getAs[Long]("n_docs"),
-          r.getAs[Long]("n_spans"), r.getAs[Long]("n_failures"))
-        println(s"[extract] backfilled legacy part=$p into snapshot v$v")
-      } else {
-        println(s"[extract] WARNING: legacy marker for part=$p has no " +
-          s"completed data at $dataDir — the partition WILL be reprocessed")
-      }
-    }
+  /** The current manifest's entries, once `outRoot` is checked to be in
+    * the one layout read; file metadata only, so no Spark job runs. */
+  private def requireManifestLayout(spark: SparkSession, outRoot: String,
+      snap: SnapshotStore): Map[Int, snap.Entry] = {
+    val fs = new Path(outRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val version = snap.currentVersion()
+    if (version.isEmpty && fs.exists(new Path(outRoot, "state")))
+      throw new IllegalStateException(s"$outRoot holds the pre-manifest marker " +
+        "layout (state/p_N markers, no snapshots/v<N>.manifest), which is not " +
+        "read any more: extract into a new out root")
+    val committed = snap.entries(version)
+    val unsummarised = committed.values.filter(e => ReportParts.decode(e.summary).isEmpty)
+      .map(_.part).toSeq.sorted
+    if (unsummarised.nonEmpty)
+      throw new IllegalStateException(s"$outRoot: snapshot v${version.get} lists " +
+        s"part(s) ${unsummarised.mkString(",")} without a report summary (a manifest " +
+        "written before entries carried one): extract into a new out root")
+    committed
   }
 
   /** Logical partition of a row, from its doc_id: the input bucketing
@@ -109,18 +93,15 @@ object ExtractMain {
   def run(spark: SparkSession, inPath: String, outRoot: String, nParts: Int,
       backup: Boolean = false, cfg: ExtractConfig = ExtractConfig()): Unit = {
     import spark.implicits._
-    val ckpt = new Checkpoint(spark, outRoot)
     // the snapshot manifest is the only commit and lineage record
     // (MERGE-style overwrite-partition + snapshot isolation; see
-    // SnapshotStore); Checkpoint is read only to migrate legacy roots
-    // and names the S7 backup location
-    val snap = new graft.io.SnapshotStore(spark, outRoot)
+    // SnapshotStore)
+    val snap = new SnapshotStore(spark, outRoot)
+    val committed = requireManifestLayout(spark, outRoot, snap)
     val docs = spark.read.parquet(inPath).withColumn("part", partOf(nParts))
 
-    backfillLegacy(spark, outRoot, ckpt, snap)
     // J1: resume is an in-driver set difference over partition
     // metadata, O(#partitions) — never a per-doc anti-join
-    val committed = snap.entries()
     val todo = (0 until nParts).filterNot(committed.contains)
     println(s"[extract] partitions total=$nParts pending=${todo.size}")
     // the resume unit is the partition, so rows appended to the input
@@ -141,7 +122,7 @@ object ExtractMain {
     if (backup && (cfg.replaceDict.nonEmpty || cfg.regexRule.nonEmpty))
       todo.foreach { p =>
         docs.filter($"part" === p).drop("part")
-          .write.mode(SaveMode.Overwrite).parquet(ckpt.backupPath(p))
+          .write.mode(SaveMode.Overwrite).parquet(s"$outRoot/backup/p_$p")
       }
 
     if (todo.nonEmpty) {
@@ -154,10 +135,9 @@ object ExtractMain {
       observed.write.partitionBy("part").parquet(staging.toString)
       val counts = lineage()
       val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val schemaHash = graft.io.SnapshotStore.schemaHash(rows.drop("part").schema)
+      val schemaHash = SnapshotStore.schemaHash(rows.drop("part").schema)
       val entries = todo.map { p =>
-        // every attempt is a FRESH dir of parquet files plus `_SUCCESS`
-        // (backfillLegacy recognises completed data by that marker);
+        // every attempt is a FRESH dir of parquet files plus `_SUCCESS`;
         // commits replace metadata, never files
         val attempt = new Path(snap.newDataPath(p))
         val written = new Path(staging, s"part=$p")
@@ -186,12 +166,11 @@ object ExtractMain {
     // ocr_pipeline.py:233-269): summary (mean + bins + totals) and
     // ratio-sorted detail (S11 .wtr). The summary and the replacement
     // statistics merge the entries' summaries, O(#partitions) on the
-    // driver; an entry without one (legacy backfill, bare commit,
-    // older manifest) makes both scan the snapshot instead
+    // driver
     val committedNow = snap.entries()
-    val merged = ReportParts.merge(committedNow.values.map(_.summary))
+    val merged = ReportParts.merge(committedNow.values.map(e => e.part -> e.summary))
     val all = snap.read().as[graft.stages.ProcessedDoc]
-    val rep = merged.map(_.toReport).getOrElse(Extraction.report(all))
+    val rep = merged.toReport
     // exact-layout `.wtr` compatibility file for downstream parsers,
     // written from the detail's sorted rows. Over the driver-streamed
     // cap the run must NOT die at its last step: skip the compat file
@@ -219,8 +198,7 @@ object ExtractMain {
     }
     // A1/A2 corpus replacement statistics, reference `ſ:392` format
     // (ocr_pipeline.py:402-411) — O(#distinct keys) driver-side
-    val stats = merged.map(_.replStatsSorted).getOrElse(
-      Extraction.corpusReplStats(all).collect().map(r => (r.getString(0), r.getLong(1))).toSeq)
+    val stats = merged.replStatsSorted
     println(s"[extract] replacement stats: ${stats.map { case (k, n) => s"$k:$n" }.mkString(", ")}")
     // lineage from the manifest, driver-side (the n_failures field
     // holds the unestimated-doc count; see SnapshotStore.Entry)

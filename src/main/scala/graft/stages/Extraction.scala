@@ -122,11 +122,13 @@ object ReportParts {
       }.toMap)
   }.toOption
 
-  /** The sum of every summary's parts, or None when one of them has
-    * none (a backfilled legacy entry, a bare commit, an older
-    * manifest): the caller then scans. */
-  def merge(summaries: Iterable[String]): Option[ReportParts] =
-    summaries.foldLeft(Option(Empty)) { (acc, s) => acc.flatMap(a => decode(s).map(a + _)) }
+  /** The sum of every partition's summary, given as `part -> summary`;
+    * one that does not decode throws, naming its partition. */
+  def merge(summaries: Iterable[(Int, String)]): ReportParts =
+    summaries.foldLeft(Empty) { case (acc, (p, s)) =>
+      acc + decode(s).getOrElse(throw new IllegalArgumentException(
+        s"part $p: no report summary in '${s.take(80)}'"))
+    }
 }
 
 /** [[Extraction.withLineage]]'s buffer: per logical partition
@@ -506,7 +508,9 @@ object Extraction {
     * StepEstimateOCR.analyze lib/ocr_step.py:426-446): mean of valid
     * hit ratios (Python-rounded), five 15-point bins, valid/invalid
     * split. One tiny aggregate (a one-row shuffle), finished by
-    * [[ReportParts.toReport]] like the merge of manifest summaries. */
+    * [[ReportParts.toReport]] like the merge of manifest summaries.
+    * This scan, and [[corpusReplStats]], are the references that the
+    * specs and perfbench's gate check `ExtractMain`'s merge against. */
   def report(processed: Dataset[ProcessedDoc]): EstimationReport = {
     val spark = processed.sparkSession
     import spark.implicits._

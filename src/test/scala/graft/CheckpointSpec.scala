@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions.{coalesce, count, lit, pmod, size, sum, when, xxhash64}
 
-import graft.io.{Checkpoint, SnapshotStore}
+import graft.io.SnapshotStore
 import graft.model.{Doc, Span}
 import graft.run.ExtractMain
 import graft.stages.ProcessedDoc
@@ -42,7 +42,7 @@ class CheckpointSpec extends SparkSpecBase {
     val run1 = snap.entries()
     new java.io.File(s"$outRoot/snapshots/v1.manifest").delete()
     run1.values.toSeq.sortBy(_.part).take(2).foreach { e =>
-      snap.commit(e.part, e.path, e.nDocs, e.nSpans, e.nFailures)
+      snap.commit(e.part, e.path, e.nDocs, e.nSpans, e.nFailures, e.summary)
     }
     assert(snap.currentVersion().contains(2L))
     assert(snap.done().size == 2)
@@ -110,7 +110,7 @@ class CheckpointSpec extends SparkSpecBase {
     val snap = new SnapshotStore(spark, tmp)
     val p = snap.newDataPath(0)
     spark.range(1000).select($"id").repartition(8).write.parquet(p)
-    snap.commit(0, p, 1000, 1000, 0)
+    snap.commit(0, p, 1000, 1000, 0, "opaque summary")
     def files(dir: String) =
       new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
     assert(files(p) == 8)
@@ -122,7 +122,11 @@ class CheckpointSpec extends SparkSpecBase {
     assert(after.path != p, "compaction must write a fresh attempt dir")
     assert(files(after.path) == 1)
     assert(snap.read().as[Long].collect().sorted.toSeq == before)
-    assert(after.nDocs == 1000) // lineage carried through
+    // the whole entry carries over: lineage, schema hash and summary
+    val pre = snap.entries(Some(1L))(0)
+    assert(after == pre.copy(path = after.path, committedAt = after.committedAt))
+    assert(after.nDocs == 1000 && after.summary == "opaque summary")
+    assert(after.schemaHash == SnapshotStore.schemaHash(spark.read.parquet(after.path).schema))
 
     // the pre-compaction view still reads the old files until expire()
     assert(snap.read(Some(1L)).count() == 1000)
@@ -160,9 +164,13 @@ class CheckpointSpec extends SparkSpecBase {
     val missing = s"$tmp/data/p_1/a_never_written"
     val e = intercept[java.io.IOException](snap.commit(1, missing, 5, 5, 0))
     assert(e.getMessage.contains(missing))
-    // an existing dir with no parquet in it: the footer read fails
+    // an existing dir with no data file in it, only markers: refused
+    // before any footer read
     val empty = new java.io.File(snap.newDataPath(2)); empty.mkdirs()
-    intercept[Exception](snap.commit(2, empty.toString, 1, 1, 0))
+    Files.writeString(new java.io.File(empty, "_SUCCESS").toPath, "")
+    Files.writeString(new java.io.File(empty, ".part-0.crc").toPath, "")
+    val e2 = intercept[java.io.IOException](snap.commit(2, empty.toString, 1, 1, 0))
+    assert(e2.getMessage.contains(empty.toString))
 
     assert(snap.currentVersion().contains(1L))
     assert(snap.done() == Set(0))
@@ -235,71 +243,36 @@ class CheckpointSpec extends SparkSpecBase {
     assert(snap.read().columns.toSet == Set("doc_id", "n", "lang"))
   }
 
-  test("legacy marker-only layout: backfill adopts data, expire GCs superseded files") {
-    import spark.implicits._
+  test("a pre-manifest marker root fails fast and is left untouched") {
     val tmp = Files.createTempDirectory("graft-legacy").toString
     val spansPath = s"$tmp/spans"
     val outRoot = s"$tmp/out"
-    graft.gen.CorpusGen.docs(spark, 60, "interleaved")
-      .write.mode(SaveMode.Overwrite).parquet(spansPath)
+    graft.gen.CorpusGen.docs(spark, 20, "interleaved").write.parquet(spansPath)
+    // the marker-only layout: a committed state/p_N marker, no manifest
+    val marker = new java.io.File(s"$outRoot/state/p_0")
+    marker.mkdirs()
+    Files.writeString(new java.io.File(marker, "_SUCCESS").toPath, "")
+    val e = intercept[IllegalStateException](
+      ExtractMain.run(spark, spansPath, outRoot, nParts = 2))
+    assert(e.getMessage.contains("pre-manifest marker layout"), e.getMessage)
+    assert(e.getMessage.contains("new out root"), e.getMessage)
+    assert(new java.io.File(outRoot).list().toSeq == Seq("state"))
+  }
 
-    // simulate the pre-manifest release: run normally, write each
-    // partition's marker from its manifest entry, then strip the
-    // manifests and flatten each attempt dir up into data/p_N (the
-    // legacy layout: parquet files directly under the partition dir)
-    ExtractMain.run(spark, spansPath, outRoot, nParts = 2)
-    val snap = new SnapshotStore(spark, outRoot)
-    val full = snap.read().select($"doc_id", $"n_words").as[(String, Int)]
-      .collect().sortBy(_._1).toSeq
-    val ckpt = new Checkpoint(spark, outRoot)
-    snap.entries().values.foreach { e =>
-      ckpt.commit(e.part, e.nDocs, e.nSpans, e.nFailures)
-    }
-    new java.io.File(s"$outRoot/snapshots").listFiles().foreach(_.delete())
-    (0 until 2).foreach { p =>
-      val pDir = new java.io.File(s"$outRoot/data/p_$p")
-      val attempt = pDir.listFiles().filter(_.isDirectory).head
-      attempt.listFiles().foreach { f =>
-        java.nio.file.Files.move(f.toPath,
-          new java.io.File(pDir, f.getName).toPath)
-      }
-      attempt.delete()
-    }
-    assert(snap.currentVersion().isEmpty)
-
-    // resume: the backfill must ADOPT the legacy data — loose files
-    // move into a synthetic a_legacy attempt dir (NOT data/p_N itself,
-    // which is the parent of future attempts) and the corpus is
-    // byte-identical, not rebuilt
-    ExtractMain.run(spark, spansPath, outRoot, nParts = 2)
-    assert(snap.done() == Set(0, 1))
-    assert(snap.entries().values.forall(_.path.endsWith("a_legacy")),
-      s"reprocessed instead of adopting: ${snap.entries()}")
-    assert(snap.entries().values.map(_.nDocs).sum == 60) // marker lineage carried
-    val resumed = snap.read().select($"doc_id", $"n_words").as[(String, Int)]
-      .collect().sortBy(_._1).toSeq
-    assert(resumed == full)
-
-    // the nesting regression this layout prevents: a version pinned
-    // BEFORE a later recommit must keep reading exactly its own files
-    val vAdopt = snap.currentVersion().get
-    snap.compact(0)
-    assert(snap.read(Some(vAdopt)).count() == 60,
-      "time-travel read double-counts after recommit")
-    assert(snap.read().count() == 60)
-
-    // expire then GCs the superseded a_legacy dir like any attempt —
-    // and still sweeps loose files under a partition dir no manifest
-    // references (a warned, never-backfilled root)
-    val stray = new java.io.File(s"$outRoot/data/p_9")
-    stray.mkdirs()
-    java.nio.file.Files.writeString(
-      new java.io.File(stray, "orphan.parquet").toPath, "x")
-    val (_, removed) = snap.expire(1)
-    assert(removed >= 2, s"expected a_legacy dir + stray file GC'd: $removed")
-    assert(!new java.io.File(s"$outRoot/data/p_0/a_legacy").exists())
-    assert(new java.io.File(s"$outRoot/data/p_9").listFiles().forall(_.isDirectory))
-    assert(snap.read().count() == 60)
+  test("a manifest line without a schema hash fails the parse") {
+    val tmp = Files.createTempDirectory("graft-noschema").toString
+    val snap = new SnapshotStore(spark, tmp)
+    val path = snap.newDataPath(0)
+    spark.range(1).write.parquet(path)
+    snap.commit(0, path, 1, 1, 0)
+    val manifest = java.nio.file.Paths.get(s"$tmp/snapshots/v1.manifest")
+    val line = Files.readString(manifest)
+    assert(line.contains("\"schema\":\""))
+    // an edited manifest: its checksum sidecar no longer applies
+    Files.delete(java.nio.file.Paths.get(s"$tmp/snapshots/.v1.manifest.crc"))
+    Files.writeString(manifest, line.replaceAll(",\"schema\":\"[0-9a-f]*\"", ""))
+    val e = intercept[IllegalArgumentException](snap.entries())
+    assert(e.getMessage.contains("no schema"), e.getMessage)
   }
 
   test("one write job commits every pending partition, empty ones included") {

@@ -32,11 +32,10 @@ class ManifestReportSpec extends SparkSpecBase {
     "[extract] replacement stats: " + Extraction.corpusReplStats(all).collect()
       .map(r => s"${r.getString(0)}:${r.getLong(1)}").mkString(", ")
 
-  /** The run's written summary and printed statistics equal
-    * `report` / `corpusReplStats` over the snapshot; `fromManifest`
-    * says whether every entry carried a summary, so that the run
-    * merged instead of scanning. */
-  private def assertParity(out: String, lines: Seq[String], fromManifest: Boolean): Unit = {
+  /** The run's written summary and printed statistics, and the merge
+    * of the manifest entries' summaries, equal `report` /
+    * `corpusReplStats` over the snapshot. */
+  private def assertParity(out: String, lines: Seq[String]): Unit = {
     import spark.implicits._
     val snap = new SnapshotStore(spark, out)
     val all = snap.read().as[ProcessedDoc]
@@ -44,20 +43,17 @@ class ManifestReportSpec extends SparkSpecBase {
     val written = spark.read.parquet(s"$out/report/summary").as[EstimationReport].collect().toSeq
     assert(written == Seq(want))
     assert(lines.contains(statsLine(all)), lines.mkString("\n"))
-    val merged = ReportParts.merge(snap.entries().values.map(_.summary))
-    assert(merged.isDefined == fromManifest)
-    merged.foreach { m =>
-      assert(m.toReport == want)
-      assert(m.replStatsSorted == Extraction.corpusReplStats(all).collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq)
-    }
+    val merged = ReportParts.merge(snap.entries().values.map(e => e.part -> e.summary))
+    assert(merged.toReport == want)
+    assert(merged.replStatsSorted == Extraction.corpusReplStats(all).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq)
   }
 
   test("report parity: a fresh edge corpus, from the manifest") {
     val tmp = Files.createTempDirectory("graft-mrep-edge").toString
     graft.gen.CorpusGen.docs(spark, 300, "edge", seed = 8).write.parquet(s"$tmp/in")
     val lines = extract(s"$tmp/in", s"$tmp/out", nParts = 4)
-    assertParity(s"$tmp/out", lines, fromManifest = true)
+    assertParity(s"$tmp/out", lines)
     import spark.implicits._
     val all = new SnapshotStore(spark, s"$tmp/out").read().as[ProcessedDoc].collect()
     assert(all.exists(_.hit_ratio == -1.0), "corpus has no unestimated doc")
@@ -80,7 +76,7 @@ class ManifestReportSpec extends SparkSpecBase {
       graft.model.Span(graft.model.Span.KindText, "wort", "line://b/l0", 1))))
       .toDF().write.mode(SaveMode.Append).parquet(s"$tmp/in")
     val lines = extract(s"$tmp/in", s"$tmp/out", nParts = 3, cfg)
-    assertParity(s"$tmp/out", lines, fromManifest = true)
+    assertParity(s"$tmp/out", lines)
     assert(lines.exists(l => l.startsWith("[extract] replacement stats:") && l.contains("=>")),
       lines.mkString("\n"))
   }
@@ -93,35 +89,19 @@ class ManifestReportSpec extends SparkSpecBase {
     val snap = new SnapshotStore(spark, out)
     val run1 = snap.entries().values.toSeq.sortBy(_.part)
     new java.io.File(s"$out/snapshots/v1.manifest").delete()
-    // an older release's two commits carry no summary: the rerun scans
+    // commits without a summary (an older release's): the rerun fails
+    // before its write job, naming the version and the parts
     run1.take(2).foreach(e => snap.commit(e.part, e.path, e.nDocs, e.nSpans, e.nFailures))
-    assertParity(out, extract(s"$tmp/in", out, nParts = 4), fromManifest = false)
+    val err = intercept[IllegalStateException](extract(s"$tmp/in", out, nParts = 4))
+    assert(err.getMessage.contains("snapshot v2") && err.getMessage.contains("part(s) 0,1"),
+      err.getMessage)
+    assert(snap.currentVersion().contains(2L))
+    assert(!new java.io.File(s"$out/data/_staging").exists())
     // the same partial state committed with the summaries merges
     new java.io.File(out, "snapshots").listFiles().foreach(_.delete())
     run1.take(2).foreach(e => snap.commit(e.part, e.path, e.nDocs, e.nSpans, e.nFailures, e.summary))
-    assertParity(out, extract(s"$tmp/in", out, nParts = 4), fromManifest = true)
+    assertParity(out, extract(s"$tmp/in", out, nParts = 4))
     assert(snap.currentVersion().contains(3L))
-  }
-
-  test("report parity: a backfilled legacy root falls back to the scans") {
-    val tmp = Files.createTempDirectory("graft-mrep-legacy").toString
-    graft.gen.CorpusGen.docs(spark, 80, "edge", seed = 6).write.parquet(s"$tmp/in")
-    val out = s"$tmp/out"
-    extract(s"$tmp/in", out, nParts = 2)
-    // the marker-only layout (see CheckpointSpec's legacy case)
-    val snap = new SnapshotStore(spark, out)
-    val ckpt = new graft.io.Checkpoint(spark, out)
-    snap.entries().values.foreach(e => ckpt.commit(e.part, e.nDocs, e.nSpans, e.nFailures))
-    new java.io.File(s"$out/snapshots").listFiles().foreach(_.delete())
-    (0 until 2).foreach { p =>
-      val pDir = new java.io.File(s"$out/data/p_$p")
-      val attempt = pDir.listFiles().filter(_.isDirectory).head
-      attempt.listFiles().foreach(f => Files.move(f.toPath, new java.io.File(pDir, f.getName).toPath))
-      attempt.delete()
-    }
-    val lines = extract(s"$tmp/in", out, nParts = 2)
-    assert(snap.entries().values.forall(_.path.endsWith("a_legacy")))
-    assertParity(out, lines, fromManifest = false)
   }
 
   test("report parity: after compact, the summary is carried forward") {
@@ -133,7 +113,7 @@ class ManifestReportSpec extends SparkSpecBase {
     val before = snap.entries()(1)
     snap.compact(1)
     assert(snap.entries()(1).summary == before.summary && before.summary.nonEmpty)
-    assertParity(out, extract(s"$tmp/in", out, nParts = 2), fromManifest = true)
+    assertParity(out, extract(s"$tmp/in", out, nParts = 2))
   }
 
   test("lineage parts equal the report per partition, ratios on the bin edges") {
@@ -180,11 +160,13 @@ class ManifestReportSpec extends SparkSpecBase {
     snap.commit(0, path, 1, 1, 0, raw)
     assert(snap.entries()(0).summary == raw)
     snap.commit(0, path, 1, 1, 0, enc)
-    assert(ReportParts.merge(snap.entries().values.map(_.summary)).contains(parts))
-    // a bare commit stores none, and the merge says so
+    def merge() = ReportParts.merge(snap.entries().values.map(e => e.part -> e.summary))
+    assert(merge() == parts)
+    // a bare commit stores none, and the merge refuses it by part
     snap.commit(1, path, 1, 1, 0)
     assert(snap.entries()(1).summary.isEmpty)
-    assert(ReportParts.merge(snap.entries().values.map(_.summary)).isEmpty)
+    val err = intercept[IllegalArgumentException](merge())
+    assert(err.getMessage.startsWith("part 1:"), err.getMessage)
   }
 
   test("commitAll: one version per run, all or nothing, footer-free schema hash") {
@@ -213,6 +195,8 @@ class ManifestReportSpec extends SparkSpecBase {
     val err = intercept[java.io.IOException](snap.commitAll(Seq(
       es.head.copy(part = 8), snap.Entry(9, missing, 1, 1, 0, "", es.head.schemaHash))))
     assert(err.getMessage.contains(missing))
+    // an entry without a schema hash publishes nothing either
+    intercept[IllegalArgumentException](snap.commitAll(Seq(es.head.copy(schemaHash = ""))))
     assert(snap.currentVersion().contains(1L) && snap.done() == Set(0, 1, 2, 3))
     assert(tmpFiles == tmpBefore)
   }
