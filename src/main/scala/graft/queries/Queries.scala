@@ -512,7 +512,7 @@ object Queries {
              GROUP BY 1, 2 ORDER BY d1, d2"""))
 
   // SimHash (16-bit, md5-based bit votes over distinct tokens) — ONE
-  // codegen'd expression (graft.sql.SimHash16), bit-identical to the
+  // row kernel (graft.sql.SimHash16), bit-identical to the
   // HOF chain it replaced (pinned by MinHashSigSpec); oracle untouched
   private val q25 = QueryDef("q25_simhash",
     (s, d) => t(s, d, "documents")
@@ -533,8 +533,8 @@ object Queries {
   // Similarity search over `embeddings`
   // ===================================================================
 
-  /** Cosine similarity: the codegen'd custom expression (one fused
-    * loop; see [[graft.sql.CosineSim]]). Mathematically identical to
+  /** Cosine similarity: the row kernel (one fused loop; see
+    * [[graft.sql.CosineSim]]). Mathematically identical to
     * the zip_with+aggregate HOF chain it replaced. */
   private def cosineCol(a: Column, b: Column): Column =
     graft.sql.CosineSim(a, b)
@@ -1186,7 +1186,7 @@ object Queries {
             GROUP BY r.l_returnflag, pcts.p50, pcts.p90
             ORDER BY r.l_returnflag"""))
 
-  // the PRODUCTION minhash: one codegen'd expression computes the whole
+  // the PRODUCTION minhash: one row kernel computes the whole
   // signature (tokenize → 3-gram shingle → 8 seeded xxhash64 minima,
   // single pass — see graft.sql.MinHashSig; the interpreted HOF chain
   // this replaced measured 4.4 s at sf0.1). Engine-defined hash →

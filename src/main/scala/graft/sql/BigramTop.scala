@@ -2,12 +2,10 @@ package graft.sql
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** q58's most-frequent-bigram statistics as ONE pass over the token
   * array: (max bigram count, total bigram count) per document —
@@ -16,29 +14,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * n_bg = n_tokens − 1), but with no Generate row blow-up and no
   * (doc, bigram) exchange. Returns NULL for docs with fewer than two
   * tokens — exactly the left-join miss of the relational form. */
-case class BigramTop(child: Expression) extends UnaryExpression {
+object BigramTop {
 
-  override def dataType: DataType = StructType(Seq(
+  private val outputType = StructType(Seq(
     StructField("top_cnt", LongType, nullable = false),
     StructField("n_bg", LongType, nullable = false)))
-  override def nullable: Boolean = true
-
-  override protected def withNewChildInternal(newChild: Expression): BigramTop =
-    copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    BigramTop.compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val res = ctx.freshName("btRes")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""InternalRow $res = graft.sql.BigramTop.compute($c);
-         |if ($res == null) { ${ev.isNull} = true; } else { ${ev.value} = $res; }
-         |""".stripMargin)
-  }
-}
-
-object BigramTop {
 
   /** Static entry point shared by interpreted eval and generated code;
     * null for sub-2-token docs (the relational left-join miss). */
@@ -60,8 +40,6 @@ object BigramTop {
     new GenericInternalRow(Array[Any](top, n.toLong - 1L))
   }
 
-  def of(tk: Column): Column = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    Bridge.column(BigramTop(Bridge.expression(tk)))
-  }
+  def of(tk: Column): Column =
+    Bridge.invoke(this, outputType, "compute", Seq(tk), returnNullable = true)
 }

@@ -1,36 +1,27 @@
 package graft.sql
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.DoubleType
 
-/** Cosine similarity of two `array<double>` columns as a native
-  * Catalyst expression WITH whole-stage codegen (`doGenCode`): one
-  * fused loop over both ArrayData buffers — no lambda dispatch, no
-  * boxing, no intermediate arrays. This is the hot scalar of the
-  * similarity-search operators (brute-force kNN / near-dup pairs),
-  * where the interpreted `zip_with + aggregate` HOF chain walks each
-  * array three times with per-element closures.
+/** Cosine similarity of two `array<double>` columns as ONE row kernel
+  * inside whole-stage codegen: one fused loop over both ArrayData
+  * buffers — no lambda dispatch, no boxing, no intermediate arrays.
+  * This is the hot scalar of the similarity-search operators
+  * (brute-force kNN / near-dup pairs), where the interpreted
+  * `zip_with + aggregate` HOF chain walks each array three times with
+  * per-element closures.
   *
   * Returns null when either side is null; 0.0 when either norm is 0
   * or lengths differ (defensive: mismatched embeddings are data bugs,
-  * not query bugs).
+  * not query bugs). Callers pass array<double> (cast at the query
+  * layer); the kernel applies no input coercion.
   */
-case class CosineSim(left: Expression, right: Expression) extends BinaryExpression {
+object CosineSim {
 
-  // callers pass array<double> (cast at the query layer); an internal
-  // expression needs no analyzer-level input coercion
-  override def dataType: DataType = DoubleType
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSim =
-    copy(left = l, right = r)
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  /** Static entry point shared by interpreted eval and generated code. */
+  def compute(x: ArrayData, y: ArrayData): Double = {
     val n = x.numElements()
     if (n != y.numElements()) return 0.0
     var dot = 0.0; var nx = 0.0; var ny = 0.0
@@ -44,36 +35,6 @@ case class CosineSim(left: Expression, right: Expression) extends BinaryExpressi
     else dot / (math.sqrt(nx) * math.sqrt(ny))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      s"""
-         |int $n = $x.numElements();
-         |if ($n != $y.numElements()) {
-         |  ${ev.value} = 0.0;
-         |} else {
-         |  double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $xv = $x.getDouble($i);
-         |    double $yv = $y.getDouble($i);
-         |    $dot += $xv * $yv; $nx += $xv * $xv; $ny += $yv * $yv;
-         |  }
-         |  ${ev.value} = ($nx == 0.0 || $ny == 0.0)
-         |    ? 0.0 : $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
-         |}
-       """.stripMargin
-    })
-  }
-}
-
-object CosineSim {
-  import org.apache.spark.sql.graftbridge.Bridge
   def apply(a: Column, b: Column): Column =
-    Bridge.column(CosineSim(Bridge.expression(a), Bridge.expression(b)))
+    Bridge.invoke(this, DoubleType, "compute", Seq(a, b))
 }

@@ -1,14 +1,17 @@
 package graft.sql
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.graftbridge.Bridge
 
-import graft.text.TextRules
+import graft.stages.ExtractConfig
 
-/** SparkSessionExtensions entry point: registers the engine's custom
-  * expressions as SQL functions, so the extraction chain is reachable
-  * from plain `spark.sql(...)` too.
+/** SparkSessionExtensions entry point: registers the engine's row
+  * kernels as SQL functions, so the extraction chain is reachable
+  * from plain `spark.sql(...)` too. Each function is built by the
+  * kernel's own Column entry point, so SQL and the Column API plan the
+  * same `StaticInvoke`.
   *
   * Usage:
   * {{{
@@ -17,7 +20,7 @@ import graft.text.TextRules
   *   // or: .config("spark.sql.extensions", "graft.sql.GraftExtensions")
   * }}}
   *
-  * SQL surface:
+  * SQL surface (each returns NULL on a NULL argument):
   *  - `graft_process_spans(spans)` → struct(spans, hit_ratio, n_words,
   *    n_errs, n_lines_in, n_wraps, n_shorts, n_lines_out, repl_stats)
   *    — the full per-document chain with the production defaults;
@@ -28,26 +31,19 @@ import graft.text.TextRules
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def register(ext: SparkSessionExtensions, name: String,
-      clazz: Class[_], build: Seq[Expression] => Expression): Unit =
+  private def register(ext: SparkSessionExtensions, name: String, kernel: AnyRef)(
+      build: Seq[Column] => Column): Unit =
     ext.injectFunction((
       FunctionIdentifier(name),
-      new ExpressionInfo(clazz.getName, name),
-      build))
+      new ExpressionInfo(kernel.getClass.getName.stripSuffix("$"), name),
+      children => Bridge.expression(build(children.map(Bridge.column)))))
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    val defaultCfg = ProcessConfig(
-      replaceDict = TextRules.DefaultReplaceDict,
-      regex = None, minLineLen = 2, denseMinLen = 2)
-    register(ext, "graft_process_spans", classOf[ProcessSpans],
-      children => ProcessSpans(children.head, defaultCfg))
-    register(ext, "graft_minhash", classOf[MinHashSig],
-      children => MinHashSig(children.head, 8))
-    register(ext, "graft_md5_minhash", classOf[Md5MinHash],
-      children => Md5MinHash(children.head, 8))
-    register(ext, "graft_simhash", classOf[SimHash16],
-      children => SimHash16(children.head))
-    register(ext, "graft_cosine", classOf[CosineSim],
-      children => CosineSim(children(0), children(1)))
+    register(ext, "graft_process_spans", ProcessSpans)(a =>
+      ProcessSpans.process(a.head, ExtractConfig()))
+    register(ext, "graft_minhash", MinHashSig)(a => MinHashSig.sig(a.head, 8))
+    register(ext, "graft_md5_minhash", Md5MinHash)(a => Md5MinHash.sig(a.head, 8))
+    register(ext, "graft_simhash", SimHash16)(a => SimHash16.sim(a.head))
+    register(ext, "graft_cosine", CosineSim)(a => CosineSim(a(0), a(1)))
   }
 }

@@ -4,16 +4,16 @@ import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.text.TextRules
 
-/** The DuckDB-oracle-parity MinHash signature as ONE codegen'd
-  * expression: word 3-gram shingles, per hash index `i` the
+/** The DuckDB-oracle-parity MinHash signature as ONE row kernel:
+  * word 3-gram shingles, per hash index `i` the
   * lexicographic MINIMUM of `md5("i:" + shingle)` hex digests —
   * bit-identical to the HOF composition
   * `array_min(transform(shingles, x -> md5(concat("i:", x))))` that
@@ -26,26 +26,10 @@ import graft.text.TextRules
   * and rendered to hex once at the end. Shingle DISTINCT is skipped:
   * the minimum over a multiset equals the minimum over its set.
   */
-case class Md5MinHash(child: Expression, k: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override protected def withNewChildInternal(newChild: Expression): Md5MinHash =
-    copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    Md5MinHash.compute(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.sql.Md5MinHash.compute($c, $k);")
-}
-
 object Md5MinHash {
 
-  private val md5Pool = new ThreadLocal[MessageDigest] {
+  /** One MD5 digest per thread, shared by every md5 kernel. */
+  private[sql] val md5Pool = new ThreadLocal[MessageDigest] {
     override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
   }
 
@@ -58,7 +42,7 @@ object Md5MinHash {
   private val hexChars = "0123456789abcdef".toCharArray
 
   /** unsigned byte-order compare (== lexicographic order of the hex). */
-  private def less(a: Array[Byte], b: Array[Byte]): Boolean = {
+  private[sql] def less(a: Array[Byte], b: Array[Byte]): Boolean = {
     var i = 0
     while (i < a.length) {
       val x = a(i) & 0xFF
@@ -69,7 +53,8 @@ object Md5MinHash {
     false
   }
 
-  private def toHex(d: Array[Byte]): UTF8String = {
+  /** A 16-byte digest as 32 lowercase hex digits. */
+  private[sql] def toHex(d: Array[Byte]): UTF8String = {
     val out = new Array[Byte](32)
     var i = 0
     while (i < 16) {
@@ -82,13 +67,11 @@ object Md5MinHash {
 
   /** Static entry point shared by interpreted eval and generated code. */
   def compute(text: UTF8String, k: Int): GenericArrayData = {
-    val toks = TextRules.sparkTokens(text.toString)
     val md = md5Pool.get()
     val mins = new Array[Array[Byte]](k)
     val prefixes = prefixesFor(k)
-    val sb = new java.lang.StringBuilder(64)
-    def hashShingle(): Unit = {
-      val shingleBytes = sb.toString.getBytes(StandardCharsets.UTF_8)
+    TextRules.wordShingles(text.toString, 3) { s =>
+      val shingleBytes = s.getBytes(StandardCharsets.UTF_8)
       var i = 0
       while (i < k) {
         md.reset()
@@ -99,24 +82,6 @@ object Md5MinHash {
         i += 1
       }
     }
-    if (toks.length >= 3) {
-      var w = 0
-      while (w + 2 < toks.length) {
-        sb.setLength(0)
-        sb.append(toks(w)).append(' ').append(toks(w + 1)).append(' ').append(toks(w + 2))
-        hashShingle()
-        w += 1
-      }
-    } else {
-      sb.setLength(0)
-      var i = 0
-      while (i < toks.length) {
-        if (i > 0) sb.append(' ')
-        sb.append(toks(i))
-        i += 1
-      }
-      hashShingle()
-    }
     val out = new Array[Any](k)
     var i = 0
     while (i < k) { out(i) = toHex(mins(i)); i += 1 }
@@ -124,8 +89,7 @@ object Md5MinHash {
   }
 
   /** Column entry point. */
-  def sig(text: Column, k: Int): Column = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    Bridge.column(Md5MinHash(Bridge.expression(text), k))
-  }
+  def sig(text: Column, k: Int): Column =
+    Bridge.invoke(this, ArrayType(StringType, containsNull = false), "compute",
+      Seq(text, lit(k)))
 }

@@ -1,16 +1,14 @@
 package graft.sql
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The q60 md5-winnow fingerprint set as ONE codegen'd expression:
-  * per document, md5 hex digests of every character k-gram, the
+/** The q60 md5-winnow fingerprint set as ONE row kernel: per
+  * document, md5 hex digests of every character k-gram, the
   * lexicographic minimum over each w-wide sliding window (clamped at
   * the text end), kept for window starts `i <= max(n-w+1, 1)`, then
   * deduplicated and sorted ascending — bit-identical to the
@@ -30,52 +28,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `collect_set` + `array_sort` = sort the kept minima and drop
   *    adjacent equals (no nulls can occur).
   */
-case class Md5WinnowFps(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override protected def withNewChildInternal(newChild: Expression): Md5WinnowFps =
-    copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    Md5WinnowFps.compute(input.asInstanceOf[UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.sql.Md5WinnowFps.compute($c, $k, $w);")
-}
-
 object Md5WinnowFps {
-
-  private val md5Pool = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
-  private val hexChars = "0123456789abcdef".toCharArray
-
-  /** unsigned byte-order compare (== lexicographic order of the hex). */
-  private def less(a: Array[Byte], b: Array[Byte]): Boolean = {
-    var i = 0
-    while (i < a.length) {
-      val x = a(i) & 0xFF
-      val y = b(i) & 0xFF
-      if (x != y) return x < y
-      i += 1
-    }
-    false
-  }
-
-  private def toHex(d: Array[Byte]): UTF8String = {
-    val out = new Array[Byte](32)
-    var i = 0
-    while (i < 16) {
-      out(2 * i) = hexChars((d(i) >> 4) & 0xF).toByte
-      out(2 * i + 1) = hexChars(d(i) & 0xF).toByte
-      i += 1
-    }
-    UTF8String.fromBytes(out)
-  }
+  import Md5MinHash.{less, md5Pool, toHex}
 
   /** Byte width of the UTF-8 character starting with byte `b` (UTF-8
     * has no surrogates — one character per code point). */
@@ -145,8 +99,7 @@ object Md5WinnowFps {
   }
 
   /** Column entry point. */
-  def fps(text: Column, k: Int, w: Int): Column = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    Bridge.column(Md5WinnowFps(Bridge.expression(text), k, w))
-  }
+  def fps(text: Column, k: Int, w: Int): Column =
+    Bridge.invoke(this, ArrayType(StringType, containsNull = false), "compute",
+      Seq(text, lit(k), lit(w)))
 }

@@ -1,22 +1,23 @@
 package graft.sql
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.text.TextRules
 
-/** MinHash signature over word 3-gram shingles as ONE codegen'd
-  * expression: tokenize → shingle → k seeded xxhash64 → running minima,
+/** MinHash signature over word 3-gram shingles as ONE row kernel:
+  * tokenize → shingle → k seeded xxhash64 → running minima,
   * single pass, no intermediate arrays.
   *
   * Why not the HOF composition (`transform`/`array_min` over a shingle
   * column): Spark's higher-order functions are interpreted and the
   * k=8 hash passes each rebuild per-shingle Concat rows — measured
-  * 4.4 s at sf0.1 vs ~0.3 s for this expression (same LSH banding
+  * 4.4 s at sf0.1 vs ~0.3 s for this kernel (same LSH banding
   * downstream). Shingle DISTINCT is deliberately skipped: the minimum
   * over a multiset equals the minimum over its set.
   *
@@ -25,33 +26,14 @@ import graft.text.TextRules
   * production twin (the md5 variant exists solely for DuckDB oracle
   * parity — q23/q24).
   */
-case class MinHashSig(child: Expression, k: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashSig.compute(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.sql.MinHashSig.compute($c, $k);")
-}
-
 object MinHashSig {
 
   /** Static entry point shared by interpreted eval and generated code. */
   def compute(text: UTF8String, k: Int): GenericArrayData = {
-    val toks = TextRules.sparkTokens(text.toString)
     val mins = new Array[Long](k)
     java.util.Arrays.fill(mins, Long.MaxValue)
-    val sb = new java.lang.StringBuilder(64)
-    def hashShingle(s: CharSequence): Unit = {
-      val u = UTF8String.fromString(s.toString)
+    TextRules.wordShingles(text.toString, 3) { s =>
+      val u = UTF8String.fromString(s)
       var i = 0
       while (i < k) {
         val h = XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, i)
@@ -59,31 +41,11 @@ object MinHashSig {
         i += 1
       }
     }
-    if (toks.length >= 3) {
-      var w = 0
-      while (w + 2 < toks.length) {
-        sb.setLength(0)
-        sb.append(toks(w)).append(' ').append(toks(w + 1)).append(' ').append(toks(w + 2))
-        hashShingle(sb)
-        w += 1
-      }
-    } else {
-      // short doc: the whole token sequence is the single shingle
-      sb.setLength(0)
-      var i = 0
-      while (i < toks.length) {
-        if (i > 0) sb.append(' ')
-        sb.append(toks(i))
-        i += 1
-      }
-      hashShingle(sb)
-    }
     new GenericArrayData(mins)
   }
 
   /** Column entry point. */
-  def sig(text: Column, k: Int): Column = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    Bridge.column(MinHashSig(Bridge.expression(text), k))
-  }
+  def sig(text: Column, k: Int): Column =
+    Bridge.invoke(this, ArrayType(LongType, containsNull = false), "compute",
+      Seq(text, lit(k)))
 }

@@ -1,56 +1,34 @@
 package graft.sql
 
-import java.util.regex.Pattern
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.stages.ExtractConfig
 import graft.text.TextRules
 
-/** Serializable pipeline parameters for [[ProcessSpans]]. */
-final case class ProcessConfig(
-    replaceDict: Seq[(String, String)],
-    regex: Option[(String, String, String)], // (pattern, old, new)
-    minLineLen: Int,
-    denseMinLen: Int,
-    reorderRtl: Boolean = false) {
-  @transient lazy val compiledRegex: Option[Pattern] =
-    regex.map { case (p, _, _) => Pattern.compile(p) }
-  /** Dict keys pre-encoded for the stats map (built once per task). */
-  @transient lazy val keysUtf8: Array[UTF8String] =
-    replaceDict.map(kv => UTF8String.fromString(kv._1)).toArray
-  // hot-loop views: Seq.apply on a List-backed dict would be O(i) per
-  // access (O(k²) per span) and the tuple destructure allocates
-  @transient lazy val dictKeys: Array[String] = replaceDict.map(_._1).toArray
-  @transient lazy val dictVals: Array[String] = replaceDict.map(_._2).toArray
-}
-
 /** The whole per-document stage chain (C1 → C2 → F6 → S8 → line model
-  * → W2/W3/C4 → A1/A2/A3 estimation + stats) as ONE custom Catalyst
-  * expression over the span array.
+  * → W2/W3/C4 → A1/A2/A3 estimation + stats) as ONE row kernel over
+  * the span array.
   *
-  * Why an Expression instead of HOF chains + a typed map: Spark's
+  * Why one kernel instead of HOF chains + a typed map: Spark's
   * higher-order functions are interpreted (non-codegen) and rebuild
   * the struct array once per stage, and a typed `map` pays the full
   * UnsafeRow → case-class → UnsafeRow encoder round-trip per document.
-  * This expression walks the Catalyst `ArrayData` directly, applies
+  * This kernel walks the Catalyst `ArrayData` directly, applies
   * the identical reference semantics (delegated to
   * [[graft.text.TextRules]]), and materializes one output struct —
   * single pass, minimal allocation, no object-graph churn. Per-doc and
   * narrow, so it scales embarrassingly at cluster size.
   *
-  * Codegen: the expression participates in whole-stage codegen — the
-  * generated code calls the static [[ProcessSpans.evalArray]] once per
-  * row (the per-document chain itself is data-dependent imperative
-  * work; what matters is that the surrounding operators stay fused,
-  * which a `CodegenFallback` would break by splitting the pipeline
-  * around an interpreted eval).
+  * Codegen: [[process]] calls [[evalArray]] through `StaticInvoke`,
+  * so whole-stage generated code calls it once per row and the
+  * surrounding operators stay fused (the per-document chain itself is
+  * data-dependent imperative work).
   *
   * Output: struct(spans: array<span>, hit_ratio double, n_words int,
   * n_errs int, n_lines_in int, n_wraps int, n_shorts int,
@@ -65,26 +43,6 @@ final case class ProcessConfig(
   * `String` element per line — so the per-span counts reproduce the
   * test-pinned fixture numbers (`ſ:392`, `ic):6`, test_steps.py:306).
   */
-case class ProcessSpans(child: Expression, cfg: ProcessConfig)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ProcessSpans.outputType
-  override def nullable: Boolean = child.nullable
-
-  override protected def withNewChildInternal(newChild: Expression): ProcessSpans =
-    copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    ProcessSpans.evalArray(input.asInstanceOf[ArrayData], cfg)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cfgRef = ctx.addReferenceObj("processSpansCfg", cfg,
-      classOf[ProcessConfig].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.sql.ProcessSpans.evalArray($c, $cfgRef);")
-  }
-}
-
 object ProcessSpans {
   private val TextKind = UTF8String.fromString("text")
   def isTextKind(k: UTF8String): Boolean = TextKind.equals(k)
@@ -109,8 +67,8 @@ object ProcessSpans {
     StructField("repl_stats", statsType, nullable = false)))
 
   /** The whole per-document chain. Public + static so generated code
-    * calls it directly (see `doGenCode`). */
-  def evalArray(arr: ArrayData, cfg: ProcessConfig): InternalRow = {
+    * calls it directly (see [[process]]). */
+  def evalArray(arr: ArrayData, cfg: ExtractConfig): InternalRow = {
     val n = arr.numElements()
 
     // 1. collect (kind-is-text, text-after-replacements, ref, offset),
@@ -145,9 +103,8 @@ object ProcessSpans {
             }
             di += 1
           }
-          cfg.compiledRegex.foreach { p =>
-            val (_, old, nw) = cfg.regex.get
-            val (t, stat) = TextRules.regexGroupReplace(text, p, old, nw)
+          cfg.regexRule.foreach { r =>
+            val (t, stat) = TextRules.regexGroupReplace(text, r.compiled, r.old, r.nw)
             text = t
             stat.foreach { key =>
               if (regexStats == null) regexStats = new java.util.LinkedHashMap[String, Int]
@@ -289,9 +246,9 @@ object ProcessSpans {
       nShorts, nOut, statsMap))
   }
 
-  /** Column-level entry point. */
-  def process(spans: Column, cfg: ProcessConfig): Column = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    Bridge.column(ProcessSpans(Bridge.expression(spans), cfg))
-  }
+  /** Column-level entry point; `cfg` rides in the plan as an object
+    * literal. */
+  def process(spans: Column, cfg: ExtractConfig): Column =
+    Bridge.invoke(this, outputType, "evalArray",
+      Seq(spans, Bridge.column(Literal.fromObject(cfg))))
 }

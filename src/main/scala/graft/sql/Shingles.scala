@@ -1,64 +1,27 @@
 package graft.sql
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.text.TextRules
 
-/** Distinct word n-gram shingles as ONE codegen'd expression — the
-  * one-pass twin of
+/** Distinct word n-gram shingles as ONE row kernel — the one-pass
+  * twin of
   * `array_distinct(transform(sequence(...), i -> concat_ws(' ',
   * slice(tokens, i, n))))` (interpreted HOFs, one pass per stage).
   * Short docs (< n tokens) yield the single whole-token-sequence
   * shingle; first-occurrence order is preserved (order-insensitive
   * consumers like q46's explode+join don't care, but determinism is
   * free). */
-case class Shingles(child: Expression, n: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override protected def withNewChildInternal(newChild: Expression): Shingles =
-    copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    Shingles.compute(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.sql.Shingles.compute($c, $n);")
-}
-
 object Shingles {
 
   def compute(text: UTF8String, n: Int): GenericArrayData = {
-    val toks = TextRules.sparkTokens(text.toString)
     val seen = new java.util.LinkedHashSet[String]
-    val sb = new java.lang.StringBuilder(64)
-    if (toks.length >= n) {
-      var w = 0
-      while (w + n - 1 < toks.length) {
-        sb.setLength(0)
-        var j = 0
-        while (j < n) {
-          if (j > 0) sb.append(' ')
-          sb.append(toks(w + j)); j += 1
-        }
-        seen.add(sb.toString)
-        w += 1
-      }
-    } else {
-      var i = 0
-      while (i < toks.length) {
-        if (i > 0) sb.append(' ')
-        sb.append(toks(i)); i += 1
-      }
-      seen.add(sb.toString)
-    }
+    TextRules.wordShingles(text.toString, n)(seen.add)
     val out = new Array[Any](seen.size)
     val it = seen.iterator()
     var i = 0
@@ -66,8 +29,7 @@ object Shingles {
     new GenericArrayData(out)
   }
 
-  def of(text: Column, n: Int): Column = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    Bridge.column(Shingles(Bridge.expression(text), n))
-  }
+  def of(text: Column, n: Int): Column =
+    Bridge.invoke(this, ArrayType(StringType, containsNull = false), "compute",
+      Seq(text, lit(n)))
 }

@@ -1,45 +1,23 @@
 package graft.sql
 
 import java.nio.charset.StandardCharsets
-import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.text.TextRules
 
-/** 16-bit SimHash over DISTINCT whitespace tokens as ONE codegen'd
-  * expression — bit-identical to the HOF composition it replaces
+/** 16-bit SimHash over DISTINCT whitespace tokens as ONE row kernel —
+  * bit-identical to the HOF composition it replaces
   * (token hash = value of the first 4 hex digits of md5(token), i.e.
   * the first two digest bytes big-endian, exactly
   * `conv(substring(md5(x),1,4),16,10)` / DuckDB
   * `CAST(CONCAT('0x', substr(md5(x),1,4)) AS BIGINT)`), so the q25
   * oracle is untouched. One tokenize + one md5 per distinct token,
   * no intermediate hash array, no persist barrier. */
-case class SimHash16(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash16 =
-    copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    SimHash16.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.sql.SimHash16.compute($c);")
-}
-
 object SimHash16 {
-
-  private val md5Pool = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
 
   /** Static entry point shared by interpreted eval and generated code.
     * Tokenization is [[TextRules.sparkTokens]] — the EXACT
@@ -49,7 +27,7 @@ object SimHash16 {
     val toks = TextRules.sparkTokens(text.toString)
     val seen = new java.util.HashSet[String](toks.length * 2)
     val votes = new Array[Int](16)
-    val md = md5Pool.get()
+    val md = Md5MinHash.md5Pool.get()
     var i = 0
     while (i < toks.length) {
       val t = toks(i)
@@ -75,8 +53,5 @@ object SimHash16 {
   }
 
   /** Column entry point. */
-  def sim(text: Column): Column = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    Bridge.column(SimHash16(Bridge.expression(text)))
-  }
+  def sim(text: Column): Column = Bridge.invoke(this, LongType, "compute", Seq(text))
 }

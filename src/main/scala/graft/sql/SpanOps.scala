@@ -3,6 +3,8 @@ package graft.sql
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.model.Span.KindText
+
 /** Catalyst column-level operators over the span array
   * `array<struct<kind,text,media_ref,offset>>`.
   *
@@ -12,8 +14,6 @@ import org.apache.spark.sql.functions._
   * and are narrow (zero shuffle).
   */
 object SpanOps {
-
-  val KindText = "text"
 
   private def rebuildSpan(kind: Column, text: Column, mediaRef: Column, offset: Column): Column =
     struct(kind.as("kind"), text.as("text"), mediaRef.as("media_ref"), offset.as("offset"))
@@ -36,13 +36,6 @@ object SpanOps {
     mapText(spans)(t => dict.foldLeft(t) { case (acc, (k, v)) =>
       replace(acc, lit(k), lit(v))
     })
-
-  // (A1 replacement statistics live in ProcessSpans / Extraction
-  // .replStatsOf; an unused column-based variant was removed in r3)
-
-  /** C3 — strip the five directional/BOM marks (lib/ocr_model.py:23-29). */
-  def stripMarks(spans: Column): Column =
-    mapText(spans)(t => translate(t, graft.text.TextRules.ClearMarks, ""))
 
   /** F6 — empty-content cascade at span level: drop text spans whose
     * content is blank (lib/ocr_step.py:581-602; the line/block levels
@@ -71,11 +64,6 @@ object SpanOps {
     val toks = filter(split(mapped, "\\s+"), t => length(t) > 1)
     array_join(toks, " ")
   }
-
-  /** F3/F7 — keep text spans with trimmed length ≥ n. */
-  def minLenFilter(spans: Column, n: Int): Column =
-    filter(spans, s =>
-      s.getField("kind") =!= KindText || length(trim(s.getField("text"))) >= n)
 
   /** A5 — histogram bin id: floor(ratio / step) clamped to bins-1
     * (lib/ocr_step.py:441-443). */

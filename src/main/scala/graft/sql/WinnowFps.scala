@@ -1,40 +1,22 @@
 package graft.sql
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Winnowing fingerprints ([[graft.text.Winnow]], Schleimer et al.) as
-  * a codegen'd expression — replaces the typed `mapPartitions` path
-  * (full UnsafeRow → tuple → UnsafeRow encoder round-trip per doc)
-  * with a direct per-row call. */
-case class WinnowFps(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowFps =
-    copy(child = newChild)
-
-  override def nullSafeEval(input: Any): Any =
-    WinnowFps.compute(input.asInstanceOf[UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.sql.WinnowFps.compute($c, $k, $w);")
-}
-
+  * a row kernel — replaces the typed `mapPartitions` path (full
+  * UnsafeRow → tuple → UnsafeRow encoder round-trip per doc) with a
+  * direct per-row call. */
 object WinnowFps {
 
   def compute(text: UTF8String, k: Int, w: Int): GenericArrayData =
     new GenericArrayData(graft.text.Winnow.fingerprints(text.toString, k, w))
 
-  def fps(text: Column, k: Int, w: Int): Column = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    Bridge.column(WinnowFps(Bridge.expression(text), k, w))
-  }
+  def fps(text: Column, k: Int, w: Int): Column =
+    Bridge.invoke(this, ArrayType(LongType, containsNull = false), "compute",
+      Seq(text, lit(k), lit(w)))
 }

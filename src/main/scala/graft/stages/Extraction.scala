@@ -27,7 +27,15 @@ final case class ExtractConfig(
     minLineLen: Int = 2,   // get_lines min_len (lib/ocr_model.py:203)
     denseMinLen: Int = 2,  // textlines2data minlen (lib/ocr_step.py:449)
     reorderRtl: Boolean = false,
-    pagePrefix: String = "p") // StepPostprocessALTO page_prefix (lib/ocr_step.py:552)
+    pagePrefix: String = "p") { // StepPostprocessALTO page_prefix (lib/ocr_step.py:552)
+  // hot-loop views for ProcessSpans: Seq.apply on a List-backed dict
+  // would be O(i) per access (O(k²) per span) and the tuple
+  // destructure allocates
+  @transient lazy val dictKeys: Array[String] = replaceDict.map(_._1).toArray
+  @transient lazy val dictVals: Array[String] = replaceDict.map(_._2).toArray
+  /** Dict keys pre-encoded for the stats map (built once per task). */
+  @transient lazy val keysUtf8: Array[UTF8String] = dictKeys.map(UTF8String.fromString)
+}
 
 /** A document row after the full stage chain: cleaned spans plus the
   * per-document estimation record and the replacement statistics
@@ -272,20 +280,16 @@ object Extraction {
   /** Full pipeline over a span table. Input: DataFrame with columns
     * (doc_id, spans). Output: Dataset[ProcessedDoc].
     *
-    * Hot path: ONE custom Catalyst expression ([[graft.sql.ProcessSpans]])
-    * does the whole per-doc chain over raw ArrayData — no interpreted
-    * HOF chain, no encoder round-trip. RTL-reorder configs (W2) run on
-    * the same path via `ProcessConfig.reorderRtl`. */
+    * Hot path: ONE row kernel ([[graft.sql.ProcessSpans]]) does the
+    * whole per-doc chain over raw ArrayData — no interpreted HOF
+    * chain, no encoder round-trip. RTL-reorder configs (W2) run on
+    * the same path via `cfg.reorderRtl`. */
   def pipeline(docs: DataFrame, cfg: ExtractConfig = ExtractConfig()): Dataset[ProcessedDoc] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val pcfg = graft.sql.ProcessConfig(
-      cfg.replaceDict,
-      cfg.regexRule.map(r => (r.pattern, r.old, r.nw)),
-      cfg.minLineLen, cfg.denseMinLen, cfg.reorderRtl)
     docs
       .select(col("doc_id"),
-        graft.sql.ProcessSpans.process(col("spans"), pcfg).as("p"))
+        graft.sql.ProcessSpans.process(col("spans"), cfg).as("p"))
       .select(col("doc_id"), col("p.spans").as("spans"),
         concat(lit(cfg.pagePrefix), substring_index(col("doc_id"), ".", 1)).as("page_id"),
         substring_index(col("doc_id"), ".", 1).as("file_identifier"),

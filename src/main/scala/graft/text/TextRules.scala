@@ -157,7 +157,7 @@ object TextRules {
     Character.isWhitespace(c) || Character.isSpaceChar(c) || c == '\u0085'
 
   /** EXACT `split(trim(x), "\\s+")` semantics of the Spark/DuckDB
-    * engines, for the ORACLE-PAIRED one-pass expressions (Md5MinHash,
+    * engines, for the ORACLE-PAIRED row kernels (Md5MinHash,
     * SimHash16, Shingles, MinHashSig): trim strips 0x20 spaces only
     * (Spark's UTF8String.trim / DuckDB trim), the split is ASCII
     * `\s+` with limit -1 (leading/trailing empty tokens kept, `[""]`
@@ -171,6 +171,27 @@ object TextRules {
     while (b < e && s.charAt(b) == ' ') b += 1
     while (e > b && s.charAt(e - 1) == ' ') e -= 1
     s.substring(b, e).split("\\s+", -1)
+  }
+
+  /** Word n-gram shingles over [[sparkTokens]], each passed to `f` as
+    * one space-joined string: every n-token window in order, or, with
+    * fewer than n tokens, the whole token sequence as the one shingle
+    * (the rule the q23/q24/q46 DuckDB oracles share). */
+  def wordShingles(s: String, n: Int)(f: String => Unit): Unit = {
+    val toks = sparkTokens(s)
+    val width = math.min(n, toks.length)
+    val sb = new java.lang.StringBuilder(64)
+    var w = 0
+    while (w + width <= toks.length) {
+      sb.setLength(0)
+      var j = 0
+      while (j < width) {
+        if (j > 0) sb.append(' ')
+        sb.append(toks(w + j)); j += 1
+      }
+      f(sb.toString)
+      w += 1
+    }
   }
 
   def splitWs(s: String): Array[String] = {

@@ -2,17 +2,31 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
+import org.apache.spark.sql.types.DataType
 
 /** Column ↔ Expression bridge. Spark 4 made these conversions
-  * `private[sql]` (ExpressionUtils in columnNodeSupport.scala); custom
-  * Catalyst expressions still need them to surface as user-facing
-  * Columns, hence this in-package shim — the standard pattern for
-  * Spark extension libraries.
+  * `private[sql]` (ExpressionUtils in columnNodeSupport.scala); the
+  * row kernels' `StaticInvoke` columns and the SQL function builders
+  * still need them, hence this in-package shim — the standard pattern
+  * for Spark extension libraries.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
-  def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  /** Converted now, not when a Dataset plans it: a SQL function
+    * builder hands its result straight to the analyzer. */
+  def expression(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
+
+  /** A column that calls `kernel.fn(args…)` once per row, `kernel`
+    * being a Scala `object`. Generated code calls the static method
+    * directly; with codegen off it is called reflectively. A null
+    * argument gives null without a call; `returnNullable` says the
+    * kernel itself may return null. */
+  def invoke(kernel: AnyRef, dataType: DataType, fn: String, args: Seq[Column],
+      returnNullable: Boolean = false): Column =
+    column(StaticInvoke(kernel.getClass, dataType, fn, args.map(expression),
+      returnNullable = returnNullable))
 
   /** The schema with every field nullable, nested ones included — what
     * a file source reports for the data it reads. */

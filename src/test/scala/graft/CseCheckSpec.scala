@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sql.{ProcessConfig, ProcessSpans}
+import graft.sql.ProcessSpans
 
 /** Guard against CollapseProject re-evaluating the ProcessSpans
   * expression once per extracted struct field: extracting all 8 fields
@@ -14,7 +14,7 @@ class CseCheckSpec extends SparkSpecBase {
     import spark.implicits._
     val docs = graft.gen.CorpusGen.docs(spark, 4000, "interleaved").toDF().cache()
     docs.count()
-    val cfg = ProcessConfig(graft.text.TextRules.DefaultReplaceDict, None, 2, 2)
+    val cfg = graft.stages.ExtractConfig()
     def run(nFields: Int): Double = {
       val p = ProcessSpans.process(col("spans"), cfg).as("p")
       val base = docs.select(col("doc_id"), p)

@@ -21,6 +21,10 @@ class ExtensionsSpec extends SparkSpecBase {
     assert(r.getSeq[Long](1).length == 8)
     val mm = r.getSeq[String](2)
     assert(mm.length == 8 && mm.forall(_.matches("[0-9a-f]{32}")))
+    val nulls = s2.sql(
+      """SELECT graft_simhash(NULL) AS sh, graft_minhash(NULL) AS mh,
+                graft_md5_minhash(NULL) AS mm""").collect().head
+    assert((0 until 3).forall(nulls.isNullAt))
   }
 
   test("graft_cosine and graft_process_spans from plain SQL") {
@@ -34,5 +38,9 @@ class ExtensionsSpec extends SparkSpecBase {
            named_struct('kind', 'text', 'text', '  ',  'media_ref', 'line://b/l0', 'offset', 0)
          )) AS p""").selectExpr("p.n_words", "size(p.spans)").collect().head
     assert(out.getInt(0) == 1 && out.getInt(1) == 1) // blank span dropped
+    val nulls = s2.sql(
+      "SELECT graft_process_spans(NULL) AS p, graft_cosine(NULL, array(1.0d)) AS c")
+      .collect().head
+    assert(nulls.isNullAt(0) && nulls.isNullAt(1))
   }
 }
