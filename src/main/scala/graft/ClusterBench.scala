@@ -18,8 +18,8 @@ import graft.run.IngestAny
   * point so a scaling number measures the code that ships:
   *  - `extract` (default): `Extraction.pipeline`, the zero-shuffle
   *    per-doc path, over the span table;
-  *  - `parse`: `IngestAny.parseDocs` over `GenCorpus`'s xml table;
-  *  - `pdf`: `PdfExtract.extractDocs` over `GenCorpus`'s pdf table;
+  *  - `parse`, `pdf`: `IngestAny.parseDocs` over `GenCorpus`'s xml
+  *    and pdf tables;
   *  - `dedup`, `cluster`, `curate`, `exactsubstr`: the contract
   *    queries q43, q62, q64 and q65 over the span table's
   *    `(doc_id, text)` projection (shuffle-bearing, iterative and
@@ -45,7 +45,7 @@ object ClusterBench {
   val jobs: Map[String, (SparkSession, DataFrame) => DataFrame] = Map(
     "extract" -> ((_, in) => graft.stages.Extraction.pipeline(in).toDF()),
     "parse" -> ((s, in) => IngestAny.parseDocs(bytes(s, in)).toDF()),
-    "pdf" -> ((s, in) => graft.parse.PdfExtract.extractDocs(bytes(s, in)).toDF()),
+    "pdf" -> ((s, in) => IngestAny.parseDocs(bytes(s, in)).toDF()),
     "dedup" -> ((_, in) => Queries.minhashXxhashPairs(docText(in))),
     "cluster" -> ((_, in) => Queries.neardupClusters(docText(in))),
     "curate" -> ((_, in) => Queries.curationPipeline(docText(in))),

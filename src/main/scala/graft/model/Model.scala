@@ -36,9 +36,6 @@ object Span {
   val KindMedia = "media"
   val LineRefPrefix = "line://"
 
-  def text(t: String, lineRef: String, offset: Int): Span =
-    Span(KindText, t, lineRef, offset)
-
   def media(ref: String, offset: Int): Span =
     Span(KindMedia, "", ref, offset)
 

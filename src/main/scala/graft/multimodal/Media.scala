@@ -13,11 +13,11 @@ import graft.gen.CorpusGen.mix64
   * GIF, PNG and JPEG dimensions come from the actual bytes (pure-JVM
   * header parse, no codec library needed; see [[HeaderDecoder]]).
   * Formats that need real container/codec work (MP4, WAV) fall back to
-  * the deterministic [[StubDecoder]] — the codec libraries are not in
-  * this container — and the 16-dim feature vector is likewise a stub
-  * stand-in for a real vision/audio embedding. The Spark-side plumbing
-  * (schema, per-partition decoder pooling, batch shape, partitioning)
-  * is identical either way.
+  * a deterministic stub inside [[HeaderDecoder]] — the codec libraries
+  * are not in this container — and the 16-dim feature vector is
+  * likewise a stub stand-in for a real vision/audio embedding. The
+  * Spark-side plumbing (schema, per-partition decoder pooling, batch
+  * shape, partitioning) is identical either way.
   */
 object Media {
 
@@ -29,30 +29,6 @@ object Media {
       height: Int,
       n_frames: Int,
       feature: Array[Float])
-
-  /** Decoder interface — one instance per partition (pooled like the
-    * XML parsers; never per row). */
-  trait MediaDecoder extends Serializable {
-    def decode(ref: String, bytes: Array[Byte], mime: String): MediaMeta
-  }
-
-  /** STUB: deterministic fake decoder. Derives pseudo metadata and a
-    * 16-dim pseudo feature from a seeded hash of the payload — stands
-    * in for `???` so the pipeline is runnable end-to-end. The real
-    * implementation would call an image/audio codec here. */
-  final class StubDecoder extends MediaDecoder {
-    override def decode(ref: String, bytes: Array[Byte], mime: String): MediaMeta = {
-      var h = 0x9E3779B97F4A7C15L
-      var i = 0
-      while (i < bytes.length) { h = mix64(h ^ bytes(i)); i += 1 }
-      val w = 64 + (math.abs(h) % 1984).toInt
-      val hh = 64 + (math.abs(mix64(h + 1)) % 1024).toInt
-      val frames = if (mime.startsWith("video")) 1 + (math.abs(mix64(h + 2)) % 300).toInt else 1
-      val feat = Array.tabulate(16)(j =>
-        (mix64(h + 3 + j).toDouble / Long.MaxValue).toFloat)
-      MediaMeta(ref, mime, w, hh, frames, feat)
-    }
-  }
 
   /** REAL decode for the formats whose dimensions are plain header
     * fields — no codec needed, just byte/ASCII parsing:
@@ -70,9 +46,26 @@ object Media {
     *    entropy decode required.
     *
     * Anything else (MP4/WAV need real container/codec work absent from
-    * this container) falls back to the deterministic stub. */
-  final class HeaderDecoder extends MediaDecoder {
-    private val stub = new StubDecoder
+    * this container) falls back to the deterministic stub. One
+    * instance per task thread (pooled like the XML parsers; never per
+    * row). */
+  final class HeaderDecoder {
+
+    /** STUB: deterministic fake decode. Derives pseudo metadata and a
+      * 16-dim pseudo feature from a seeded hash of the payload — stands
+      * in for a real image/audio codec so the pipeline is runnable
+      * end-to-end. q35's DuckDB oracle replays it byte for byte. */
+    private def stub(ref: String, bytes: Array[Byte], mime: String): MediaMeta = {
+      var h = 0x9E3779B97F4A7C15L
+      var i = 0
+      while (i < bytes.length) { h = mix64(h ^ bytes(i)); i += 1 }
+      val w = 64 + (math.abs(h) % 1984).toInt
+      val hh = 64 + (math.abs(mix64(h + 1)) % 1024).toInt
+      val frames = if (mime.startsWith("video")) 1 + (math.abs(mix64(h + 2)) % 300).toInt else 1
+      val feat = Array.tabulate(16)(j =>
+        (mix64(h + 3 + j).toDouble / Long.MaxValue).toFloat)
+      MediaMeta(ref, mime, w, hh, frames, feat)
+    }
 
     private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xFF
     private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
@@ -138,8 +131,8 @@ object Media {
       if (i == start || v > Int.MaxValue) null else (v.toInt, i)
     }
 
-    override def decode(ref: String, bytes: Array[Byte], mime: String): MediaMeta = {
-      val fallback = stub.decode(ref, bytes, mime)
+    def decode(ref: String, bytes: Array[Byte], mime: String): MediaMeta = {
+      val fallback = stub(ref, bytes, mime)
       if (bytes.length >= 26 && bytes(0) == 'B' && bytes(1) == 'M')
         fallback.copy(mime = "image/bmp", n_frames = 1,
           width = le32(bytes, 18), height = math.abs(le32(bytes, 22)))
@@ -168,10 +161,10 @@ object Media {
   }
 
   private object DecoderPool {
-    @transient private lazy val tl = new ThreadLocal[MediaDecoder] {
-      override def initialValue(): MediaDecoder = new HeaderDecoder
+    @transient private lazy val tl = new ThreadLocal[HeaderDecoder] {
+      override def initialValue(): HeaderDecoder = new HeaderDecoder
     }
-    def get(): MediaDecoder = tl.get()
+    def get(): HeaderDecoder = tl.get()
   }
 
   /** Minimal valid BMP (BITMAPINFOHEADER, 24bpp, no pixel data rows —
@@ -228,40 +221,6 @@ object Media {
       }
   }
 
-  /** Frame sampling for video payloads: emit every `everyN`-th frame
-    * index as (media_ref, frame_no) — the batch shape a downstream
-    * vision model consumes. Pure Catalyst (sequence + explode). */
-  def sampleFrames(meta: Dataset[MediaMeta], everyN: Int): DataFrame = {
-    meta.toDF()
-      .filter(col("n_frames") > 1)
-      .select(col("media_ref"),
-        explode(sequence(lit(0), col("n_frames") - 1, lit(everyN))).as("frame_no"))
-  }
-
-  /** Resize planning: aspect-preserving target dimensions for a batch
-    * of decoded media, longest side clamped to `maxSide` (never
-    * upscaled), even-pixel aligned (codec-friendly). Pure Catalyst —
-    * the byte-level resample is codec work behind [[MediaDecoder]];
-    * this computes the exact (dst_w, dst_h) plan a vision preprocessor
-    * consumes. */
-  def resizePlan(meta: Dataset[MediaMeta], maxSide: Int): DataFrame = {
-    val scale = least(lit(1.0), lit(maxSide.toDouble) / greatest(col("width"), col("height")))
-    def even(c: org.apache.spark.sql.Column) =
-      greatest(lit(2), (floor(c * scale / 2) * 2).cast("int"))
-    meta.toDF().select(col("media_ref"), col("width"), col("height"),
-      even(col("width")).as("dst_w"), even(col("height")).as("dst_h"))
-  }
-
-  /** Deterministic synthetic media table derived from span-table media
-    * refs (for tests/bench: content bytes are a seeded function of the
-    * ref). */
-  def synthMedia(spark: SparkSession, refs: DataFrame): DataFrame = {
-    refs.select(col("media_ref"),
-      sha2(col("media_ref"), 256).cast("binary").as("content"),
-      element_at(array(lit("image/png"), lit("video/mp4"), lit("audio/wav")),
-        (pmod(xxhash64(col("media_ref")), lit(3)) + 1).cast("int")).as("mime"))
-  }
-
   private def hashStr(s: String): Long = {
     var h = 0x9E3779B97F4A7C15L
     var i = 0
@@ -269,7 +228,8 @@ object Media {
     h
   }
 
-  /** Like [[synthMedia]], but image refs carry REAL format bytes (BMP,
+  /** Deterministic synthetic media table derived from span-table media
+    * refs (for tests and q35): image refs carry REAL format bytes (BMP,
     * PNG or JPEG headers whose width/height derive deterministically
     * from the ref) so the decode path exercises [[HeaderDecoder]]'s
     * actual byte parse across all three container layouts; video/audio

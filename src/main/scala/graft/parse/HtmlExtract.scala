@@ -2,9 +2,7 @@ package graft.parse
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-
-import graft.model.{Doc, Span}
+import graft.model.Span
 import graft.text.TextRules
 
 /** Main-content extraction from HTML: tag-soup tokenizer + DOM-drop
@@ -88,29 +86,30 @@ object HtmlExtract {
   private final case class Block(
       text: String, nWords: Int, nLinkWords: Int, images: Seq[String])
 
-  /** One extracted-and-classified text block or media item. */
-  final case class Extracted(spans: Vector[Span], nBlocksIn: Int, nBlocksKept: Int)
+  /** Boilerplate rule (densitometric classification): a block keeps
+    * its text when it has at least `MinWords` words and a link density
+    * (link words / words) of at most `MaxLinkDensity`. q32's oracle
+    * encodes both values. */
+  private val MinWords = 3
+  private val MaxLinkDensity = 0.49
 
-  /** Boilerplate rule: keep blocks with ≥ `minWords` words and link
-    * density ≤ `maxLinkDensity` (densitometric classification). */
-  def extract(html: String, docId: String,
-      minWords: Int = 3, maxLinkDensity: Double = 0.49): Extracted = {
+  /** The document's spans: kept text blocks as `text` spans, every
+    * `<img>` as a `media` span, in document order. */
+  def extract(html: String, docId: String): Vector[Span] = {
     val blocks = tokenize(html)
     val spans = Vector.newBuilder[Span]
     var off = 0
     var blockIdx = 0
-    var kept = 0
     var mediaIdx = 0
     blocks.foreach { b =>
-      val keepText = b.nWords >= minWords &&
-        (b.nWords == 0 || b.nLinkWords.toDouble / b.nWords <= maxLinkDensity)
+      val keepText = b.nWords >= MinWords &&
+        (b.nWords == 0 || b.nLinkWords.toDouble / b.nWords <= MaxLinkDensity)
       if (keepText) {
         val ref = s"${Span.LineRefPrefix}html/b$blockIdx"
         TextRules.splitWs(b.text).foreach { tok =>
           spans += Span(Span.KindText, tok, ref, off)
           off += 1
         }
-        kept += 1
       }
       b.images.foreach { src =>
         spans += Span.media(s"media://$docId/img$mediaIdx#$src", off)
@@ -118,7 +117,7 @@ object HtmlExtract {
       }
       blockIdx += 1
     }
-    Extracted(spans.result(), blocks.length, kept)
+    spans.result()
   }
 
   /** Tag-soup pass: returns text blocks with word/link-word counts and
@@ -269,13 +268,5 @@ object HtmlExtract {
       if (attrName == name) return value
     }
     None
-  }
-
-  /** Distributed extraction: (doc_id, html) rows → Doc span rows. */
-  def extractDocs(raw: Dataset[(String, String)]): Dataset[Doc] = {
-    import raw.sparkSession.implicits._
-    raw.mapPartitions { it =>
-      it.map { case (id, html) => Doc(id, extract(html, id).spans) }
-    }
   }
 }

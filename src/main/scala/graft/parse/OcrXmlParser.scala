@@ -395,10 +395,11 @@ object OcrXmlParser {
     * the same path `getLines`/`buildPageLine` takes, so the span table
     * and the line model agree. Divergence (documented): where the
     * reference CRASHES the file on a word with invalid Coords
-    * (lib/ocr_model.py:126-129), the span flattening stays tolerant
-    * and keeps document order — strict validity (F4/F5) is enforced in
-    * the line-model stage ([[getLines]]), which raises exactly like
-    * the reference. */
+    * (lib/ocr_model.py:126-129), ingest keeps that word and does not
+    * fail the document — the span flattening stays tolerant and keeps
+    * document order. Only [[getLines]], the reference line model the
+    * parity specs compare against, raises on it (F4/F5); no ingest or
+    * extraction path calls it. */
   def toSpans(docId: String, doc: ParsedDoc,
       vertical: Boolean = false): Vector[Span] = {
     val isPage = doc.dialect.startsWith("page")

@@ -2,9 +2,7 @@ package graft.parse
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.Dataset
-
-import graft.model.{Doc, Span}
+import graft.model.Span
 
 /** Main-content extraction from PDF (north_rule: "PDF/layout parse") —
   * a from-scratch, zero-dependency reader of the text layer of a PDF
@@ -76,13 +74,6 @@ object PdfExtract {
       }
     }
     spans.result()
-  }
-
-  /** Distributed extraction: (doc_id, pdf bytes) rows → Doc span rows
-    * (narrow mapPartitions, one reusable Inflater per task). */
-  def extractDocs(raw: Dataset[(String, Array[Byte])]): Dataset[Doc] = {
-    import raw.sparkSession.implicits._
-    raw.mapPartitions(it => it.map { case (id, bytes) => Doc(id, extract(bytes, id)) })
   }
 
   // ----------------------------------------------------------------

@@ -51,13 +51,17 @@ object Queries {
             FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2"""))
 
   // window chosen inside the synthetic data range (shipdates start
-  // 1995-01-02) so the filter+sort+limit chain is exercised on real rows
+  // 1995-01-02) so the filter+sort+limit chain is exercised on real rows.
+  // Revenue rounds the binary double half-up, as DuckDB's round(x, 2)
+  // does: Spark's round(x, 2) rounds the double's shortest decimal
+  // string instead, so 99314.61499999999 would give .61, not .62.
   private val q02 = QueryDef("q02_filter_sort_limit",
     (s, d) => t(s, d, "lineitem")
       .filter(col("l_shipdate") >= lit("1996-01-01") &&
         col("l_shipdate") < lit("1997-01-01") && col("l_discount") >= 0.05)
       .select(col("l_orderkey"), col("l_linenumber"),
-        round(col("l_extendedprice") * (lit(1) - col("l_discount")), 2).as("revenue"))
+        (floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100 + 0.5) / 100)
+          .as("revenue"))
       .orderBy(desc("revenue"), col("l_orderkey"), col("l_linenumber"))
       .limit(100),
     Some("""SELECT l_orderkey, l_linenumber,
@@ -440,8 +444,8 @@ object Queries {
             (a, c) -> ${mix64("xor(a, c)")})"""
 
     /** A stub-decoder payload byte as the sign-EXTENDED unsigned-64
-      * value `(byte:Byte).toLong` wraps to (StubDecoder xors the Byte
-      * after Scala's widening sign extension). */
+      * value `(byte:Byte).toLong` wraps to (HeaderDecoder's stub
+      * fallback xors the Byte after Scala's widening sign extension). */
     def sextByte(mexpr: String): String = {
       val b = s"(($mexpr) % 256)"
       s"CASE WHEN $b >= 128 THEN $b + 18446744073709551360 ELSE $b END"
@@ -735,8 +739,8 @@ object Queries {
   private val q32 = QueryDef("q32_html_extract",
     (s, d) => {
       // deterministic HTML synthesized from documents (boilerplate nav +
-      // paragraphs + an image), run through the HTML main-content
-      // extractor and the span pipeline counters (rows-only)
+      // paragraphs + an image) as UTF-8 bytes, run through the ingest
+      // parse (the `<html>` prefix sniffs as HTML) and the span counters
       import s.implicits._
       val html = t(s, d, "documents").select(
         col("doc_id").cast("string").as("doc_id"),
@@ -745,9 +749,10 @@ object Queries {
             " <a href='/c'>contact</a></nav><article><p>"),
           replace(col("text"), lit(" merge "), lit("</p><p>")),
           lit("</p><img src='pic.png'/></article>" +
-            "<footer>copyright junk imprint</footer></body></html>")).as("html"))
-        .as[(String, String)]
-      graft.parse.HtmlExtract.extractDocs(html).toDF()
+            "<footer>copyright junk imprint</footer></body></html>"))
+          .cast("binary").as("html"))
+        .as[(String, Array[Byte])]
+      graft.run.IngestAny.parseDocs(html).toDF()
         .select(col("doc_id"),
           size(col("spans")).as("n_spans"),
           size(filter(col("spans"), x => x.getField("kind") === "media")).as("n_media"))
@@ -756,8 +761,8 @@ object Queries {
     // freestanding oracle: the template is fixed, so the extractor's
     // output is predictable from the raw text — nav/footer subtrees
     // drop, each ' merge '-separated segment is its own <p> block kept
-    // iff ≥3 whitespace tokens (minWords, zero link density), the one
-    // <img> is always a media span
+    // iff ≥3 whitespace tokens (HtmlExtract.MinWords, zero link
+    // density), the one <img> is always a media span
     Some("""WITH segs AS (
               SELECT CAST(doc_id AS VARCHAR) AS doc_id,
                 list_transform(string_split(text, ' merge '),
@@ -882,7 +887,7 @@ object Queries {
     // values. Image branch: header dims = 64 + floorMod(mix64(h+11),
     // 1984). Stub branch (video/audio): re-hash the 32 payload bytes
     // (sign-extended like Scala's Byte→Long) and derive w/frames the
-    // way StubDecoder does.
+    // way HeaderDecoder's stub fallback does.
     Some {
       import WrapSql._
       s"""WITH refs AS (
@@ -998,8 +1003,7 @@ object Queries {
   // quantizer (cells = the vectors with vec_id 1..8): assignment,
   // probing and search are pure Catalyst — no model fit and no driver
   // round-trip inside the query, which is what the 10^9-vector
-  // lifecycle demands (the trained-and-persisted k-means variant of the
-  // same architecture lives in graft.ml.IvfIndex). Fully oracled:
+  // lifecycle demands. Fully oracled:
   // ranking uses the ROUNDED cosine with vec_id tie-break so both
   // engines agree bit-for-bit.
   private val IvfCells = 8
@@ -1741,7 +1745,7 @@ object Queries {
   /** q57 parse stage over (doc_id, pdf bytes) rows. */
   def pdfParse(s: SparkSession, raw: DataFrame): DataFrame = {
     import s.implicits._
-    graft.parse.PdfExtract.extractDocs(
+    graft.run.IngestAny.parseDocs(
         raw.select(col("doc_id"), col("pdf")).as[(String, Array[Byte])])
       .toDF()
       .select(col("doc_id"), size(col("spans")).as("n_spans"),
@@ -2048,7 +2052,7 @@ object Queries {
 
   // REAL BPE next to q37's pretokenizer: learn a merge table with the
   // distributed word-type reduction + driver-side Sennrich loop
-  // (graft.text.Bpe — the IvfIndex collect-bounded pattern), broadcast
+  // (graft.text.Bpe — a vocab-capped driver collect), broadcast
   // the ranks, encode narrowly. Fixed corpus (the paper's classic
   // low/lower/newest/widest frequencies plus an unseen-word doc), so
   // the oracle pins the LEARNED segmentation itself as literals —

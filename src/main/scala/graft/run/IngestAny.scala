@@ -87,7 +87,7 @@ object IngestAny {
         try {
           val spans = sniff(bytes) match {
             case FmtPdf => PdfExtract.extract(bytes, docId)
-            case FmtHtml => HtmlExtract.extract(text(bytes), docId).spans
+            case FmtHtml => HtmlExtract.extract(text(bytes), docId)
             case FmtXml =>
               OcrXmlParser.toSpans(docId, xmlParser.parse(text(bytes)), vertical)
             case FmtUnknown =>

@@ -1,6 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-handling utilities (north_rule: "skew from mega-documents …
@@ -10,21 +10,12 @@ import org.apache.spark.sql.functions._
   *  1. AQE (`spark.sql.adaptive.skewJoin.enabled`, on by Spark's
   *     default, which `SessionSpec` pins) splits skewed shuffle
   *     partitions at runtime.
-  *  2. Explicit salting below, for the cases AQE cannot fix:
+  *  2. Explicit salting below, for the case AQE cannot fix:
   *     a broadcast-ineligible join against a dimension where a few
   *     keys dominate (e.g. one `media_ref` bucket of a mega newspaper
-  *     appearing 10^6 times), or a groupBy with a dominant key.
+  *     appearing 10^6 times).
   */
 object Skew {
-
-  /** Scatter rows uniformly (salted repartition): mega-documents land
-    * on random-but-deterministic partitions instead of hashing by a
-    * hot key. Narrow input → one shuffle keyed by a per-row
-    * deterministic hash. (Repartition on the RAW hash — pre-bucketing
-    * with pmod would make the partitioner re-hash only `partitions`
-    * distinct values, colliding several buckets onto one partition.) */
-  def scatter(df: DataFrame, partitions: Int, saltFrom: Column): DataFrame =
-    df.repartition(partitions, xxhash64(saltFrom))
 
   /** Skew-safe equi-join: the big (skewed) side gets a deterministic
     * salt in [0, salts); the small side is exploded `salts`× so every

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Byte-pair encoding with a REAL learned merge table — the tokenizer
@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   *    classic Sennrich merge loop (arXiv:1508.07909 §3) driver-side
   *    on that bounded table. This mirrors how production BPE trainers
   *    work: the merge loop is O(types × merges), independent of corpus
-  *    size, and a capped type table is a few MB (the IvfIndex
-  *    collect-k-centroids pattern, never a corpus collect).
+  *    size, and a capped type table is a few MB (a bounded driver
+  *    collect, never a corpus collect).
   *  - '''encodeCount''' broadcasts the merge ranks (tiny) and encodes
   *    narrowly inside `mapPartitions` — no shuffle at all; the
   *    per-word encode memoizes on a per-partition LRU-ish map because
@@ -28,50 +28,6 @@ import org.apache.spark.sql.functions._
   * (GPT-2 convention). Same corpus → same merges → same counts,
   * independent of partitioning.
   */
-/** A learned tokenizer artifact: the merge table plus the base
-  * alphabet it was learned over, with a derived token-id vocabulary
-  * (GPT-2 convention: special sentinel, then the base alphabet, then
-  * one token per merge in rank order). Ids are therefore stable
-  * across [[Bpe.save]]/[[Bpe.load]] round-trips — a training pipeline
-  * can tokenize shards months apart against the same artifact. */
-final case class BpeModel(alphabet: Vector[String],
-    merges: Vector[(String, String)]) {
-
-  /** symbol → token id. Covers every symbol [[Bpe.encode]] can emit
-    * for in-alphabet text; out-of-alphabet characters (new scripts in
-    * a later corpus slice) are NOT silently assigned — callers map
-    * them to [[BpeModel.UnknownId]]. Surface-string collisions (two
-    * merges whose concatenations produce the same string, e.g.
-    * ("a","bc") and ("ab","c") → "abc") would silently collapse ids
-    * under `.toMap` — [[assertDistinctVocab]] (called at learn and
-    * load time) rejects such artifacts loudly instead. */
-  lazy val vocab: Map[String, Int] =
-    ((Bpe.Eow +: alphabet).distinct ++ merges.map { case (a, b) => a + b })
-      .zipWithIndex.toMap
-
-  /** Throws if two vocabulary entries share a surface string (the
-    * artifact would have fewer usable ids than rows, invisibly). */
-  def assertDistinctVocab(): BpeModel = {
-    val syms = (Bpe.Eow +: alphabet).distinct ++ merges.map { case (a, b) => a + b }
-    if (vocab.size != syms.size) {
-      val dups = syms.groupBy(identity).collect {
-        case (s, g) if g.size > 1 => s
-      }.toSeq.sorted
-      throw new IllegalArgumentException(
-        s"BPE vocab surface-string collision: ${dups.take(5).mkString(", ")} — " +
-          "two merges concatenate to the same token string; ids would " +
-          "silently collapse at encode time")
-    }
-    this
-  }
-
-  def tokenId(sym: String): Int = vocab.getOrElse(sym, BpeModel.UnknownId)
-}
-
-object BpeModel {
-  val UnknownId: Int = -1
-}
-
 object Bpe {
 
   /** End-of-word sentinel (Sennrich `</w>`): keeps merges from
@@ -83,14 +39,7 @@ object Bpe {
     * occurs fewer than `minCount` times (merging hapax pairs is
     * noise). Words are whitespace token types of `textCol`. */
   def learn(corpus: DataFrame, textCol: String, nMerges: Int,
-      vocabCap: Int = 10000, minCount: Long = 2L): Seq[(String, String)] =
-    learnModel(corpus, textCol, nMerges, vocabCap, minCount).merges
-
-  /** Like [[learn]] but returns the full persistable artifact: the
-    * merge table plus the base alphabet of the capped type table
-    * (sorted — deterministic ids). */
-  def learnModel(corpus: DataFrame, textCol: String, nMerges: Int,
-      vocabCap: Int = 10000, minCount: Long = 2L): BpeModel = {
+      vocabCap: Int = 10000, minCount: Long = 2L): Seq[(String, String)] = {
     // the one corpus-scale job: word-type counts, capped. The cap is
     // what bounds the driver collect — NEVER lift it to "all types"
     // on an unbounded corpus.
@@ -103,46 +52,7 @@ object Bpe {
       .collect()
       .map(r => (r.getString(0), r.getLong(1)))
       .toSeq
-    val alphabet = types.iterator.flatMap(_._1.iterator)
-      .map(_.toString).toVector.distinct.sorted
-    BpeModel(alphabet, learnFromTypes(types, nMerges, minCount).toVector)
-      .assertDistinctVocab()
-  }
-
-  /** Persist a learned model as a new version of a
-    * [[graft.io.SnapshotStore]] table (rows: kind ∈ {alpha, merge},
-    * rank, a, b) — the same atomic-manifest commit protocol the
-    * extraction sink uses, so tokenizer artifacts get snapshot
-    * isolation, time travel (retokenize an old shard against the
-    * EXACT model that produced it via `load(root, Some(v))`), and
-    * [[graft.io.SnapshotStore.expire]] GC for free. Returns the
-    * committed version. */
-  def save(spark: SparkSession, model: BpeModel, root: String): Long = {
-    import spark.implicits._
-    val rows =
-      model.alphabet.zipWithIndex.map { case (s, i) => ("alpha", i, s, null: String) } ++
-      model.merges.zipWithIndex.map { case ((a, b), i) => ("merge", i, a, b) }
-    val store = new graft.io.SnapshotStore(spark, root)
-    val path = store.newDataPath(0)
-    // one artifact = one partition = one file: tiny by construction
-    // (vocabCap-bounded), so the single-file write is the right shape
-    rows.toDF("kind", "rank", "a", "b").coalesce(1)
-      .write.mode("overwrite").parquet(path)
-    store.commit(0, path, rows.size.toLong, 0L, 0L)
-  }
-
-  /** Load a model version (default: current) saved by [[save]].
-    * The collect is bounded by the learner's vocabCap. */
-  def load(spark: SparkSession, root: String,
-      version: Option[Long] = None): BpeModel = {
-    val rows = new graft.io.SnapshotStore(spark, root).read(version)
-      .select(col("kind"), col("rank"), col("a"), col("b"))
-      .collect()
-    val alphabet = rows.filter(_.getString(0) == "alpha")
-      .sortBy(_.getInt(1)).map(_.getString(2)).toVector
-    val merges = rows.filter(_.getString(0) == "merge")
-      .sortBy(_.getInt(1)).map(r => (r.getString(2), r.getString(3))).toVector
-    BpeModel(alphabet, merges).assertDistinctVocab()
+    learnFromTypes(types, nMerges, minCount)
   }
 
   /** The merge loop itself, exposed for tests: `types` are (word,

@@ -12,8 +12,7 @@ import graft.queries.Queries
   *    out of 124,750 possible pairs;
   *  - ANN probing breadth is monotone: multi-probe (Hamming≤2, q44)
   *    never recalls fewer true neighbors than its single-bucket
-  *    special case (q34), and IVF recall grows with nProbe up to
-  *    exact at full probe (the exactness anchor lives in IvfIndexSpec).
+  *    special case (q34).
   *
   * Hyperplane-LSH absolute recall on THIS corpus is intrinsically low
   * (uniform-ish 64-d embeddings: top-neighbor cosines ≈0.4 → 12-plane

@@ -71,56 +71,4 @@ class BpeSpec extends SparkSpecBase {
     val b = Bpe.learn(docs.repartition(13), "text", nMerges = 12)
     assert(a == b)
   }
-
-  test("model save/load round-trips through SnapshotStore with time travel") {
-    import spark.implicits._
-    val docs = (0 until 100)
-      .map(i => (s"d$i", "newest widest lowest low lower new"))
-      .toDF("doc_id", "text")
-    val model = Bpe.learnModel(docs, "text", nMerges = 15, minCount = 2L)
-    assert(model.merges.nonEmpty && model.alphabet.nonEmpty)
-
-    val root = java.nio.file.Files.createTempDirectory("bpestore").toString
-    val v1 = Bpe.save(spark, model, root)
-    assert(v1 == 1L)
-    val loaded = Bpe.load(spark, root)
-    assert(loaded == model)
-    // derived token ids are stable across the round-trip
-    assert(loaded.vocab == model.vocab)
-    assert(loaded.tokenId("zzz-not-a-symbol") == graft.text.BpeModel.UnknownId)
-
-    // encode under the LOADED model matches encode under the learned
-    // one — the artifact is sufficient to tokenize without relearning
-    val a = Bpe.encodeCount(docs.limit(10), "doc_id", "text", model.merges)
-      .collect().map(r => (r.getString(0), r.getInt(1))).toMap
-    val b = Bpe.encodeCount(docs.limit(10), "doc_id", "text", loaded.merges)
-      .collect().map(r => (r.getString(0), r.getInt(1))).toMap
-    assert(a == b)
-
-    // a retrained model commits a NEW version; the old one stays
-    // readable (time travel — retokenize an old shard bit-exactly)
-    val model2 = Bpe.learnModel(docs, "text", nMerges = 3, minCount = 2L)
-    val v2 = Bpe.save(spark, model2, root)
-    assert(v2 == 2L)
-    assert(Bpe.load(spark, root) == model2)
-    assert(Bpe.load(spark, root, Some(v1)) == model)
-  }
-
-  test("vocab surface-string collision is rejected at learn/load (VERDICT r6 #4)") {
-    import graft.text.BpeModel
-    // crafted colliding pair: ("a","bc") and ("ab","c") both
-    // concatenate to "abc" — under .toMap the second id would
-    // silently shadow the first
-    val colliding = BpeModel(Vector("a", "b", "c"),
-      Vector(("b", "c"), ("a", "bc"), ("a", "b"), ("ab", "c")))
-    val ex = intercept[IllegalArgumentException](colliding.assertDistinctVocab())
-    assert(ex.getMessage.contains("abc"))
-    // a healthy model (the classic corpus) passes and keeps one id per row
-    val m = Bpe.learnModel(
-      { import spark.implicits._
-        classicTypes.flatMap { case (w, c) => Seq.fill(c.toInt)(w) }
-          .toDF("text") }, "text", nMerges = 10)
-    assert(m.assertDistinctVocab() eq m)
-    assert(m.vocab.size == (Bpe.Eow +: m.alphabet).distinct.size + m.merges.size)
-  }
 }

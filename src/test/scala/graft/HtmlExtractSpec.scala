@@ -27,7 +27,7 @@ class HtmlExtractSpec extends AnyFunSuite {
 
   test("boilerplate subtrees (nav/header/footer/script/style) are dropped") {
     val out = HtmlExtract.extract(page, "d1")
-    val texts = out.spans.filter(_.kind == Span.KindText).map(_.text)
+    val texts = out.filter(_.kind == Span.KindText).map(_.text)
     assert(!texts.contains("Home"))
     assert(!texts.contains("Copyright"))
     assert(!texts.contains("Site"))
@@ -37,25 +37,25 @@ class HtmlExtractSpec extends AnyFunSuite {
 
   test("main content survives, entities decode, images become media spans") {
     val out = HtmlExtract.extract(page, "d1")
-    val texts = out.spans.filter(_.kind == Span.KindText).map(_.text)
+    val texts = out.filter(_.kind == Span.KindText).map(_.text)
     assert(texts.containsSlice(Seq("Dies", "ist", "der", "erste")))
     assert(texts.contains("&")) // &amp; decoded in the kept h1 block
     assert(texts.contains("Verſammlung"))
-    val media = out.spans.filter(_.kind == Span.KindMedia)
+    val media = out.filter(_.kind == Span.KindMedia)
     assert(media.map(_.media_ref) == Seq("media://d1/img0#bild.png"))
   }
 
   test("link-dense block is stripped, mixed block kept") {
     val out = HtmlExtract.extract(page, "d1")
-    val texts = out.spans.filter(_.kind == Span.KindText).map(_.text)
+    val texts = out.filter(_.kind == Span.KindText).map(_.text)
     assert(!texts.contains("nur")) // 4/4 link words
     assert(texts.contains("Link")) // 3/9 link words → kept
   }
 
   test("offsets are dense and ordered; blocks group spans") {
     val out = HtmlExtract.extract(page, "d1")
-    assert(out.spans.map(_.offset) == out.spans.indices.map(identity))
-    val refs = out.spans.filter(_.kind == Span.KindText).map(_.media_ref).distinct
+    assert(out.map(_.offset) == out.indices.map(identity))
+    val refs = out.filter(_.kind == Span.KindText).map(_.media_ref).distinct
     assert(refs.size >= 3) // h1, p1, p2+figcaption blocks
   }
 
@@ -63,22 +63,22 @@ class HtmlExtractSpec extends AnyFunSuite {
     val html = "<body><p>eins zwei drei vier</p>" +
       "<img data-src='lazy.png' src='real.png'/>" +
       "<img alt='src=fake.png inside a value' src=\"plain.png\"></body>"
-    val media = HtmlExtract.extract(html, "d").spans.filter(_.kind == Span.KindMedia)
+    val media = HtmlExtract.extract(html, "d").filter(_.kind == Span.KindMedia)
     assert(media.map(_.media_ref) ==
       Vector("media://d/img0#real.png", "media://d/img1#plain.png"))
   }
 
   test("malformed and truncated markup does not crash") {
-    assert(HtmlExtract.extract("<p>ok<div<span>broken</spa", "x").spans.nonEmpty ||
+    assert(HtmlExtract.extract("<p>ok<div<span>broken</spa", "x").nonEmpty ||
       true)
-    assert(HtmlExtract.extract("", "x").spans.isEmpty)
-    assert(HtmlExtract.extract("<script>never closed", "x").spans.isEmpty)
-    assert(HtmlExtract.extract("plain words only here", "x").spans.size == 4)
+    assert(HtmlExtract.extract("", "x").isEmpty)
+    assert(HtmlExtract.extract("<script>never closed", "x").isEmpty)
+    assert(HtmlExtract.extract("plain words only here", "x").size == 4)
   }
 
   test("tag-soup robustness: stray closes, self-closing drops, hex entities, slash values") {
     def texts(html: String) =
-      HtmlExtract.extract(html, "x").spans
+      HtmlExtract.extract(html, "x")
         .filter(_.kind == graft.model.Span.KindText).map(_.text)
 
     // a stray </script> inside <nav> must NOT un-drop the nav subtree
@@ -111,13 +111,13 @@ class HtmlExtractSpec extends AnyFunSuite {
 
     // unquoted src keeps interior slashes, drops only the self-closing one
     val m = HtmlExtract.extract("<p>bild folgt jetzt</p><img src=http://h/p.jpg/>", "d")
-      .spans.filter(_.kind == graft.model.Span.KindMedia)
+      .filter(_.kind == graft.model.Span.KindMedia)
     assert(m.map(_.media_ref) == Vector("media://d/img0#http://h/p.jpg"))
   }
 
   test("extraction pipeline consumes HTML-derived spans end-to-end") {
     // spans from HTML run through the same downstream stage chain
-    val doc = graft.model.Doc("h1", HtmlExtract.extract(page, "h1").spans)
+    val doc = graft.model.Doc("h1", HtmlExtract.extract(page, "h1"))
     val p = graft.stages.Extraction.estimateDoc(doc, graft.stages.ExtractConfig())
     assert(p.n_lines_in > 0)
     assert(p.n_words > 0)

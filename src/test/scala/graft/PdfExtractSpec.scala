@@ -195,7 +195,7 @@ class PdfExtractSpec extends SparkSpecBase {
         (72.0, 700.0, s"inhalt nummer $i"),
         (72.0, 680.0, s"seite von doc$i"))), flate = i % 2 == 0))
     }
-    val out = PdfExtract.extractDocs(rows.toDS()).collect()
+    val out = graft.run.IngestAny.parseDocs(rows.toDS()).collect()
     assert(out.length == 40)
     out.foreach { doc =>
       val i = doc.doc_id.stripPrefix("doc")

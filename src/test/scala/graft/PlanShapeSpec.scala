@@ -87,17 +87,6 @@ class PlanShapeSpec extends SparkSpecBase {
     }
   }
 
-  test("IVF assignment is a narrow projection (no Exchange, no join)") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("e"))
-    val centroids = graft.ml.IvfIndex.train(emb, 4, seed = 7L, maxIter = 5)
-    val assigned = graft.ml.IvfIndex.assign(emb, centroids)
-    assigned.collect() // finalize AQE
-    val plan = assigned.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"IVF assign shuffles:\n$plan")
-    assert(!plan.contains("Join"), s"IVF assign joins:\n$plan")
-  }
-
   test("q60 winnow: window exchange is REUSED by the groupBy (same key)") {
     val df = graft.queries.Queries.all.find(_.name == "q60_winnow_md5_oracle").get
       .fn(spark, "/root/testdata/sf0.001")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.sql.Skew
 
 /** Salting utilities: result equivalence with a plain join and the
@@ -30,13 +28,5 @@ class SkewSpec extends SparkSpecBase {
       .select("k", "payload", "dim").collect().map(_.toSeq).toSet
     assert(run() == run())
     assert(run().size == 500) // no dup/lost rows
-  }
-
-  test("scatter spreads a hot key across partitions") {
-    import spark.implicits._
-    val df = (0 until 1000).map(i => ("hot", i)).toDF("k", "v")
-    val scattered = Skew.scatter(df, 8, col("v"))
-    val sizes = scattered.rdd.glom().map(_.length).collect()
-    assert(sizes.count(_ > 0) >= 6, s"skewed spread: ${sizes.toSeq}")
   }
 }
