@@ -18,7 +18,7 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Queries.all.map(q => q.name -> q.fn).toMap
 
-  /** DuckDB-equivalent SQL for each SQL-expressible query. */
+  /** The DuckDB SQL producing each query's rows. */
   def oracleSql: Map[String, String] =
-    Queries.all.flatMap(q => q.oracle.map(o => q.name -> o)).toMap
+    Queries.all.map(q => q.name -> q.oracle).toMap
 }

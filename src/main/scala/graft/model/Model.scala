@@ -66,20 +66,7 @@ case class Line(id: String, words: Seq[String], reorder: Boolean = false) {
     else words.mkString(" ")
 }
 
-/** Per-document quality estimation record — the engine equivalent of
-  * the reference's 7-tuple statistics (lib/ocr_step.py:414-424),
-  * prefixed with the document id (ocr_pipeline.py:408).
-  */
-case class Estimation(
-    doc_id: String,
-    hit_ratio: Double,
-    n_words: Int,
-    n_errs: Int,
-    n_lines_in: Int,
-    n_wraps: Int,
-    n_shorts: Int,
-    n_lines_out: Int)
-
+/** The per-document estimation constants (ocr_pipeline.py). */
 object Estimation {
   /** `MARK_MISSING_ESTM` (ocr_pipeline.py:35). */
   val MissingRatio: Double = -1.0

@@ -3,17 +3,17 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sql.SpanOps
+import graft.sql.{CosineSim, SpanOps}
 
-/** One driver-contract query: a Spark implementation plus (when the
-  * operator is SQL-expressible) a DuckDB oracle producing the same
-  * rows/columns. Column names are kept identical on both sides (the
-  * driver hashes values under sorted column names).
+/** One driver-contract query: a Spark implementation plus the DuckDB
+  * oracle SQL producing the same rows/columns. Column names are kept
+  * identical on both sides (the driver hashes values under sorted
+  * column names).
   */
 final case class QueryDef(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: String)
 
 /** The engine's operator surface exposed over the driver's test tables
   * (TESTDATA.md): the reference's operator inventory (SURVEY.md §2) on
@@ -43,12 +43,12 @@ object Queries {
         round(avg(col("l_discount")), 3).as("avg_disc"),
         count(lit(1)).as("n"))
       .orderBy(col("l_returnflag"), col("l_linestatus")),
-    Some("""SELECT l_returnflag, l_linestatus,
+    """SELECT l_returnflag, l_linestatus,
             round(sum(l_quantity), 2) AS sum_qty,
             round(sum(l_extendedprice), 2) AS sum_price,
             round(avg(l_discount), 3) AS avg_disc,
             count(*) AS n
-            FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2"""))
+            FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""")
 
   // window chosen inside the synthetic data range (shipdates start
   // 1995-01-02) so the filter+sort+limit chain is exercised on real rows.
@@ -64,12 +64,12 @@ object Queries {
           .as("revenue"))
       .orderBy(desc("revenue"), col("l_orderkey"), col("l_linenumber"))
       .limit(100),
-    Some("""SELECT l_orderkey, l_linenumber,
+    """SELECT l_orderkey, l_linenumber,
             round(l_extendedprice * (1 - l_discount), 2) AS revenue
             FROM lineitem
             WHERE l_shipdate >= TIMESTAMP '1996-01-01'
               AND l_shipdate < TIMESTAMP '1997-01-01' AND l_discount >= 0.05
-            ORDER BY revenue DESC, l_orderkey, l_linenumber LIMIT 100"""))
+            ORDER BY revenue DESC, l_orderkey, l_linenumber LIMIT 100""")
 
   private val q03 = QueryDef("q03_join_broadcast",
     (s, d) => t(s, d, "customer")
@@ -78,19 +78,19 @@ object Queries {
       .groupBy(col("r_name"))
       .agg(count(lit(1)).as("n_cust"), round(sum(col("c_acctbal")), 2).as("sum_bal"))
       .orderBy(col("r_name")),
-    Some("""SELECT r_name, count(*) AS n_cust, round(sum(c_acctbal), 2) AS sum_bal
+    """SELECT r_name, count(*) AS n_cust, round(sum(c_acctbal), 2) AS sum_bal
             FROM customer JOIN nation ON c_nationkey = n_nationkey
             JOIN region ON n_regionkey = r_regionkey
-            GROUP BY r_name ORDER BY r_name"""))
+            GROUP BY r_name ORDER BY r_name""")
 
   private val q04 = QueryDef("q04_semi_join",
     (s, d) => t(s, d, "supplier")
       .join(t(s, d, "lineitem"), col("s_suppkey") === col("l_suppkey"), "left_semi")
       .select(col("s_suppkey"), col("s_name"))
       .orderBy(col("s_suppkey")),
-    Some("""SELECT s_suppkey, s_name FROM supplier
+    """SELECT s_suppkey, s_name FROM supplier
             WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_suppkey = s_suppkey)
-            ORDER BY s_suppkey"""))
+            ORDER BY s_suppkey""")
 
   // anti-join against a genuinely partial key set (customers with no
   // URGENT order — every customer has *some* order, which made the
@@ -101,10 +101,10 @@ object Queries {
         col("c_custkey") === col("o_custkey"), "left_anti")
       .select(col("c_custkey"), col("c_name"))
       .orderBy(col("c_custkey")),
-    Some("""SELECT c_custkey, c_name FROM customer
+    """SELECT c_custkey, c_name FROM customer
             WHERE NOT EXISTS (SELECT 1 FROM orders
               WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-            ORDER BY c_custkey"""))
+            ORDER BY c_custkey""")
 
   private val q06 = QueryDef("q06_window_topk",
     (s, d) => {
@@ -117,11 +117,11 @@ object Queries {
         .select(col("o_custkey"), col("o_orderkey"), col("rn"))
         .orderBy(col("o_custkey"), col("rn"))
     },
-    Some("""SELECT o_custkey, o_orderkey, rn FROM (
+    """SELECT o_custkey, o_orderkey, rn FROM (
               SELECT o_custkey, o_orderkey,
                 row_number() OVER (PARTITION BY o_custkey
                   ORDER BY o_totalprice DESC, o_orderkey) AS rn
-              FROM orders) WHERE rn <= 3 ORDER BY o_custkey, rn"""))
+              FROM orders) WHERE rn <= 3 ORDER BY o_custkey, rn""")
 
   private val q07 = QueryDef("q07_running_sum",
     (s, d) => {
@@ -135,18 +135,18 @@ object Queries {
         .select(col("user_id"), col("event_id"), col("running"))
         .orderBy(col("user_id"), col("event_id"))
     },
-    Some("""SELECT user_id, event_id,
+    """SELECT user_id, event_id,
               round(sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running
-            FROM events WHERE user_id < 50 ORDER BY user_id, event_id"""))
+            FROM events WHERE user_id < 50 ORDER BY user_id, event_id""")
 
   private val q08 = QueryDef("q08_distinct",
     (s, d) => t(s, d, "orders")
       .select(col("o_orderstatus"), col("o_orderpriority"))
       .distinct()
       .orderBy(col("o_orderstatus"), col("o_orderpriority")),
-    Some("""SELECT DISTINCT o_orderstatus, o_orderpriority
-            FROM orders ORDER BY 1, 2"""))
+    """SELECT DISTINCT o_orderstatus, o_orderpriority
+            FROM orders ORDER BY 1, 2""")
 
   private val q09 = QueryDef("q09_conditional_agg",
     (s, d) => t(s, d, "lineitem")
@@ -156,10 +156,10 @@ object Queries {
         count(when(col("l_discount") > 0.05, 1)).as("n_disc"),
         round(sum(when(col("l_tax") > 0.04, col("l_extendedprice"))), 2).as("taxed_price"))
       .orderBy(col("l_returnflag")),
-    Some("""SELECT l_returnflag, count(*) AS n_total,
+    """SELECT l_returnflag, count(*) AS n_total,
               count(CASE WHEN l_discount > 0.05 THEN 1 END) AS n_disc,
               round(sum(CASE WHEN l_tax > 0.04 THEN l_extendedprice END), 2) AS taxed_price
-            FROM lineitem GROUP BY 1 ORDER BY 1"""))
+            FROM lineitem GROUP BY 1 ORDER BY 1""")
 
   // A5 histogram semantics: floor(x / step) clamped to bins-1
   private val q10 = QueryDef("q10_histogram",
@@ -167,9 +167,9 @@ object Queries {
       .select(SpanOps.binId(col("l_extendedprice") / 150.0).as("bin"))
       .groupBy(col("bin")).agg(count(lit(1)).as("n"))
       .orderBy(col("bin")),
-    Some("""SELECT CAST(least(floor(l_extendedprice / 150.0 / 15), 4) AS INT) AS bin,
+    """SELECT CAST(least(floor(l_extendedprice / 150.0 / 15), 4) AS INT) AS bin,
               count(*) AS n
-            FROM lineitem GROUP BY 1 ORDER BY 1"""))
+            FROM lineitem GROUP BY 1 ORDER BY 1""")
 
   private val q11 = QueryDef("q11_multi_join_revenue",
     (s, d) => t(s, d, "customer")
@@ -180,13 +180,13 @@ object Queries {
       .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"),
         count(lit(1)).as("n"))
       .orderBy(col("n_name")),
-    Some("""SELECT n_name,
+    """SELECT n_name,
               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
               count(*) AS n
             FROM customer JOIN orders ON c_custkey = o_custkey
             JOIN lineitem ON o_orderkey = l_orderkey
             JOIN nation ON c_nationkey = n_nationkey
-            GROUP BY n_name ORDER BY n_name"""))
+            GROUP BY n_name ORDER BY n_name""")
 
   private val q12 = QueryDef("q12_time_window",
     (s, d) => t(s, d, "events")
@@ -195,17 +195,17 @@ object Queries {
       .groupBy(col("hour_ts"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_val"))
       .orderBy(col("hour_ts"), col("event_type")),
-    Some("""SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_ts,
+    """SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_ts,
               event_type, count(*) AS n, round(sum(value), 2) AS sum_val
-            FROM events GROUP BY 1, 2 ORDER BY 1, 2"""))
+            FROM events GROUP BY 1, 2 ORDER BY 1, 2""")
 
   private val q13 = QueryDef("q13_json_extract",
     (s, d) => t(s, d, "events")
       .select(get_json_object(col("props"), "$.k").as("k"))
       .groupBy(col("k")).agg(count(lit(1)).as("n"))
       .orderBy(col("k")),
-    Some("""SELECT json_extract_string(props, '$.k') AS k, count(*) AS n
-            FROM events GROUP BY 1 ORDER BY 1"""))
+    """SELECT json_extract_string(props, '$.k') AS k, count(*) AS n
+            FROM events GROUP BY 1 ORDER BY 1""")
 
   private val q14 = QueryDef("q14_sessionize",
     (s, d) => {
@@ -224,7 +224,7 @@ object Queries {
     },
     // CAST: DuckDB sum(int) is HUGEINT; the driver hashes it differently
     // from Spark's int64 even when values are equal
-    Some("""SELECT user_id, CAST(sum(new_session) AS BIGINT) AS n_sessions,
+    """SELECT user_id, CAST(sum(new_session) AS BIGINT) AS n_sessions,
               count(*) AS n_events
             FROM (
               SELECT user_id,
@@ -234,7 +234,7 @@ object Queries {
                        ORDER BY ts, event_id)) > 1800
                      THEN 1 ELSE 0 END AS new_session
               FROM events)
-            GROUP BY user_id ORDER BY user_id"""))
+            GROUP BY user_id ORDER BY user_id""")
 
   // ===================================================================
   // Extraction / text analysis over `documents` (C/F/A ops + training
@@ -248,11 +248,11 @@ object Queries {
     (s, d) => t(s, d, "documents")
       .select(col("doc_id"), SpanOps.sanitizeCharsCol(col("text")).as("clean"))
       .orderBy(col("doc_id")),
-    Some("""SELECT doc_id, array_to_string(list_filter(
+    """SELECT doc_id, array_to_string(list_filter(
               string_split_regex(trim(replace(translate(text,
                 '0123456789“„"''?!*.;:-=[]()|', ''), 'ſ', 's')), '\s+'),
               x -> length(x) > 1), ' ') AS clean
-            FROM documents ORDER BY doc_id"""))
+            FROM documents ORDER BY doc_id""")
 
   private val q16 = QueryDef("q16_token_count",
     (s, d) => t(s, d, "documents")
@@ -261,11 +261,11 @@ object Queries {
           .otherwise(size(toks(col("text")))).as("n_tokens"),
         length(col("text")).as("len"))
       .orderBy(col("doc_id")),
-    Some("""SELECT doc_id,
+    """SELECT doc_id,
               CASE WHEN length(trim(text)) = 0 THEN 0
                    ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
               length(text) AS len
-            FROM documents ORDER BY doc_id"""))
+            FROM documents ORDER BY doc_id""")
 
   // A3 word/error ratio with a SQL-expressible deterministic oracle:
   // error := token of length ≤ 2 or containing a digit
@@ -280,7 +280,7 @@ object Queries {
           .otherwise(round((col("n_words") - col("n_errs")).cast("double")
             / col("n_words") * 100, 3)).as("ratio"))
       .orderBy(col("doc_id")),
-    Some("""SELECT doc_id, n_words, n_errs,
+    """SELECT doc_id, n_words, n_errs,
               CASE WHEN n_words <= n_errs THEN 0.0
                    ELSE round(CAST(n_words - n_errs AS DOUBLE) / n_words * 100, 3)
               END AS ratio
@@ -290,7 +290,7 @@ object Queries {
                 len(list_filter(string_split_regex(trim(text), '\s+'),
                   x -> length(x) <= 2 OR regexp_matches(x, '[0-9]'))) AS n_errs
               FROM documents)
-            ORDER BY doc_id"""))
+            ORDER BY doc_id""")
 
   // A4/A5/A7 corpus report over the q17 ratios
   private val q18 = QueryDef("q18_quality_report",
@@ -305,7 +305,7 @@ object Queries {
         count(when(SpanOps.binId(col("ratio")) === 4, 1)).as("b5"),
         count(lit(1)).as("n_total"))
     },
-    Some("""WITH r AS (
+    """WITH r AS (
               SELECT CASE WHEN n_words <= n_errs THEN 0.0
                    ELSE round(CAST(n_words - n_errs AS DOUBLE) / n_words * 100, 3)
               END AS ratio FROM (
@@ -320,7 +320,7 @@ object Queries {
               count(CASE WHEN least(floor(ratio/15), 4) = 3 THEN 1 END) AS b4,
               count(CASE WHEN least(floor(ratio/15), 4) = 4 THEN 1 END) AS b5,
               count(*) AS n_total
-            FROM r"""))
+            FROM r""")
 
   // C1 ordered literal multi-replace (chain order is the semantics)
   private val q19 = QueryDef("q19_replace_chars",
@@ -333,10 +333,10 @@ object Queries {
         .select(col("doc_id"), md5(replaced).as("replaced_md5"))
         .orderBy(col("doc_id"))
     },
-    Some("""SELECT doc_id,
+    """SELECT doc_id,
               md5(replace(replace(replace(replace(text,
                 'dup', 'dupl'), 'ic)', 'ich'), 's<', 'sc'), '<', 'c')) AS replaced_md5
-            FROM documents ORDER BY doc_id"""))
+            FROM documents ORDER BY doc_id""")
 
   // ===================================================================
   // Deduplication family
@@ -350,8 +350,8 @@ object Queries {
       .groupBy(col("fp"))
       .agg(min(col("doc_id")).as("keeper"), count(lit(1)).as("n_copies"))
       .orderBy(col("keeper")),
-    Some("""SELECT md5(text) AS fp, min(doc_id) AS keeper, count(*) AS n_copies
-            FROM documents GROUP BY 1 ORDER BY keeper"""))
+    """SELECT md5(text) AS fp, min(doc_id) AS keeper, count(*) AS n_copies
+            FROM documents GROUP BY 1 ORDER BY keeper""")
 
   // bag-of-words fingerprint dedup (order-insensitive near-dup)
   private val q21 = QueryDef("q21_dedup_fingerprint",
@@ -360,10 +360,10 @@ object Queries {
       .groupBy(col("fp"))
       .agg(min(col("doc_id")).as("keeper"), count(lit(1)).as("n_docs"))
       .orderBy(col("keeper")),
-    Some("""SELECT md5(array_to_string(list_sort(list_distinct(
+    """SELECT md5(array_to_string(list_sort(list_distinct(
               string_split_regex(trim(text), '\s+'))), ' ')) AS fp,
               min(doc_id) AS keeper, count(*) AS n_docs
-            FROM documents GROUP BY 1 ORDER BY keeper"""))
+            FROM documents GROUP BY 1 ORDER BY keeper""")
 
   /** q22 block-size cap: a block (same `n_chars`) with more than this
     * many docs is dropped instead of expanded quadratically — the exact
@@ -391,7 +391,7 @@ object Queries {
         .filter(col("jaccard") >= 0.3)
         .orderBy(col("d1"), col("d2"))
     },
-    Some("""WITH dd0 AS (
+    """WITH dd0 AS (
               SELECT doc_id, n_chars,
                 list_distinct(string_split_regex(trim(text), '\s+')) AS tk
               FROM documents),
@@ -403,7 +403,7 @@ object Queries {
             FROM dd a JOIN dd b ON a.n_chars = b.n_chars AND a.doc_id < b.doc_id
             WHERE CAST(len(list_intersect(a.tk, b.tk)) AS DOUBLE) /
                 len(list_distinct(list_concat(a.tk, b.tk))) >= 0.2995
-            ORDER BY d1, d2"""))
+            ORDER BY d1, d2""")
 
   /** SQL generators for 64-bit wrapping arithmetic in DuckDB — the
     * machinery that lets the oracle recompute the engine's ACTUAL
@@ -477,6 +477,50 @@ object Queries {
          range(1, len(tk) - 1), i -> array_to_string(tk[i:i+2], ' ')))
        ELSE list_distinct([array_to_string(tk, ' ')]) END"""
 
+  /** The signature columns `h0..h7` over the shingle list `sh`. */
+  private val minhashSigCols: String =
+    (0 until MinhashK).map(i => s"${minhashSqlExpr(i)} AS h$i").mkString(", ")
+  /** The oracle's shingle CTEs over `src`'s `(doc_id, text)` rows:
+    * `tt` (tokens) and `ss` (distinct word 3-grams `sh`). */
+  private def shingleCtes(src: String): String =
+    s"""tt AS (
+          SELECT doc_id, string_split_regex(trim(text), '\\s+') AS tk
+          FROM $src),
+        ss AS (SELECT doc_id, $shingleSql AS sh FROM tt)"""
+  /** [[shingleCtes]] then `sig` (`h0..h7`) and `bands` (4 bands of 2
+    * rows, `(doc_id, band, bh)`): the md5-minhash chain of q24, q62
+    * and q64. */
+  private def bandCtes(src: String): String =
+    s"""${shingleCtes(src)},
+        sig AS (SELECT doc_id, $minhashSigCols FROM ss),
+        bands AS (${(0 until MinhashK / 2).map(b =>
+          s"""SELECT doc_id, $b AS band,
+              md5(CONCAT(h${2 * b}, '_', h${2 * b + 1})) AS bh FROM sig""")
+          .mkString(" UNION ALL ")})"""
+  /** Candidate pairs: two docs sharing a band hash. */
+  private val bandJoinSql =
+    "FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id"
+
+  /** The oracle's near-dup clusters over `src`'s `(doc_id, text)`
+    * rows (the `WITH RECURSIVE` CTEs after the keyword): the minhash
+    * band pairs, both edge directions, the recursive reachability
+    * `reach`, `cc` (each doc's min reachable doc_id, `cluster_id`) and
+    * `sz` (`cluster_size`) — the same clusters
+    * [[graft.ops.ConnectedComponents]] labels, for q62 and q64. */
+  private def neardupClusterSql(src: String): String =
+    s"""${bandCtes(src)},
+        pairs AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2 $bandJoinSql),
+        edges AS (SELECT d1 AS src, d2 AS dst FROM pairs
+                  UNION ALL SELECT d2, d1 FROM pairs),
+        reach(node, lbl) AS (
+          SELECT doc_id, doc_id FROM $src
+          UNION
+          SELECT e.dst, r.lbl FROM reach r JOIN edges e ON r.node = e.src),
+        cc AS (SELECT node AS doc_id, min(lbl) AS cluster_id
+               FROM reach GROUP BY node),
+        sz AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
+               FROM cc GROUP BY 1)"""
+
   /** The md5-hex minhash signature (bit-identical to the DuckDB
     * oracle) via the library API — see [[graft.dedup.MinHashLsh]] and
     * [[graft.sql.Md5MinHash]]. */
@@ -486,13 +530,9 @@ object Queries {
 
   private val q23 = QueryDef("q23_minhash_signature",
     (s, d) => signatureDF(s, d).orderBy(col("doc_id")),
-    Some(s"""WITH tt AS (
-               SELECT doc_id, string_split_regex(trim(text), '\\s+') AS tk
-               FROM documents),
-             ss AS (SELECT doc_id, $shingleSql AS sh FROM tt)
-             SELECT doc_id, ${(0 until MinhashK).map(i =>
-               s"${minhashSqlExpr(i)} AS h$i").mkString(", ")}
-             FROM ss ORDER BY doc_id"""))
+    s"""WITH ${shingleCtes("documents")}
+             SELECT doc_id, $minhashSigCols
+             FROM ss ORDER BY doc_id""")
 
   // LSH banding: 4 bands × 2 rows; candidate pairs share ≥1 band.
   // maxBucket=0: the oracle has no bucket cap, so the exact twin
@@ -500,20 +540,10 @@ object Queries {
   private val q24 = QueryDef("q24_minhash_lsh_pairs",
     (s, d) => graft.dedup.MinHashLsh.bandPairs(signatureDF(s, d), MinhashK, 2,
       (a, b) => md5(concat_ws("_", a, b)), maxBucket = 0, ordered = true),
-    Some(s"""WITH tt AS (
-               SELECT doc_id, string_split_regex(trim(text), '\\s+') AS tk
-               FROM documents),
-             ss AS (SELECT doc_id, $shingleSql AS sh FROM tt),
-             sig AS (SELECT doc_id, ${(0 until MinhashK).map(i =>
-               s"${minhashSqlExpr(i)} AS h$i").mkString(", ")} FROM ss),
-             bands AS (${(0 until MinhashK / 2).map(b =>
-               s"""SELECT doc_id, $b AS band,
-                   md5(CONCAT(h${2 * b}, '_', h${2 * b + 1})) AS bh FROM sig""")
-               .mkString(" UNION ALL ")})
+    s"""WITH ${bandCtes("documents")}
              SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS n_bands
-             FROM bands a JOIN bands b
-               ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-             GROUP BY 1, 2 ORDER BY d1, d2"""))
+             $bandJoinSql
+             GROUP BY 1, 2 ORDER BY d1, d2""")
 
   // SimHash (16-bit, md5-based bit votes over distinct tokens) — ONE
   // row kernel (graft.sql.SimHash16), bit-identical to the
@@ -522,7 +552,7 @@ object Queries {
     (s, d) => t(s, d, "documents")
       .select(col("doc_id"), graft.sql.SimHash16.sim(col("text")).as("simhash"))
       .orderBy(col("doc_id")),
-    Some {
+    {
       val bitSql = (0 until 16).map { j =>
         s"""CASE WHEN list_sum(list_transform(tk, x ->
             CASE WHEN (CAST(CONCAT('0x', substr(md5(x), 1, 4)) AS BIGINT) >> $j) & 1 = 1
@@ -537,58 +567,76 @@ object Queries {
   // Similarity search over `embeddings`
   // ===================================================================
 
-  /** Cosine similarity: the row kernel (one fused loop; see
-    * [[graft.sql.CosineSim]]). Mathematically identical to
-    * the zip_with+aggregate HOF chain it replaced. */
-  private def cosineCol(a: Column, b: Column): Column =
-    graft.sql.CosineSim(a, b)
+  /** `embeddings` as `(vec_id, [label,] e)`, `e` the embedding as
+    * `array<double>` (the type [[CosineSim]] takes). */
+  private def embeddings(s: SparkSession, d: String, label: Boolean = false): DataFrame =
+    t(s, d, "embeddings").select(Seq(col("vec_id")) ++
+      (if (label) Seq(col("label")) else Nil) :+
+      col("embedding").cast("array<double>").as("e"): _*)
+
+  /** The oracle's cosine of two `DOUBLE[]` expressions. */
+  private def cosineSql(a: String, b: String): String =
+    s"""list_dot_product($a, $b) /
+        (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b)))"""
+
+  /** The ANN tail of q34, q38 and q44: the rows of `cands` (vector `e`
+    * beside the query vector `qe`) ranked by their ROUNDED cosine, ties
+    * to the smaller vec_id, first `k` kept as `(vec_id, keep..., cos)`. */
+  private def topKByCosine(cands: DataFrame, k: Int, keep: String*): DataFrame =
+    cands.withColumn("cos", round(CosineSim(col("e"), col("qe")), 3) + lit(0.0))
+      .orderBy(desc("cos"), col("vec_id"))
+      .select((("vec_id" +: keep) :+ "cos").map(col): _*)
+      .limit(k)
+  /** [[topKByCosine]] as oracle SQL over `from`, whose rows `a` hold
+    * `vec_id`, `keep...` and `e`, beside a `qe` column; vec 0 (the
+    * query) is excluded. */
+  private def topKByCosineSql(from: String, a: String, k: Int, keep: String*): String = {
+    val cos = s"round(${cosineSql(s"$a.e", "qe")}, 3)"
+    s"""SELECT ${(("vec_id" +: keep) :+ "cos").mkString(", ")} FROM (
+          SELECT ${("vec_id" +: keep).map(c => s"$a.$c").mkString(", ")},
+            $cos + 0.0 AS cos,
+            row_number() OVER (ORDER BY $cos DESC, $a.vec_id) AS rk
+          FROM $from
+          WHERE $a.vec_id <> 0) WHERE rk <= $k
+        ORDER BY cos DESC, vec_id"""
+  }
 
   private val q26 = QueryDef("q26_cosine_vs_query",
     (s, d) => {
-      val emb = t(s, d, "embeddings")
-        .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("e"))
+      val emb = embeddings(s, d, label = true)
       val q = emb.filter(col("vec_id") === 0).select(col("e").as("qe"))
       emb.crossJoin(broadcast(q))
         .select(col("vec_id"), col("label"),
-          (round(cosineCol(col("e"), col("qe")), 3) + lit(0.0)).as("cos"))
+          (round(CosineSim(col("e"), col("qe")), 3) + lit(0.0)).as("cos"))
         .orderBy(col("vec_id"))
     },
-    Some("""SELECT e.vec_id, e.label,
-              round(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                    CAST(q.embedding AS DOUBLE[])) /
-                (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                    CAST(e.embedding AS DOUBLE[]))) *
-                 sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                    CAST(q.embedding AS DOUBLE[])))), 3) + 0.0 AS cos
+    s"""SELECT e.vec_id, e.label,
+              round(${cosineSql("CAST(e.embedding AS DOUBLE[])",
+                "CAST(q.embedding AS DOUBLE[])")}, 3) + 0.0 AS cos
             FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-            ORDER BY e.vec_id"""))
+            ORDER BY e.vec_id""")
 
   // brute-force top-k neighbors of each of the first 5 vectors
   private val q27 = QueryDef("q27_knn_bruteforce",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val emb = t(s, d, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
+      val emb = embeddings(s, d)
       val q = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("e").as("qe"))
       val w = Window.partitionBy(col("qid")).orderBy(desc("cos_exact"), col("vec_id"))
       emb.crossJoin(broadcast(q))
         .filter(col("vec_id") =!= col("qid"))
-        .withColumn("cos_exact", cosineCol(col("e"), col("qe")))
+        .withColumn("cos_exact", CosineSim(col("e"), col("qe")))
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") <= 10)
         .select(col("qid"), col("vec_id"), col("rk"),
           (round(col("cos_exact"), 3) + lit(0.0)).as("cos"))
         .orderBy(col("qid"), col("rk"))
     },
-    Some("""WITH pairs AS (
+    s"""WITH pairs AS (
               SELECT q.vec_id AS qid, e.vec_id AS vec_id,
-                list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                    CAST(q.embedding AS DOUBLE[])) /
-                (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                    CAST(e.embedding AS DOUBLE[]))) *
-                 sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                    CAST(q.embedding AS DOUBLE[])))) AS cos_exact
+                ${cosineSql("CAST(e.embedding AS DOUBLE[])",
+                  "CAST(q.embedding AS DOUBLE[])")} AS cos_exact
               FROM embeddings e, embeddings q
               WHERE q.vec_id < 5 AND e.vec_id <> q.vec_id),
             ranked AS (
@@ -598,7 +646,7 @@ object Queries {
                 round(cos_exact, 3) + 0.0 AS cos
               FROM pairs)
             SELECT qid, vec_id, rk, cos FROM ranked WHERE rk <= 10
-            ORDER BY qid, rk"""))
+            ORDER BY qid, rk""")
 
   // ===================================================================
   // Catalog join (J3 media-ref resolution analog)
@@ -616,12 +664,13 @@ object Queries {
     },
     // CAST: DuckDB sum(int) is HUGEINT; the driver hashes it differently
     // from Spark's int64 even when values are equal
-    Some("""SELECT CONCAT('catalog://', source) AS resolved,
+    """SELECT CONCAT('catalog://', source) AS resolved,
               count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-            FROM documents GROUP BY source ORDER BY resolved"""))
+            FROM documents GROUP BY source ORDER BY resolved""")
 
   // ===================================================================
-  // Rows-only queries (not SQL-expressible → weaker rows>0 check)
+  // Engine-defined operators, oracled by a DuckDB replay of the engine's
+  // own arithmetic (pipeline, hashes, parsers)
   // ===================================================================
 
   /** Synthesize the span table from `documents` deterministically
@@ -648,7 +697,7 @@ object Queries {
     // the full pipeline REPLAYED in DuckDB (replace chain → line
     // grouping → wrap-merge fold → sanitize → dense filter → error
     // lexicon → python-round hit ratio) — see [[PipelineOracleSql]]
-    Some(PipelineOracleSql.q29Sql))
+    PipelineOracleSql.q29Sql)
 
   /** Stopword profiles for the q30 language-id heuristic. */
   private val LangProfiles: Seq[(String, Seq[String])] = Seq(
@@ -675,8 +724,7 @@ object Queries {
           col("g.lang").as("lang_pred"), col("g.score").as("score"))
         .orderBy(col("doc_id"))
     },
-    Some {
-      def litList(ws: Seq[String]) = ws.map(w => s"'$w'").mkString("[", ", ", "]")
+    {
       val prof = LangProfiles.toMap
       s"""SELECT doc_id, lang_actual,
             CASE WHEN s_fr >= s_en AND s_fr >= s_de AND s_fr >= s_es THEN 'fr'
@@ -686,10 +734,10 @@ object Queries {
             CAST(greatest(s_de, s_en, s_es, s_fr) AS INT) AS score
           FROM (
             SELECT doc_id, lang AS lang_actual,
-              len(list_distinct(list_intersect(tk, ${litList(prof("en"))}))) AS s_en,
-              len(list_distinct(list_intersect(tk, ${litList(prof("de"))}))) AS s_de,
-              len(list_distinct(list_intersect(tk, ${litList(prof("fr"))}))) AS s_fr,
-              len(list_distinct(list_intersect(tk, ${litList(prof("es"))}))) AS s_es
+              len(list_distinct(list_intersect(tk, ${sqlList(prof("en"))}))) AS s_en,
+              len(list_distinct(list_intersect(tk, ${sqlList(prof("de"))}))) AS s_de,
+              len(list_distinct(list_intersect(tk, ${sqlList(prof("fr"))}))) AS s_fr,
+              len(list_distinct(list_intersect(tk, ${sqlList(prof("es"))}))) AS s_es
             FROM (
               SELECT doc_id, lang,
                 list_distinct(string_split_regex(trim(text), '\\s+')) AS tk
@@ -726,15 +774,14 @@ object Queries {
     }.mkString(" + ")
 
   private val q31 = QueryDef("q31_ann_lsh_buckets",
-    (s, d) => t(s, d, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
+    (s, d) => embeddings(s, d)
       .withColumn("bucket", annBucketCol(col("e")))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_vecs"), min(col("vec_id")).as("min_vec"))
       .orderBy(col("bucket")),
-    Some(s"""SELECT CAST($annBucketSql AS BIGINT) AS bucket,
+    s"""SELECT CAST($annBucketSql AS BIGINT) AS bucket,
                count(*) AS n_vecs, min(vec_id) AS min_vec
-             FROM embeddings GROUP BY 1 ORDER BY 1"""))
+             FROM embeddings GROUP BY 1 ORDER BY 1""")
 
   private val q32 = QueryDef("q32_html_extract",
     (s, d) => {
@@ -763,7 +810,7 @@ object Queries {
     // drop, each ' merge '-separated segment is its own <p> block kept
     // iff ≥3 whitespace tokens (HtmlExtract.MinWords, zero link
     // density), the one <img> is always a media span
-    Some("""WITH segs AS (
+    """WITH segs AS (
               SELECT CAST(doc_id AS VARCHAR) AS doc_id,
                 list_transform(string_split(text, ' merge '),
                   s -> len(list_filter(string_split_regex(trim(s), '\s+'),
@@ -773,7 +820,7 @@ object Queries {
               CAST(coalesce(list_sum(list_filter(cnts, c -> c >= 3)), 0)
                    + 1 AS INT) AS n_spans,
               CAST(1 AS INT) AS n_media
-            FROM segs ORDER BY doc_id"""))
+            FROM segs ORDER BY doc_id""")
 
   /** q33 block-size cap (the q22 pattern on the `label` key): a label
     * block larger than this is dropped instead of expanded
@@ -786,8 +833,7 @@ object Queries {
   // oracle-checked; the LSH-bucketed scale path is q31/q34)
   private val q33 = QueryDef("q33_embed_neardup",
     (s, d) => {
-      val emb = t(s, d, "embeddings")
-        .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("e"))
+      val emb = embeddings(s, d, label = true)
       // bounded blocks only: broadcast the (tiny) blocklist of key counts
       val okLabels = emb.groupBy(col("label"))
         .agg(count(lit(1)).as("_bn"))
@@ -797,32 +843,25 @@ object Queries {
       val a = capped.select(col("vec_id").as("v1"), col("label"), col("e").as("e1"))
       val b = capped.select(col("vec_id").as("v2"), col("label"), col("e").as("e2"))
       a.join(b, Seq("label")).filter(col("v1") < col("v2"))
-        .withColumn("cos", cosineCol(col("e1"), col("e2")))
+        .withColumn("cos", CosineSim(col("e1"), col("e2")))
         .filter(col("cos") >= 0.3)
         .select(col("v1"), col("v2"), col("label"),
           (round(col("cos"), 3) + lit(0.0)).as("cos_r"))
         .orderBy(col("v1"), col("v2"))
     },
-    Some(s"""WITH ok AS (
-              SELECT label FROM embeddings GROUP BY 1
-              HAVING count(*) <= $NeardupLabelCap),
-            e AS (SELECT embeddings.* FROM embeddings JOIN ok USING (label))
-            SELECT a.vec_id AS v1, b.vec_id AS v2, a.label AS label,
-              round(list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                    CAST(b.embedding AS DOUBLE[])) /
-                (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                    CAST(a.embedding AS DOUBLE[]))) *
-                 sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]),
-                    CAST(b.embedding AS DOUBLE[])))), 3) + 0.0 AS cos_r
-            FROM e a JOIN e b
-              ON a.label = b.label AND a.vec_id < b.vec_id
-            WHERE list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                    CAST(b.embedding AS DOUBLE[])) /
-                (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                    CAST(a.embedding AS DOUBLE[]))) *
-                 sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]),
-                    CAST(b.embedding AS DOUBLE[])))) >= 0.3
-            ORDER BY v1, v2"""))
+    {
+      val cos = cosineSql("CAST(a.embedding AS DOUBLE[])", "CAST(b.embedding AS DOUBLE[])")
+      s"""WITH ok AS (
+            SELECT label FROM embeddings GROUP BY 1
+            HAVING count(*) <= $NeardupLabelCap),
+          e AS (SELECT embeddings.* FROM embeddings JOIN ok USING (label))
+          SELECT a.vec_id AS v1, b.vec_id AS v2, a.label AS label,
+            round($cos, 3) + 0.0 AS cos_r
+          FROM e a JOIN e b
+            ON a.label = b.label AND a.vec_id < b.vec_id
+          WHERE $cos >= 0.3
+          ORDER BY v1, v2"""
+    })
 
   // ANN query through the hyperplane-LSH buckets: query vector's
   // bucket → candidates → exact cosine top-5. The planes are fixed
@@ -832,41 +871,25 @@ object Queries {
   // multi-probe).
   private val q34 = QueryDef("q34_ann_query",
     (s, d) => {
-      val emb = t(s, d, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
+      val emb = embeddings(s, d)
         .withColumn("bucket", annBucketCol(col("e")))
       val q = emb.filter(col("vec_id") === 0)
         .select(col("bucket"), col("e").as("qe"))
-      emb.join(broadcast(q), Seq("bucket"))
-        .filter(col("vec_id") =!= 0)
-        .withColumn("cos", round(cosineCol(col("e"), col("qe")), 3) + lit(0.0))
-        .orderBy(desc("cos"), col("vec_id"))
-        .select(col("vec_id"), col("cos"))
-        .limit(5)
+      topKByCosine(emb.join(broadcast(q), Seq("bucket"))
+        .filter(col("vec_id") =!= 0), 5)
     },
-    Some(s"""WITH b AS (
+    s"""WITH b AS (
                SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
                  CAST($annBucketSql AS BIGINT) AS bucket
                FROM embeddings),
              q AS (SELECT bucket, e AS qe FROM b WHERE vec_id = 0)
-             SELECT vec_id, cos FROM (
-               SELECT b.vec_id,
-                 round(list_dot_product(b.e, qe) /
-                   (sqrt(list_dot_product(b.e, b.e)) * sqrt(list_dot_product(qe, qe))), 3)
-                   + 0.0 AS cos,
-                 row_number() OVER (ORDER BY
-                   round(list_dot_product(b.e, qe) /
-                     (sqrt(list_dot_product(b.e, b.e)) * sqrt(list_dot_product(qe, qe))), 3)
-                     DESC, b.vec_id) AS rk
-               FROM b JOIN q USING (bucket)
-               WHERE b.vec_id <> 0) WHERE rk <= 5
-             ORDER BY cos DESC, vec_id"""))
+             ${topKByCosineSql("b JOIN q USING (bucket)", "b", 5)}""")
 
   // multimodal: media refs → synthetic binary payloads → pooled
   // decode → typed metadata aggregation. Image payloads are REAL
   // BMP/PNG/JPEG bytes whose dimensions come from the actual header
   // parse (Media.HeaderDecoder); only video/audio stay on the
-  // documented stub path (rows-only: mixed stub content)
+  // documented stub path, whose bytes the oracle re-hashes
   private val q35 = QueryDef("q35_media_decode",
     (s, d) => {
       val refs = t(s, d, "documents")
@@ -888,7 +911,7 @@ object Queries {
     // 1984). Stub branch (video/audio): re-hash the 32 payload bytes
     // (sign-extended like Scala's Byte→Long) and derive w/frames the
     // way HeaderDecoder's stub fallback does.
-    Some {
+    {
       import WrapSql._
       s"""WITH refs AS (
             SELECT 'media://doc' || CAST(doc_id AS VARCHAR) || '/0' AS ref
@@ -928,13 +951,35 @@ object Queries {
           FROM uni GROUP BY mime ORDER BY mime"""
     })
 
+  /** Winnowing k-gram length and window (q36 and q60). */
+  private val WinnowK = 5
+  private val WinnowW = 4
+
+  /** The oracle's winnow over `documents` as CTEs: `base` (docs with
+    * at least one k-gram, `n` grams each), `g` (one row per gram start
+    * `i`), `h` (the gram's hash, `gramHash` an expression over `text`
+    * and `i`), `w` (the min over the window starting at `i`) and `wf`
+    * (the minima of the windows that fit, clamped to one window). */
+  private def winnowCtes(gramHash: String, distinct: Boolean): String =
+    s"""base AS (
+          SELECT doc_id, text, length(text) - $WinnowK + 1 AS n
+          FROM documents WHERE length(text) >= $WinnowK),
+        g AS (SELECT doc_id, n, text, unnest(range(1, n + 1)) AS i FROM base),
+        h AS (SELECT doc_id, n, i, $gramHash AS h FROM g),
+        w AS (SELECT doc_id, n, i,
+            min(h) OVER (PARTITION BY doc_id ORDER BY i
+              ROWS BETWEEN CURRENT ROW AND ${WinnowW - 1} FOLLOWING) AS fp
+          FROM h),
+        wf AS (SELECT ${if (distinct) "DISTINCT " else ""}doc_id, fp FROM w
+               WHERE i <= greatest(n - $WinnowW + 1, 1))"""
+
   // winnowing rolling-hash fingerprints (Schleimer et al.): shared-
-  // fingerprint near-dup candidates (rows-only: engine-defined hash)
+  // fingerprint near-dup candidates over the engine's Karp–Rabin hash
   private val q36 = QueryDef("q36_winnow_fingerprint",
     (s, d) => {
       val fps = t(s, d, "documents")
         .select(col("doc_id"),
-          graft.sql.WinnowFps.fps(col("text"), 5, 4).as("fps"))
+          graft.sql.WinnowFps.fps(col("text"), WinnowK, WinnowW).as("fps"))
       fps.select(col("doc_id"), explode(col("fps")).as("fp"))
         .groupBy(col("fp"))
         .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
@@ -949,25 +994,13 @@ object Queries {
         .orderBy(desc("shared_fps"), col("d1"), col("d2"))
         .limit(200)
     },
-    // freestanding oracle on the ENGINE's hash: the Karp–Rabin
-    // recurrence is algebraically the plain base-1000003 polynomial
-    // mod 2^64, which DuckDB evaluates exactly in HUGEINT
-    // ([[WrapSql.krGram]]); window-min/dedup/pairing mirror q60's
-    // relational winnow shape. The (shared DESC, d1, d2) sort is a
-    // total order, so the LIMIT is deterministic on both engines.
-    Some(s"""WITH base AS (
-               SELECT doc_id, text, length(text) - 5 + 1 AS n
-               FROM documents WHERE length(text) >= 5),
-             g AS (SELECT doc_id, n, text, unnest(range(1, n + 1)) AS i
-                   FROM base),
-             h AS (SELECT doc_id, n, i, ${WrapSql.krGram("i", 5)} AS h
-                   FROM g),
-             w AS (SELECT doc_id, n, i,
-                 min(h) OVER (PARTITION BY doc_id ORDER BY i
-                   ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
-               FROM h),
-             wf AS (SELECT DISTINCT doc_id, fp FROM w
-                    WHERE i <= greatest(n - 4 + 1, 1)),
+    // oracle on the ENGINE's hash: the Karp–Rabin recurrence is
+    // algebraically the plain base-1000003 polynomial mod 2^64, which
+    // DuckDB evaluates exactly in HUGEINT ([[WrapSql.krGram]]); the
+    // window min is q60's ([[winnowCtes]]). The (shared DESC, d1, d2)
+    // sort is a total order, so the LIMIT is deterministic on both
+    // engines.
+    s"""WITH ${winnowCtes(WrapSql.krGram("i", WinnowK), distinct = true)},
              byfp AS (SELECT fp, list_sort(list(doc_id)) AS ids
                       FROM wf GROUP BY fp),
              ok AS (SELECT ids FROM byfp
@@ -982,7 +1015,7 @@ object Queries {
              cnt AS (SELECT d1, d2, CAST(count(*) AS BIGINT) AS shared_fps
                      FROM p GROUP BY d1, d2 HAVING count(*) >= 2)
            SELECT d1, d2, shared_fps FROM cnt
-           ORDER BY shared_fps DESC, d1, d2 LIMIT 200"""))
+           ORDER BY shared_fps DESC, d1, d2 LIMIT 200""")
 
   // BPE-ish pretokenization (GPT-2-style regex) token counting — the
   // second tokenizer flavor next to whitespace counting (q16)
@@ -994,10 +1027,10 @@ object Queries {
         size(regexp_extract_all(col("text"), lit(BpePattern), lit(0))).as("n_bpe"),
         size(toks(col("text"))).as("n_ws"))
       .orderBy(col("doc_id")),
-    Some(s"""SELECT doc_id,
+    s"""SELECT doc_id,
               len(regexp_extract_all(text, '${BpePattern.replace("'", "''")}')) AS n_bpe,
               len(string_split_regex(trim(text), '\\s+')) AS n_ws
-            FROM documents ORDER BY doc_id"""))
+            FROM documents ORDER BY doc_id""")
 
   // IVF approximate nearest neighbor with a deterministic MEDOID coarse
   // quantizer (cells = the vectors with vec_id 1..8): assignment,
@@ -1011,14 +1044,13 @@ object Queries {
   private val q38 = QueryDef("q38_ann_ivf",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val emb = t(s, d, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
+      val emb = embeddings(s, d)
       val seeds = emb.filter(col("vec_id").between(1, IvfCells))
         .select(col("vec_id").as("cell"), col("e").as("ce"))
       // coarse assignment: argmax cosine over the k broadcast seeds,
       // ties to the smallest cell — one map-side-combined aggregate
       val scored = emb.crossJoin(broadcast(seeds))
-        .withColumn("cs", cosineCol(col("e"), col("ce")))
+        .withColumn("cs", CosineSim(col("e"), col("ce")))
       val assigned = scored
         .groupBy(col("vec_id"))
         .agg(max_by(col("cell"), struct(col("cs"), -col("cell"))).as("cell"),
@@ -1030,23 +1062,17 @@ object Queries {
         .filter(col("rk") <= IvfProbe)
         .select(col("cell"))
       val q = emb.filter(col("vec_id") === 0).select(col("e").as("qe"))
-      assigned.join(broadcast(probe), Seq("cell"))
+      topKByCosine(assigned.join(broadcast(probe), Seq("cell"))
         .filter(col("vec_id") =!= 0)
-        .crossJoin(broadcast(q))
-        .withColumn("cos", round(cosineCol(col("e"), col("qe")), 3) + lit(0.0))
-        .orderBy(desc("cos"), col("vec_id"))
-        .select(col("vec_id"), col("cell"), col("cos"))
-        .limit(10)
+        .crossJoin(broadcast(q)), 10, "cell")
     },
-    Some(s"""WITH emb AS (
+    s"""WITH emb AS (
                SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
              seeds AS (
                SELECT vec_id AS cell, e AS ce FROM emb
                WHERE vec_id BETWEEN 1 AND $IvfCells),
              scored AS (
-               SELECT emb.vec_id, seeds.cell, emb.e,
-                 list_dot_product(e, ce) /
-                   (sqrt(list_dot_product(e, e)) * sqrt(list_dot_product(ce, ce))) AS cs
+               SELECT emb.vec_id, seeds.cell, emb.e, ${cosineSql("e", "ce")} AS cs
                FROM emb, seeds),
              assigned AS (
                SELECT vec_id, cell, e FROM (
@@ -1059,18 +1085,7 @@ object Queries {
                    row_number() OVER (ORDER BY cs DESC, cell) AS rk
                  FROM scored WHERE vec_id = 0) WHERE rk <= $IvfProbe),
              q AS (SELECT e AS qe FROM emb WHERE vec_id = 0)
-             SELECT vec_id, cell, cos FROM (
-               SELECT a.vec_id, a.cell,
-                 round(list_dot_product(a.e, qe) /
-                   (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(qe, qe))), 3)
-                   + 0.0 AS cos,
-                 row_number() OVER (ORDER BY
-                   round(list_dot_product(a.e, qe) /
-                     (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(qe, qe))), 3)
-                     DESC, a.vec_id) AS rk
-               FROM assigned a JOIN probe USING (cell), q
-               WHERE a.vec_id <> 0) WHERE rk <= 10
-             ORDER BY cos DESC, vec_id"""))
+             ${topKByCosineSql("assigned a JOIN probe USING (cell), q", "a", 10, "cell")}""")
 
   // grouping sets / rollup (free from Catalyst; subtotal rows)
   private val q39 = QueryDef("q39_rollup",
@@ -1078,10 +1093,10 @@ object Queries {
       .rollup(col("l_returnflag"), col("l_linestatus"))
       .agg(count(lit(1)).as("n"), round(sum(col("l_quantity")), 2).as("sum_qty"))
       .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first),
-    Some("""SELECT l_returnflag, l_linestatus, count(*) AS n,
+    """SELECT l_returnflag, l_linestatus, count(*) AS n,
               round(sum(l_quantity), 2) AS sum_qty
             FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-            ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST"""))
+            ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""")
 
   // exact percentiles (linear interpolation on both engines)
   private val q40 = QueryDef("q40_percentiles",
@@ -1152,7 +1167,7 @@ object Queries {
     // 10^s in double first (the tie at x*100 breaks the other way).
     // CAST(double AS VARCHAR) is DuckDB's shortest repr; rounding that
     // as DECIMAL reproduces Spark bit-for-bit. Caught at sf0.001.
-    Some("""WITH ranked AS (
+    """WITH ranked AS (
               SELECT l_returnflag, l_extendedprice AS v,
                 row_number() OVER (PARTITION BY l_returnflag
                   ORDER BY l_extendedprice) - 1 AS i,
@@ -1188,14 +1203,13 @@ object Queries {
                 AS DECIMAL(38,18)), 2) AS DOUBLE) AS hi
             FROM ranked r JOIN pcts USING (l_returnflag)
             GROUP BY r.l_returnflag, pcts.p50, pcts.p90
-            ORDER BY r.l_returnflag"""))
+            ORDER BY r.l_returnflag""")
 
   // the PRODUCTION minhash: one row kernel computes the whole
   // signature (tokenize → 3-gram shingle → 8 seeded xxhash64 minima,
   // single pass — see graft.sql.MinHashSig; the interpreted HOF chain
-  // this replaced measured 4.4 s at sf0.1). Engine-defined hash →
-  // rows-only; correctness of the banding shape is carried by the
-  // oracled md5 twin (q24).
+  // this replaced measured 4.4 s at sf0.1). The md5 twin of the same
+  // banding is q24.
   /** q43's rows over `(doc_id, text)` docs: candidate pairs
     * `(d1, d2, n_bands)`. ClusterBench's `dedup` job runs this too. */
   def minhashXxhashPairs(docs: DataFrame): DataFrame =
@@ -1207,9 +1221,8 @@ object Queries {
     (s, d) => minhashXxhashPairs(t(s, d, "documents")),
     // the PRODUCTION hash path is oracled too: DuckDB recomputes the
     // full XXH64 (stripes/merges/tails/avalanche) in HUGEINT mod-2^64
-    // arithmetic — see [[XxHashOracleSql]] — so the engine-defined
-    // signature is no longer trust-me rows-only
-    Some(XxHashOracleSql.q43Sql))
+    // arithmetic — see [[XxHashOracleSql]]
+    XxHashOracleSql.q43Sql)
 
   // the SCALE path next to exact q40: approx_percentile keeps a bounded
   // sketch per group instead of buffering every value (exact percentile
@@ -1250,8 +1263,8 @@ object Queries {
           rankOk(0.9, col("lt90").cast("double"), col("le90").cast("double")).as("p90_ok"))
         .orderBy(col("l_returnflag"))
     },
-    Some("""SELECT l_returnflag, count(*) AS n, TRUE AS p50_ok, TRUE AS p90_ok
-            FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""))
+    """SELECT l_returnflag, count(*) AS n, TRUE AS p50_ok, TRUE AS p90_ok
+            FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""")
 
   // scalar string-function battery (C5/C7-adjacent surface)
   private val q41 = QueryDef("q41_string_funcs",
@@ -1263,12 +1276,12 @@ object Queries {
         levenshtein(col("p_brand"), col("p_type")).as("lev"),
         length(col("p_name")).as("name_len"))
       .orderBy(col("p_partkey")),
-    Some("""SELECT p_partkey, upper(p_brand) AS brand_u,
+    """SELECT p_partkey, upper(p_brand) AS brand_u,
               substr(p_name, 1, 8) AS name8,
               lpad(CAST(p_size AS VARCHAR), 4, '0') AS size_pad,
               levenshtein(p_brand, p_type) AS lev,
               length(p_name) AS name_len
-            FROM part ORDER BY p_partkey"""))
+            FROM part ORDER BY p_partkey""")
 
   // multi-probe hyperplane ANN: probe the query's bucket plus every
   // neighbor within Hamming distance 2 (flip ≤2 hyperplane signs; 79
@@ -1281,8 +1294,7 @@ object Queries {
         yield (1L << i) | (1L << j)))
   private val q44 = QueryDef("q44_ann_multiprobe",
     (s, d) => {
-      val emb = t(s, d, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
+      val emb = embeddings(s, d)
         .withColumn("bucket", annBucketCol(col("e")))
       val masks = ProbeMasks
       val probes = emb.filter(col("vec_id") === 0)
@@ -1290,15 +1302,11 @@ object Queries {
           col("bucket").bitwiseXOR(lit(m))): _*)).as("bucket"))
         .distinct()
       val q = emb.filter(col("vec_id") === 0).select(col("e").as("qe"))
-      emb.join(broadcast(probes), Seq("bucket"))
+      topKByCosine(emb.join(broadcast(probes), Seq("bucket"))
         .filter(col("vec_id") =!= 0)
-        .crossJoin(broadcast(q))
-        .withColumn("cos", round(cosineCol(col("e"), col("qe")), 3) + lit(0.0))
-        .orderBy(desc("cos"), col("vec_id"))
-        .select(col("vec_id"), col("bucket"), col("cos"))
-        .limit(5)
+        .crossJoin(broadcast(q)), 5, "bucket")
     },
-    Some(s"""WITH b AS (
+    s"""WITH b AS (
                SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
                  CAST($annBucketSql AS BIGINT) AS bucket
                FROM embeddings),
@@ -1308,23 +1316,16 @@ object Queries {
                  .mkString("CAST(", " AS BIGINT), CAST(", " AS BIGINT)")}]) AS m) m
                WHERE vec_id = 0),
              q AS (SELECT e AS qe FROM b WHERE vec_id = 0)
-             SELECT vec_id, bucket, cos FROM (
-               SELECT b.vec_id, b.bucket,
-                 round(list_dot_product(b.e, qe) /
-                   (sqrt(list_dot_product(b.e, b.e)) * sqrt(list_dot_product(qe, qe))), 3)
-                   + 0.0 AS cos,
-                 row_number() OVER (ORDER BY
-                   round(list_dot_product(b.e, qe) /
-                     (sqrt(list_dot_product(b.e, b.e)) * sqrt(list_dot_product(qe, qe))), 3)
-                     DESC, b.vec_id) AS rk
-               FROM b JOIN probes USING (bucket), q
-               WHERE b.vec_id <> 0) WHERE rk <= 5
-             ORDER BY cos DESC, vec_id"""))
+             ${topKByCosineSql("b JOIN probes USING (bucket), q", "b", 5, "bucket")}""")
 
   /** Stopword list for the q45 quality signals (subset of the German
     * function-word lexicon — fixed, engine-defined). */
   private val QualityStopwords = Seq("der", "die", "und", "das", "ist",
     "the", "and", "of", "le", "la", "el", "de")
+  private def qualityStopwordsLit: Column = lit(QualityStopwords.toArray)
+
+  /** A DuckDB list literal of strings: `['a', 'b']`. */
+  private def sqlList(ws: Seq[String]): String = ws.map(w => s"'$w'").mkString("[", ", ", "]")
 
   // text-quality signal battery (training-data curation: length,
   // token shape, stopword density, digit density) — all deterministic
@@ -1332,24 +1333,23 @@ object Queries {
   private val q45 = QueryDef("q45_quality_signals",
     (s, d) => {
       val tk = toks(col("text"))
-      val swLit = lit(QualityStopwords.toArray)
       t(s, d, "documents")
         .select(col("doc_id"), tk.as("tk"), length(col("text")).as("len"))
         .select(col("doc_id"), col("len"),
           size(col("tk")).as("n_tokens"),
           (round(aggregate(col("tk"), lit(0), (acc, x) => acc + length(x))
             .cast("double") / size(col("tk")), 3) + lit(0.0)).as("mean_tok_len"),
-          (round(size(filter(col("tk"), x => array_contains(swLit, x)))
+          (round(size(filter(col("tk"), x => array_contains(qualityStopwordsLit, x)))
             .cast("double") / size(col("tk")), 3) + lit(0.0)).as("stopword_ratio"),
           (round(size(filter(col("tk"), x => x.rlike("[0-9]")))
             .cast("double") / size(col("tk")), 3) + lit(0.0)).as("digit_ratio"))
         .orderBy(col("doc_id"))
     },
-    Some(s"""SELECT doc_id, len, n_tokens,
+    s"""SELECT doc_id, len, n_tokens,
               round(CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE)
                 / n_tokens, 3) + 0.0 AS mean_tok_len,
               round(CAST(len(list_filter(tk, x -> list_contains(
-                [${QualityStopwords.map(w => s"'$w'").mkString(", ")}], x))) AS DOUBLE)
+                ${sqlList(QualityStopwords)}, x))) AS DOUBLE)
                 / n_tokens, 3) + 0.0 AS stopword_ratio,
               round(CAST(len(list_filter(tk, x -> regexp_matches(x, '[0-9]'))) AS DOUBLE)
                 / n_tokens, 3) + 0.0 AS digit_ratio
@@ -1358,7 +1358,7 @@ object Queries {
                 string_split_regex(trim(text), '\\s+') AS tk,
                 len(string_split_regex(trim(text), '\\s+')) AS n_tokens
               FROM documents)
-            ORDER BY doc_id"""))
+            ORDER BY doc_id""")
 
   // benchmark decontamination: flag corpus docs sharing word 3-grams
   // with a benchmark set (docs 0-4 stand in for the eval set — derived
@@ -1378,7 +1378,7 @@ object Queries {
         .withColumn("contaminated", (col("n_shared") >= 3).cast("int"))
         .orderBy(col("doc_id"))
     },
-    Some("""WITH tk AS (
+    """WITH tk AS (
               SELECT doc_id, string_split_regex(trim(text), '\s+') AS tk
               FROM documents),
             sh AS (
@@ -1392,7 +1392,7 @@ object Queries {
               CAST(count(DISTINCT a.s) >= 3 AS INT) AS contaminated
             FROM sh a JOIN bench b USING (s)
             WHERE a.doc_id >= 5
-            GROUP BY a.doc_id ORDER BY a.doc_id"""))
+            GROUP BY a.doc_id ORDER BY a.doc_id""")
 
   // PII scrubbing: redact emails and long digit runs, report per-doc
   // redaction counts and the digest of the scrubbed text. The corpus
@@ -1413,7 +1413,7 @@ object Queries {
             DigitRunPat, "<NUM>")).as("scrubbed_md5"))
         .orderBy(col("doc_id"))
     },
-    Some(s"""SELECT doc_id,
+    s"""SELECT doc_id,
               len(regexp_extract_all(pii, '$EmailPat')) AS n_emails,
               len(regexp_extract_all(pii, '$DigitRunPat')) AS n_nums,
               md5(regexp_replace(regexp_replace(pii, '$EmailPat', '<EMAIL>', 'g'),
@@ -1423,7 +1423,7 @@ object Queries {
                 CAST(doc_id AS VARCHAR), '@mail.example tel ',
                 lpad(CAST(doc_id AS VARCHAR), 9, '5')) AS pii
               FROM documents)
-            ORDER BY doc_id"""))
+            ORDER BY doc_id""")
 
   // corpus vocabulary statistics per language: exact distinct-token
   // count (explode → distinct agg) + total token volume. Exact kept
@@ -1437,11 +1437,11 @@ object Queries {
       .agg(countDistinct(col("tok")).as("vocab"),
         count(lit(1)).as("n_tokens"))
       .orderBy(col("lang")),
-    Some("""SELECT lang, count(DISTINCT tok) AS vocab, count(*) AS n_tokens
+    """SELECT lang, count(DISTINCT tok) AS vocab, count(*) AS n_tokens
             FROM (
               SELECT lang, unnest(string_split_regex(trim(text), '\s+')) AS tok
               FROM documents)
-            GROUP BY lang ORDER BY lang"""))
+            GROUP BY lang ORDER BY lang""")
 
   // top-k tokens by corpus frequency (deterministic tie-break on the
   // token) — the classic corpus-stats op; map-side partial aggregation
@@ -1464,14 +1464,14 @@ object Queries {
         .select(col("rk"), col("tok"), col("n"))
         .orderBy(col("rk"))
     },
-    Some("""SELECT rk, tok, n FROM (
+    """SELECT rk, tok, n FROM (
               SELECT tok, count(*) AS n,
                 row_number() OVER (ORDER BY count(*) DESC, tok) AS rk
               FROM (
                 SELECT unnest(string_split_regex(trim(text), '\s+')) AS tok
                 FROM documents)
               GROUP BY tok)
-            WHERE rk <= 20 ORDER BY rk"""))
+            WHERE rk <= 20 ORDER BY rk""")
 
   // the SCALE twin of exact q48: HyperLogLog++ sketches keep the
   // per-group state bounded (a few KB) no matter how unbounded the
@@ -1502,12 +1502,12 @@ object Queries {
         (abs(col("va") - col("vocab_exact")).cast("double")
           <= lit(5 * 0.05) * col("vocab_exact").cast("double")).as("vocab_ok"))
       .orderBy(col("lang")),
-    Some("""SELECT lang, count(DISTINCT tok) AS vocab_exact,
+    """SELECT lang, count(DISTINCT tok) AS vocab_exact,
               count(*) AS n_tokens, TRUE AS vocab_ok
             FROM (
               SELECT lang, unnest(string_split_regex(trim(text), '\s+')) AS tok
               FROM documents)
-            GROUP BY lang ORDER BY lang"""))
+            GROUP BY lang ORDER BY lang""")
 
   // as-of join (an operator Spark lacks natively): each purchase event
   // matched to the user's latest click at-or-before it — via the
@@ -1515,13 +1515,19 @@ object Queries {
   // zero joins, never the quadratic range self-join). Tie rules
   // (<=; equal-ts clicks resolve to the largest payload) are mirrored
   // in the oracle's window formulation.
+  /** The as-of sides of q51 and q59: `events`' purchases as
+    * `(event_id, user_id, ts)` and clicks as `(user_id, ts, event_id)`. */
+  private def purchasesAndClicks(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val ev = t(s, d, "events")
+    (ev.filter(col("event_type") === "purchase")
+        .select(col("event_id"), col("user_id"), col("ts")),
+      ev.filter(col("event_type") === "click")
+        .select(col("user_id"), col("ts"), col("event_id")))
+  }
+
   private val q51 = QueryDef("q51_asof_join",
     (s, d) => {
-      val ev = t(s, d, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("event_id"))
+      val (purchases, clicks) = purchasesAndClicks(s, d)
       graft.ops.AsOfJoin.asOf(purchases, clicks,
           key = "user_id", leftTs = "ts", rightTs = "ts", carry = Seq("event_id"))
         .select(col("event_id"), col("user_id"),
@@ -1532,7 +1538,7 @@ object Queries {
             - col("asof.ts").cast("timestamp").cast("double")).cast("bigint").as("gap_s"))
         .orderBy(col("event_id"))
     },
-    Some("""WITH u AS (
+    """WITH u AS (
               SELECT user_id AS k, ts, 0 AS is_r, event_id,
                 CAST(NULL AS BIGINT) AS r_eid, CAST(NULL AS TIMESTAMP) AS r_ts
               FROM events WHERE event_type = 'purchase'
@@ -1550,7 +1556,7 @@ object Queries {
               FROM u)
             SELECT event_id, k AS user_id, a_eid AS click_event_id,
               CAST(floor(epoch(ts) - epoch(a_ts)) AS BIGINT) AS gap_s
-            FROM w WHERE is_r = 0 ORDER BY event_id"""))
+            FROM w WHERE is_r = 0 ORDER BY event_id""")
 
   // range join via binning (graft.ops.RangeJoin): events against 60
   // overlapping 18-hour windows — the theta-join becomes an equi-join
@@ -1571,14 +1577,14 @@ object Queries {
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_val"))
         .orderBy(col("w_id"))
     },
-    Some("""WITH w AS (
+    """WITH w AS (
               SELECT CAST(i AS INT) AS w_id,
                 TIMESTAMP '2024-01-01 00:00:00' + to_seconds(i * 43200) AS ws,
                 TIMESTAMP '2024-01-01 00:00:00' + to_seconds(i * 43200 + 64800) AS we
               FROM (SELECT unnest(range(60)) AS i))
             SELECT w_id, count(*) AS n, round(sum(value), 2) AS sum_val
             FROM events e JOIN w ON e.ts >= w.ws AND e.ts < w.we
-            GROUP BY 1 ORDER BY 1"""))
+            GROUP BY 1 ORDER BY 1""")
 
   // salted skew join (graft.sql.Skew.saltedJoin — north_rule "skew …
   // handled with salted repartitioning"): the fact side gets a
@@ -1598,11 +1604,11 @@ object Queries {
           count(lit(1)).as("n"))
         .orderBy(col("s_name"))
     },
-    Some("""SELECT s_name,
+    """SELECT s_name,
               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
               count(*) AS n
             FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-            GROUP BY 1 ORDER BY 1"""))
+            GROUP BY 1 ORDER BY 1""")
 
   // int8 scalar quantization of the embedding column (the 4×
   // memory/bandwidth lever for 10^9-vector ANN serving): per-vector
@@ -1613,8 +1619,7 @@ object Queries {
   private val q54 = QueryDef("q54_embed_quantize",
     (s, d) => {
       def qz(x: Column, scale: Column): Column = floor(x * scale + 0.5)
-      t(s, d, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
+      embeddings(s, d)
         .withColumn("scale", lit(127.0) /
           greatest(aggregate(col("e"), lit(0.0), (acc, x) => greatest(acc, abs(x))),
             lit(1e-12)))
@@ -1627,7 +1632,7 @@ object Queries {
             / size(col("e")), 6) + lit(0.0)).as("mean_abs_err"))
         .orderBy(col("vec_id"))
     },
-    Some("""WITH s AS (
+    """WITH s AS (
               SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
                 127.0 / greatest(list_max(list_transform(
                   CAST(embedding AS DOUBLE[]), x -> abs(x))), 1e-12) AS scale
@@ -1638,7 +1643,7 @@ object Queries {
               round(list_sum(list_transform(e,
                 x -> abs(floor(x * scale + 0.5) / scale - x))) / len(e), 6) + 0.0
                 AS mean_abs_err
-            FROM s ORDER BY vec_id"""))
+            FROM s ORDER BY vec_id""")
 
   // tf-idf: corpus document frequencies + per-doc top-3 terms — the
   // classic relevance/keyword-extraction op. The df table is
@@ -1666,7 +1671,7 @@ object Queries {
         .select(col("doc_id"), col("rk"), col("tok"), col("tf"), col("df"), col("score"))
         .orderBy(col("doc_id"), col("rk"))
     },
-    Some("""WITH tk AS (
+    """WITH tk AS (
               SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS tok
               FROM documents),
             tf AS (SELECT doc_id, tok, count(*) AS tf FROM tk GROUP BY 1, 2),
@@ -1682,7 +1687,7 @@ object Queries {
                 ORDER BY score DESC, tok) AS rk
               FROM scored)
             SELECT doc_id, rk, tok, tf, df, score FROM ranked
-            WHERE rk <= 3 ORDER BY doc_id, rk"""))
+            WHERE rk <= 3 ORDER BY doc_id, rk""")
 
   // unigram-LM quality score: mean log-probability of each document
   // under the corpus's own unigram distribution — the deterministic
@@ -1703,7 +1708,7 @@ object Queries {
             / count(lit(1)), 3) + lit(0.0)).as("mean_lp"))
         .orderBy(col("doc_id"))
     },
-    Some("""WITH tk AS (
+    """WITH tk AS (
               SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS tok
               FROM documents),
             f AS (SELECT tok, count(*) AS cnt FROM tk GROUP BY 1),
@@ -1711,7 +1716,7 @@ object Queries {
             SELECT doc_id, count(*) AS n_tokens,
               round(sum(ln(CAST(cnt AS DOUBLE) / total)) / count(*), 3) + 0.0 AS mean_lp
             FROM tk JOIN f USING (tok), t
-            GROUP BY doc_id ORDER BY doc_id"""))
+            GROUP BY doc_id ORDER BY doc_id""")
 
   // PDF layout parse (north_rule), driven end-to-end: each document is
   // rendered to a REAL multi-line PDF (FlateDecode content stream + an
@@ -1755,12 +1760,12 @@ object Queries {
 
   private val q57 = QueryDef("q57_pdf_extract",
     (s, d) => pdfParse(s, pdfRender(s, d)),
-    Some("""SELECT CAST(doc_id AS VARCHAR) AS doc_id,
+    """SELECT CAST(doc_id AS VARCHAR) AS doc_id,
               CAST(CASE WHEN length(trim(text)) = 0 THEN 1
                    ELSE len(string_split_regex(trim(text), '\s+')) + 1 END AS INT)
                 AS n_spans,
               CAST(1 AS INT) AS n_media
-            FROM documents ORDER BY doc_id"""))
+            FROM documents ORDER BY doc_id""")
 
   // repetition signals (the Gopher-rules repetition filter family):
   // duplicate-token fraction, most-frequent-bigram mass, and
@@ -1792,7 +1797,7 @@ object Queries {
             .otherwise(0.0).as("adjacent_rep_frac"))
         .orderBy(col("doc_id"))
     },
-    Some("""WITH base AS (
+    """WITH base AS (
               SELECT doc_id, string_split_regex(trim(text), '\s+') AS tk,
                 len(string_split_regex(trim(text), '\s+')) AS n
               FROM documents),
@@ -1815,7 +1820,7 @@ object Queries {
                   i -> tk[i] = tk[i + 1])) AS DOUBLE) / (n - 1), 3) + 0.0
               ELSE 0.0 END AS adjacent_rep_frac
             FROM base LEFT JOIN agg USING (doc_id)
-            ORDER BY base.doc_id"""))
+            ORDER BY base.doc_id""")
 
   // as-of join, nearest direction with a tolerance bound (the full
   // pandas merge_asof surface on top of the same union+window shape as
@@ -1825,11 +1830,7 @@ object Queries {
   private val AsofTolSecs = 86400
   private val q59 = QueryDef("q59_asof_nearest_tolerance",
     (s, d) => {
-      val ev = t(s, d, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("event_id"))
+      val (purchases, clicks) = purchasesAndClicks(s, d)
       graft.ops.AsOfJoin.asOf(purchases, clicks,
           key = "user_id", leftTs = "ts", rightTs = "ts",
           carry = Seq("event_id"), direction = "nearest",
@@ -1843,7 +1844,7 @@ object Queries {
             .cast("bigint").as("gap_s"))
         .orderBy(col("event_id"))
     },
-    Some(s"""WITH p AS (SELECT event_id, user_id, ts FROM events
+    s"""WITH p AS (SELECT event_id, user_id, ts FROM events
                         WHERE event_type = 'purchase'),
              c AS (SELECT user_id, ts, event_id FROM events
                    WHERE event_type = 'click'),
@@ -1877,66 +1878,41 @@ object Queries {
              CASE WHEN abs(epoch(ts) - epoch(n_ts)) <= $AsofTolSecs
                   THEN CAST(floor(abs(epoch(ts) - epoch(n_ts))) AS BIGINT)
                   END AS gap_s
-           FROM pick ORDER BY event_id"""))
+           FROM pick ORDER BY event_id""")
 
   // winnowing with an ORACLE-REPRODUCIBLE hash: the q23/q24 pattern
   // applied to the winnow family — same window semantics as the
-  // production Karp–Rabin path (q36/q43, graft.text.Winnow) but with
+  // production Karp–Rabin path (q36, graft.text.Winnow) but with
   // md5-hex k-gram hashes both engines compute bit-identically, so the
   // rolling-min + dedup + sort machinery itself is oracled end-to-end.
-  // Shape note: this is deliberately RELATIONAL (explode → window min
-  // → group), not a per-doc HOF — a nested `transform(..., j =>
-  // slice(grams, j, w))` re-inlines the md5 gram array into the lambda
-  // and recomputes it per window (O(n²) interpreted md5 per doc; HOF
-  // lambdas sit outside codegen CSE). The window form is one exchange
-  // on doc_id, reused by the groupBy.
-  private val WinnowMdK = 5
-  private val WinnowMdW = 4
   private val q60 = QueryDef("q60_winnow_md5_oracle",
     (s, d) => {
-      val k = WinnowMdK
-      val w = WinnowMdW
       // ONE codegen'd pass per document ([[graft.sql.Md5WinnowFps]]):
       // gram md5s, clamped window minima, dedup+sort — bit-identical to
       // the posexplode → window-min → collect_set/array_sort chain it
       // replaces (pinned by Md5WinnowFpsSpec), but with no Generate
       // row blow-up (one row per GRAM), no exchange+sort for the
       // per-doc window and no ObjectHashAggregate pair for the set —
-      // the only remaining exchange is the final presentation sort
+      // the only remaining exchange is the final presentation sort.
+      // The oracle keeps the relational shape (one row per gram).
       val base = t(s, d, "documents")
-        .filter(length(col("text")) >= k)
+        .filter(length(col("text")) >= WinnowK)
       base.select(col("doc_id"),
-          graft.sql.Md5WinnowFps.fps(col("text"), k, w).as("fps"))
+          graft.sql.Md5WinnowFps.fps(col("text"), WinnowK, WinnowW).as("fps"))
         .select(col("doc_id"),
           size(col("fps")).cast("bigint").as("n_fps"),
           md5(array_join(col("fps"), ",")).as("fp_digest"))
         .orderBy(col("doc_id"))
     },
-    Some(s"""WITH base AS (
-               SELECT doc_id, text, length(text) - $WinnowMdK + 1 AS n
-               FROM documents WHERE length(text) >= $WinnowMdK),
-             g AS (
-               SELECT doc_id, n, text, unnest(range(1, n + 1)) AS i
-               FROM base),
-             h AS (
-               SELECT doc_id, n, i,
-                 md5(substring(text, CAST(i AS INT), $WinnowMdK)) AS h
-               FROM g),
-             w AS (
-               SELECT doc_id, n, i,
-                 min(h) OVER (PARTITION BY doc_id ORDER BY i
-                   ROWS BETWEEN CURRENT ROW AND ${WinnowMdW - 1} FOLLOWING) AS fp
-               FROM h),
-             wf AS (
-               SELECT doc_id, fp FROM w
-               WHERE i <= greatest(n - $WinnowMdW + 1, 1)),
+    s"""WITH ${winnowCtes(s"md5(substring(text, CAST(i AS INT), $WinnowK))",
+               distinct = false)},
              agg AS (
                SELECT doc_id,
                  list_sort(list_distinct(list(fp))) AS fps
                FROM wf GROUP BY doc_id)
            SELECT doc_id, CAST(len(fps) AS BIGINT) AS n_fps,
              md5(array_to_string(fps, ',')) AS fp_digest
-           FROM agg ORDER BY doc_id"""))
+           FROM agg ORDER BY doc_id""")
 
   // the mixed-format ingestion surface (S3/J2/X1/T3) promoted to the
   // contract: a deterministic mini-corpus (ALTO, BOM'd ALTO, HTML, PDF,
@@ -1986,13 +1962,13 @@ object Queries {
           size(filter(col("spans"), x => x.getField("kind") === graft.run.IngestXml.KindError)).as("n_err"))
         .orderBy(col("doc_id"))
     },
-    Some("""SELECT * FROM (VALUES
+    """SELECT * FROM (VALUES
               ('alto_a', 4, 1, 0),
               ('bom_e', 2, 0, 0),
               ('html_b', 6, 1, 0),
               ('junk_d', 0, 0, 1),
               ('pdf_c', 4, 1, 0)) AS t(doc_id, n_text, n_media, n_err)
-            ORDER BY doc_id"""))
+            ORDER BY doc_id""")
 
   // near-dup CLUSTERS: the step after candidate pairs that a real
   // dedup pipeline keeps — connected components over the q24-style
@@ -2022,33 +1998,10 @@ object Queries {
 
   private val q62 = QueryDef("q62_neardup_clusters",
     (s, d) => neardupClusters(t(s, d, "documents")).orderBy(col("doc_id")),
-    Some(s"""WITH RECURSIVE tt AS (
-               SELECT doc_id, string_split_regex(trim(text), '\\s+') AS tk
-               FROM documents),
-             ss AS (SELECT doc_id, $shingleSql AS sh FROM tt),
-             sig AS (SELECT doc_id, ${(0 until MinhashK).map(i =>
-               s"${minhashSqlExpr(i)} AS h$i").mkString(", ")} FROM ss),
-             bands AS (${(0 until MinhashK / 2).map(b =>
-               s"""SELECT doc_id, $b AS band,
-                   md5(CONCAT(h${2 * b}, '_', h${2 * b + 1})) AS bh FROM sig""")
-               .mkString(" UNION ALL ")}),
-             pairs AS (
-               SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-               FROM bands a JOIN bands b
-                 ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
-             edges AS (SELECT d1 AS src, d2 AS dst FROM pairs
-                       UNION ALL SELECT d2, d1 FROM pairs),
-             reach(node, lbl) AS (
-               SELECT doc_id, doc_id FROM documents
-               UNION
-               SELECT e.dst, r.lbl FROM reach r JOIN edges e ON r.node = e.src),
-             cc AS (SELECT node AS doc_id, min(lbl) AS cluster_id
-                    FROM reach GROUP BY node),
-             sz AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
-                    FROM cc GROUP BY 1)
+    s"""WITH RECURSIVE ${neardupClusterSql("documents")}
            SELECT cc.doc_id, cc.cluster_id, sz.cluster_size,
              (cc.doc_id = cc.cluster_id) AS is_canonical
-           FROM cc JOIN sz USING (cluster_id) ORDER BY cc.doc_id"""))
+           FROM cc JOIN sz USING (cluster_id) ORDER BY cc.doc_id""")
 
   // REAL BPE next to q37's pretokenizer: learn a merge table with the
   // distributed word-type reduction + driver-side Sennrich loop
@@ -2076,14 +2029,14 @@ object Queries {
           array_join(col("toks"), " ").as("toks"))
         .orderBy(col("doc_id"))
     },
-    Some("""SELECT * FROM (VALUES
+    """SELECT * FROM (VALUES
               ('d1', 5, 5, 'low</w> low</w> low</w> low</w> low</w>'),
               ('d2', 2, 8, 'low e r </w> low e r </w>'),
               ('d3', 6, 6, 'newest</w> newest</w> newest</w> newest</w> newest</w> newest</w>'),
               ('d4', 3, 9, 'w i dest</w> w i dest</w> w i dest</w>'),
               ('d5', 5, 16, 'low</w> low e r </w> newest</w> w i dest</w> u n s e e n </w>'))
             AS t(doc_id, n_words, n_bpe, toks)
-            ORDER BY doc_id"""))
+            ORDER BY doc_id""")
 
   // the END-TO-END curation pipeline a training-data run actually
   // ships, as ONE query: Gopher-style quality gate (token-count
@@ -2099,24 +2052,14 @@ object Queries {
     * kept_tokens)`. ClusterBench's `curate` job runs this too. */
   def curationPipeline(docs: DataFrame): DataFrame = {
     val tk = toks(col("text"))
-    val swLit = lit(QualityStopwords.toArray)
     val quality = docs.select(col("doc_id"), col("text"),
         size(tk).as("n_tokens"),
-        size(filter(tk, x => array_contains(swLit, x))).as("n_sw"))
+        size(filter(tk, x => array_contains(qualityStopwordsLit, x))).as("n_sw"))
       .withColumn("q_pass",
         col("n_tokens").between(25, 80) && col("n_sw") >= 1)
-    val passed = quality.filter(col("q_pass"))
-      .select(col("doc_id"), col("text"))
-    val sig = graft.dedup.MinHashLsh.md5Signature(
-      passed, "doc_id", "text", MinhashK)
-    val edges = graft.dedup.MinHashLsh.bandStarEdges(sig, MinhashK, 2,
-      (a, b) => md5(concat_ws("_", a, b)))
-    val cc = graft.ops.ConnectedComponents.run(
-      passed.select(col("doc_id")), "doc_id", edges, "d1", "d2")
-    val sizes = cc.groupBy(col("lbl")).agg(count(lit(1)).as("cluster_size"))
-    val clustered = cc.join(sizes, "lbl")
-      .select(col("node").as("doc_id"), col("lbl").as("cluster_id"),
-        col("cluster_size"))
+    val clustered = neardupClusters(quality.filter(col("q_pass"))
+        .select(col("doc_id"), col("text")))
+      .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
     quality
       .select(col("doc_id"), col("n_tokens"),
         col("q_pass").cast("int").as("q_pass"))
@@ -2131,42 +2074,18 @@ object Queries {
 
   private val q64 = QueryDef("q64_curation_pipeline",
     (s, d) => curationPipeline(t(s, d, "documents")).orderBy(col("doc_id")),
-    Some(s"""WITH RECURSIVE qual AS (
+    s"""WITH RECURSIVE qual AS (
                SELECT doc_id, text,
                  CAST(len(string_split_regex(trim(text), '\\s+')) AS INT)
                    AS n_tokens,
                  len(list_filter(string_split_regex(trim(text), '\\s+'),
-                   x -> list_contains([${QualityStopwords
-                     .map(w => s"'$w'").mkString(", ")}], x))) AS n_sw
+                   x -> list_contains(${sqlList(QualityStopwords)}, x))) AS n_sw
                FROM documents),
              q AS (SELECT doc_id, text, n_tokens,
                      (n_tokens BETWEEN 25 AND 80 AND n_sw >= 1) AS q_pass
                    FROM qual),
              passed AS (SELECT doc_id, text FROM q WHERE q_pass),
-             tt AS (
-               SELECT doc_id, string_split_regex(trim(text), '\\s+') AS tk
-               FROM passed),
-             ss AS (SELECT doc_id, $shingleSql AS sh FROM tt),
-             sig AS (SELECT doc_id, ${(0 until MinhashK).map(i =>
-               s"${minhashSqlExpr(i)} AS h$i").mkString(", ")} FROM ss),
-             bands AS (${(0 until MinhashK / 2).map(b =>
-               s"""SELECT doc_id, $b AS band,
-                   md5(CONCAT(h${2 * b}, '_', h${2 * b + 1})) AS bh FROM sig""")
-               .mkString(" UNION ALL ")}),
-             pairs AS (
-               SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-               FROM bands a JOIN bands b
-                 ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
-             edges AS (SELECT d1 AS src, d2 AS dst FROM pairs
-                       UNION ALL SELECT d2, d1 FROM pairs),
-             reach(node, lbl) AS (
-               SELECT doc_id, doc_id FROM passed
-               UNION
-               SELECT e.dst, r.lbl FROM reach r JOIN edges e ON r.node = e.src),
-             cc AS (SELECT node AS doc_id, min(lbl) AS cluster_id
-                    FROM reach GROUP BY node),
-             sz AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
-                    FROM cc GROUP BY 1)
+             ${neardupClusterSql("passed")}
            SELECT q.doc_id, CAST(q.q_pass AS INT) AS q_pass,
              cc.cluster_id, sz.cluster_size,
              coalesce(CAST(q.doc_id = cc.cluster_id AS INT), 0) AS kept,
@@ -2175,7 +2094,7 @@ object Queries {
            FROM q
            LEFT JOIN cc ON q.doc_id = cc.doc_id
            LEFT JOIN sz ON cc.cluster_id = sz.cluster_id
-           ORDER BY q.doc_id"""))
+           ORDER BY q.doc_id""")
 
   // ExactSubstr-style repeated-span dedup (Lee et al., "Deduplicating
   // Training Data Makes Language Models Better", arXiv:2107.06499):
@@ -2246,7 +2165,7 @@ object Queries {
 
   private val q65 = QueryDef("q65_exact_substr_dedup",
     (s, d) => exactSubstrDedup(t(s, d, "documents")).orderBy(col("doc_id")),
-    Some(s"""WITH base AS (
+    s"""WITH base AS (
                SELECT doc_id,
                  CASE WHEN length(trim(text)) = 0
                       THEN CAST([] AS VARCHAR[])
@@ -2287,7 +2206,7 @@ object Queries {
                         ELSE round(coalesce(dd.dup_tokens, 0) / b.n_tokens, 4)
                    END) < 0.5 AS INT) AS kept
            FROM sized b LEFT JOIN dd USING (doc_id)
-           ORDER BY doc_id"""))
+           ORDER BY doc_id""")
 
   /** All queries, in stable order. */
   val all: Seq[QueryDef] = Seq(

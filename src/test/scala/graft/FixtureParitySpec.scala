@@ -44,7 +44,7 @@ class FixtureParitySpec extends AnyFunSuite {
       withFixture(name) { xml =>
         val parsed = parser.parse(xml)
         assert(parsed.dialect == dialect)
-        val lines = OcrXmlParser.getLines(parsed, minLen = 2)
+        val lines = ReferenceLines.getLines(parsed, minLen = 2)
         assert(lines.size == expected)
       }
     }
@@ -53,7 +53,7 @@ class FixtureParitySpec extends AnyFunSuite {
   // test_ocr_model.py:42-54 — min_len=32 on the newspaper page
   test("min_len=32 keeps 225 lines of 1667522809_J_0073_0512") {
     withFixture("1667522809_J_0073_0512.xml") { xml =>
-      val lines = OcrXmlParser.getLines(parser.parse(xml), minLen = 32)
+      val lines = ReferenceLines.getLines(parser.parse(xml), minLen = 32)
       assert(lines.size == 225)
     }
   }
@@ -62,7 +62,7 @@ class FixtureParitySpec extends AnyFunSuite {
   test("1123596.xml raises 'just words for line'") {
     withFixture("1123596.xml") { xml =>
       val parsed = parser.parse(xml)
-      val err = intercept[ParseError](OcrXmlParser.getLines(parsed))
+      val err = intercept[ParseError](ReferenceLines.getLines(parsed))
       assert(err.getMessage.contains("just words for line"))
     }
   }
@@ -70,7 +70,7 @@ class FixtureParitySpec extends AnyFunSuite {
   // test_steps.py:460-472 — 360 lines in, 346 dense lines out
   test("500_gray00003: textlines2data 360 → 346") {
     withFixture("500_gray00003.xml") { xml =>
-      val lines = OcrXmlParser.getLines(parser.parse(xml))
+      val lines = ReferenceLines.getLines(parser.parse(xml))
       assert(lines.size == 360)
       val (_, nIn, _, _, nOut) =
         TextRules.textlinesToData(lines.map(_.content))
@@ -82,7 +82,7 @@ class FixtureParitySpec extends AnyFunSuite {
   // test_steps.py:233-252, :425-438 — empty ALTO file behavior
   test("0041.xml (empty PrintSpace): no lines, no stats, empty word string") {
     withFixture("0041.xml") { xml =>
-      val lines = OcrXmlParser.getLines(parser.parse(xml))
+      val lines = ReferenceLines.getLines(parser.parse(xml))
       assert(lines.isEmpty)
     }
   }
@@ -90,7 +90,7 @@ class FixtureParitySpec extends AnyFunSuite {
   // test_steps.py:547-569 — sparse junk sanitized to nothing
   test("1667524704_J_0173_0173.xml: all content sanitized away") {
     withFixture("1667524704_J_0173_0173.xml") { xml =>
-      val lines = OcrXmlParser.getLines(parser.parse(xml))
+      val lines = ReferenceLines.getLines(parser.parse(xml))
       val (wordString, _, _, _, _) =
         TextRules.textlinesToData(lines.map(_.content))
       assert(wordString.isEmpty)
@@ -179,10 +179,10 @@ class FixtureParitySpec extends AnyFunSuite {
         |</TextLine></TextRegion></Page></PcGts>""".stripMargin
     val parsed = parser.parse(xml)
     // horizontal (default): truncated x-centers 20 < 50 < 90
-    assert(OcrXmlParser.getLines(parsed).map(_.words) ==
+    assert(ReferenceLines.getLines(parsed).map(_.words) ==
       Vector(Vector("unten", "mitte", "oben")))
     // vertical: truncated y-centers 20 < 110 < 210
-    assert(OcrXmlParser.getLines(parsed, vertical = true).map(_.words) ==
+    assert(ReferenceLines.getLines(parsed, vertical = true).map(_.words) ==
       Vector(Vector("oben", "mitte", "unten")))
     // the span flattening agrees with the line model on both paths
     def spanTexts(vertical: Boolean) =

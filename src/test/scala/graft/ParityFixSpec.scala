@@ -29,7 +29,7 @@ class ParityFixSpec extends SparkSpecBase {
         |<Word id="w2"><Coords points="45,0 55,0"/>
         |  <TextEquiv><Unicode>zwei</Unicode></TextEquiv></Word>
         |</TextLine>""".stripMargin)
-    val lines = OcrXmlParser.getLines(parser.parse(xml))
+    val lines = ReferenceLines.getLines(parser.parse(xml))
     assert(lines.map(_.words) == Vector(Vector("eins", "zwei")))
   }
 
@@ -41,7 +41,7 @@ class ParityFixSpec extends SparkSpecBase {
         |<TextEquiv><Unicode></Unicode></TextEquiv>
         |<Word id="w1"><Coords points="1,1 2,2"/></Word>
         |</TextLine>""".stripMargin)
-    assert(OcrXmlParser.getLines(parser.parse(xml)).isEmpty)
+    assert(ReferenceLines.getLines(parser.parse(xml)).isEmpty)
     // but a Word WITH a Unicode descendant still raises "just words"
     val xml2 = pageDoc(
       """<TextLine id="l1"><Coords points="0,0 10,10"/>
@@ -49,7 +49,7 @@ class ParityFixSpec extends SparkSpecBase {
         |<Word id="w1"><Coords points="1,1 2,2"/>
         |  <TextEquiv><Unicode>wort</Unicode></TextEquiv></Word>
         |</TextLine>""".stripMargin)
-    intercept[ParseError](OcrXmlParser.getLines(parser.parse(xml2)))
+    intercept[ParseError](ReferenceLines.getLines(parser.parse(xml2)))
   }
 
   test("malformed Coords on a line the reference never evaluates does not fail the doc") {
@@ -59,7 +59,7 @@ class ParityFixSpec extends SparkSpecBase {
         |<TextLine id="kept"><Coords points="0,0 10,10"/>
         |<TextEquiv><Unicode>echter inhalt</Unicode></TextEquiv></TextLine>"""
         .stripMargin)
-    val lines = OcrXmlParser.getLines(parser.parse(xml)) // must not throw
+    val lines = ReferenceLines.getLines(parser.parse(xml)) // must not throw
     assert(lines.map(_.content) == Vector("echter inhalt"))
   }
 

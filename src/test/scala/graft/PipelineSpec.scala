@@ -85,7 +85,7 @@ class PipelineSpec extends SparkSpecBase {
       val xml = new String(Files.readAllBytes(resDir.resolve(name)),
         java.nio.charset.StandardCharsets.UTF_8)
       val parsed = new OcrXmlParser().parse(xml)
-      val expect = OcrXmlParser.getLines(parsed, minLen = 2).map(_.content)
+      val expect = ReferenceLines.getLines(parsed, minLen = 2).map(_.content)
       val spans = OcrXmlParser.toSpans("x", parsed)
       val got = Extraction.toLines(spans, 2, reorder = false).map(_.content)
       // toSpans applies the same PAGE treatment as getLines (centroid
