@@ -167,7 +167,7 @@ object ProcessSpans {
           sb.append(curToks.get(t)); t += 1
         }
       }
-      if (sb.length >= cfg.minLineLen) lineContents += sb.toString
+      if (sb.length >= TextRules.MinLineLen) lineContents += sb.toString
     }
     var j = 0
     while (j < m) {
@@ -185,20 +185,7 @@ object ProcessSpans {
     flushLine()
 
     // 4. estimation (W3 + C4 + A3)
-    val lines = lineContents.result()
-    var ratio = -1.0
-    var nWords = 0; var nErrs = 0
-    var nIn = 0; var nWraps = 0; var nShorts = 0; var nOut = 0
-    if (lines.nonEmpty) {
-      val (wordString, in, wraps, shorts, out) =
-        TextRules.textlinesToData(lines, cfg.denseMinLen)
-      if (wordString.nonEmpty) {
-        nIn = in; nWraps = wraps; nShorts = shorts; nOut = out
-        nWords = TextRules.splitWs(wordString).length
-        val (r, e) = TextRules.hitRatio(nWords, TextRules.countErrors(wordString))
-        ratio = r; nErrs = e
-      }
-    }
+    val est = TextRules.estimate(lineContents.result())
 
     // 5. stats map (keys that occurred only, dict order then regex
     // first-seen order — Python dict insertion-order semantics)
@@ -242,12 +229,13 @@ object ProcessSpans {
       o += 1
     }
     new GenericInternalRow(Array[Any](
-      new GenericArrayData(outSpans), ratio, nWords, nErrs, nIn, nWraps,
-      nShorts, nOut, statsMap))
+      new GenericArrayData(outSpans), est.hitRatio, est.nWords, est.nErrs,
+      est.nLinesIn, est.nWraps, est.nShorts, est.nLinesOut, statsMap))
   }
 
   /** Column-level entry point; `cfg` rides in the plan as an object
-    * literal. */
+    * literal. A null span array gives a null row (`Extraction.pipeline`
+    * passes an empty array in its place). */
   def process(spans: Column, cfg: ExtractConfig): Column =
     Bridge.invoke(this, outputType, "evalArray",
       Seq(spans, Bridge.column(Literal.fromObject(cfg))))

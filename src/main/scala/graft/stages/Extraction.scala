@@ -3,7 +3,7 @@ package graft.stages
 import java.util.regex.Pattern
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Observation, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Observation, Row}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -24,8 +24,6 @@ final case class RegexRule(pattern: String, old: String, nw: String) {
 final case class ExtractConfig(
     replaceDict: Seq[(String, String)] = TextRules.DefaultReplaceDict,
     regexRule: Option[RegexRule] = None,
-    minLineLen: Int = 2,   // get_lines min_len (lib/ocr_model.py:203)
-    denseMinLen: Int = 2,  // textlines2data minlen (lib/ocr_step.py:449)
     reorderRtl: Boolean = false,
     pagePrefix: String = "p") { // StepPostprocessALTO page_prefix (lib/ocr_step.py:552)
   // hot-loop views for ProcessSpans: Seq.apply on a List-backed dict
@@ -56,11 +54,6 @@ final case class ProcessedDoc(
     n_shorts: Int,
     n_lines_out: Int,
     repl_stats: Map[String, Int] = Map.empty)
-
-/** Internal row shape of the HOF twin: cleaned spans for estimation +
-  * the raw pre-replacement spans for the stats pass. */
-private[stages] final case class CleanedWithRaw(
-    doc_id: String, spans: Seq[Span], raw_spans: Seq[Span])
 
 /** The merge-exact parts of [[Extraction.report]] over a set of rows,
   * plus their summed replacement statistics: counts, the exact decimal
@@ -147,17 +140,21 @@ private[stages] final case class LineageBuf(counts: Array[Long],
     sums: Array[java.math.BigDecimal], stats: Array[Map[String, Long]])
 
 /** The extraction pipeline: the reference's per-document step chain
-  * (ocr_pipeline.py:379-441 with conf/ocr_config.ini:15-37) re-expressed
-  * as a composition of narrow Spark stages over `Dataset[Doc]`.
+  * (ocr_pipeline.py:379-441 with conf/ocr_config.ini:15-37) over a span
+  * table, written twice. [[pipeline]] is the product path: one
+  * [[graft.sql.ProcessSpans]] row kernel per document. [[pipelineHof]]
+  * is its cross-check: a typed map over the pure chain
+  * ([[cleanSpans]], then [[estimateDoc]]) on the same
+  * [[graft.text.TextRules]] (the name stays: perfbench's verify calls
+  * it).
   *
-  * Execution shape (100 TB story): every stage is per-row (per-doc) —
-  * there is NO shuffle anywhere in the chain; Catalyst fuses the
-  * column stages into one whole-stage-codegen pass and the estimate
-  * stage is a single narrow typed `mapPartitions`. After the chain,
-  * the report's detail sort shuffles the valid rows (range-partitioned,
-  * one sort for the detail CSV and the `.wtr`); the corpus report
-  * itself is either one tiny aggregate ([[report]]) or, in
-  * `ExtractMain`, a driver-side merge of the per-partition
+  * Execution shape (100 TB story): the chain is per-row (per-doc) —
+  * there is NO shuffle anywhere in it; Catalyst fuses the kernel call
+  * and the output projection into one whole-stage-codegen pass. After
+  * the chain, the report's detail sort shuffles the valid rows
+  * (range-partitioned, one sort for the detail CSV and the `.wtr`);
+  * the corpus report itself is either one tiny aggregate ([[report]])
+  * or, in `ExtractMain`, a driver-side merge of the per-partition
   * [[ReportParts]] observed in the write pass. Nothing
   * repartitions before the chain: the tasks are the input's scan
   * splits, so a 10^5-span mega-doc is one row of whichever split reads
@@ -173,28 +170,32 @@ object Extraction {
     * writer should ever be asked to stream). */
   val WtrMaxRows: Long = 10L * 1000 * 1000
 
-  /** Column stage chain C1 → (C2) → F6 → S8: replace, regex-replace,
-    * blank-span drop, offset re-sort — all Catalyst HOFs, codegen'd,
-    * narrow. */
-  def spanColumnStage(cfg: ExtractConfig)(spans: Column): Column = {
-    val replaced = SpanOps.replaceChars(spans, cfg.replaceDict)
-    val afterRegex = cfg.regexRule match {
-      case Some(r) => regexStageCol(replaced, r)
-      case None    => replaced
+  /** The pure chain C1 → C2 → F6 → S8 over one document's spans:
+    * ordered literal replace, regex group replace, drop of the text
+    * spans that are blank under `String.trim` (F6), stable sort by
+    * offset. Returns the cleaned spans and, from the same pass, the
+    * A1/A2 replacement statistics (lib/ocr_step.py:255-268; each key
+    * counts once per text span in which it occurred, blank or not;
+    * regex keys are `match=>replacement`). */
+  def cleanSpans(spans: Seq[Span], cfg: ExtractConfig): (Seq[Span], Map[String, Int]) = {
+    val stats = scala.collection.mutable.Map.empty[String, Int]
+    def hit(k: String): Unit = stats.update(k, stats.getOrElse(k, 0) + 1)
+    val cleaned = spans.map { s =>
+      if (s.kind != Span.KindText) s
+      else {
+        val (t1, hits) = TextRules.replaceChars(s.text, cfg.replaceDict)
+        hits.foreach(hit)
+        val t2 = cfg.regexRule.fold(t1) { r =>
+          val (t, stat) = TextRules.regexGroupReplace(t1, r.compiled, r.old, r.nw)
+          stat.foreach(hit)
+          t
+        }
+        s.copy(text = t2)
+      }
     }
-    SpanOps.sortByOffset(SpanOps.dropBlank(afterRegex))
+    (cleaned.filter(s => s.kind != Span.KindText || s.text.trim.nonEmpty).sortBy(_.offset),
+      stats.toMap)
   }
-
-  /** C2 as a column op. Spark's `regexp_replace` cannot express
-    * "extract group-1 of the FIRST match, literal-replace inside it,
-    * then replace all copies of the matched literal" — compose
-    * regexp_extract + replace instead (SURVEY.md §2.8 C2). */
-  def regexStageCol(spans: Column, rule: RegexRule): Column =
-    SpanOps.mapText(spans) { t =>
-      val m = regexp_extract(t, rule.pattern, 1)
-      when(m === "", t)
-        .otherwise(replace(t, m, replace(m, lit(rule.old), lit(rule.nw))))
-    }
 
   /** Group consecutive cleaned text spans into lines by their
     * `line://` parent ref, preserving order — the engine's `get_lines`
@@ -231,20 +232,8 @@ object Extraction {
     */
   def estimateDoc(doc: Doc, cfg: ExtractConfig,
       errorOracle: String => Int = TextRules.countErrors): ProcessedDoc = {
-    val lines = toLines(doc.spans, cfg.minLineLen, cfg.reorderRtl)
-    var ratio = Estimation.MissingRatio
-    var nWords = 0; var nErrs = 0
-    var nIn = 0; var nWraps = 0; var nShorts = 0; var nOut = 0
-    if (lines.nonEmpty) {
-      val (wordString, in, wraps, shorts, out) =
-        TextRules.textlinesToData(lines.map(_.content), cfg.denseMinLen)
-      if (wordString.nonEmpty) {
-        nIn = in; nWraps = wraps; nShorts = shorts; nOut = out
-        nWords = TextRules.splitWs(wordString).length
-        val (r, e) = TextRules.hitRatio(nWords, errorOracle(wordString))
-        ratio = r; nErrs = e
-      }
-    }
+    val est = TextRules.estimate(
+      toLines(doc.spans, TextRules.MinLineLen, cfg.reorderRtl).map(_.content), errorOracle)
     // X4 metadata enrichment (lib/ocr_step.py:539-549): identifier =
     // id up to the first dot (split_path semantics), name = full id
     // substring_index semantics, matching the codegen twin exactly:
@@ -255,26 +244,8 @@ object Extraction {
       if (dot < 0) doc.doc_id else doc.doc_id.substring(0, dot)
     }
     ProcessedDoc(doc.doc_id, doc.spans, cfg.pagePrefix + fileId,
-      fileId, doc.doc_id, ratio, nWords, nErrs, nIn, nWraps, nShorts, nOut)
-  }
-
-  /** A1/A2 replacement statistics of one document's raw spans — the
-    * pure twin of the stats the ProcessSpans expression computes
-    * inline (lib/ocr_step.py:255-268; each key counts once per span
-    * in which it occurred, regex keys are `match=>replacement`). */
-  def replStatsOf(spans: Seq[Span], cfg: ExtractConfig): Map[String, Int] = {
-    val stats = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    spans.foreach { s =>
-      if (s.kind == Span.KindText) {
-        val (t1, hits) = TextRules.replaceChars(s.text, cfg.replaceDict)
-        hits.foreach(k => stats.update(k, stats.getOrElse(k, 0) + 1))
-        cfg.regexRule.foreach { r =>
-          val (_, stat) = TextRules.regexGroupReplace(t1, r.compiled, r.old, r.nw)
-          stat.foreach(k => stats.update(k, stats.getOrElse(k, 0) + 1))
-        }
-      }
-    }
-    stats.toMap
+      fileId, doc.doc_id, est.hitRatio, est.nWords, est.nErrs, est.nLinesIn,
+      est.nWraps, est.nShorts, est.nLinesOut)
   }
 
   /** Full pipeline over a span table. Input: DataFrame with columns
@@ -283,13 +254,14 @@ object Extraction {
     * Hot path: ONE row kernel ([[graft.sql.ProcessSpans]]) does the
     * whole per-doc chain over raw ArrayData — no interpreted HOF
     * chain, no encoder round-trip. RTL-reorder configs (W2) run on
-    * the same path via `cfg.reorderRtl`. */
+    * the same path via `cfg.reorderRtl`. A null `spans` is an empty
+    * document (the kernel's own null input gives a null row). */
   def pipeline(docs: DataFrame, cfg: ExtractConfig = ExtractConfig()): Dataset[ProcessedDoc] = {
     val spark = docs.sparkSession
     import spark.implicits._
+    val spans = coalesce(col("spans"), array().cast(docs.schema("spans").dataType))
     docs
-      .select(col("doc_id"),
-        graft.sql.ProcessSpans.process(col("spans"), cfg).as("p"))
+      .select(col("doc_id"), graft.sql.ProcessSpans.process(spans, cfg).as("p"))
       .select(col("doc_id"), col("p.spans").as("spans"),
         concat(lit(cfg.pagePrefix), substring_index(col("doc_id"), ".", 1)).as("page_id"),
         substring_index(col("doc_id"), ".", 1).as("file_identifier"),
@@ -300,22 +272,22 @@ object Extraction {
       .as[ProcessedDoc]
   }
 
-  /** Reference composition of built-in HOF stages + typed estimate map
-    * — semantically identical to [[pipeline]]; kept as the
-    * cross-validation twin (different mechanism, same spec). The raw
-    * spans ride along so the stats pass sees pre-replacement text. */
+  /** The cross-check of [[pipeline]]: the same spec by another
+    * mechanism, a typed map of the pure chain ([[cleanSpans]], then
+    * [[estimateDoc]]) over each row. Spans decode null-safely with the
+    * kernel's rules: a null `spans` is an empty document, a null
+    * element is dropped, a null `text` reads `""` and a null `offset`
+    * reads 0. */
   def pipelineHof(docs: DataFrame, cfg: ExtractConfig = ExtractConfig()): Dataset[ProcessedDoc] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val cleaned = docs.select(
-      col("doc_id"),
-      spanColumnStage(cfg)(col("spans")).as("spans"),
-      col("spans").as("raw_spans"))
-    cleaned.as[CleanedWithRaw].mapPartitions { it =>
-      it.map { d =>
-        estimateDoc(Doc(d.doc_id, d.spans), cfg)
-          .copy(repl_stats = replStatsOf(d.raw_spans, cfg))
+    docs.select(col("doc_id"), col("spans")).map { r =>
+      val spans = Option(r.getSeq[Row](1)).getOrElse(Nil).filter(_ != null).map { s =>
+        Span(s.getString(0), Option(s.getString(1)).getOrElse(""), s.getString(2),
+          if (s.isNullAt(3)) 0 else s.getInt(3))
       }
+      val (cleaned, stats) = cleanSpans(spans, cfg)
+      estimateDoc(Doc(r.getString(0), cleaned), cfg).copy(repl_stats = stats)
     }
   }
 
@@ -464,11 +436,8 @@ object Extraction {
     * order is undefined in a distributed engine, so ties break on
     * doc_id (the pipeline writes it as file_name too). */
   def writeWtr(processed: Dataset[ProcessedDoc], path: String,
-      precomputed: Option[EstimationReport] = None,
       maxRows: Long = WtrMaxRows): EstimationReport = {
-    // callers that just ran writeReport pass its result — recomputing
-    // here would run the corpus-wide aggregate a second time
-    val rep = precomputed.getOrElse(report(processed))
+    val rep = report(processed)
     checkWtrCap(rep, maxRows)
     streamWtr(sortedValid(processed), path, rep)
     rep

@@ -5,6 +5,13 @@ import java.util.regex.Pattern
 
 import scala.collection.mutable
 
+import graft.model.Estimation
+
+/** [[TextRules.estimate]]'s result: the per-document counters of
+  * `ProcessedDoc`. */
+final case class DocEstimate(hitRatio: Double, nWords: Int, nErrs: Int,
+    nLinesIn: Int, nWraps: Int, nShorts: Int, nLinesOut: Int)
+
 /** Pure (driver- and executor-safe) text transformation rules.
   *
   * Each function re-creates one observable behavior of the reference
@@ -242,22 +249,28 @@ object TextRules {
   // textlines2data (lib/ocr_step.py:449-469)
   // -------------------------------------------------------------------
 
+  /** `get_lines` min_len: a line shorter than this is not part of the
+    * line model (lib/ocr_model.py:203). */
+  val MinLineLen: Int = 2
+
+  /** `textlines2data` minlen: only lines longer than this are dense
+    * (lib/ocr_step.py:449). */
+  val DenseMinLen: Int = 2
+
   /** Line-model → flat word string + stage counters.
     *
     * @param lineContents contents of *all* parsed lines (already
     *                     reordered for RTL), in document order
-    * @param minlen       dense-line threshold (keep `len > minlen`)
     * @return (fileString, nLinesIn, nWraps, nShorts, nLinesOut)
     */
-  def textlinesToData(lineContents: Seq[String], minlen: Int = 2)
-      : (String, Int, Int, Int, Int) = {
+  def textlinesToData(lineContents: Seq[String]): (String, Int, Int, Int, Int) = {
     val nonEmpty = lineContents.filter(_.nonEmpty)
     val (normalized, nWraps) = sanitizeWraps(nonEmpty)
     val filtered = normalized.map(sanitizeChars)
     var nShorts = 0
     val dense = mutable.ArrayBuffer.empty[String]
     filtered.foreach { l =>
-      if (l.length > minlen) dense += l else nShorts += 1
+      if (l.length > DenseMinLen) dense += l else nShorts += 1
     }
     (dense.mkString(" "), lineContents.length, nWraps, nShorts, dense.length)
   }
@@ -274,6 +287,20 @@ object TextRules {
       if (nWords <= errs) 0.0
       else (nWords - errs).toDouble / nWords * 100.0
     (pyRound(ratio, 3), errs)
+  }
+
+  /** One document's estimate (W3 + C4 + A3) from its line contents:
+    * [[textlinesToData]], then the words of the dense string, then
+    * [[hitRatio]] over `errorOracle`'s count. A document with no word
+    * left reads `MARK_MISSING_ESTM` with every counter 0. */
+  def estimate(lineContents: Seq[String], errorOracle: String => Int = countErrors): DocEstimate = {
+    val (wordString, in, wraps, shorts, out) = textlinesToData(lineContents)
+    if (wordString.isEmpty) DocEstimate(Estimation.MissingRatio, 0, 0, 0, 0, 0, 0)
+    else {
+      val nWords = splitWs(wordString).length
+      val (ratio, errs) = hitRatio(nWords, errorOracle(wordString))
+      DocEstimate(ratio, nWords, errs, in, wraps, shorts, out)
+    }
   }
 
   // -------------------------------------------------------------------

@@ -8,14 +8,14 @@ import org.apache.spark.sql.types.DataType
 
 /** Column ↔ Expression bridge. Spark 4 made these conversions
   * `private[sql]` (ExpressionUtils in columnNodeSupport.scala); the
-  * row kernels' `StaticInvoke` columns and the SQL function builders
-  * still need them, hence this in-package shim — the standard pattern
-  * for Spark extension libraries.
+  * row kernels' `StaticInvoke` columns still need them, hence this
+  * in-package shim — the standard pattern for Spark extension
+  * libraries.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
-  /** Converted now, not when a Dataset plans it: a SQL function
-    * builder hands its result straight to the analyzer. */
+  /** Converted now, not when a Dataset plans it: [[invoke]] builds its
+    * `StaticInvoke` over the converted arguments. */
   def expression(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
 
   /** A column that calls `kernel.fn(args…)` once per row, `kernel`

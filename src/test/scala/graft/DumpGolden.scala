@@ -2,14 +2,15 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import graft.model.{Doc, Span}
+import graft.model.Doc
 import graft.parse.OcrXmlParser
+import graft.stages.{ExtractConfig, Extraction, RegexRule}
 import graft.text.TextRules
 
 /** One-shot generator for the stored golden span sequences
   * (FIXTURES.md §3): derives the expected post-pipeline sequence for
-  * the reference fixtures from the PURE reference-semantics path
-  * (TextRules — independent of the Catalyst implementation) and stores
+  * the reference fixtures from the pure chain `Extraction.cleanSpans`
+  * (TextRules; not the `ProcessSpans` row kernel) and stores
   * it under src/test/resources/golden/ as TSV
   * `kind<TAB>text<TAB>media_ref<TAB>offset`.
   *
@@ -22,17 +23,12 @@ object DumpGolden {
     "1667522809_J_0073_0512", "urn+nbn+de+gbv+3+1-121915-p0159-6_ger",
     "1667524704_J_0173_0173", "0041", "1123596")
 
-  def goldenFor(doc: Doc): Seq[Span] = {
-    val dict = TextRules.FixtureReplaceDict
-    doc.spans.map { s =>
-      if (s.kind == Span.KindText) {
-        val (t1, _) = TextRules.replaceChars(s.text, dict)
-        val (t2, _) = TextRules.regexGroupReplace(t1, TextRules.FixtureRegex, "3", "s")
-        s.copy(text = t2)
-      } else s
-    }.filter(s => s.kind != Span.KindText || s.text.trim.nonEmpty)
-      .sortBy(_.offset)
-  }
+  /** The fixture config the goldens are derived under: the test-pinned
+    * dictionary and regex rule (tests/test_steps.py:212,
+    * tests/resources/ocr_config_full.ini:27). */
+  val config: ExtractConfig = ExtractConfig(
+    replaceDict = TextRules.FixtureReplaceDict,
+    regexRule = Some(RegexRule(TextRules.FixtureRegex.pattern, "3", "s")))
 
   def main(args: Array[String]): Unit = {
     val resDir = Paths.get("/root/reference/tests/resources")
@@ -43,7 +39,7 @@ object DumpGolden {
       val xml = new String(Files.readAllBytes(resDir.resolve(s"$name.xml")),
         java.nio.charset.StandardCharsets.UTF_8)
       val doc = Doc(name, OcrXmlParser.toSpans(name, parser.parse(xml)))
-      val lines = goldenFor(doc).map { s =>
+      val lines = Extraction.cleanSpans(doc.spans, config)._1.map { s =>
         val esc = s.text.replace("\\", "\\\\").replace("\t", "\\t")
           .replace("\n", "\\n").replace("\r", "\\r")
         s"${s.kind}\t$esc\t${s.media_ref}\t${s.offset}"

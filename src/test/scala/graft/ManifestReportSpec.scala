@@ -63,6 +63,27 @@ class ManifestReportSpec extends SparkSpecBase {
     assert(all.forall(d => d.file_name == d.doc_id))
   }
 
+  test("a row whose spans is null commits as an unestimated empty doc") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-mrep-null").toString
+    val valid = Seq(graft.model.Doc("valid", Seq(
+      graft.model.Span(graft.model.Span.KindText, "Haus", "line://b/l0", 0),
+      graft.model.Span(graft.model.Span.KindText, "Garten", "line://b/l0", 1)))).toDF()
+    valid.union(valid.select(lit("null_spans").as("doc_id"),
+        lit(null).cast(valid.schema("spans").dataType).as("spans")))
+      .write.parquet(s"$tmp/in")
+    val lines = extract(s"$tmp/in", s"$tmp/out", nParts = 1)
+    assertParity(s"$tmp/out", lines)
+    assert(lines.exists(_.contains("total=2 invalid=1")), lines.mkString("\n"))
+    assert(lines.exists(l => l.startsWith("[extract] lineage part=0 docs=2 spans=2 unestimated=1")),
+      lines.mkString("\n"))
+    val all = new SnapshotStore(spark, s"$tmp/out").read().as[ProcessedDoc].collect()
+      .map(d => d.doc_id -> d).toMap
+    assert(all("null_spans") == ProcessedDoc("null_spans", Nil, "pnull_spans", "null_spans",
+      "null_spans", -1.0, 0, 0, 0, 0, 0, 0, Map.empty))
+    assert(all("valid").hit_ratio == 100.0)
+  }
+
   test("report parity: the E1 ini with a regex rule (match=>replacement keys)") {
     val tmp = Files.createTempDirectory("graft-mrep-e1").toString
     graft.gen.CorpusGen.docs(spark, 200, "edge", seed = 3).write.parquet(s"$tmp/in")
