@@ -163,19 +163,25 @@ final class SnapshotStore(spark: SparkSession, root: String) {
 
   /** Consistent read of the table at a snapshot (default: current):
     * exactly the manifest's paths, immune to concurrent commits.
-    * SCHEMA EVOLUTION: when the manifest's schema fingerprints show
+    * `schema` is the caller's schema of the data (a writer passes the
+    * one it wrote): when every entry's fingerprint is its
+    * [[SnapshotStore.schemaHash]], the files are read with it and no
+    * footer is read at all. Otherwise the schema comes from the
+    * footers. SCHEMA EVOLUTION: when the manifest's fingerprints show
     * the partitions diverge (a column added by a newer release),
-    * `mergeSchema` unions them (nulls backfill) — and a
-    * version-pinned read still sees exactly the schema of ITS files
-    * (time travel includes the schema). When all fingerprints agree —
-    * the overwhelmingly common case — the merge pass (a footer read
-    * of EVERY data file) is skipped. */
-  def read(version: Option[Long] = None): DataFrame = {
+    * `mergeSchema` unions them (nulls backfill) — and a version-pinned
+    * read still sees exactly the schema of ITS files (time travel
+    * includes the schema). When they agree, one file's footer is read,
+    * not every file's. */
+  def read(version: Option[Long] = None, schema: Option[StructType] = None): DataFrame = {
     val es = entries(version)
     require(es.nonEmpty, "empty table: no committed snapshot")
-    val needMerge = es.values.map(_.schemaHash).toSet.size > 1
-    spark.read.option("mergeSchema", needMerge.toString)
-      .parquet(es.values.toSeq.sortBy(_.part).map(_.path): _*)
+    val paths = es.values.toSeq.sortBy(_.part).map(_.path)
+    val hashes = es.values.map(_.schemaHash).toSet
+    schema.filter(s => hashes == Set(SnapshotStore.schemaHash(s))) match {
+      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      case None => spark.read.option("mergeSchema", (hashes.size > 1).toString).parquet(paths: _*)
+    }
   }
 
   /** Compact a partition's data files (the `rewrite_data_files`

@@ -1,8 +1,15 @@
 package graft.run
 
+import java.net.URI
+
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 import graft.io.SnapshotStore
 import graft.stages.{ExtractConfig, Extraction, ReportParts}
@@ -45,6 +52,18 @@ import graft.stages.{ExtractConfig, Extraction, ReportParts}
   * the pre-manifest marker layout (`state/p_N`, no manifest), or one
   * whose manifest has an entry without a decodable report summary,
   * fails before any Spark job and is left as it was.
+  *
+  * No Spark job runs for what the run already knows. The input is read
+  * with the span-table schema (`Extraction.SpanTableSchema`) after the
+  * footer of one file that read lists is checked on the driver: a
+  * `doc_id` or `spans` column, or span field, that is missing or typed
+  * otherwise fails before any Spark job, naming it, and span fields
+  * map by name, so a span struct in another field order extracts like
+  * the canonical one.
+  * The snapshot is read with the schema the run writes, which its
+  * manifest entries fingerprint, and the report's valid count sizes
+  * the detail sort (one partition up to `Extraction.RowsPerDetailPart`
+  * valid rows).
   */
 object ExtractMain {
 
@@ -85,6 +104,15 @@ object ExtractMain {
     committed
   }
 
+  /** The Spark schema in the parquet footer of `file`, read on the
+    * driver: no Spark job. */
+  private def footerSchema(spark: SparkSession, file: String): StructType = {
+    val in = HadoopInputFile.fromPath(new Path(new URI(file)), spark.sparkContext.hadoopConfiguration)
+    val reader = ParquetFileReader.open(in)
+    try new ParquetToSparkSchemaConverter(SQLConf.get).convert(reader.getFileMetaData.getSchema)
+    finally reader.close()
+  }
+
   /** Logical partition of a row, from its doc_id: the input bucketing
     * and the output's staging subdirs must agree on it. */
   private def partOf(nParts: Int): Column =
@@ -98,7 +126,18 @@ object ExtractMain {
     // SnapshotStore)
     val snap = new SnapshotStore(spark, outRoot)
     val committed = requireManifestLayout(spark, outRoot, snap)
-    val docs = spark.read.parquet(inPath).withColumn("part", partOf(nParts))
+    val input = spark.read.schema(Extraction.SpanTableSchema).parquet(inPath)
+    // one footer of the files the read lists (its cached index, no job)
+    val file = input.inputFiles.headOption
+      .getOrElse(throw new IllegalArgumentException(s"$inPath: no data file to read"))
+    val problems = Extraction.spanTableProblems(footerSchema(spark, file))
+    if (problems.nonEmpty)
+      throw new IllegalArgumentException(s"$inPath is not a span table: " +
+        s"${problems.mkString("; ")} (want ${Extraction.SpanTableSchema.simpleString})")
+    val docs = input.withColumn("part", partOf(nParts))
+    // the schema every committed data file has; reads of the snapshot
+    // take it instead of a footer
+    val outSchema = Extraction.pipeline(docs, cfg).schema
 
     // J1: resume is an in-driver set difference over partition
     // metadata, O(#partitions) — never a per-doc anti-join
@@ -118,12 +157,15 @@ object ExtractMain {
 
     // S7: backup only when the config can actually modify content —
     // the reference's `if self._replacements and self.must_backup()`
-    // gate (lib/ocr_step.py:230-232)
-    if (backup && (cfg.replaceDict.nonEmpty || cfg.regexRule.nonEmpty))
+    // gate (lib/ocr_step.py:230-232). The pre-image keeps the input's
+    // own columns and field order, so it reads the input as written
+    if (backup && (cfg.replaceDict.nonEmpty || cfg.regexRule.nonEmpty)) {
+      val asWritten = spark.read.parquet(inPath).withColumn("part", partOf(nParts))
       todo.foreach { p =>
-        docs.filter($"part" === p).drop("part")
+        asWritten.filter($"part" === p).drop("part")
           .write.mode(SaveMode.Overwrite).parquet(s"$outRoot/backup/p_$p")
       }
+    }
 
     if (todo.nonEmpty) {
       // the pipeline keeps only its own columns: `part` is re-derived
@@ -135,7 +177,7 @@ object ExtractMain {
       observed.write.partitionBy("part").parquet(staging.toString)
       val counts = lineage()
       val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val schemaHash = SnapshotStore.schemaHash(rows.drop("part").schema)
+      val schemaHash = SnapshotStore.schemaHash(outSchema)
       val entries = todo.map { p =>
         // every attempt is a FRESH dir of parquet files plus `_SUCCESS`;
         // commits replace metadata, never files
@@ -169,7 +211,7 @@ object ExtractMain {
     // driver
     val committedNow = snap.entries()
     val merged = ReportParts.merge(committedNow.values.map(e => e.part -> e.summary))
-    val all = snap.read().as[graft.stages.ProcessedDoc]
+    val all = snap.read(schema = Some(outSchema)).as[graft.stages.ProcessedDoc]
     val rep = merged.toReport
     // exact-layout `.wtr` compatibility file for downstream parsers,
     // written from the detail's sorted rows. Over the driver-streamed

@@ -74,6 +74,7 @@ object ProcessSpans {
     // 1. collect (kind-is-text, text-after-replacements, ref, offset),
     //    dropping blanks (F6) — one pass; count replacement hits (A1/A2)
     val kinds = new Array[UTF8String](n)
+    val textKind = new Array[Boolean](n) // kind is "text", decided once per span
     val texts = new Array[String](n)
     val rawTexts = new Array[UTF8String](n) // non-null ⇢ text unmodified
     val refs = new Array[UTF8String](n)
@@ -116,6 +117,7 @@ object ProcessSpans {
         val keep = !isText || text.trim.nonEmpty
         if (keep) {
           kinds(m) = kind
+          textKind(m) = isText
           texts(m) = text
           rawTexts(m) = if (raw != null && (text eq before)) raw else null
           refs(m) = if (row.isNullAt(2)) null else row.getUTF8String(2)
@@ -172,7 +174,7 @@ object ProcessSpans {
     var j = 0
     while (j < m) {
       val k = sorted(j)
-      if (ProcessSpans.isTextKind(kinds(k))) {
+      if (textKind(k)) {
         val ref = refs(k)
         if (!started || !sameKey(curRef, ref)) {
           flushLine()

@@ -7,10 +7,11 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Observation, Row}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.{Doc, Estimation, EstimationReport, Line, Span}
-import graft.sql.SpanOps
+import graft.sql.{ProcessSpans, SpanOps}
 import graft.text.TextRules
 
 /** One regex replacement rule (C2, lib/ocr_step.py:273-292). */
@@ -151,9 +152,11 @@ private[stages] final case class LineageBuf(counts: Array[Long],
   * Execution shape (100 TB story): the chain is per-row (per-doc) —
   * there is NO shuffle anywhere in it; Catalyst fuses the kernel call
   * and the output projection into one whole-stage-codegen pass. After
-  * the chain, the report's detail sort shuffles the valid rows
-  * (range-partitioned, one sort for the detail CSV and the `.wtr`);
-  * the corpus report itself is either one tiny aggregate ([[report]])
+  * the chain, the report's detail sort shuffles the valid rows into
+  * one range partition per [[RowsPerDetailPart]] valid rows (one
+  * partition, so no sampling job, below that), then sorts each
+  * partition: one sort for the detail CSV and the `.wtr`. The corpus
+  * report itself is either one tiny aggregate ([[report]])
   * or, in `ExtractMain`, a driver-side merge of the per-partition
   * [[ReportParts]] observed in the write pass. Nothing
   * repartitions before the chain: the tasks are the input's scan
@@ -169,6 +172,61 @@ object Extraction {
     * (~10M lines ≈ a few hundred MB of text — the most one driver
     * writer should ever be asked to stream). */
   val WtrMaxRows: Long = 10L * 1000 * 1000
+
+  /** Valid rows per partition of the report detail; up to it the
+    * detail is one partition. On 4 cores one partition wrote the detail
+    * and `.wtr` faster than 2 or 4 up to 60k valid rows, as fast at
+    * 100k, and slower from 150k on, so this is where one sort task stops
+    * paying for the sampling job it saves. */
+  private[graft] val RowsPerDetailPart: Long = 100L * 1000
+
+  /** Partitions of the report detail over `nValid` valid rows: one per
+    * [[RowsPerDetailPart]] rows, at least one. */
+  private[graft] def detailParts(nValid: Long): Int =
+    math.min(Int.MaxValue.toLong,
+      math.max(1L, (nValid + RowsPerDetailPart - 1) / RowsPerDetailPart)).toInt
+
+  /** The span table: what `IngestAny` writes and [[pipeline]] reads. */
+  val SpanTableSchema: StructType = StructType(Seq(
+    StructField("doc_id", StringType), StructField("spans", ArrayType(ProcessSpans.spanType))))
+
+  /** What keeps a file of `schema` from being read with
+    * [[SpanTableSchema]], one entry per column, named by its path
+    * (`spans.offset has type bigint, want int`); empty when nothing
+    * does. Span fields match by name, as Spark's parquet reader maps
+    * struct fields, so a span struct in another field order reads. */
+  private[graft] def spanTableProblems(schema: StructType): Seq[String] = {
+    def check(prefix: String, have: StructType, want: StructType): Seq[String] =
+      want.fields.toSeq.flatMap { w =>
+        val name = prefix + w.name
+        (have.fields.find(_.name == w.name).map(_.dataType), w.dataType) match {
+          case (None, _) => Seq(s"no column $name")
+          case (Some(ArrayType(h: StructType, _)), ArrayType(ws: StructType, _)) =>
+            check(name + ".", h, ws)
+          case (Some(t), wt) if t == wt => Nil
+          case (Some(t), wt) => Seq(s"$name has type ${t.simpleString}, want ${wt.simpleString}")
+        }
+      }
+    check("", schema, SpanTableSchema)
+  }
+
+  /** [[pipeline]]'s kernel reads span fields by position, so the
+    * `spans` element must list [[ProcessSpans.spanType]]'s fields in its
+    * order; anything else throws, naming the first field that differs. */
+  private def requireCanonicalSpans(schema: StructType): Unit = {
+    def fields(s: StructType) = s.fields.toSeq.map(f => s"${f.name} ${f.dataType.simpleString}")
+    val have = schema.find(_.name == "spans").map(_.dataType) match {
+      case Some(ArrayType(s: StructType, _)) => fields(s)
+      case other => throw new IllegalArgumentException("spans must be an array of span " +
+        s"structs, is ${other.map(_.simpleString).getOrElse("missing")}")
+    }
+    have.zipAll(fields(ProcessSpans.spanType), "nothing", "nothing").zipWithIndex
+      .find { case ((h, w), _) => h != w }
+      .foreach { case ((h, w), i) =>
+        throw new IllegalArgumentException(s"spans element field $i is `$h`, want `$w`: " +
+          s"the kernel reads a span as ${ProcessSpans.spanType.simpleString} by position")
+      }
+  }
 
   /** The pure chain C1 → C2 → F6 → S8 over one document's spans:
     * ordered literal replace, regex group replace, drop of the text
@@ -228,10 +286,11 @@ object Extraction {
   /** Per-document estimation (StepEstimateOCR, lib/ocr_step.py:337-424):
     * line model → wrap merge → sanitize → dense filter → word/error
     * counts → hit ratio. `errorOracle` is the deterministic stand-in
-    * for the LanguageTool service (E2): word string → raw error count.
+    * for the LanguageTool service (E2): the words of the word string
+    * → raw error count.
     */
   def estimateDoc(doc: Doc, cfg: ExtractConfig,
-      errorOracle: String => Int = TextRules.countErrors): ProcessedDoc = {
+      errorOracle: Array[String] => Int = TextRules.countErrors): ProcessedDoc = {
     val est = TextRules.estimate(
       toLines(doc.spans, TextRules.MinLineLen, cfg.reorderRtl).map(_.content), errorOracle)
     // X4 metadata enrichment (lib/ocr_step.py:539-549): identifier =
@@ -255,10 +314,13 @@ object Extraction {
     * whole per-doc chain over raw ArrayData — no interpreted HOF
     * chain, no encoder round-trip. RTL-reorder configs (W2) run on
     * the same path via `cfg.reorderRtl`. A null `spans` is an empty
-    * document (the kernel's own null input gives a null row). */
+    * document (the kernel's own null input gives a null row). A `spans`
+    * element that is not the span struct `(kind, text, media_ref,
+    * offset)` in that order throws before anything runs. */
   def pipeline(docs: DataFrame, cfg: ExtractConfig = ExtractConfig()): Dataset[ProcessedDoc] = {
     val spark = docs.sparkSession
     import spark.implicits._
+    requireCanonicalSpans(docs.schema)
     val spans = coalesce(col("spans"), array().cast(docs.schema("spans").dataType))
     docs
       .select(col("doc_id"), graft.sql.ProcessSpans.process(spans, cfg).as("p"))
@@ -376,7 +438,8 @@ object Extraction {
     * detail CSV keeps each `doc_id` exactly (no whitespace trimming),
     * so read it back with the same two whitespace options.
     * `precomputed` skips the report aggregate (a caller that merged it
-    * from manifest summaries passes it). `wtrPath` also writes the
+    * from manifest summaries passes it); the report's valid count sizes
+    * the detail (see [[sortedValid]]). `wtrPath` also writes the
     * `.wtr` file of [[writeWtr]] from the same sorted rows, persisted
     * between the two writes, so the rows are sorted once. */
   def writeReport(processed: Dataset[ProcessedDoc], outDir: String,
@@ -387,9 +450,7 @@ object Extraction {
     val rep = precomputed.getOrElse(report(processed))
     wtrPath.foreach(_ => checkWtrCap(rep, WtrMaxRows))
     Seq(rep).toDS().coalesce(1).write.mode("overwrite").parquet(s"$outDir/summary")
-    // global sort → range-partitioned ordered files; no coalesce(1):
-    // the detail is O(#docs) and must stay distributed at corpus scale
-    val sorted = sortedValid(processed)
+    val sorted = sortedValid(processed, rep.n_total - rep.n_invalid)
     if (wtrPath.nonEmpty) sorted.persist()
     try {
       sorted.drop("file_name").write.mode("overwrite").option("header", "true")
@@ -402,13 +463,21 @@ object Extraction {
   }
 
   /** The valid rows of the report detail (named by `doc_id`) and the
-    * `.wtr` (named by `file_name`), ascending by (ratio, doc_id). */
-  private def sortedValid(processed: Dataset[ProcessedDoc]): DataFrame =
+    * `.wtr` (named by `file_name`), ascending by (ratio, doc_id) across
+    * partitions in order. `nValid`, the valid count the caller's report
+    * holds, sizes the range partitioning ([[detailParts]]): up to
+    * [[RowsPerDetailPart]] rows it is one partition, which Spark plans
+    * without a sampling job; above it the range bounds are sampled and
+    * each partition holds about that many rows. */
+  private def sortedValid(processed: Dataset[ProcessedDoc], nValid: Long): DataFrame = {
+    val key = Seq(col("hit_ratio"), col("doc_id"))
     processed
       .filter(col("hit_ratio") =!= Estimation.MissingRatio)
       .select(col("doc_id"), col("file_name"), col("hit_ratio"), col("n_words"), col("n_errs"),
         col("n_lines_in"), col("n_wraps"), col("n_shorts"), col("n_lines_out"))
-      .orderBy(col("hit_ratio"), col("doc_id"))
+      .repartitionByRange(detailParts(nValid), key: _*)
+      .sortWithinPartitions(key: _*)
+  }
 
   /** Python `str(float)` for the domain of 3-dp-rounded ratios in
     * [0, 100]: both CPython's repr and `java.lang.Double.toString`
@@ -439,7 +508,7 @@ object Extraction {
       maxRows: Long = WtrMaxRows): EstimationReport = {
     val rep = report(processed)
     checkWtrCap(rep, maxRows)
-    streamWtr(sortedValid(processed), path, rep)
+    streamWtr(sortedValid(processed, rep.n_total - rep.n_invalid), path, rep)
     rep
   }
 

@@ -203,16 +203,17 @@ object TextRules {
 
   def splitWs(s: String): Array[String] = {
     @inline def ws(c: Char) = isPyWhitespace(c)
-    val out = mutable.ArrayBuffer.empty[String]
+    // a Java list and a typed array: no ClassTag lookup per call
+    val out = new java.util.ArrayList[String]
     var i = 0
     val n = s.length
     while (i < n) {
       while (i < n && ws(s.charAt(i))) i += 1
       val start = i
       while (i < n && !ws(s.charAt(i))) i += 1
-      if (i > start) out += s.substring(start, i)
+      if (i > start) out.add(s.substring(start, i))
     }
-    out.toArray
+    out.toArray(new Array[String](out.size))
   }
 
   // -------------------------------------------------------------------
@@ -221,8 +222,6 @@ object TextRules {
 
   /** Characters deleted by the sanitize pass (lib/ocr_step.py:503). */
   val BadChars: String = "0123456789“„\"'?!*.;:-=[]()|"
-
-  private val badCharSet: Set[Char] = BadChars.toSet
 
   /** Strip; delete `BadChars`; `ſ`→`s`; keep tokens of length > 1;
     * re-join with single spaces. (The reference's `'..'`→`''` branch is
@@ -235,14 +234,12 @@ object TextRules {
     var i = 0
     while (i < t.length) {
       val c = t.charAt(i)
-      if (!badCharSet.contains(c)) {
+      if (BadChars.indexOf(c) < 0) {
         sb.append(if (c == 'ſ') 's' else c)
       }
       i += 1
     }
-    val toks = splitWs(sb.toString)
-    val keep = toks.filter(_.length > 1)
-    keep.mkString(" ")
+    splitWs(sb.toString).filter(_.length > 1).mkString(" ")
   }
 
   // -------------------------------------------------------------------
@@ -290,16 +287,18 @@ object TextRules {
   }
 
   /** One document's estimate (W3 + C4 + A3) from its line contents:
-    * [[textlinesToData]], then the words of the dense string, then
-    * [[hitRatio]] over `errorOracle`'s count. A document with no word
-    * left reads `MARK_MISSING_ESTM` with every counter 0. */
-  def estimate(lineContents: Seq[String], errorOracle: String => Int = countErrors): DocEstimate = {
+    * [[textlinesToData]], then the words of the dense string (split
+    * once), then [[hitRatio]] over `errorOracle`'s count of them. A
+    * document with no word left reads `MARK_MISSING_ESTM` with every
+    * counter 0. */
+  def estimate(lineContents: Seq[String],
+      errorOracle: Array[String] => Int = countErrors): DocEstimate = {
     val (wordString, in, wraps, shorts, out) = textlinesToData(lineContents)
     if (wordString.isEmpty) DocEstimate(Estimation.MissingRatio, 0, 0, 0, 0, 0, 0)
     else {
-      val nWords = splitWs(wordString).length
-      val (ratio, errs) = hitRatio(nWords, errorOracle(wordString))
-      DocEstimate(ratio, nWords, errs, in, wraps, shorts, out)
+      val words = splitWs(wordString)
+      val (ratio, errs) = hitRatio(words.length, errorOracle(words))
+      DocEstimate(ratio, words.length, errs, in, wraps, shorts, out)
     }
   }
 
@@ -352,19 +351,19 @@ object TextRules {
     "nicht", "nur", "vor", "zum", "zur", "durch", "man", "war", "sind",
     "wird", "noch", "oder", "aber", "wenn", "sie", "er", "wir", "ich")
 
-  private val vowels = "aeiouäöüy".toSet
+  private val Vowels = "aeiouäöüy"
 
   def isWordError(token: String): Boolean = {
     val lc = token.toLowerCase
     if (Lexicon.contains(lc)) false
     else {
       val lettersOnly = lc.forall(c => Character.isLetter(c))
-      val hasVowel = lc.exists(c => vowels.contains(c))
+      val hasVowel = lc.exists(c => Vowels.indexOf(c) >= 0)
       !(lettersOnly && hasVowel && lc.length >= 4)
     }
   }
 
-  /** Count errors in a sanitized word string (whitespace tokens). */
-  def countErrors(wordString: String): Int =
-    splitWs(wordString).count(isWordError)
+  /** Count errors among the words of a sanitized word string (its
+    * [[splitWs]] tokens). */
+  def countErrors(words: Array[String]): Int = words.count(isWordError)
 }
