@@ -34,10 +34,11 @@ import graft.stages.{ExtractConfig, Extraction, ReportParts}
   * input, one pass of the codegen'd span stages, one write partitioned
   * by `part` into a staging dir, with the per-partition lineage and
   * report statistics observed in the same pass. The driver then moves
-  * each partition's output into a fresh attempt dir and commits them
-  * all as ONE manifest version per run (`SnapshotStore.commitAll`; the
-  * schema fingerprint comes from the written DataFrame, no footer is
-  * read). The trade: a run killed during that write or before the
+  * each partition's output into a fresh attempt dir, the partitions
+  * concurrently on a few driver threads (`Extraction.concurrently`),
+  * and commits them all as ONE manifest version per run
+  * (`SnapshotStore.commitAll`; the schema fingerprint comes from the
+  * written DataFrame, no footer is read). The trade: a run killed during that write or before the
   * commit commits nothing from that run, where a per-partition job
   * would have kept the partitions finished before the kill. A killed
   * run's staging dir is an unreferenced data dir, which
@@ -45,8 +46,9 @@ import graft.stages.{ExtractConfig, Extraction, ReportParts}
   * After the commit come the corpus report (S11), the `.wtr` file and
   * the replacement statistics of the current snapshot. The report and
   * the statistics are merged on the driver from the manifest entries'
-  * summaries, with no scan; the detail CSV and the `.wtr` share one
-  * sort of the snapshot's rows.
+  * summaries, with no scan. The summary parquet, the detail CSV and
+  * the `.wtr` are written concurrently, and the detail CSV and the
+  * `.wtr` share one sort of the snapshot's rows.
   *
   * The current manifest is the only output-root layout read: a root in
   * the pre-manifest marker layout (`state/p_N`, no manifest), or one
@@ -62,8 +64,10 @@ import graft.stages.{ExtractConfig, Extraction, ReportParts}
   * the canonical one.
   * The snapshot is read with the schema the run writes, which its
   * manifest entries fingerprint, and the report's valid count sizes
-  * the detail sort (one partition up to `Extraction.RowsPerDetailPart`
-  * valid rows).
+  * the detail sort (one partition, sorted with no shuffle, up to
+  * `Extraction.RowsPerDetailPart` valid rows). A fresh root runs four
+  * Spark jobs: the extraction write, the summary, the detail CSV (which
+  * caches the sorted rows) and the `.wtr` stream.
   */
 object ExtractMain {
 
@@ -178,9 +182,10 @@ object ExtractMain {
       val counts = lineage()
       val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val schemaHash = SnapshotStore.schemaHash(outSchema)
-      val entries = todo.map { p =>
-        // every attempt is a FRESH dir of parquet files plus `_SUCCESS`;
-        // commits replace metadata, never files
+      // every attempt is a FRESH dir of parquet files plus `_SUCCESS`;
+      // commits replace metadata, never files. The moves touch disjoint
+      // dirs, so they run concurrently on a few driver threads
+      val entries = Extraction.concurrently(todo.map { p => () =>
         val attempt = new Path(snap.newDataPath(p))
         val written = new Path(staging, s"part=$p")
         if (fs.exists(written)) {
@@ -194,7 +199,7 @@ object ExtractMain {
         }
         val (nDocs, nSpans, nUnest, parts) = counts(p)
         snap.Entry(p, attempt.toString, nDocs, nSpans, nUnest, "", schemaHash, parts.encode)
-      }
+      })
       val v = snap.commitAll(entries)
       entries.foreach { e =>
         println(s"[extract] committed part=${e.part} snapshot=v$v docs=${e.nDocs} " +

@@ -152,10 +152,11 @@ private[stages] final case class LineageBuf(counts: Array[Long],
   * Execution shape (100 TB story): the chain is per-row (per-doc) —
   * there is NO shuffle anywhere in it; Catalyst fuses the kernel call
   * and the output projection into one whole-stage-codegen pass. After
-  * the chain, the report's detail sort shuffles the valid rows into
-  * one range partition per [[RowsPerDetailPart]] valid rows (one
-  * partition, so no sampling job, below that), then sorts each
-  * partition: one sort for the detail CSV and the `.wtr`. The corpus
+  * the chain, the report's detail sort coalesces up to
+  * [[RowsPerDetailPart]] valid rows into one partition, with no
+  * shuffle, and above that shuffles them into one range partition per
+  * that many rows; then it sorts each partition: one sort for the
+  * detail CSV and the `.wtr`. The corpus
   * report itself is either one tiny aggregate ([[report]])
   * or, in `ExtractMain`, a driver-side merge of the per-partition
   * [[ReportParts]] observed in the write pass. Nothing
@@ -375,8 +376,7 @@ object Extraction {
   def withLineage(rows: DataFrame, nParts: Int)
       : (DataFrame, () => IndexedSeq[(Long, Long, Long, ReportParts)]) = {
     val obs = Observation("graft_lineage")
-    val perPart = udaf(new LineageAgg(nParts),
-      ExpressionEncoder[(Int, Int, Boolean, java.math.BigDecimal, Int, Map[String, Int])]())
+    val perPart = udaf(new LineageAgg(nParts), LineageInEncoder)
     val valid = col("hit_ratio") =!= Estimation.MissingRatio
     val df = rows.observe(obs, perPart(col("part"), coalesce(size(col("spans")), lit(0)),
       col("hit_ratio") === Estimation.MissingRatio,
@@ -395,14 +395,19 @@ object Extraction {
     })
   }
 
+  private type LineageIn = (Int, Int, Boolean, java.math.BigDecimal, Int, Map[String, Int])
+
+  // derived once: each is a Scala-reflection walk of its type
+  private lazy val LineageInEncoder: ExpressionEncoder[LineageIn] = ExpressionEncoder[LineageIn]()
+  private lazy val LineageBufEncoder: ExpressionEncoder[LineageBuf] = ExpressionEncoder[LineageBuf]()
+
   /** [[withLineage]]'s aggregate: input (part, spans, unestimated,
     * decimal ratio or null when invalid, bin id, replacement stats). */
-  private final class LineageAgg(nParts: Int) extends Aggregator[
-      (Int, Int, Boolean, java.math.BigDecimal, Int, Map[String, Int]), LineageBuf, LineageBuf] {
+  private final class LineageAgg(nParts: Int)
+      extends Aggregator[LineageIn, LineageBuf, LineageBuf] {
     def zero: LineageBuf = LineageBuf(new Array[Long](9 * nParts),
       Array.fill(nParts)(java.math.BigDecimal.ZERO), Array.fill(nParts)(Map.empty))
-    def reduce(b: LineageBuf,
-        in: (Int, Int, Boolean, java.math.BigDecimal, Int, Map[String, Int])): LineageBuf = {
+    def reduce(b: LineageBuf, in: LineageIn): LineageBuf = {
       val (p, spans, unest, ratio, bin, stats) = in
       val o = 9 * p
       b.counts(o) += 1
@@ -428,8 +433,8 @@ object Extraction {
       a
     }
     def finish(b: LineageBuf): LineageBuf = b
-    def bufferEncoder: Encoder[LineageBuf] = ExpressionEncoder[LineageBuf]()
-    def outputEncoder: Encoder[LineageBuf] = ExpressionEncoder[LineageBuf]()
+    def bufferEncoder: Encoder[LineageBuf] = LineageBufEncoder
+    def outputEncoder: Encoder[LineageBuf] = LineageBufEncoder
   }
 
   /** S11 — estimation report sink, the `.wtr` analog
@@ -441,7 +446,14 @@ object Extraction {
     * from manifest summaries passes it); the report's valid count sizes
     * the detail (see [[sortedValid]]). `wtrPath` also writes the
     * `.wtr` file of [[writeWtr]] from the same sorted rows, persisted
-    * between the two writes, so the rows are sorted once. */
+    * until both are written, so the rows are sorted once.
+    *
+    * The summary parquet, the detail CSV and the `.wtr` read the same
+    * input independently, so they are written [[concurrently]], each on
+    * a driver thread of this call whose jobs carry the caller's local
+    * properties. The call returns once all of them have ended and
+    * throws the first failure, if any; the outputs that succeeded stay
+    * written. */
   def writeReport(processed: Dataset[ProcessedDoc], outDir: String,
       precomputed: Option[EstimationReport] = None,
       wtrPath: Option[String] = None): EstimationReport = {
@@ -449,33 +461,67 @@ object Extraction {
     import spark.implicits._
     val rep = precomputed.getOrElse(report(processed))
     wtrPath.foreach(_ => checkWtrCap(rep, WtrMaxRows))
-    Seq(rep).toDS().coalesce(1).write.mode("overwrite").parquet(s"$outDir/summary")
     val sorted = sortedValid(processed, rep.n_total - rep.n_invalid)
     if (wtrPath.nonEmpty) sorted.persist()
-    try {
-      sorted.drop("file_name").write.mode("overwrite").option("header", "true")
+    try concurrently(Seq(
+      () => Seq(rep).toDS().coalesce(1).write.mode("overwrite").parquet(s"$outDir/summary"),
+      () => sorted.drop("file_name").write.mode("overwrite").option("header", "true")
         .option("ignoreLeadingWhiteSpace", "false")
         .option("ignoreTrailingWhiteSpace", "false")
-        .csv(s"$outDir/detail")
-      wtrPath.foreach(streamWtr(sorted, _, rep))
-    } finally if (wtrPath.nonEmpty) sorted.unpersist()
+        .csv(s"$outDir/detail")) ++
+      wtrPath.map(p => () => streamWtr(sorted, p, rep)))
+    finally if (wtrPath.nonEmpty) sorted.unpersist()
     rep
+  }
+
+  /** Most driver threads one [[concurrently]] call starts. */
+  private val MaxDriverThreads = 8
+
+  /** Runs `tasks` on at most [[MaxDriverThreads]] driver threads created
+    * for this call, so the Spark jobs a task starts inherit the caller's
+    * local properties (job description and group). Returns the results
+    * in task order. Only once every task has ended does it throw, when
+    * any failed: the first failure in task order, the others added to it
+    * as suppressed. */
+  private[graft] def concurrently[A](tasks: Seq[() => A]): Seq[A] = {
+    val results = new Array[Any](tasks.length)
+    val failures = new Array[Throwable](tasks.length)
+    val next = new java.util.concurrent.atomic.AtomicInteger
+    val threads = Seq.tabulate(math.min(MaxDriverThreads, tasks.length)) { t =>
+      new Thread(() => {
+        var i = next.getAndIncrement()
+        while (i < tasks.length) {
+          try results(i) = tasks(i)() catch { case e: Throwable => failures(i) = e }
+          i = next.getAndIncrement()
+        }
+      }, s"graft-driver-$t")
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    failures.filter(_ != null) match {
+      case Array() => results.toSeq.asInstanceOf[Seq[A]]
+      case errs =>
+        errs.tail.foreach(errs.head.addSuppressed)
+        throw errs.head
+    }
   }
 
   /** The valid rows of the report detail (named by `doc_id`) and the
     * `.wtr` (named by `file_name`), ascending by (ratio, doc_id) across
     * partitions in order. `nValid`, the valid count the caller's report
-    * holds, sizes the range partitioning ([[detailParts]]): up to
-    * [[RowsPerDetailPart]] rows it is one partition, which Spark plans
-    * without a sampling job; above it the range bounds are sampled and
-    * each partition holds about that many rows. */
+    * holds, sizes the partitioning ([[detailParts]]): up to
+    * [[RowsPerDetailPart]] rows the rows are coalesced into one
+    * partition and sorted there, with no shuffle; above it they are
+    * range-partitioned on sampled bounds, each partition holding about
+    * that many rows, and each partition is sorted. */
   private def sortedValid(processed: Dataset[ProcessedDoc], nValid: Long): DataFrame = {
     val key = Seq(col("hit_ratio"), col("doc_id"))
-    processed
+    val valid = processed
       .filter(col("hit_ratio") =!= Estimation.MissingRatio)
       .select(col("doc_id"), col("file_name"), col("hit_ratio"), col("n_words"), col("n_errs"),
         col("n_lines_in"), col("n_wraps"), col("n_shorts"), col("n_lines_out"))
-      .repartitionByRange(detailParts(nValid), key: _*)
+    val parts = detailParts(nValid)
+    (if (parts == 1) valid.coalesce(1) else valid.repartitionByRange(parts, key: _*))
       .sortWithinPartitions(key: _*)
   }
 

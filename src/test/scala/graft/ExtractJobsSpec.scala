@@ -30,7 +30,7 @@ class ExtractJobsSpec extends SparkSpecBase {
     Files.list(Paths.get(dir)).iterator().asScala
       .filter(_.getFileName.toString.endsWith(suffix)).toSeq.sortBy(_.getFileName.toString)
 
-  test("a run on a fresh root: six jobs, no footer-inference read, one detail part") {
+  test("a run on a fresh root: four jobs, no footer-inference read, one detail part") {
     val tmp = Files.createTempDirectory("graft-xjobs").toString
     // two input files, so the extraction job is not itself a 1-task job
     graft.gen.CorpusGen.docs(spark, 400, "skewed", seed = 11, megaSpans = 3000)
@@ -40,10 +40,10 @@ class ExtractJobsSpec extends SparkSpecBase {
     // a parquet footer-inference read runs while a read's plan is built,
     // outside any SQL execution: the input's and the snapshot's are gone
     assert(!jobs.exists(j => j.site.startsWith("parquet at") && !j.inSqlExecution), shown)
-    // extraction, report summary, detail shuffle, detail CSV (which
-    // caches the sorted rows), the cache stage and the `.wtr` stream of
-    // the one detail partition
-    assert(jobs.length == 6, shown)
+    // the extraction write, the report summary, the detail CSV (one
+    // task, which sorts the one detail partition and caches it) and the
+    // `.wtr` stream of that cached partition
+    assert(jobs.length == 4, shown)
     assert(files(s"$tmp/out/report/detail", ".csv").length == 1)
   }
 

@@ -13,11 +13,19 @@ which side runs first alternates from seed to seed, so a slow drift of
 the host hits both sides alike.
 
 Prints every run as it finishes, then, for each end-to-end metric in
-BENCHMARK.json (directions read from there), the median (Q1-Q3) per
-side, the change of the medians and "change better in k/n" pairs. A run
-that exits non-zero, prints "correct": false or lacks a metric counts as
-failed, and its pair is left out of the table. Exits non-zero when a run
-failed.
+BENCHMARK.json (direction and bound read from there):
+  - the median (Q1-Q3) per side and the change of the medians;
+  - the median of the per-pair change ratios (change / parent - 1);
+  - "change better in k/n" pairs, ties counting for neither side;
+  - "gain bar": "met" when the change won at least 9/10 of the pairs
+    and the medians differ, in the metric's better direction, by more
+    than the parent's IQR (Q3 - Q1), else "not met";
+  - "bound": "WORSE" when the change's median is worse than the
+    parent's by more than the metric's `bound` (a fraction of the
+    parent's median), else "ok".
+A run that exits non-zero, prints "correct": false or lacks a metric
+counts as failed, and its pair is left out of the table. Exits non-zero
+when a run failed.
 """
 import argparse
 import json
@@ -77,6 +85,35 @@ def fmt(x):
     return f"{x:.4g}"
 
 
+def row(metric, ps, cs):
+    """One table row for `metric` over the paired values `ps` (parent)
+    and `cs` (change)."""
+    sign = 1 if metric["better"] == "higher" else -1
+    (p1, pm, p3), (c1, cm, c3) = quartiles(ps), quartiles(cs)
+    better = sum(1 for p, c in zip(ps, cs) if sign * (c - p) > 0)
+    ties = sum(1 for p, c in zip(ps, cs) if c == p)
+    rel = f"{(cm - pm) / pm * 100:+.1f}%" if pm else "n/a"
+    ratios = [c / p - 1 for p, c in zip(ps, cs) if p]
+    pair_rel = f"{statistics.median(ratios) * 100:+.1f}%" if ratios else "n/a"
+    tie_note = f" ({ties} ties)" if ties else ""
+    bar = "met" if 10 * better >= 9 * len(ps) and sign * (cm - pm) > p3 - p1 else "not met"
+    worse = sign * (pm - cm) > metric["bound"] * abs(pm)
+    return (f"| {metric['name']} | {fmt(pm)} ({fmt(p1)}-{fmt(p3)}) | {fmt(cm)} ({fmt(c1)}-{fmt(c3)}) "
+            f"| {rel} | {pair_rel} | {better}/{len(ps)}{tie_note} | {bar} "
+            f"| {'WORSE' if worse else 'ok'} (±{metric['bound']:g}) |")
+
+
+def table(metrics, pairs):
+    """The markdown table over the correct (parent, change) run pairs."""
+    lines = ["| metric | parent median (Q1-Q3) | change median (Q1-Q3) | median change "
+             "| median pair change | change better in | gain bar | bound |",
+             "|---|---|---|---|---|---|---|---|"]
+    if pairs:
+        lines += [row(m, [p[m["name"]] for p, _ in pairs], [c[m["name"]] for _, c in pairs])
+                  for m in metrics]
+    return "\n".join(lines)
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--parent", required=True)
@@ -107,21 +144,7 @@ def main():
 
     pairs = [(p, c) for p, c in zip(runs["parent"], runs["change"]) if p["correct"] and c["correct"]]
     print(f"\n{a.workload}: {len(pairs)} pairs, parent {a.parent}, change working tree")
-    print("| metric | parent median (Q1-Q3) | change median (Q1-Q3) | median change | change better in |")
-    print("|---|---|---|---|---|")
-    for m in metrics:
-        name, higher = m["name"], m["better"] == "higher"
-        if not pairs:
-            break
-        ps = [p[name] for p, _ in pairs]
-        cs = [c[name] for _, c in pairs]
-        (p1, pm, p3), (c1, cm, c3) = quartiles(ps), quartiles(cs)
-        better = sum(1 for p, c in zip(ps, cs) if (c > p if higher else c < p))
-        ties = sum(1 for p, c in zip(ps, cs) if c == p)
-        rel = f"{(cm - pm) / pm * 100:+.1f}%" if pm else "n/a"
-        tie_note = f" ({ties} ties)" if ties else ""
-        print(f"| {name} | {fmt(pm)} ({fmt(p1)}-{fmt(p3)}) | {fmt(cm)} ({fmt(c1)}-{fmt(c3)}) "
-              f"| {rel} | {better}/{len(pairs)}{tie_note} |")
+    print(table(metrics, pairs))
     failed = any(not r["correct"] for side in runs.values() for r in side)
     return 1 if failed else 0
 
